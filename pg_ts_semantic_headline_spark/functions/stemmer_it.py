@@ -21,8 +21,8 @@ from __future__ import annotations
 
 _VOWELS = set("aeiouàèìòù")
 
-# prelude part 1: acute accents (and î per the Snowball program) are
-# normalized to the grave forms before anything else
+# prelude part 1: acute accents are normalized to the grave forms before
+# anything else
 _ACUTE_TO_GRAVE = str.maketrans("áéíóú", "àèìòù")
 
 

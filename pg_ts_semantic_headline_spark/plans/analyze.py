@@ -29,6 +29,12 @@ ANALYSIS_SCHEMA = StructType([
 ])
 
 
+def analysis_config(cfg: str) -> str:
+    """The config a document is analyzed under: an unsupported one falls
+    back to `simple`."""
+    return cfg if is_supported_config(cfg) else "simple"
+
+
 def _analyze_batch(content: pd.Series, config: pd.Series) -> pd.DataFrame:
     toks_out, lex_out = [], []
     for text, cfg in zip(content, config):
@@ -36,8 +42,7 @@ def _analyze_batch(content: pd.Series, config: pd.Series) -> pd.DataFrame:
             toks_out.append(None)
             lex_out.append(None)
             continue
-        cfg = cfg if is_supported_config(cfg) else "simple"
-        toks, lexs = analyze_document(text, cfg)
+        toks, lexs = analyze_document(text, analysis_config(cfg))
         toks_out.append(toks)
         lex_out.append(lexs)
     return pd.DataFrame({"tokens": toks_out, "lexemes": lex_out})
@@ -93,8 +98,7 @@ def _analyze_index_batch(content: pd.Series, config: pd.Series) -> pd.DataFrame:
             dl_out.append(None)
             post_out.append(None)
             continue
-        cfg = cfg if is_supported_config(cfg) else "simple"
-        toks, lexs = analyze_document(text, cfg)
+        toks, lexs = analyze_document(text, analysis_config(cfg))
         d: dict = {}
         dl = 0
         for i, lx in enumerate(lexs):

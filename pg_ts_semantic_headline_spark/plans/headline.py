@@ -1,4 +1,4 @@
-"""Whole-phrase headline generation as DataFrame plans.
+"""Whole-phrase headline generation.
 
 - `ts_fast_headline_cover_density`
   (/root/reference/sql/ts_fast_headline_cover_density.sql:58-97): bucket the
@@ -7,28 +7,35 @@
   buckets by match density.
 - `ts_fast_headline` (/root/reference/sql/ts_fast_headline.sql:51-66): join
   fragments with the delimiter and strip indexing tokens.
-- `ts_semantic_headline` (/root/reference/sql/ts_semantic_headline.sql:52-70):
-  the 1:1 ts_headline replacement. Faithful two-phase flow: phase 1
-  reimplements PostgreSQL's built-in ts_headline default (non-fragment)
-  passage selection IN CANONICAL-CHUNK space (PG counts parser word
-  tokens: compounds count as their parts, non-ASCII symbol runs count
-  as words) — hlCover enumeration anchors each cover on the first
-  query-item word at-or-after the scan point and closes it at the
-  smallest index whose window SATISFIES the query phrase-/boolean-aware
-  (NOT-branches vacuous); each cover is resized (truncate to MaxWords;
-  extend forward to MinWords ending on a word longer than ShortWord OR
-  a query-item word, backward under the same rule only when the
-  document ends early), covers then compete on query-item word count
-  within the resized window, first wins ties; document-head MinWords
-  passage (no ShortWord logic) when no cover — then phase 2 runs
-  TS_FAST_HEADLINE over the selected passage with the reference's
-  forced MaxFragments=30,MinWords=64,MaxWords=64 overlay (:64-68),
-  COALESCE to the trimmed passage on no exact phrase match (:69).
-  Verified string-exact against every ad-hoc pgTAP assertion in
-  english_lang_test.sql:33-95 and german_lang_test.sql:111-149, AND
-  fuzz-validated 0-divergent against the LIVE reference extension
-  running in PostgreSQL (scripts/validate_reference_pg.py, ~1000
-  doc×query cases across several seeds).
+- `ts_semantic_headline` (reference ts_semantic_headline.sql:52-70): the
+  1:1 ts_headline replacement, one output row per input row.  The plan is
+  one scan plus ONE Arrow UDF over the content column: no join, no
+  shuffle, one Spark job.  Per row, in the same Python call:
+  - phase 1 reimplements PostgreSQL's built-in ts_headline default
+    (non-fragment) passage selection IN CANONICAL-CHUNK space (PG counts
+    parser word tokens: compounds count as their parts, non-ASCII symbol
+    runs count as words).  hlCover enumeration anchors each cover on the
+    first query-item word at-or-after the scan point and closes it at the
+    smallest index whose window SATISFIES the query phrase-/boolean-aware
+    (NOT-branches vacuous); each cover is resized (truncate to MaxWords;
+    extend forward to MinWords ending on a word longer than ShortWord OR a
+    query-item word, backward under the same rule only when the document
+    ends early); covers compete on query-item word count within the
+    resized window, first wins ties; with no cover, the document-head
+    MinWords passage (no ShortWord logic);
+  - phase 2 runs the fast path over ONLY that ~MaxWords-word passage,
+    under the reference's forced MaxFragments=30,MinWords=64,MaxWords=64
+    overlay (:64-68): the same per-string rules as the DataFrame plans
+    above (`highlight_fragment`, `matches.phrase_in_text`,
+    `tsp_present_series`), applied to one short string;
+  - COALESCE to the trimmed passage on no exact phrase match (:69).
+  The two-phase flow was verified string-exact against every ad-hoc pgTAP
+  assertion in english_lang_test.sql:33-95 and german_lang_test.sql:111-149,
+  and fuzz-validated 0-divergent against the live reference extension
+  running in PostgreSQL (scripts/validate_reference_pg.py, ~1000 doc×query
+  cases across several seeds), with phase 2 as the DataFrame fast path;
+  tests/test_semantic_headline_fused.py holds the one-pass kernel to that
+  composition.
 
 All arithmetic (option parsing defaults, integer division, the pad formula,
 bucket key, density ordering) follows the reference line for line.
@@ -37,14 +44,16 @@ bucket key, density ordering) follows the reference line for line.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from .analyze import with_analysis
-from .matches import tsp_query_matches
+from ..functions.lexize import analyze_document
+from .analyze import analysis_config
+from .matches import phrase_in_text, tsp_query_matches
 from .query_compiler import CompiledQuery
 
 _RE_OPTION = re.compile(r'(\w+)=(?:"([^"]+)"|((?:(?![\s,]+\w+=).)+))')
@@ -62,23 +71,56 @@ def parse_headline_options(options: str | None) -> dict[str, str]:
     return out
 
 
-def _highlight_udf(start_sel: str, stop_sel: str):
+@dataclass(frozen=True)
+class _FastOptions:
+    """The fast path's options, with the reference's defaults and
+    MinWords halving; shared by the DataFrame plans and the one-pass
+    kernel."""
+    start_sel: str
+    stop_sel: str
+    delimiter: str
+    min_words: int
+    max_words: int
+    max_fragments: int
+    disable_semantics: bool
+
+    @property
+    def max_offset(self) -> int:
+        return self.max_words // 2 + 1
+
+
+def _fast_options(options: str) -> _FastOptions:
+    opts = parse_headline_options(options)
+    return _FastOptions(
+        start_sel=opts.get("StartSel", "<b>"),
+        stop_sel=opts.get("StopSel", "</b>"),
+        delimiter=opts.get("FragmentDelimiter", "..."),
+        min_words=int(opts["MinWords"]) // 2 if "MinWords" in opts else 10,
+        max_words=int(opts.get("MaxWords", 30)),
+        max_fragments=int(opts.get("MaxFragments", 1)),
+        disable_semantics=(opts.get("DisableSematics", "FALSE").upper()
+                           == "TRUE"))
+
+
+def highlight_fragment(fragment: str, words, start_sel: str,
+                       stop_sel: str) -> str:
     """One-pass alternation wrap of every exact matched string in the
     space-padded fragment (cover_density.sql:78-87). Non-overlapping global
     replace, like PG's REGEXP_REPLACE 'g'."""
+    alts = "|".join(_RE_REGEX_SPECIALS.sub(r"\\\1", w) for w in words)
+    return re.sub(f" ({alts}) ",
+                  lambda m: f" {start_sel}{m.group(1)}{stop_sel} ",
+                  fragment)
+
+
+def _highlight_udf(start_sel: str, stop_sel: str):
+    """Arrow UDF: `highlight_fragment` over (fragment, words) rows."""
 
     def run(fragment: pd.Series, words_list: pd.Series) -> pd.Series:
-        out = []
-        for frag, words in zip(fragment, words_list):
-            if frag is None:
-                out.append(None)
-                continue
-            alts = "|".join(_RE_REGEX_SPECIALS.sub(r"\\\1", w) for w in words)
-            out.append(re.sub(
-                f" ({alts}) ",
-                lambda m: f" {start_sel}{m.group(1)}{stop_sel} ",
-                frag))
-        return pd.Series(out)
+        return pd.Series([
+            None if frag is None
+            else highlight_fragment(frag, words, start_sel, stop_sel)
+            for frag, words in zip(fragment, words_list)])
 
     return F.pandas_udf(run, returnType=StringType())
 
@@ -102,23 +144,16 @@ def ts_fast_headline_cover_density(
     """(doc_id, headline, density) — up to MaxFragments fragments per doc,
     highlighted but NOT yet present-text-cleaned (fragments still carry
     indexing tokens, exactly like the reference's intermediate)."""
-    opts = parse_headline_options(options)
-    start_sel = opts.get("StartSel", "<b>")
-    stop_sel = opts.get("StopSel", "</b>")
-    min_words = int(opts["MinWords"]) // 2 if "MinWords" in opts else 10
-    max_words = int(opts.get("MaxWords", 30))
-    max_offset = max_words // 2 + 1
-    max_fragments = int(opts.get("MaxFragments", 1))
-    disable_semantics = opts.get("DisableSematics", "FALSE").upper() == "TRUE"
+    o = _fast_options(options)
 
     matches = tsp_query_matches(
         docs, query,
-        match_limit=max_fragments + 6,
-        disable_semantic_check=disable_semantics,
+        match_limit=o.max_fragments + 6,
+        disable_semantic_check=o.disable_semantics,
         doc_id=doc_id, hay=hay)
 
-    bucket = (F.floor(F.col("start_pos") / (max_words + 1))
-              * (max_words + 1)).alias("bucket")
+    bucket = (F.floor(F.col("start_pos") / (o.max_words + 1))
+              * (o.max_words + 1)).alias("bucket")
 
     grouped = (matches
                .groupBy(doc_id, bucket)
@@ -133,8 +168,8 @@ def ts_fast_headline_cover_density(
 
     # pad = GREATEST(max_offset - (e - s/2 + 1), min_words)  [integer div]
     pad = F.greatest(
-        F.lit(max_offset) - (F.col("e") - F.floor(F.col("s") / 2) + 1),
-        F.lit(min_words)).cast("int")
+        F.lit(o.max_offset) - (F.col("e") - F.floor(F.col("s") / 2) + 1),
+        F.lit(o.min_words)).cast("int")
 
     sliced = (grouped
               .withColumn("pad", pad)
@@ -148,14 +183,14 @@ def ts_fast_headline_cover_density(
                       F.col("hi") - F.col("lo") + 1), " "),
                   F.lit(" "))))
 
-    highlight = _highlight_udf(start_sel, stop_sel)
+    highlight = _highlight_udf(o.start_sel, o.stop_sel)
     lit = sliced.withColumn(
         "headline", highlight(F.col("fragment"), F.col("match_words")))
 
     w = Window.partitionBy(doc_id).orderBy(F.desc("density"), F.asc("bucket"))
     return (lit
             .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= max_fragments)
+            .where(F.col("_rn") <= o.max_fragments)
             .select(doc_id, "headline", "density", "bucket"))
 
 
@@ -168,10 +203,7 @@ def ts_fast_headline(
 ) -> DataFrame:
     """(doc_id, headline) — fragments joined by FragmentDelimiter in
     (density DESC, bucket ASC) order, then present-text cleanup."""
-    opts = parse_headline_options(options)
-    delim = opts.get("FragmentDelimiter", "...")
-    stop_sel = opts.get("StopSel", "</b>")
-
+    o = _fast_options(options)
     frags = ts_fast_headline_cover_density(docs, query, options, doc_id, hay=hay)
     assembled = (frags
                  .groupBy(doc_id)
@@ -182,8 +214,8 @@ def ts_fast_headline(
                              F.col("bucket").alias("k2"),
                              F.col("headline").alias("h")))),
                          lambda x: x["h"]),
-                     delim).alias("raw_headline")))
-    present = _present_udf(stop_sel)
+                     o.delimiter).alias("raw_headline")))
+    present = _present_udf(o.stop_sel)
     return assembled.select(
         doc_id, present(F.col("raw_headline")).alias("headline"))
 
@@ -371,9 +403,9 @@ def _all_item_lexemes(node, out: set) -> None:
         _all_item_lexemes(c, out)
 
 
-def _pg_passage_udf(query: CompiledQuery, cfg: str, min_words: int,
-                    max_words: int, short_word: int):
-    """Arrow UDF: raw content -> the pg-selected passage string.
+def _passage_selector(query: CompiledQuery, cfg: str, min_words: int,
+                      max_words: int, short_word: int):
+    """Phase 1: raw content -> the pg-selected passage string.
 
     Works in canonical-chunk space (PG word-token counting: hyphenated
     compounds count as their parts), mapping the selected chunk window
@@ -474,8 +506,77 @@ def _pg_passage_udf(query: CompiledQuery, cfg: str, min_words: int,
                 window[-1] = tail
         return " ".join(w for w in window if w)
 
+    return one
+
+
+def _passage_headline(query: CompiledQuery, cfg: str, o: _FastOptions):
+    """Phase 2: passage -> raw fast-path headline, or None when no phrase
+    matches.  Per row, the same rules as `ts_fast_headline(with_analysis(
+    passage), query, options)` before its present-text cleanup:
+    aligned phrase matches (the `tsp_query_matches` self-alignment) with
+    the semantic re-check, the first MaxFragments+6 by (start_pos,
+    phrase_id), cover-density buckets, pad/slice/highlight, then
+    fragments in (density DESC, bucket ASC) order."""
+    acfg = analysis_config(cfg)
+    width = o.max_words + 1
+    match_limit = o.max_fragments + 6
+
+    def one(passage: str) -> str | None:
+        toks, lexs = analyze_document(passage, acfg)
+        found = []                  # (start_pos, phrase_id, end_pos, words)
+        for pid, ph in enumerate(query.phrases):
+            starts, span = _phrase_starts(ph, lexs)
+            for s0 in starts:
+                words = " ".join(toks[s0:s0 + span + 1])
+                if (o.disable_semantics
+                        or phrase_in_text(ph.items, words, query.config)):
+                    found.append((s0 + 1, pid, s0 + span + 1, words))
+        if not found:
+            return None
+        found.sort()
+        buckets: dict = {}
+        for m in found[:match_limit]:
+            buckets.setdefault(m[0] // width * width, []).append(m)
+        frags = []
+        for bucket, ms in buckets.items():
+            s, e = ms[0][0], max(m[2] for m in ms)
+            pad = max(o.max_offset - (e - s // 2 + 1), o.min_words)
+            lo, hi = max(s - pad, 1), e + pad
+            fragment = " " + " ".join(toks[lo - 1:hi]) + " "
+            words = [w for _, w in sorted((m[0], m[3]) for m in ms)]
+            frags.append((-len(ms), bucket, highlight_fragment(
+                fragment, words, o.start_sel, o.stop_sel)))
+        frags.sort()
+        return o.delimiter.join(h for _, _, h in frags[:o.max_fragments])
+
+    return one
+
+
+def _semantic_headline_udf(query: CompiledQuery, cfg: str, options: str):
+    """Arrow UDF: raw content -> headline, both phases in one Python pass
+    per row; COALESCE to the trimmed passage on no exact phrase match
+    (ts_semantic_headline.sql:69)."""
+    from ..functions.textprep import tsp_present_series
+
+    opts = parse_headline_options(options)
+    select = _passage_selector(query, cfg, int(opts.get("MinWords", 15)),
+                               int(opts.get("MaxWords", 35)),
+                               int(opts.get("ShortWord", 3)))
+    effective = (options + ("," if options else "")
+                 + "MaxFragments=30,MinWords=64,MaxWords=64")
+    o = _fast_options(effective)
+    fast = _passage_headline(query, cfg, o)
+
     def run(content: pd.Series) -> pd.Series:
-        return content.map(one)
+        passages = [select(text) for text in content]
+        raw = pd.Series([None if p is None else fast(p) for p in passages],
+                        dtype=object)
+        out = pd.Series([None if p is None else p.strip(" ")
+                         for p in passages], dtype=object)
+        hit = raw.notna()
+        if hit.any():
+            out[hit] = tsp_present_series(raw[hit], o.stop_sel)
+        return out
 
     return F.pandas_udf(run, returnType=StringType())
 
@@ -488,29 +589,14 @@ def ts_semantic_headline(
     config: str | None = None,
     doc_id: str = "doc_id",
 ) -> DataFrame:
-    """Ad-hoc 1:1 ts_headline replacement (see module docstring): pg-style
-    passage selection over raw content, then the fast path over ONLY the
-    selected passage — the re-analysis phase 2 pays for ~MaxWords words
-    per doc, not the whole document."""
+    """Ad-hoc 1:1 ts_headline replacement (see module docstring): one
+    output row per input row, from that row's own content.  One Arrow UDF
+    runs pg-style passage selection over the raw content and then the fast
+    path over ONLY the selected passage, so phase 2 pays for ~MaxWords
+    words per doc, not the whole document, and the plan is one scan plus
+    one Python pass: no join, no shuffle."""
     from .query_compiler import require_no_prefixes
     require_no_prefixes(query, "ts_semantic_headline (ad-hoc, no dictionary)")
-    cfg = config or query.config
-    opts = parse_headline_options(options)
-    min_words = int(opts.get("MinWords", 15))
-    max_words = int(opts.get("MaxWords", 35))
-    short_word = int(opts.get("ShortWord", 3))
-
-    passage = _pg_passage_udf(query, cfg, min_words, max_words, short_word)
-    passages = (docs
-                .select(doc_id, F.col(content_col))
-                .withColumn("_passage", passage(F.col(content_col)))
-                .drop(content_col))
-    analyzed = with_analysis(passages, content_col="_passage", config=cfg)
-    effective = (options + ("," if options else "")
-                 + "MaxFragments=30,MinWords=64,MaxWords=64")
-    headlines = ts_fast_headline(analyzed, query, effective, doc_id)
-    return (passages
-            .join(headlines, on=doc_id, how="left")
-            .select(doc_id,
-                    F.coalesce(F.col("headline"),
-                               F.trim(F.col("_passage"))).alias("headline")))
+    headline = _semantic_headline_udf(query, config or query.config, options)
+    return docs.select(doc_id,
+                       headline(F.col(content_col)).alias("headline"))

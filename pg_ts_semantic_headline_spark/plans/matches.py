@@ -60,30 +60,29 @@ def explode_lexemes(docs: DataFrame, doc_id: str = "doc_id") -> DataFrame:
             .select(doc_id, (F.col("pos0") + 1).alias("pos"), "lex"))
 
 
-def _semantic_check_udf(query: CompiledQuery):
-    """Arrow UDF: does the phrase actually match the re-analyzed slice?
+def phrase_in_text(items, text: str, config: str) -> bool:
+    """Does the phrase actually match the re-analyzed text?
 
     Faithful to TO_TSPVECTOR(slice) @@ phrase_query (:95-96): the phrase may
-    match at any offset of the slice, with exact distances.
+    match at any offset of the text, with exact distances.
     """
+    if not items:
+        return False
+    lexs = analyze_text_simple(text, config)
+    span = max(p for _, p in items)
+    return any(all(lexs[off + p - 1] == lx for lx, p in items)
+               for off in range(0, len(lexs) - span + 1))
+
+
+def _semantic_check_udf(query: CompiledQuery):
+    """Arrow UDF: `phrase_in_text` over (matched slice, phrase id) rows."""
     phrase_items = {pid: ph.items for pid, ph in enumerate(query.phrases)}
     config = query.config
 
     def check(words: pd.Series, phrase_id: pd.Series) -> pd.Series:
-        out = []
-        for text, pid in zip(words, phrase_id):
-            items = phrase_items.get(pid, ())
-            lexs = analyze_text_simple(text, config)
-            n = len(lexs)
-            ok = False
-            if items:
-                span = max(p for _, p in items)
-                for off in range(0, n - span + 1):
-                    if all(lexs[off + p - 1] == lx for lx, p in items):
-                        ok = True
-                        break
-            out.append(ok)
-        return pd.Series(out)
+        return pd.Series([phrase_in_text(phrase_items.get(pid, ()), text,
+                                         config)
+                          for text, pid in zip(words, phrase_id)])
 
     return F.pandas_udf(check, returnType=BooleanType())
 

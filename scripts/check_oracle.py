@@ -60,8 +60,9 @@ def compare_result(scols, srows, dcols, drows) -> dict:
     if sc != dc:
         rec["first_diff"] = {"kind": "columns", "spark": sc, "oracle": dc}
     elif len(sr) != len(dr):
-        s_only = [r for r in sr if r not in set(dr)][:2]
-        d_only = [r for r in dr if r not in set(sr)][:2]
+        dr_set, sr_set = set(dr), set(sr)
+        s_only = [r for r in sr if r not in dr_set][:2]
+        d_only = [r for r in dr if r not in sr_set][:2]
         rec["first_diff"] = {
             "kind": "rows", "columns": sc,
             "spark_only": [[repr(v) for v in r] for r in s_only],

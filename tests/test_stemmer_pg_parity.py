@@ -14,6 +14,8 @@ import sys
 
 import pytest
 
+from conftest import requires_reference
+
 PG_BIN = "/usr/lib/postgresql/15/bin"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,6 +54,7 @@ def test_analyzer_matches_live_pg_to_tsvector():
     assert "protocol-case divergences (expected 12): 12" in out.stdout
 
 
+@requires_reference
 @pytest.mark.skipif(not os.path.exists(f"{PG_BIN}/initdb"),
                     reason="no PostgreSQL binaries on this host")
 def test_semantic_headline_matches_live_reference():
@@ -69,6 +72,7 @@ def test_semantic_headline_matches_live_reference():
     assert "divergences: 0" in out.stdout
 
 
+@requires_reference
 @pytest.mark.skipif(not os.path.exists(f"{PG_BIN}/initdb"),
                     reason="no PostgreSQL binaries on this host")
 def test_semantic_headline_matches_live_reference_german():
