@@ -899,20 +899,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # could order differently than the float-exact engine rank
         from pg_ts_semantic_headline_spark.plans.search import bm25_topk
         index = _built_index(spark, sf)
-        return (bm25_topk(index, ["spark", "query", "window"], k=100000,
-                          mode="blockmax")
+        return (bm25_topk(index, ["spark", "query", "window"], k=100000)
                 .withColumn("score_e4", _e4(F.col("score")))
                 .select("doc_id", "score_e4"))
 
     def q35(spark, sf):
         # boolean+phrase filtered retrieval over the persisted index
-        # (matching_docs anchor + filtered block-max planner); k covers
+        # (matching_docs anchor + exact BM25 over the matches); k covers
         # the whole corpus at gate scale so the row set equals the
         # unranked phrase-filter oracle
         from pg_ts_semantic_headline_spark.plans.search import search
         index = _built_index(spark, sf)
         q = phraseto_tspquery("simple", "batch batch")
-        return (search(index, q, k=100000, mode="blockmax")
+        return (search(index, q, k=100000)
                 .withColumn("score_e4", _e4(F.col("score")))
                 .select("doc_id", "score_e4"))
 
@@ -1463,7 +1462,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pg_ts_semantic_headline_spark.plans.search import search
         index = _built_index(spark, sf)
         q = websearch_to_tspquery("simple", '"merge sort" -spark or window')
-        return (search(index, q, k=100000, mode="blockmax")
+        return (search(index, q, k=100000)
                 .withColumn("score_e4", _e4(F.col("score")))
                 .select("doc_id", "score_e4"))
 
@@ -1725,7 +1724,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "target string, substitute string")
         q = ts_rewrite_rules_df(to_tspquery("simple", "merge & sort"),
                                 rules)
-        return (search(index, q, k=100000, mode="blockmax")
+        return (search(index, q, k=100000)
                 .withColumn("score_e4", _e4(F.col("score")))
                 .select("doc_id", "score_e4"))
 
@@ -1844,7 +1843,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pg_ts_semantic_headline_spark.plans.search import search
         index = _built_index(spark, sf)
         q = plainto_tspquery("simple", "merge sort window")
-        return (search(index, q, k=100000, mode="blockmax")
+        return (search(index, q, k=100000)
                 .withColumn("score_e4", _e4(F.col("score")))
                 .select("doc_id", "score_e4"))
 
@@ -2784,8 +2783,8 @@ SELECT s.doc_id, CAST(ROUND(s.score * 10000) AS BIGINT) AS score_e4
 FROM scored s JOIN hits USING (doc_id)
 """,
         # the persisted-index engine must reproduce the ad-hoc oracle
-        # exactly: same BM25 formula, same avgdl, packed-store decode +
-        # block-max planner on the Spark side
+        # exactly: same BM25 formula, same avgdl, the exact postings-scan
+        # plan on the Spark side
         "bm25_topk_indexed": _bm25_score_sql(["spark", "query", "window"]) + """
 SELECT doc_id, CAST(ROUND(score * 10000) AS BIGINT) AS score_e4
 FROM scored

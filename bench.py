@@ -3,9 +3,9 @@
 Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Covered: index build (files/sec), BM25 top-k exact + block-max, boolean+
-phrase search, whole-phrase headline generation per 1k docs, minhash dedup,
-embedding cosine top-k.
+Covered: index build (files/sec), BM25 top-k, boolean+phrase search,
+whole-phrase headline generation per 1k docs, minhash dedup, embedding
+cosine top-k.
 """
 
 from __future__ import annotations
@@ -20,7 +20,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS",
+                      str(len(os.sched_getaffinity(0))))
 
 
 def host_probes() -> dict:
@@ -145,12 +146,11 @@ def main():
                 samples.append(time.time() - t0)
             return min(samples)
 
-        def run_bm25(mode):
+        def run_bm25():
             for q in queries:
-                bm25_topk(index, q, k=10, mode=mode).collect()
+                bm25_topk(index, q, k=10).collect()
 
-        timings["bm25_topk_exact_x6"] = min_of(lambda: run_bm25("exact"))
-        timings["bm25_topk_blockmax_x6"] = min_of(lambda: run_bm25("blockmax"))
+        timings["bm25_topk_exact_x6"] = min_of(run_bm25)
 
         # the same 6 queries as ONE batched plan (single postings scan +
         # per-query window top-k) — the offline-retrieval amortization
@@ -366,7 +366,7 @@ def main():
 
         # search-page side features over the same persisted index:
         # faceted counts on the full match set, more-like-this (driver
-        # analyze + integer term selection + block-max top-k), fuzzy
+        # analyze + integer term selection + BM25 top-k), fuzzy
         # retrieval (OOV word trigram-corrected against the dictionary)
         from pg_ts_semantic_headline_spark.plans.search import (
             facet_counts, fuzzy_bm25_topk, more_like_this)
@@ -377,9 +377,8 @@ def main():
                 index, to_tspquery("english", "(spark | batch) & !slow"),
                 raw_docs, ["lang", "source"]).collect()
             more_like_this(index, mlt_src, k=10, max_terms=8,
-                           exclude_doc_id=42, mode="blockmax").collect()
-            fuzzy_bm25_topk(index, ["spark", "wnidow"], k=10,
-                            mode="blockmax").collect()
+                           exclude_doc_id=42).collect()
+            fuzzy_bm25_topk(index, ["spark", "wnidow"], k=10).collect()
 
         timings["facet_mlt_fuzzy_x3"] = min_of(run_extras)
 

@@ -59,7 +59,8 @@ _RUN_RE = re.compile(r"[a-z0-9]+")
 
 #: Required-trigram literal lists are capped: using a SUBSET of the required
 #: trigrams is still sound (candidates only widen), and unbounded IN-lists
-#: cost planning time (the WAND literal-IN lesson). Never silent: we warn.
+#: cost seconds of Spark planning past ~64 ids (BENCH/BASELINE.md §2d).
+#: Never silent: we warn.
 MAX_QUERY_TRIGRAMS = 64
 
 
@@ -359,7 +360,7 @@ def load_trigram_index(spark: SparkSession, out_dir: str) -> TrigramIndex:
 #: for 10 candidates (measured: 96-candidate verify cost the same ~6 s as
 #: a full scan on a 1.7 GB corpus). An IN-list of longs row-group-prunes;
 #: 512 literals stays far under the multi-second planning cliff measured
-#: at ~2k literals in the WAND rescore path.
+#: at ~2k literals (BENCH/BASELINE.md §2d).
 VERIFY_INLIST_LIMIT = 512
 
 

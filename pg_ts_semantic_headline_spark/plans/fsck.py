@@ -199,12 +199,12 @@ def verify_index(spark: SparkSession, index_dir: str,
     if stale and packed_dir:
         add("packed_state", "warn", "no stale marker", "stale marker set",
             "packed/ is invalid until compact_index runs; loaders already "
-            "treat it as absent (blockmax disabled)")
+            "treat it as absent (phrase queries on a lean index raise)")
     elif packed_dir:
         add("packed_state", "ok", "", "packed live")
     else:
         add("packed_state", "ok", "", "no packed store",
-            "lean layout — blockmax unavailable by construction")
+            "row-positions layout built with build_packed=False")
 
     if not deep:
         return spark.createDataFrame(rows, REPORT_SCHEMA)

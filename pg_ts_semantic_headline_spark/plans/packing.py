@@ -5,8 +5,10 @@ form Spark scans and prunes natively) and as packed per-(term, block) byte
 payloads — delta-encoded docIDs, term frequencies and position arrays — the
 "compressed per-partition posting lists" of the design. Blocks are
 doc-contiguous (block_id = doc_id // block_span), which gives every block a
-disjoint docID range plus a precomputed max BM25 impact: the metadata the
-block-max pruning path uses to skip blocks at query time.
+disjoint docID range: a doc's positions for any term live at block
+doc_id // block_span, so a query that knows its candidate docs decodes
+only their blocks. On the lean layout this store is the index's only
+positional copy.
 
 Layout of a packed payload (all varint, little 7-bit groups, MSB continue):
     n_docs,
@@ -16,8 +18,7 @@ Layout of a packed payload (all varint, little 7-bit groups, MSB continue):
     for each doc: n_positions, pos_delta[0..m)   # first is absolute-1
 
 The scoring prefix (first 1+3n values) is decodable without touching the
-position section — `decode_block_scores` does exactly that, vectorized, so
-the block-max query path never pays for positions it does not need.
+position section — `decode_block_scores` does exactly that, vectorized.
 """
 
 from __future__ import annotations
@@ -166,8 +167,9 @@ def decode_varints_prefix(buf: bytes, max_values: int | None = None) -> "np.ndar
 
 def decode_block_scores(payload: bytes, base_doc: int):
     """(doc_ids, tfs, dls) as int64 ndarrays — decodes ONLY the scoring
-    prefix (1+3n values), never touching the position section. This is the
-    hot decode kernel of the block-max query path."""
+    prefix (1+3n values), never touching the position section. Compaction
+    uses it to recover (tf, dl) when it rebuilds postings rows from packed
+    payloads."""
     n = int(decode_varints_prefix(payload, 1)[0])
     vals = decode_varints_prefix(payload, 1 + 3 * n)
     doc_ids = np.int64(base_doc) + np.cumsum(vals[1:1 + n])

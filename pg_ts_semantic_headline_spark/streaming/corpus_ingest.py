@@ -327,7 +327,7 @@ def prepare_corpus_batch(
     index via `merge_batch` — the full clean→dedup→index ingestion in
     one attacher. The index must already exist (build it once first);
     replays are swept idempotent via `_merge_into_index`'s
-    marker-before-merge protocol. Block-max mode goes stale on every
+    marker-before-merge protocol. The packed store goes stale on every
     merged batch as usual — run `compact_index` periodically."""
     spark = batch_df.sparkSession
     if cross_near_dedup:
@@ -503,7 +503,7 @@ def attach_corpus_preparer(
     `compact_corpus_stores` folds the dedup stores (the just-committed
     batch is never folded, so its replay stays safe) and — when an index
     is attached — `compact_index` repacks the merge-staled buckets so
-    block-max mode comes back without an operator in the loop. Both are
+    the packed store is live again without an operator in the loop. Both are
     amortized costs; size N to the batch cadence (a repack touches only
     buckets merged since the last one)."""
     spark = stream_docs.sparkSession

@@ -111,8 +111,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         config="simple", n_buckets=16, block_span=128) and "ok")
     index = load_index(spark, idx_dir)
     terms = ["spark", "query"]
-    top = bm25_topk(index, terms, k=20, mode="auto").cache()
-    stage("bm25 top-20 (auto mode)", top.count)
+    top = bm25_topk(index, terms, k=20).cache()
+    stage("bm25 top-20", top.count)
 
     # the end-user query surface over the same index
     from pg_ts_semantic_headline_spark.plans.query_compiler import (

@@ -5,14 +5,12 @@ Builds the full index over the sf0.1 documents table replicated 1x and
 Nx (default 96x => ~480k docs) into temp dirs, then times the same query
 set at both scales:
 
-- bm25 exact top-10 (scans every posting of the query terms)
-- bm25 block-max WAND top-10 (theta-pruned packed scan)
+- bm25 top-10 (scans every posting of the query terms)
 - boolean+phrase search (anchored positional intersection)
 
 Prints one JSON line per scale plus the growth ratios. The claim under
-test: corpus grows RxD (docs x duplicates of each term's postings), so
-exact scales ~linearly with R while block-max grows sublinearly (bounded
-block decode per term + pruned survivors).
+test: query cost is O(df of the query terms), not O(corpus), so latency
+grows far slower than the corpus.
 
 Usage: spark-submit --py-files pkg.zip scripts/query_scale_probe.py \
            [sf_dir] [replicate] [out_base]
@@ -40,11 +38,7 @@ def run_queries(index, queries, search_fn, bm25_fn, reps: int = 2):
         return best
 
     out["bm25_exact"] = min_of(
-        lambda: [bm25_fn(index, q, k=10, mode="exact").collect()
-                 for q in queries])
-    out["bm25_blockmax"] = min_of(
-        lambda: [bm25_fn(index, q, k=10, mode="blockmax").collect()
-                 for q in queries])
+        lambda: [bm25_fn(index, q, k=10).collect() for q in queries])
     out["boolean_phrase"] = min_of(
         lambda: [search_fn(index, q, k=10).collect()
                  for q in queries[:3]])
@@ -100,7 +94,7 @@ def main():
         build_sec = time.time() - t0
         index = load_index(spark, idx_dir)
         if label == "small":   # warm the query path once, outside timing
-            bm25_topk(index, queries[0], k=10, mode="blockmax").collect()
+            bm25_topk(index, queries[0], k=10).collect()
         timings = run_queries(index, queries, search, bm25_topk)
         results[label] = {"n_docs": index.n_docs,
                           "build_sec": round(build_sec, 2),
@@ -109,7 +103,7 @@ def main():
         shutil.rmtree(idx_dir, ignore_errors=True)
 
     growth = {k: round(results["large"][k] / results["small"][k], 2)
-              for k in ("bm25_exact", "bm25_blockmax", "boolean_phrase")}
+              for k in ("bm25_exact", "boolean_phrase")}
     print(json.dumps({
         "corpus_growth_x": round(results["large"]["n_docs"]
                                  / results["small"]["n_docs"], 1),

@@ -263,7 +263,7 @@ class TestIndexedIngest:
 def test_streaming_with_index_and_periodic_compaction(spark, batches,
                                                       tmp_path):
     """compact_every=1: after the stream drains, the dedup stores are
-    folded and the index is repacked (block-max mode restored)."""
+    folded and the index is repacked (packed store live again)."""
     from pg_ts_semantic_headline_spark.plans.index_build import (
         build_index, load_index)
     b1, b2 = batches
@@ -283,7 +283,7 @@ def test_streaming_with_index_and_periodic_compaction(spark, batches,
                                compact_every=1)
     q.awaitTermination(180)
     index = load_index(spark, idx)
-    assert index.packed is not None            # block-max restored
+    assert index.packed is not None            # packed store live again
     live = sorted(r["doc_id"] for r in
                   index.tokens.select("doc_id").collect())
     # one indexed copy of each distinct eligible text + the seed doc

@@ -191,47 +191,6 @@ class TestBM25:
         for (_, gs), (_, ws) in zip(got, want):
             assert abs(gs - ws) < 1e-9
 
-    @pytest.mark.parametrize("terms,k", [
-        (["spark"], 5),
-        (["spark", "query", "window"], 10),
-        (["needle", "phrase", "target"], 9),
-        (["spark", "index", "batch", "merge"], 200),
-    ])
-    def test_blockmax_rank_identical_to_exact(self, index, terms, k):
-        exact = [(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, terms, k=k, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 10)) for r in
-                  bm25_topk(index, terms, k=k, mode="blockmax").collect()]
-        assert exact == pruned
-
-    def _assert_blockmax_matches_exact(self, index, terms, k):
-        exact = [(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, terms, k=k, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 10)) for r in
-                  bm25_topk(index, terms, k=k, mode="blockmax").collect()]
-        assert exact == pruned
-
-    def test_blockmax_seed_prune_path_rank_identical(self, index, monkeypatch):
-        """Force the large-segment 2-action WAND path (the test corpus is
-        small enough to normally take the single-action decode path)."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        self._assert_blockmax_matches_exact(
-            index, ["spark", "query", "window"], 5)
-        self._assert_blockmax_matches_exact(index, ["needle", "phrase"], 7)
-        self._assert_blockmax_matches_exact(index, ["unique"], 3)
-
-    def test_blockmax_meta_overflow_fallback_rank_identical(
-            self, index, monkeypatch):
-        """Hot-term meta past the driver collect bound must take the
-        distributed survival path and still be rank-identical (the in-plan
-        ub recompute guards against truncated-meta under-estimates)."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        monkeypatch.setattr(searchmod, "META_COLLECT_LIMIT", 4)
-        self._assert_blockmax_matches_exact(
-            index, ["spark", "query", "window"], 10)
-
 
 class TestLeanIndexPositionsFromPacked:
     """With the default build, row postings carry NO positions column —
@@ -291,29 +250,6 @@ class TestSearch:
         got = {r["doc_id"] for r in matching_docs(index, q).collect()}
         assert got == {13}
 
-    @pytest.mark.parametrize("direct_cap", [16_384, -1],
-                             ids=["direct-blocks", "theta-seeded"])
-    def test_filtered_blockmax_rank_identical(self, lean_index, monkeypatch,
-                                              direct_cap):
-        """Candidate-filtered queries on the forced large-segment path must
-        stay rank-identical to filtered exact on BOTH physical plans: the
-        selective-filter direct block-targeted decode (default cap) and
-        the θ-seeded prune route (cap forced to -1 so every candidate set
-        overflows it — seeds scored in-plan ∩ candidates)."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        from pg_ts_semantic_headline_spark.plans.search import search
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        monkeypatch.setattr(searchmod, "FILTERED_DIRECT_DOC_CAP", direct_cap)
-        for raw, k in [("spark & query", 10), ("needle & !unique", 7),
-                       ("batch & !unique", 25)]:
-            q = to_tspquery(CONFIG, raw)
-            ex = [(r["doc_id"], round(r["score"], 10)) for r in
-                  search(lean_index, q, k=k, mode="exact").collect()]
-            bm = [(r["doc_id"], round(r["score"], 10)) for r in
-                  search(lean_index, q, k=k, mode="blockmax").collect()]
-            assert ex == bm
-            assert ex, raw  # non-vacuous
-
     def test_search_with_headlines(self, index):
         q = phraseto_tspquery(CONFIG, "needle phrase target")
         rows = search_with_headlines(index, q, k=3).collect()
@@ -343,7 +279,7 @@ class TestExplainScore:
         from pg_ts_semantic_headline_spark.plans.search import explain_score
         terms = ["spark", "window"]
         full = {r["doc_id"]: r["score"] for r in
-                bm25_topk(index, terms, k=10_000, mode="exact").collect()}
+                bm25_topk(index, terms, k=10_000).collect()}
         rows = explain_score(index, terms).collect()
         by_doc = {}
         for r in rows:
@@ -363,7 +299,7 @@ class TestExplainScore:
     def test_doc_ids_filter_and_empty_terms(self, spark, index):
         from pg_ts_semantic_headline_spark.plans.search import explain_score
         some = [r["doc_id"] for r in
-                bm25_topk(index, ["spark"], k=3, mode="exact").collect()]
+                bm25_topk(index, ["spark"], k=3).collect()]
         rows = explain_score(index, ["spark"], doc_ids=some).collect()
         assert {r["doc_id"] for r in rows} == set(some)
         assert explain_score(index, []).count() == 0
@@ -385,7 +321,7 @@ class TestBatchSearch:
             by_q.setdefault(r["query_id"], []).append(r)
         for qid, terms in queries.items():
             got = sorted(by_q.get(qid, []), key=lambda r: r["rank"])
-            want = bm25_topk(index, terms, k=7, mode="exact").collect()
+            want = bm25_topk(index, terms, k=7).collect()
             assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
             for g, w in zip(got, want):
                 assert abs(g["score"] - w["score"]) < 1e-9
@@ -694,7 +630,7 @@ class TestSearchExtras:
             [(i, "en" if i % 3 else "de") for i, _ in corpus],
             ["doc_id", "lang"])
         terms = ["spark", "window"]
-        full = bm25_topk(index, terms, k=10_000, mode="exact").collect()
+        full = bm25_topk(index, terms, k=10_000).collect()
         lang = {i: ("en" if i % 3 else "de") for i, _ in corpus}
         want = {}
         for r in full:
@@ -1210,34 +1146,8 @@ class TestPrefixSearch:
             assert expand_prefix(eng, "the") == []
 
 
-class TestAutoMode:
-    def test_choose_mode_decisions(self, lean_index, index, corpus):
-        from pg_ts_semantic_headline_spark.plans.search import (
-            choose_bm25_mode)
-
-        # 'spark' is the Zipf head (in nearly every doc); 'snowflake'
-        # appears in one doc — the common+rare shape pruning pays for
-        assert choose_bm25_mode(lean_index, ["spark", "snowflake"],
-                                skew_ratio=10.0) == "blockmax"
-        # similar selectivities: bounds are near-equal, θ prunes nothing
-        assert choose_bm25_mode(lean_index, ["merge", "sort"]) == "exact"
-        # single term / degenerate queries stay on the lean row scan
-        assert choose_bm25_mode(lean_index, ["spark"]) == "exact"
-        assert choose_bm25_mode(lean_index, ["absentterm",
-                                             "spark"]) == "exact"
-
-    def test_auto_rank_identical(self, lean_index, corpus):
-        got = bm25_topk(lean_index, ["spark", "snowflake"], k=10,
-                        mode="auto").collect()
-        want = bm25_topk(lean_index, ["spark", "snowflake"], k=10,
-                         mode="exact").collect()
-        assert [(r["doc_id"], round(r["score"], 9)) for r in got] \
-            == [(r["doc_id"], round(r["score"], 9)) for r in want]
-
-
 def test_plan_search_explains_terms(lean_index, corpus):
-    from pg_ts_semantic_headline_spark.plans.search import (
-        choose_bm25_mode, plan_search)
+    from pg_ts_semantic_headline_spark.plans.search import plan_search
 
     post, _ = python_postings(corpus)
     rows = {r["term"]: r for r in plan_search(
@@ -1248,9 +1158,6 @@ def test_plan_search_explains_terms(lean_index, corpus):
     assert 0 < rows["spark"]["corpus_frac"] <= 1.0
     assert not rows["absentterm"]["in_dictionary"]
     assert rows["absentterm"]["df"] == 0 and rows["absentterm"]["idf"] is None
-    expected_mode = choose_bm25_mode(
-        lean_index, ["spark", "snowflake", "absentterm"])
-    assert {r["chosen_mode"] for r in rows.values()} == {expected_mode}
 
 
 def test_headlines_over_websearch_query(lean_index, corpus):

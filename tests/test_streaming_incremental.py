@@ -59,10 +59,9 @@ def test_merge_replace_refuses_uncastable_doc_ids(spark, index_dir):
 
 
 def test_merge_invalidates_packed_blocks(spark, tmp_path):
-    """A merge must not leave stale block-max metadata behind: merged docs
-    are absent from packed meta (never block-max candidates) and stored
-    bounds bake the pre-merge avgdl. After a merge, packed is gone —
-    blockmax refuses, exact sees the new docs; a resume build repacks."""
+    """A merge must not leave a stale packed store live: merged docs are
+    absent from packed/. After a merge, packed is gone — BM25 still sees
+    the new docs; a lean phrase query refuses until compaction."""
     out = str(tmp_path / "idx_packed")
     df = spark.createDataFrame(BASE, ["doc_id", "content"])
     build_index(spark, df, out, config=CONFIG, n_buckets=4,
@@ -74,9 +73,7 @@ def test_merge_invalidates_packed_blocks(spark, tmp_path):
 
     after = load_index(spark, out)
     assert after.packed is None
-    with pytest.raises(ValueError, match="packed"):
-        bm25_topk(after, ["fresh"], k=5, mode="blockmax")
-    top = bm25_topk(after, ["fresh"], k=5, mode="exact").collect()
+    top = bm25_topk(after, ["fresh"], k=5).collect()
     assert {r["doc_id"] for r in top} == {100, 101}
     # default (lean) layout: packed was the only positional copy, so a
     # positional query after the merge must direct to compaction instead
@@ -88,7 +85,7 @@ def test_merge_invalidates_packed_blocks(spark, tmp_path):
 
 class TestCompaction:
     """Targeted repack: merges/deletes/replaces are folded back into
-    block-max form without re-analyzing any document."""
+    the packed store without re-analyzing any document."""
 
     def _build(self, spark, tmp_path, n_buckets=16):
         out = str(tmp_path / "idxc")
@@ -97,15 +94,11 @@ class TestCompaction:
                     block_span=8, build_packed=True)
         return out
 
-    def _assert_rank_identical(self, index, terms, k=10):
-        exact = [(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, terms, k=k, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 10)) for r in
-                  bm25_topk(index, terms, k=k, mode="blockmax").collect()]
-        assert exact == pruned
-        return exact
+    def _ranks(self, index, terms, k=10):
+        return [(r["doc_id"], round(r["score"], 10)) for r in
+                bm25_topk(index, terms, k=k).collect()]
 
-    def test_compact_restores_blockmax_with_merged_docs(self, spark, tmp_path):
+    def test_compact_restores_packed_with_merged_docs(self, spark, tmp_path):
         from pg_ts_semantic_headline_spark.streaming import compact_index
         out = self._build(spark, tmp_path)
         merge_batch(spark, out, spark.createDataFrame(NEW, ["doc_id", "content"]),
@@ -118,7 +111,7 @@ class TestCompaction:
 
         after = load_index(spark, out)
         assert after.packed is not None and after.n_docs == 22
-        got = self._assert_rank_identical(after, ["fresh"], k=5)
+        got = self._ranks(after, ["fresh"], k=5)
         assert {d for d, _ in got} == {100, 101}
         # positions were repacked too: phrase search finds the merged doc
         q = phraseto_tspquery(CONFIG, "needle phrase target")
@@ -136,7 +129,7 @@ class TestCompaction:
         compact_index(spark, out)
         final = load_index(spark, out)
         assert final.n_docs == 23
-        got = self._assert_rank_identical(final, ["zeta"], k=3)
+        got = self._ranks(final, ["zeta"], k=3)
         assert {d for d, _ in got} == {200}
 
     def test_replace_doc(self, spark, tmp_path):
@@ -160,7 +153,7 @@ class TestCompaction:
         compact_index(spark, out)
         after = load_index(spark, out)
         assert after.n_docs == 20 and after.packed is not None
-        got = self._assert_rank_identical(after, ["brandnew"], k=5)
+        got = self._ranks(after, ["brandnew"], k=5)
         assert {d for d, _ in got} == {5}
         # physical apply: shadowed generations are gone from the tables
         assert spark.read.parquet(f"{out}/tokens").count() == 20
@@ -182,7 +175,7 @@ class TestCompaction:
         compact_index(spark, out)
         after = load_index(spark, out)
         assert after.n_docs == 19 and after.packed is not None
-        got = self._assert_rank_identical(after, ["alpha"], k=25)
+        got = self._ranks(after, ["alpha"], k=25)
         assert 3 not in {d for d, _ in got}
         assert spark.read.parquet(f"{out}/tokens").count() == 19
 
@@ -202,7 +195,7 @@ class TestCompaction:
         compact_index(spark, out)
         after = load_index(spark, out)
         assert after.n_docs == 17 and after.packed is not None
-        got = self._assert_rank_identical(after, ["alpha"], k=25)
+        got = self._ranks(after, ["alpha"], k=25)
         assert {d for d, _ in got} & {3, 7, 11} == set()
         assert spark.read.parquet(f"{out}/tokens").count() == 17
         # positions survived the anti-join repack
@@ -210,32 +203,109 @@ class TestCompaction:
         assert 3 not in {r["doc_id"] for r in
                          phrase_match_docs(after, q).collect()}
 
-    def test_bound_scale_keeps_rank_identity_after_avgdl_shift(
-            self, spark, tmp_path, monkeypatch):
-        """A targeted compact keeps the OLD avgdl baked into every bound;
-        merging much longer docs raises the corpus avgdl, so true norms
-        can exceed stored bounds — the query-side scale must keep the
-        forced-prune path rank-identical."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        from pg_ts_semantic_headline_spark.streaming import compact_index
-        out = self._build(spark, tmp_path)
-        long_docs = [(300 + i,
-                      "alpha beta " + " ".join(f"filler{j}" for j in range(80)))
-                     for i in range(4)]
-        merge_batch(spark, out, spark.createDataFrame(
-            long_docs, ["doc_id", "content"]), config=CONFIG)
-        compact_index(spark, out)
-        after = load_index(spark, out)
-        assert after.avgdl > after.avgdl_packed  # scale is actually > 1
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        self._assert_rank_identical(after, ["alpha", "beta"], k=24)
-        self._assert_rank_identical(after, ["alpha"], k=10)
 
-        # full compact re-baselines the bounds to the current avgdl
-        compact_index(spark, out, full=True)
-        rebased = load_index(spark, out)
-        assert abs(rebased.avgdl_packed - rebased.avgdl) < 1e-9
-        self._assert_rank_identical(rebased, ["alpha", "beta"], k=24)
+# per-block impact bounds the retired block-max scorer stored: packed/
+# carried two extra columns and stats/ one, all written by the same
+# PREP_VERSION as today's layout
+LEGACY_PACKED_COLS = {"max_tf": "int", "_".join(("max_tf", "norm")): "double"}
+LEGACY_STATS_COL = "_".join(("avgdl", "packed"))
+
+
+def _rewrite_table(path, df, partition_by=None):
+    import shutil
+
+    tmp = path + "_legacy_tmp"
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(tmp)
+    shutil.rmtree(path)
+    shutil.move(tmp, path)
+
+
+def _to_legacy_layout(spark, out):
+    packed = spark.read.parquet(f"{out}/packed")
+    _rewrite_table(f"{out}/packed", packed.select(
+        "term", "bucket", "block_id", "base_doc", "n_docs",
+        *[F.lit(1).cast(t).alias(c) for c, t in LEGACY_PACKED_COLS.items()],
+        "payload"), partition_by="bucket")
+    stats = spark.read.parquet(f"{out}/stats")
+    cols = stats.columns
+    _rewrite_table(f"{out}/stats", stats.select(
+        *cols[:cols.index("gen")],
+        F.col("avgdl").alias(LEGACY_STATS_COL), "gen"))
+
+
+def _packed_bucket_columns(out):
+    """{bucket: column names of its parquet files} straight from the
+    footers (a Spark read would infer one schema for the whole table)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    got = {}
+    for d in glob.glob(f"{out}/packed/bucket=*"):
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        if files:
+            got[int(d.rsplit("=", 1)[1])] = set(
+                pq.read_schema(files[0]).names)
+    return got
+
+
+def test_index_with_legacy_block_max_columns_still_works(spark, tmp_path):
+    """An index written before the block-max scorer was removed keeps its
+    bound columns on disk. It must load and answer exactly as before, and
+    a targeted compaction that leaves old and new packed buckets side by
+    side must keep deep fsck green and phrase results right."""
+    from pg_ts_semantic_headline_spark.plans.fsck import verify_index
+    from pg_ts_semantic_headline_spark.plans.search import search
+    from pg_ts_semantic_headline_spark.streaming import compact_index
+
+    out = str(tmp_path / "legacy")
+    build_index(spark, spark.createDataFrame(BASE, ["doc_id", "content"]),
+                out, config=CONFIG, n_buckets=16, block_span=8)
+    phrase = phraseto_tspquery(CONFIG, "alpha beta gamma")
+
+    def answers(index):
+        return ([(r["doc_id"], round(r["score"], 10)) for r in
+                 bm25_topk(index, ["alpha", "doc3"], k=10).collect()],
+                [(r["doc_id"], round(r["score"], 10)) for r in
+                 search(index, phrase, k=25).collect()])
+
+    want = answers(load_index(spark, out))
+    _to_legacy_layout(spark, out)
+    assert set(LEGACY_PACKED_COLS) <= set(
+        spark.read.parquet(f"{out}/packed").columns)
+    assert LEGACY_STATS_COL in spark.read.parquet(f"{out}/stats").columns
+
+    legacy = load_index(spark, out)
+    assert legacy.packed is not None and "positions" not in \
+        legacy.postings.columns
+    assert answers(legacy) == want
+    assert len(want[1]) == 20
+
+    merge_batch(spark, out, spark.createDataFrame(NEW, ["doc_id", "content"]),
+                config=CONFIG)
+    repacked = compact_index(spark, out)
+    by_bucket = _packed_bucket_columns(out)
+    new_style = {b for b, cols in by_bucket.items()
+                 if not set(LEGACY_PACKED_COLS) & cols}
+    assert new_style == set(repacked) and new_style < set(by_bucket)
+
+    rep = {r["check"]: r for r in
+           verify_index(spark, out, deep=True).collect()}
+    bad = {k: (v["status"], v["detail"]) for k, v in rep.items()
+           if v["status"] == "fail"}
+    assert not bad, bad
+
+    after = load_index(spark, out)
+    assert after.packed is not None and after.n_docs == 22
+    assert {r["doc_id"] for r in phrase_match_docs(after, phrase).collect()} \
+        == set(range(20))
+    fresh = phraseto_tspquery(CONFIG, "needle phrase target")
+    assert {r["doc_id"] for r in search(after, fresh, k=5).collect()} \
+        == {100}
 
 
 def test_windowed_term_counts_stream(spark, tmp_path):
@@ -347,7 +417,7 @@ def test_merge_batch_config_defaults_and_guards(spark, tmp_path_factory):
 
 class TestUpsertDocuments:
     """sha256-gated re-crawl ingestion: unchanged batches are free and
-    leave blockmax live; changed docs replace; new docs append."""
+    leave the packed store live; changed docs replace; new docs append."""
 
     @staticmethod
     def _build(spark, tmp, docs):
@@ -372,7 +442,7 @@ class TestUpsertDocuments:
         assert rep == {"unchanged": 2, "changed": 0, "new": 0}
         idx = load_index(spark, out)
         assert idx.gen == gen_before
-        assert idx.packed is not None  # blockmax still live: no merge ran
+        assert idx.packed is not None  # packed store still live: no merge ran
 
     def test_changed_and_new_docs(self, spark, tmp_path_factory):
         from pg_ts_semantic_headline_spark.plans.index_build import (
