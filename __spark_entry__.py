@@ -876,7 +876,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _built_index(spark, sf):
         # persisted-index path under the oracle gate: build the real
-        # inverted index (tokens/postings/terms/packed) into a per-run
+        # inverted index (tokens/postings/terms) into a per-run
         # temp dir and load it — the indexed engine must reproduce the
         # ad-hoc SQL-oracle BM25 exactly (same formula, same avgdl).
         # Memoized per (session, sf): four entries share it, the index is
@@ -889,7 +889,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             idx_dir = tempfile.mkdtemp(prefix="tsp_gate_idx_")
             build_index(spark, _docs(spark, sf).selectExpr(
                 "doc_id", "text as content"), idx_dir, config="simple",
-                n_buckets=8, block_span=128, resume=False)
+                n_buckets=8, resume=False)
             _gate_indexes[key] = load_index(spark, idx_dir)
         return _gate_indexes[key]
 
@@ -1373,7 +1373,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q76(spark, sf):
         # minimal all-terms window per doc from the persisted positional
-        # store (packed decode pruned to the query terms' buckets);
+        # store (row postings pruned to the query terms' buckets);
         # integers only — no cross-engine float surface at all
         from pg_ts_semantic_headline_spark.plans.ranking import min_span_docs
         return min_span_docs(_built_index(spark, sf), ["spark", "query"])
@@ -1506,7 +1506,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             idx_dir = tempfile.mkdtemp(prefix="tsp_gate_syn_")
             build_index(spark, _docs(spark, sf).selectExpr(
                 "doc_id", "text as content"), idx_dir, config=cfg,
-                n_buckets=8, block_span=128, resume=False)
+                n_buckets=8, resume=False)
             _gate_syn[key] = (load_index(spark, idx_dir), cfg)
         index, cfg = _gate_syn[key]
         return (bm25_topk(index, to_tspquery(cfg, "sparkle"), k=100000)
@@ -1540,7 +1540,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             idx_dir = tempfile.mkdtemp(prefix="tsp_gate_thes_")
             build_index(spark, _docs(spark, sf).selectExpr(
                 "doc_id", "text as content"), idx_dir, config=cfg,
-                n_buckets=8, block_span=128, resume=False)
+                n_buckets=8, resume=False)
             _gate_thes[key] = (load_index(spark, idx_dir), cfg)
         index, cfg = _gate_thes[key]
         return (bm25_topk(index, to_tspquery(cfg, "mergesort"), k=100000)
@@ -1577,7 +1577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 idx_dir,
                 config=F.when(F.col("lang") == "de", cfg)
                 .otherwise("simple"),
-                n_buckets=8, block_span=128, resume=False)
+                n_buckets=8, resume=False)
             _gate_ml[key] = load_index(spark, idx_dir)
         index = _gate_ml[key]
         return (bm25_topk(index, ["funke"], k=100000)
@@ -1653,7 +1653,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 d = tempfile.mkdtemp(prefix=f"tsp_gate_shard{i}_")
                 build_index(spark, part.selectExpr(
                     "doc_id", "text as content"), d, config="simple",
-                    n_buckets=8, block_span=128, resume=False)
+                    n_buckets=8, resume=False)
                 shards.append(load_index(spark, d))
             _gate_shards[key] = shards
         return (bm25_topk_federated(_gate_shards[key],
@@ -1682,8 +1682,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             d = tempfile.mkdtemp(prefix="tsp_gate_code_")
             build_index(spark, docs.selectExpr("doc_id",
                                                "text as content"), d,
-                        config="code", n_buckets=8, block_span=128,
-                        resume=False)
+                        config="code", n_buckets=8, resume=False)
             _gate_code[key] = load_index(spark, d)
         return (bm25_topk(_gate_code[key], ["query"], k=100000)
                 .withColumn("score_e4", _e4(F.col("score")))

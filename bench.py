@@ -89,7 +89,7 @@ def main():
         # outside every timed region, so timings reflect steady-state
         # throughput rather than JVM cold-start.
         build_index(spark, docs.limit(200), warm_dir, config="english",
-                    n_buckets=4, block_span=128, resume=False)
+                    n_buckets=4, resume=False)
         shutil.rmtree(warm_dir, ignore_errors=True)
 
         # min-of-2 on the build too (the r2 single-shot number was 2.5x off
@@ -98,12 +98,12 @@ def main():
         scratch = tempfile.mkdtemp(prefix="tsp_bench_idx2_")
         t0 = time.time()
         build_index(spark, docs, scratch, config="english",
-                    n_buckets=32, block_span=128, resume=False)
+                    n_buckets=32, resume=False)
         build_a = time.time() - t0
         shutil.rmtree(scratch, ignore_errors=True)
         t0 = time.time()
         build_index(spark, docs, idx_dir, config="english",
-                    n_buckets=32, block_span=128, resume=False)
+                    n_buckets=32, resume=False)
         build_b = time.time() - t0
         timings["index_build"] = min(build_a, build_b)
         # same steal guard as min_of: two wildly-disagreeing builds mean
@@ -112,7 +112,7 @@ def main():
             scratch = tempfile.mkdtemp(prefix="tsp_bench_idx3_")
             t0 = time.time()
             build_index(spark, docs, scratch, config="english",
-                        n_buckets=32, block_span=128, resume=False)
+                        n_buckets=32, resume=False)
             timings["index_build"] = min(timings["index_build"],
                                          time.time() - t0)
             shutil.rmtree(scratch, ignore_errors=True)
@@ -349,7 +349,7 @@ def main():
         finally:
             shutil.rmtree(trgm_dir, ignore_errors=True)
 
-        # hybrid retrieval: BM25 (packed index) + brute cosine, RRF-fused
+        # hybrid retrieval: BM25 (persisted index) + brute cosine, RRF-fused
         from pg_ts_semantic_headline_spark.plans.search import (
             hybrid_search_rrf)
         hq = [to_tspquery("english", "spark & window"),

@@ -620,10 +620,9 @@ def suggest_terms_multi(terms_df: DataFrame, words: list[str],
 
 def add_documents(index: TrigramIndex, docs: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text") -> None:
-    """Incremental ingest: trigram postings are per-document independent
-    (no cross-document blocks to invalidate, unlike the BM25 packed
-    store), so adding documents is two APPEND writes in the existing
-    layout — O(new docs), never O(corpus). Rows are stamped with the next
+    """Incremental ingest: trigram postings are per-document independent,
+    so adding documents is two APPEND writes in the existing layout —
+    O(new docs), never O(corpus). Rows are stamped with the next
     generation, so re-adding a doc_id AFTER `delete_documents` (the
     replace flow) is fully supported: queries see only the new rows.
     Caller contract: a LIVE doc_id must be deleted before re-adding —

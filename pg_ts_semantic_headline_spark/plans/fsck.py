@@ -22,17 +22,11 @@ shallow (metadata reads + count-only column-pruned scans):
   - stats.n_docs / stats.avgdl equal the live (tombstone-filtered)
     tokens table — `_reaggregate` republishes both on every mutation
   - terms dictionary bucket routing (bucket == xxhash64(term) mod NB)
-  - stale-marker state: packed present while a stale marker says it is
-    invalid -> compaction pending (warn, matches the loader's behavior)
   - tombstone generations never exceed the published stats generation
 
 deep (adds full scans / one groupBy over postings):
-  - postings + packed bucket routing (zero misrouted rows)
+  - postings bucket routing (zero misrouted rows)
   - terms.df / terms.cf == live postings per-term count / sum(tf)
-  - per-term packed block doc totals == live postings df (only when the
-    packed store is live; a stale marker skips the check, and a
-    mismatch WITHOUT a marker is exactly the crash-corruption this
-    tool exists to find)
   - build-signature checksums recomputed from the current files vs the
     manifest's observed xor-of-xxhash64 (gen 0, single signature only —
     appends legitimately change the xor)
@@ -75,8 +69,8 @@ def verify_index(spark: SparkSession, index_dir: str,
                  deep: bool = False) -> DataFrame:
     """Audit the index at `index_dir`; returns (check, status, expected,
     actual, detail) rows with status ok | fail | warn | skip. `deep=True`
-    adds the full-scan reconciliations (bucket routing on the big tables,
-    dictionary-vs-postings, packed-vs-postings, build checksums)."""
+    adds the full-scan reconciliations (bucket routing on postings,
+    dictionary-vs-postings, build checksums)."""
     paths = IndexPaths(index_dir)
     rows, add = _new_report()
 
@@ -90,7 +84,8 @@ def verify_index(spark: SparkSession, index_dir: str,
     add("stats_readable", "ok")
     if stats["prep_version"] != PREP_VERSION:
         add("prep_version", "fail", PREP_VERSION, stats["prep_version"],
-            "index layout predates this engine build; rebuild or upgrade")
+            "index layout predates this engine build; rebuild it with "
+            "build_index")
     else:
         add("prep_version", "ok", PREP_VERSION, stats["prep_version"])
     gen = int(stats["gen"])
@@ -103,8 +98,6 @@ def verify_index(spark: SparkSession, index_dir: str,
             "directory present", present[name])
     if not (present["tokens"] and present["postings"] and present["terms"]):
         return spark.createDataFrame(rows, REPORT_SCHEMA)
-    packed_dir = _path_exists(spark, paths.packed)
-    stale = _path_exists(spark, paths.stale)
     tombs_dir = _path_exists(spark, paths.tombstones)
 
     # ---- manifest internal consistency + files vs manifest ----
@@ -136,13 +129,9 @@ def verify_index(spark: SparkSession, index_dir: str,
             "; ".join(bad) if bad else "consistent",
             "per-file footer counts vs the write-pass Observation")
 
-        for name in ("tokens", "postings", "terms", "packed"):
+        for name in ("tokens", "postings", "terms"):
             expect = stage_globals.get(name, [])
             if not expect:
-                continue
-            if name == "packed" and not packed_dir:
-                add("files_vs_manifest_packed", "skip", "", "",
-                    "packed/ absent (lean layout or removed by a merge)")
                 continue
             cur = _footer_rows(spark, getattr(paths, name))
             if cur is None:
@@ -195,21 +184,10 @@ def verify_index(spark: SparkSession, index_dir: str,
         0, bad_terms,
         "bucket != xxhash64(term) % n_buckets breaks directory pruning")
 
-    # ---- packed store state ----
-    if stale and packed_dir:
-        add("packed_state", "warn", "no stale marker", "stale marker set",
-            "packed/ is invalid until compact_index runs; loaders already "
-            "treat it as absent (phrase queries on a lean index raise)")
-    elif packed_dir:
-        add("packed_state", "ok", "", "packed live")
-    else:
-        add("packed_state", "ok", "", "no packed store",
-            "row-positions layout built with build_packed=False")
-
     if not deep:
         return spark.createDataFrame(rows, REPORT_SCHEMA)
 
-    # ---- deep: bucket routing on the big tables ----
+    # ---- deep: bucket routing on postings ----
     bad_post = misrouted(postings)
     add("bucket_routing_postings", "fail" if bad_post else "ok", 0, bad_post)
 
@@ -227,25 +205,6 @@ def verify_index(spark: SparkSession, index_dir: str,
         "terms with df != live postings count (or present on one side only)")
     add("terms_vs_postings_cf", "fail" if cf_bad else "ok", 0, cf_bad)
 
-    # ---- deep: packed blocks vs live postings ----
-    if packed_dir and not stale:
-        packed = spark.read.parquet(paths.packed)
-        bad_packed = misrouted(packed)
-        add("bucket_routing_packed", "fail" if bad_packed else "ok",
-            0, bad_packed)
-        per_term_packed = (packed.groupBy("term")
-                           .agg(F.sum("n_docs").alias("df_packed")))
-        pk_bad = (per_term_packed.join(per_term, on="term", how="full")
-                  .where(F.coalesce("df_packed", F.lit(-1))
-                         != F.coalesce("df_live", F.lit(-1)))
-                  .count())
-        add("packed_vs_postings", "fail" if pk_bad else "ok", 0, pk_bad,
-            "terms whose packed block doc totals disagree with live "
-            "postings — stale packed data WITHOUT a stale marker")
-    else:
-        add("packed_vs_postings", "skip", "", "",
-            "packed absent or already flagged stale")
-
     # ---- deep: recompute build-signature checksums ----
     sigs = (manifest.select("sig_n", "sig_h").distinct().count()
             if manifest is not None else 0)
@@ -259,9 +218,6 @@ def verify_index(spark: SparkSession, index_dir: str,
             "postings": F.xxhash64(F.concat_ws("|", "term", "doc_id")),
             "terms": F.xxhash64("term"),
         }
-        if packed_dir:
-            spec["packed"] = F.xxhash64(
-                F.concat_ws("|", "term", "block_id"))
         recorded = {r["stage"]: int(r["checksum"]) for r in
                     manifest.where((F.col("partition_id") == -1)
                                    & F.col("checksum").isNotNull())

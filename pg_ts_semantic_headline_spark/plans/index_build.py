@@ -2,18 +2,18 @@
 
 Replaces the reference's per-row trigger upkeep
 (/root/reference/development_schema.sql:18-34: content_tsv/content_arr
-columns + GIN index) with a batch job producing five persisted tables under
+columns + GIN index) with a batch job producing four persisted tables under
 one index directory:
 
 - tokens/    doc_id, tokens array<string>, dl, sha256   (recall vectors +
              per-row invariant column)
-- postings/  bucket=<b>/ term, doc_id, tf, dl, positions array<int>
+- postings/  bucket=<b>/ doc_id, dl, term, tf, positions array<int>, gen
              — columnar row form, directory-partitioned by term bucket so a
              query's term lookup prunes to a handful of files; doc length is
-             denormalized to kill the docstats join at query time
-- packed/    bucket=<b>/ term, block_id, base_doc, n_docs, payload binary
-             — delta+varint compressed blocks of 128 docs each
-             (doc-contiguous): the positional store of the lean layout
+             denormalized to kill the docstats join at query time. This is
+             the index's one positional store: parquet's dictionary, delta
+             and zstd encodings compress it, and BM25 scoring, phrase
+             verification and headlines all read it
 - terms/     term, bucket, df, cf, idf — the dictionary
 - stats/     n_docs, avgdl, config, prep_version — corpus stats + the
              engine's analog of the reference's TSPVector marker domain
@@ -32,20 +32,17 @@ Shuffle budget: the per-(term, doc) aggregation happens doc-locally inside
 the analysis UDF (map-side combine) — no shuffle ever carries one row per
 token occurrence. The shuffles that remain move one compact row per
 (term, doc): ONE range repartition on (bucket, term, doc_id) whose sorted
-layout feeds both the postings write and (shuffle-free, via mapInPandas
-over contiguous runs) the packed-block stage, plus the small
-terms-dictionary aggregation (partial+final).
+layout feeds the postings write, plus the small terms-dictionary
+aggregation (partial+final).
 
 RANGE, not hash-on-bucket: a hash repartition into n_buckets partitions
-caps sort/pack parallelism at n_buckets reducers and sends a hot term's
+caps sort parallelism at n_buckets reducers and sends a hot term's
 entire posting list ("def", "the" — O(n_docs) rows) to ONE reducer. Range
 partitioning on (bucket, term, doc_id) into ~cluster-core partitions
 splits a hot term's run across consecutive reducers at doc_id granularity
 — the skew unit collapses from "hottest term's df" to "rows per range
 chunk". The directory layout is untouched (partitionBy("bucket") at
-write); a (term, block) run split at a range boundary just yields two
-partial packed rows for that block, which the query path treats as
-independent runs (disjoint doc subsets).
+write).
 """
 
 from __future__ import annotations
@@ -55,39 +52,23 @@ from ..io_codec import INDEX_CODEC
 import time
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, IntegerType, LongType,
-                               StringType, StructField, StructType)
-
-from .packing import pack_block
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 K1 = 1.2
 B = 0.75
-# v2: packed payloads carry per-doc dl (scoring needs no join). v3:
-# tokens/postings rows carry a `gen` (generation) column so doc
+# v3: tokens/postings rows carry a `gen` (generation) column so doc
 # replaces/deletes resolve by tombstone (doc_id, before_gen) without
-# rewriting the append-only tables, and stats carries `gen`. The version
-# gate in load_index rejects indexes written under older layouts. v3
-# indexes whose packed/ and stats/ still carry the per-block impact
-# bounds of the retired block-max scorer load unchanged: every reader
-# selects its columns by name and ignores the extra ones.
-PREP_VERSION = "tsp-spark-3"
-DEFAULT_BLOCK_SPAN = 128
+# rewriting the append-only tables, and stats carries `gen`. v4: row
+# postings always carry positions (the one positional store). The
+# version gate in load_index rejects indexes written under older
+# layouts: a v3 index may hold its positions only in a compressed block
+# store this engine no longer reads, so it must be rebuilt.
+PREP_VERSION = "tsp-spark-4"
 
 STATS_SCHEMA = ("n_docs long, avgdl double, config string, "
-                "prep_version string, n_buckets int, block_span int, "
-                "gen int")
-
-PACKED_SCHEMA = StructType([
-    StructField("term", StringType(), False),
-    StructField("bucket", IntegerType(), False),
-    StructField("block_id", LongType(), False),
-    StructField("base_doc", LongType(), False),
-    StructField("n_docs", IntegerType(), False),
-    StructField("payload", BinaryType(), False),
-])
+                "prep_version string, n_buckets int, gen int")
 
 
 def idf_expr(df_col, n_docs):
@@ -104,25 +85,14 @@ class IndexPaths:
     @property
     def postings(self): return f"{self.root}/postings"
     @property
-    def packed(self): return f"{self.root}/packed"
-    @property
     def terms(self): return f"{self.root}/terms"
     @property
     def stats(self): return f"{self.root}/stats"
     @property
     def manifest(self): return f"{self.root}/_manifest"
     # incremental-maintenance state (see streaming/incremental.py):
-    # pending/    merged-batch postings WITH positions (lean layouts only)
-    #             awaiting compaction into packed blocks
-    # _stale/     marker rows (one per merged batch): packed/ is stale —
-    #             loaders must treat the index as packed=None until
-    #             compact_index repacks the touched buckets
     # _tombstones (doc_id, before_gen): rows of doc_id with gen <
     #             before_gen are dead (doc replace/delete)
-    @property
-    def pending(self): return f"{self.root}/pending"
-    @property
-    def stale(self): return f"{self.root}/_stale"
     @property
     def tombstones(self): return f"{self.root}/_tombstones"
 
@@ -216,54 +186,6 @@ def _file_lineage(spark: SparkSession, out_path: str, observation,
     return rows
 
 
-def _pack_runs(pdf: pd.DataFrame, block_span: int) -> pd.DataFrame:
-    """Pack every (term, block) run in a frame already sorted by
-    (term, doc_id). Pure numpy/pandas."""
-    out = []
-    pdf = pdf.reset_index(drop=True)
-    block_ids = (pdf["doc_id"] // block_span).to_numpy()
-    for (term, block_id), g in pdf.groupby(
-            ["term", block_ids], sort=False):
-        base_doc = int(block_id) * block_span
-        payload = pack_block(g["doc_id"].to_numpy(), g["tf"].to_numpy(),
-                             g["dl"].to_numpy(), g["positions"].tolist(),
-                             base_doc)
-        out.append({
-            "term": term, "bucket": int(g["bucket"].iloc[0]),
-            "block_id": int(block_id), "base_doc": base_doc,
-            "n_docs": len(g), "payload": payload,
-        })
-    return pd.DataFrame(out, columns=[
-        "term", "bucket", "block_id", "base_doc", "n_docs", "payload"])
-
-
-def _streaming_packer(block_span: int):
-    """mapInPandas kernel over bucket-partitioned, (term, doc_id)-sorted
-    postings rows — the SAME physical layout the postings write produces, so
-    packing adds ZERO shuffles: every (term, block) run is contiguous within
-    the partition; only the open tail run is carried across Arrow batches."""
-
-    def pack(batches):
-        carry = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            last_term = pdf["term"].iloc[-1]
-            last_block = int(pdf["doc_id"].iloc[-1]) // block_span
-            tail = (pdf["term"] == last_term) & \
-                   (pdf["doc_id"] // block_span == last_block)
-            emit = pdf[~tail]
-            carry = pdf[tail]
-            if not emit.empty:
-                yield _pack_runs(emit, block_span)
-        if carry is not None and not carry.empty:
-            yield _pack_runs(carry, block_span)
-
-    return pack
-
-
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -272,12 +194,9 @@ def build_index(
     config: "str | Column" = "english",
     doc_id: str = "doc_id",
     n_buckets: int = 32,
-    block_span: int = DEFAULT_BLOCK_SPAN,
     resume: bool = True,
-    build_packed: bool = True,
     min_analyze_partitions: int | None = None,
     postings_partitions: int | None = None,
-    row_positions: bool | None = None,
     metrics: dict | None = None,
     cache_level: str = "DISK_ONLY",
 ) -> IndexPaths:
@@ -287,16 +206,8 @@ def build_index(
     the manifest persists) — the build-job observability hook.
     `min_analyze_partitions=0` disables the small-input spread guard (pass
     this when the caller already repartitioned/cached the input).
-    `postings_partitions` overrides the postings sort/pack shuffle width
+    `postings_partitions` overrides the postings sort shuffle width
     (default: 2× cluster parallelism).
-    `row_positions`: store position arrays in the postings ROW table.
-    Default (None) = only when no packed store is built: positions
-    dominate row-postings bytes (~30× the packed equivalent on the
-    measured corpus), so when the delta-varint packed store exists it is
-    the single positional copy — phrase verification and headlines decode
-    positions from it — and the row table shrinks to a compact scoring
-    projection (doc_id, dl, term, tf). Pass True to keep both (e.g. for
-    JVM-only phrase paths or row-level positional debugging).
     `cache_level`: StorageLevel name for the two inter-stage caches
     (analyzed docs, range-sorted postings); see the note at `storage`
     below for why DISK_ONLY is the scale-safe default.
@@ -409,10 +320,10 @@ def build_index(
                                 F.pmod(F.xxhash64("term"), F.lit(n_buckets))
                                 .cast("int")))
 
-    # ONE shuffle produces the physical layout both the postings table and
-    # the packed blocks need (globally range-ordered by bucket, term,
-    # doc_id); persisting it lets the packed stage run shuffle-free off the
-    # same partitions. Parallelism scales with the cluster, not n_buckets
+    # ONE shuffle produces the postings table's physical layout (globally
+    # range-ordered by bucket, term, doc_id); persisting it lets the terms
+    # aggregation reuse the same partitions. Parallelism scales with the
+    # cluster, not n_buckets
     # (see module docstring); the global range order also makes each
     # per-bucket file a term-ordered chunk, so query scans prune at the
     # parquet row-group level on term min/max.
@@ -425,15 +336,11 @@ def build_index(
                 .sortWithinPartitions("bucket", "term", "doc_id")
                 .persist(storage))
 
-    if row_positions is None:
-        row_positions = not build_packed
     if "postings" not in done:
         t0 = time.time()
         post_obs, post_aggs = _checksum_observation(
             "postings_lineage", F.concat_ws("|", "term", "doc_id"))
-        post_out = bucketed if row_positions else bucketed.drop("positions")
-        post_out = post_out.withColumn("gen", F.lit(0))
-        (post_out
+        (bucketed.withColumn("gen", F.lit(0))
          .observe(post_obs, *post_aggs)
          .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.postings))
         metrics["postings_sec"] = time.time() - t0
@@ -463,14 +370,13 @@ def build_index(
                  .withColumn("idf", idf_expr(F.col("df"), n_docs)))
         term_obs, term_aggs = _checksum_observation(
             "terms_lineage", F.col("term"))
-        # bucket-partitioned like postings/packed: a query's idf lookup
+        # bucket-partitioned like postings: a query's idf lookup
         # prunes to the terms' bucket directories instead of scanning the
         # whole dictionary
         terms.observe(term_obs, *term_aggs) \
             .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.terms)
         spark.createDataFrame(
-            [(n_docs, avgdl, cfg_name, PREP_VERSION, n_buckets, block_span,
-              0)],
+            [(n_docs, avgdl, cfg_name, PREP_VERSION, n_buckets, 0)],
             STATS_SCHEMA,
         ).write.option("compression", INDEX_CODEC).mode("overwrite").parquet(paths.stats)
         metrics["terms_sec"] = time.time() - t0
@@ -481,28 +387,6 @@ def build_index(
                                       fallback_checksum_col=F.col("term")),
                         int((time.time() - t0) * 1000))
         metrics["terms_lineage_sec"] = time.time() - t1
-
-    # ---- stage: packed blocks (delta+varint positional store) ----
-    if build_packed and "packed" not in done:
-        t0 = time.time()
-        # mapInPandas over the SAME bucket-sorted partitions the postings
-        # write used: every (term, block) run is contiguous — no groupBy
-        # shuffle, no terms join, no repartition
-        packed = bucketed.select(
-            "term", "bucket", "doc_id", "tf", "dl", "positions"
-        ).mapInPandas(_streaming_packer(block_span),
-                      schema=PACKED_SCHEMA)
-        pack_obs, pack_aggs = _checksum_observation(
-            "packed_lineage", F.concat_ws("|", "term", "block_id"))
-        (packed
-         .observe(pack_obs, *pack_aggs)
-         .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.packed))
-        metrics["packed_sec"] = time.time() - t0
-        t1 = time.time()
-        _write_manifest(spark, paths, "packed", signature,
-                        _file_lineage(spark, paths.packed, pack_obs),
-                        int((time.time() - t0) * 1000))
-        metrics["packed_lineage_sec"] = time.time() - t1
 
     analyzed.unpersist()
     bucketed.unpersist()
@@ -519,10 +403,6 @@ class Index:
     avgdl: float
     config: str
     n_buckets: int = 32
-    block_span: int = DEFAULT_BLOCK_SPAN
-    # positional store of the lean layout; None when not built or while
-    # merges have left packed/ stale (see IndexPaths.stale)
-    packed: DataFrame | None = None
     gen: int = 0
 
 
@@ -688,6 +568,19 @@ def resolve_index_alias(spark: SparkSession, alias_dir: str) -> str:
                .first()["target"])
 
 
+def _read_stats(spark: SparkSession, paths: IndexPaths):
+    """The index's stats row; raises unless the index was written under
+    this engine's layout version — readers and writers alike must not
+    touch an index whose tables they cannot interpret."""
+    stats = spark.read.parquet(paths.stats).first()
+    if stats["prep_version"] != PREP_VERSION:
+        raise ValueError(
+            f"index at {paths.root} was built with prep "
+            f"{stats['prep_version']!r}, engine expects {PREP_VERSION!r}: "
+            f"rebuild it with build_index")
+    return stats
+
+
 def load_index(spark: SparkSession, out_dir: str) -> Index:
     paths = IndexPaths(out_dir)
     if not _path_exists(spark, paths.stats):
@@ -703,21 +596,7 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
                     f"alias {out_dir} points at {target}, which is not a "
                     f"built index (chained aliases are not followed)")
             paths = t
-    stats = spark.read.parquet(paths.stats).first()
-    if stats["prep_version"] != PREP_VERSION:
-        raise ValueError(
-            f"index built with prep {stats['prep_version']!r}, "
-            f"engine expects {PREP_VERSION!r}")
-    # a _stale marker (written by merge_batch/delete_docs BEFORE any other
-    # mutation) means packed/ no longer reflects the row tables: loaders
-    # must behave as if no packed store exists until compact_index repacks
-    if _path_exists(spark, paths.stale):
-        packed = None
-    else:
-        try:
-            packed = spark.read.parquet(paths.packed)
-        except Exception:
-            packed = None
+    stats = _read_stats(spark, paths)
     tokens = spark.read.parquet(paths.tokens)
     postings = spark.read.parquet(paths.postings)
     if _path_exists(spark, paths.tombstones):
@@ -733,8 +612,6 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
         avgdl=float(stats["avgdl"]),
         config=stats["config"],
         n_buckets=int(stats["n_buckets"]),
-        block_span=int(stats["block_span"]),
-        packed=packed,
         gen=int(stats["gen"]),
     )
 
@@ -744,18 +621,15 @@ def index_stats(index: Index) -> DataFrame:
     health check an operator runs before pointing traffic at an index:
     corpus stats from the build manifest (free), live dictionary/postings
     counts (two count-only column-pruned scans), and the physical layout
-    flags (packed positions store live, generation).
+    (bucket count, generation).
 
-    Columns: n_docs, avgdl_e6, n_terms, n_postings, n_buckets,
-    block_span, config, packed (packed positions store live right now —
-    False while merges left the packed store stale), gen."""
+    Columns: n_docs, avgdl_e6, n_terms, n_postings, n_buckets, config,
+    gen."""
     spark = index.postings.sparkSession
     n_terms = index.terms.count()
     n_postings = index.postings.count()
     return spark.createDataFrame(
         [(index.n_docs, int(round(index.avgdl * 1_000_000)), n_terms,
-          n_postings, index.n_buckets, index.block_span, index.config,
-          index.packed is not None, index.gen)],
+          n_postings, index.n_buckets, index.config, index.gen)],
         "n_docs long, avgdl_e6 long, n_terms long, n_postings long, "
-        "n_buckets int, block_span int, config string, packed boolean, "
-        "gen long")
+        "n_buckets int, config string, gen long")

@@ -220,8 +220,8 @@ def ts_stat_indexed(index, min_ndoc: int = 1, min_nentry: int = 1) -> DataFrame:
     live rows (load_index applies `_tombstones`, so stats reflect
     deletes/replaces immediately, before any compaction): ndoc = live
     postings rows per term, nentry = Σ tf. The terms/ dictionary is NOT
-    read — its df/cf are build-time values that a pending tombstone
-    sweep may not reflect yet; live rows are always correct.
+    read — its df/cf are build-time values that a not-yet-run tombstone
+    sweep may not reflect; live rows are always correct.
 
     Accepts a main ``Index`` (plans/index_build.py) — for the fielded
     index use `ts_stat_fielded`, whose field filter is the analog of

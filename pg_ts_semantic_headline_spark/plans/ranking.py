@@ -12,14 +12,13 @@ Scale notes (the 100 TB contract):
 - ``min_span_docs`` is ONE window per candidate set (partition by
   doc_id, order by pos, k running aggregates inside a single window
   spec — one sort, no self-join, no quadratic blowup). Positions are
-  decoded only for candidate docs/blocks: `_positions_hay` prunes the
-  scan to doc-id IN-literals or block semi-joins BEFORE any
-  explode/decode, so the window input is O(candidates × query tf),
-  never the corpus.
+  exploded only for candidate docs: `_positions_hay` prunes the scan to
+  doc-id IN-literals or a doc-id semi-join BEFORE the explode, so the
+  window input is O(candidates × query tf), never the corpus.
 - ``proximity_rerank`` = top-`depth` BM25 (the pruned postings plan)
   + min-span over ≤ depth docs: rerank cost is
   independent of corpus size, which is the only shape that survives at
-  10^12 docs (computing spans corpus-wide before ranking would decode
+  10^12 docs (computing spans corpus-wide before ranking would explode
   every posting).
 - ``rm3_expand`` point-reads the feedback docs' recall vectors
   (parquet row-group min/max pruning on doc_id literals — the
@@ -42,8 +41,8 @@ from pyspark.sql import functions as F
 
 from .index_build import Index
 from .query_compiler import CompiledQuery
-from .search import (_idf_lookup, _positions_hay, _pruned_postings,
-                     _scored, bm25_topk)
+from .search import (_idf_lookup, _narrow_candidates, _positions_hay,
+                     _pruned_postings, _scored, bm25_topk)
 
 __all__ = ["min_span_docs", "proximity_rerank", "rm3_expand",
            "prf_search", "ltr_features", "rank_metrics", "slop_match_docs",
@@ -159,16 +158,6 @@ def min_span_docs(
         return spark.createDataFrame([], "doc_id long, span int")
     hay = _positions_hay(index, ts, candidate_docs=candidate_docs,
                          candidate_ids=candidate_ids)
-    # the packed path prunes to BLOCKS (span-sized doc ranges), so
-    # block-mates of the candidates ride along the decode — re-filter to
-    # the exact candidate set (row-positions mode already did this; the
-    # predicate is a no-op there)
-    if candidate_ids is not None:
-        hay = hay.where(F.col("doc_id").isin([int(d)
-                                              for d in candidate_ids]))
-    elif candidate_docs is not None:
-        hay = hay.join(F.broadcast(candidate_docs.select("doc_id")),
-                       on="doc_id", how="left_semi")
     w = (Window.partitionBy("doc_id").orderBy("pos")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     lasts = [F.max(F.when(F.col("term") == F.lit(t), F.col("pos"))).over(w)
@@ -240,8 +229,8 @@ def ts_rank_cd(
     running per-term last-position maxes inside ONE window spec,
     l(p) = least(lasts) is non-decreasing in p, so the minimal covers
     are exactly {(l, min p) per distinct l} — one sort per doc
-    partition, one aggregate, no self-join, no UDF. Positions decode
-    only for candidate docs/blocks (`_positions_hay`), so cost is
+    partition, one aggregate, no self-join, no UDF. Positions explode
+    only for candidate docs (`_positions_hay`), so cost is
     O(candidates × query tf) like every other ranking operator here.
     """
     query = _expanded(index, query)
@@ -253,12 +242,6 @@ def ts_rank_cd(
         return spark.createDataFrame([], out_schema)
     hay = _positions_hay(index, ts, candidate_docs=candidate_docs,
                          candidate_ids=candidate_ids)
-    if candidate_ids is not None:
-        hay = hay.where(F.col("doc_id").isin([int(d)
-                                              for d in candidate_ids]))
-    elif candidate_docs is not None:
-        hay = hay.join(F.broadcast(candidate_docs.select("doc_id")),
-                       on="doc_id", how="left_semi")
     w = (Window.partitionBy("doc_id").orderBy("pos")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     lasts = [F.max(F.when(F.col("term") == F.lit(t), F.col("pos"))).over(w)
@@ -391,8 +374,8 @@ def ts_rank(
     postings aggregate (see `_doc_uniq`).
 
     Scale shape: the or variant is ONE bucket-pruned postings scan
-    (tf column only — positions never decoded) + one hash aggregate;
-    the and variant decodes positions only for candidate docs/blocks
+    (tf column only — positions never exploded) + one hash aggregate;
+    the and variant explodes positions only for candidate docs
     (`_positions_hay`), and its per-doc cost is O(Σ_pairs tf_i·tf_k) —
     pass the retrieval top-k as candidates (the proximity_rerank
     shape) rather than ranking a corpus.
@@ -441,7 +424,6 @@ def ts_rank(
     else:
         hay = _positions_hay(index, terms, candidate_docs=candidate_docs,
                              candidate_ids=candidate_ids)
-        hay = _narrow_candidates(hay, candidate_ids, candidate_docs)
         # every (i, k < i) ordered item pair, driver-side (PG compares
         # item i's positions against every earlier item's) — duplicates
         # in the query produce duplicate pair rows, exactly like PG
@@ -472,16 +454,6 @@ def ts_rank(
 
     # flag 4 is extent-based (ts_rank_cd only); calc_rank ignores it
     return _apply_normalization(index, ranked, raw, norm & ~4)
-
-
-def _narrow_candidates(df: DataFrame, candidate_ids, candidate_docs):
-    if candidate_ids is not None:
-        return df.where(F.col("doc_id").isin([int(d)
-                                              for d in candidate_ids]))
-    if candidate_docs is not None:
-        return df.join(F.broadcast(candidate_docs.select("doc_id")),
-                       on="doc_id", how="left_semi")
-    return df
 
 
 def proximity_rerank(

@@ -10,9 +10,9 @@ top-k is the engine addition the north star requires. Scoring:
 
 One physical plan: scan postings rows for the query terms (bucket-pruned
 scan), broadcast-join the tiny idf map, hash-aggregate per doc,
-TakeOrdered k. A second, block-max WAND plan over the packed store is not
-kept: it measured slower at every size tried, its designed best case
-included (BENCH/BASELINE.md §2c-2e).
+TakeOrdered k. A second, block-max WAND plan over per-block impact bounds
+is not kept: it measured slower at every size tried, its designed best
+case included (BENCH/BASELINE.md §2c-2e).
 
 Phrase verification reuses the *same* pruned postings rows (positions ride
 along), so a phrase query costs no second index scan.
@@ -195,18 +195,16 @@ def search_federated(
 def plan_search(index: Index, query: CompiledQuery | list[str]) -> DataFrame:
     """EXPLAIN for a retrieval: one row per query term with the numbers
     the planner sees — df, idf, corpus fraction, the bucket its postings
-    scan prunes to, whether the term exists at all — plus packed-store
-    availability repeated on every row. Read
-    this before pointing an expensive query at a 10^12-doc index; cost
-    is one bucket-pruned dictionary lookup, nothing else."""
+    scan prunes to, whether the term exists at all. Read this before
+    pointing an expensive query at a 10^12-doc index; cost is one
+    bucket-pruned dictionary lookup, nothing else."""
     from ..functions.xxhash import term_bucket
 
     query = expand_query_prefixes(index, query) \
         if isinstance(query, CompiledQuery) else query
     spark = index.postings.sparkSession
     schema = ("term string, bucket int, df long, idf double, "
-              "corpus_frac double, in_dictionary boolean, "
-              "packed boolean")
+              "corpus_frac double, in_dictionary boolean")
     terms = sorted(set(
         query.lexemes if isinstance(query, CompiledQuery) else query))
     if not terms:
@@ -217,8 +215,7 @@ def plan_search(index: Index, query: CompiledQuery | list[str]) -> DataFrame:
     for t in terms:
         df_, idf_ = known.get(t, (0, None))
         rows.append((t, term_bucket(t, index.n_buckets), df_, idf_,
-                     df_ / max(index.n_docs, 1), t in known,
-                     index.packed is not None))
+                     df_ / max(index.n_docs, 1), t in known))
     return spark.createDataFrame(rows, schema)
 
 
@@ -345,81 +342,31 @@ def bm25_topk_batch(
             .select("query_id", "doc_id", "score", "rank"))
 
 
-def _pruned_packed(index: Index, terms: list[str]) -> DataFrame:
-    """Packed-block rows for the query terms (driver-side bucket routing →
-    parquet directory pruning, same trick as `_pruned_postings`). Payload
-    bytes are only materialized by plans that project the column."""
-    from ..functions.xxhash import term_bucket
-    buckets = sorted({term_bucket(t, index.n_buckets) for t in terms})
-    return (index.packed
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(terms)))
+def _narrow_candidates(df: DataFrame, candidate_ids: list | None,
+                       candidate_docs: DataFrame | None) -> DataFrame:
+    """Keep `df`'s rows of the candidate docs: `candidate_ids`
+    (driver-side literals, e.g. an already-collected top-k) push into the
+    scan as an IN-list filter, so it row-group-prunes instead of
+    post-filtering a full read; `candidate_docs` broadcast-semi-joins."""
+    if candidate_ids is not None:
+        return df.where(F.col("doc_id").isin([int(d)
+                                              for d in candidate_ids]))
+    if candidate_docs is not None:
+        return df.join(F.broadcast(candidate_docs.select("doc_id")),
+                       on="doc_id", how="left_semi")
+    return df
 
 
 def _positions_hay(index: Index, terms: list[str],
                    candidate_docs: DataFrame | None = None,
                    candidate_ids: list | None = None) -> DataFrame:
-    """(doc_id, term, pos) rows for the query terms — exploded from row
-    postings when they carry a positions column, else decoded from the
-    packed store (which is then the index's single positional copy; see
-    build_index(row_positions=...)). With `candidate_docs` (e.g. the
-    top-k winners), the source prunes BEFORE explode/decode: row mode
-    semi-joins doc ids, packed mode semi-joins the candidates' block ids
-    so only a handful of payloads are ever decoded. `candidate_ids`
-    (driver-side literals, e.g. an already-collected top-k) goes further:
-    the doc/block ids push into the scan as IN-list filters, so the scan
-    row-group-prunes instead of post-filtering a full read."""
-    if "positions" in index.postings.columns:
-        rows = _pruned_postings(index, terms)
-        if candidate_ids is not None:
-            rows = rows.where(F.col("doc_id").isin(list(candidate_ids)))
-        elif candidate_docs is not None:
-            rows = rows.join(F.broadcast(candidate_docs.select("doc_id")),
-                             on="doc_id", how="left_semi")
-        return rows.select("doc_id", "term",
-                           F.explode("positions").alias("pos"))
-    if index.packed is None:
-        raise ValueError(
-            "index stores no positions: row postings lack the positions "
-            "column and no packed store is present (rebuild with "
-            "row_positions=True or build_packed=True)")
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from .packing import decode_block_positions
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_d, out_t, out_p = [], [], []
-            for term, payload, base in zip(pdf["term"], pdf["payload"],
-                                           pdf["base_doc"]):
-                doc_ids, flat, counts = decode_block_positions(
-                    bytes(payload), int(base))
-                out_d.append(np.repeat(doc_ids, counts))
-                out_t.append(np.repeat(term, int(counts.sum())))
-                out_p.append(flat)
-            yield pd.DataFrame({"doc_id": np.concatenate(out_d),
-                                "term": np.concatenate(out_t),
-                                "pos": np.concatenate(out_p)})
-
-    packed = _pruned_packed(index, terms)
-    if candidate_ids is not None:
-        block_ids = sorted({int(d) // index.block_span
-                            for d in candidate_ids})
-        packed = packed.where(F.col("block_id").isin(block_ids))
-    elif candidate_docs is not None:
-        blocks = (candidate_docs
-                  .select(F.floor(F.col("doc_id") / index.block_span)
-                          .cast("long").alias("block_id"))
-                  .distinct())
-        packed = packed.join(F.broadcast(blocks), on="block_id",
-                             how="left_semi")
-    return (packed
-            .select("term", "base_doc", "payload")
-            .mapInPandas(gen, schema="doc_id long, term string, pos int"))
+    """(doc_id, term, pos) rows for the query terms, exploded from the
+    bucket-pruned row postings (the index's one positional store),
+    narrowed to the candidates (see `_narrow_candidates`) BEFORE the
+    explode."""
+    rows = _narrow_candidates(_pruned_postings(index, terms),
+                              candidate_ids, candidate_docs)
+    return rows.select("doc_id", "term", F.explode("positions").alias("pos"))
 
 
 def phrase_match_docs(index: Index, query: CompiledQuery,
@@ -433,20 +380,17 @@ def phrase_match_docs(index: Index, query: CompiledQuery,
 
     Length-1 "phrases" (plain boolean leaves like the `a` in `a & !b`)
     never touch positions: occurrence == tf > 0, so they resolve from the
-    compact row-postings scoring projection (n_matches = tf). Only real
-    multi-lexeme phrases pay for positional decode — on a lean (packed-
-    positions-only) index that is the difference between a row-projection
-    scan and decoding packed payloads.
+    row postings' tf column (n_matches = tf). Only real multi-lexeme
+    phrases explode position arrays.
 
     `anchor_docs` (a SUPERSET of every doc that can satisfy the boolean
-    query — see matching_docs) semi-joins each scan before any shuffle or
-    decode: a common term AND-ed with a rare one shuffles only the rare
-    term's docs into the per-doc aggregation, not its own millions. With
+    query — see matching_docs) semi-joins each scan before any shuffle:
+    a common term AND-ed with a rare one shuffles only the rare term's
+    docs into the per-doc aggregation, not its own millions. With
     `anchor_small` (the caller KNOWS the anchor's df is bounded) the
-    anchor also prunes the packed POSITION decode to the anchor's block
-    ids before any payload is touched — a phrase containing a common
-    lexeme decodes a handful of blocks instead of the lexeme's whole
-    posting range."""
+    anchor broadcast-joins the positional rows BEFORE the explode — a
+    phrase containing a common lexeme explodes a handful of docs' arrays
+    instead of the lexeme's whole posting list."""
     query = expand_query_prefixes(index, query)
     spark = index.postings.sparkSession
     if not query.phrases:
@@ -474,9 +418,7 @@ def phrase_match_docs(index: Index, query: CompiledQuery,
         qdf = (phrase_table_df(spark, query)
                .where(F.col("q_len") > 1))
         if anchor_docs is not None and anchor_small:
-            # pre-decode pruning: packed mode semi-joins the anchor's
-            # block ids before decoding any payload; row mode semi-joins
-            # doc ids before the explode
+            # pre-explode pruning: semi-join the anchor's doc ids first
             hay = _positions_hay(index, multi_lexemes,
                                  candidate_docs=anchor_docs)
         else:
@@ -537,8 +479,8 @@ def _required_lexemes(node: Node | None) -> set[str]:
 
 
 # matching_docs: an anchor term with df at or below this cap is small
-# enough to broadcast its doc/block ids and prune the packed position
-# decode to them before any payload is read (see phrase_match_docs)
+# enough to broadcast its doc ids and prune the positional rows to them
+# before any position array is exploded (see phrase_match_docs)
 ANCHOR_PRUNE_DOC_CAP = 16_384
 
 
@@ -580,8 +522,8 @@ def matching_docs(index: Index, query: CompiledQuery) -> DataFrame:
         if len(query.lexemes) > 1 and dfs[rarest] * 4 <= index.n_docs:
             anchor = (_pruned_postings(index, [rarest])
                       .select("doc_id"))
-            # a provably-bounded anchor can also prune the packed
-            # position decode (broadcast of ≤cap doc/block ids)
+            # a provably-bounded anchor can also prune the position
+            # explode (broadcast of ≤cap doc ids)
             anchor_small = dfs[rarest] <= ANCHOR_PRUNE_DOC_CAP
 
     phrase_docs = phrase_match_docs(index, full_query, anchor_docs=anchor,
@@ -756,22 +698,17 @@ def search_with_headlines(
         winners = None
         docs = (index.tokens.where(F.col("doc_id").isin(ids))
                 .select("doc_id", "tokens"))
-        hay_src = _positions_hay(index, list(query.lexemes),
-                                 candidate_ids=ids)
-        hay = (hay_src.where(F.col("doc_id").isin(ids))
+        hay = (_positions_hay(index, list(query.lexemes), candidate_ids=ids)
                .select("doc_id", "pos", F.col("term").alias("lex")))
     else:
         winners = hits.select("doc_id")
         docs = (index.tokens.join(winners, on="doc_id", how="left_semi")
                 .select("doc_id", "tokens"))
-        # haystack rows come straight from the already-pruned positional
-        # store: the precomputed-TSV trick as a persisted position-lookup
-        # joined to content (row postings when they carry positions,
-        # packed decode else), pre-pruned to the winners' docs/blocks
-        # before any explode or decode
+        # haystack rows come straight from the pruned row postings: the
+        # precomputed-TSV trick as a persisted position lookup joined to
+        # content, pre-pruned to the winners' docs before the explode
         hay = (_positions_hay(index, list(query.lexemes),
                               candidate_docs=winners)
-               .join(winners, on="doc_id", how="left_semi")
                .select("doc_id", "pos", F.col("term").alias("lex")))
     headlines = ts_fast_headline(docs, query, options, hay=hay)
     return (hits.join(headlines, on="doc_id", how="left")

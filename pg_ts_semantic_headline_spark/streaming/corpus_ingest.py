@@ -327,8 +327,8 @@ def prepare_corpus_batch(
     index via `merge_batch` — the full clean→dedup→index ingestion in
     one attacher. The index must already exist (build it once first);
     replays are swept idempotent via `_merge_into_index`'s
-    marker-before-merge protocol. The packed store goes stale on every
-    merged batch as usual — run `compact_index` periodically."""
+    marker-before-merge protocol. Replayed batches leave tombstoned rows
+    behind — run `compact_index` periodically to drop them."""
     spark = batch_df.sparkSession
     if cross_near_dedup:
         prep_kwargs.setdefault("near_dedup", True)
@@ -412,12 +412,11 @@ def _merge_into_index(spark: SparkSession, index_dir: str, kept: DataFrame,
     The kept set is deterministic on replay (the dedup-store reads
     exclude the batch's own attempt), so the sweep ids are exactly the
     crashed attempt's ids."""
-    from ..plans.index_build import IndexPaths, _path_exists
+    from ..plans.index_build import IndexPaths, _path_exists, _read_stats
     from .incremental import delete_docs, merge_batch
 
     marker = f"{out_dir}/_indexed/batch_id={batch_id}"
-    paths = IndexPaths(index_dir)
-    stats = spark.read.parquet(paths.stats).first()
+    stats = _read_stats(spark, IndexPaths(index_dir))
     if _path_exists(spark, marker):
         # distributed sweep: the kept ids go to delete_docs as a DataFrame
         # (materialized to a scratch table inside), never to the driver —
@@ -502,10 +501,9 @@ def attach_corpus_preparer(
     `compact_every=N` runs housekeeping after every Nth batch:
     `compact_corpus_stores` folds the dedup stores (the just-committed
     batch is never folded, so its replay stays safe) and — when an index
-    is attached — `compact_index` repacks the merge-staled buckets so
-    the packed store is live again without an operator in the loop. Both are
-    amortized costs; size N to the batch cadence (a repack touches only
-    buckets merged since the last one)."""
+    is attached — `compact_index` physically drops tombstoned rows
+    without an operator in the loop (a no-op when no tombstone exists).
+    Both are amortized costs; size N to the batch cadence."""
     spark = stream_docs.sparkSession
     compact_every = prep_kwargs.pop("compact_every", None)
     index_dir = prep_kwargs.get("index_dir")

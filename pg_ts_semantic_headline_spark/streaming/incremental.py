@@ -4,39 +4,28 @@ The reference keeps content_tsv/content_arr fresh with a BEFORE INSERT/UPDATE
 trigger (/root/reference/development_schema.sql:18-34). The Spark-native
 analog is Structured Streaming: a stream of new documents is folded into the
 persisted index with `foreachBatch`, each micro-batch running the same
-deterministic build pipeline over just the batch — plus a targeted
-compaction job that brings the packed positions store back up to date
-without a full rebuild.
+deterministic build pipeline over just the batch.
 
 Merge protocol (`merge_batch`):
 
-1. a `_stale` marker row is written FIRST: from that instant loaders treat
-   the index as packed=None (BM25 scoring reads row postings and sees
-   everything; a phrase query on a lean index raises rather than read
-   positions that miss the merged docs). The packed files themselves are
-   KEPT on disk — on lean layouts they are the only positional copy of
-   the pre-merge corpus, and compaction reads them back.
-2. tokens/postings rows for the batch are appended under the existing
-   layouts, stamped with the new generation number; on lean layouts the
-   batch postings WITH positions also land in `pending/` (compaction
-   input).
-3. with `replace=True`, a (doc_id, before_gen) tombstone is appended per
+1. tokens/postings rows for the batch (postings WITH positions, like the
+   build's) are appended under the existing layouts, stamped with the new
+   generation number. Row postings are the index's only positional store,
+   so every query shape — BM25, boolean, phrase, headlines — sees the
+   merged docs as soon as the rows land.
+2. with `replace=True`, a (doc_id, before_gen) tombstone is appended per
    batch doc: loaders drop shadowed older-generation rows via a broadcast
    join, so a re-ingested doc is visible exactly once without rewriting
    the append-only tables.
-4. terms/stats are re-aggregated from the (tombstone-filtered) postings.
+3. terms/stats are re-aggregated from the (tombstone-filtered) postings.
 
-`delete_docs` is the pure-delete variant (tombstones + wildcard marker).
+`delete_docs` is the pure-delete variant (tombstones only).
 
-`compact_index` is the targeted repack: it rebuilds packed blocks for ONLY
-the buckets the markers name (decoding the old packed payloads + pending
-rows, dropping tombstoned docs), physically rewrites tokens/postings only
-when tombstones exist, then clears pending/markers/tombstones — the
-packed store is live again without re-analyzing a single document.
-`full=True` repacks every bucket. Compaction is an offline maintenance
-job (the reference analog of VACUUM): concurrent readers keep seeing
-packed=None until the marker is removed last, but the tokens/postings
-swap is not snapshot-isolated.
+`compact_index` is the tombstone fold: it rewrites tokens/postings without
+the rows tombstones shadow, re-aggregates terms/stats, then clears the
+tombstones. It is a no-op when there are none. Compaction is an offline
+maintenance job (the reference analog of VACUUM): the tokens/postings swap
+is not snapshot-isolated.
 
 `merge_batch` is the foreachBatch body and is directly unit-testable without
 a streaming runtime; `attach_incremental_indexer` wires it to a stream.
@@ -48,20 +37,12 @@ from ..io_codec import INDEX_CODEC
 
 import time
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.index_build import (STATS_SCHEMA, IndexPaths, _file_lineage,
-                                 _path_exists, _streaming_packer,
-                                 _write_manifest, idf_expr, PACKED_SCHEMA)
-
-# compaction ships the tombstoned doc_ids into the packed-decode kernel
-# when the set is at most this big (dead rows are skipped before they are
-# even decoded); a mass delete past the cap switches to a distributed
-# anti-join on the decoded rows so neither the driver nor the task
-# closures ever hold the full id set
-TOMBSTONE_DECODE_CAP = 100_000
+from ..plans.index_build import (STATS_SCHEMA, IndexPaths, _apply_tombstones,
+                                 _path_exists, _read_stats, _write_manifest,
+                                 idf_expr)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -89,23 +70,11 @@ def _rename_path(spark: SparkSession, src: str, dst: str) -> None:
             f"false); data preserved at {src}")
 
 
-def _try_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet dir that may not exist or may be empty (e.g. pending/
-    after all its bucket subdirs were consumed)."""
-    if not _path_exists(spark, path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
 def _write_stats(spark: SparkSession, paths: IndexPaths, n_docs: int,
                  avgdl: float, stats_row, *, gen: int) -> None:
     spark.createDataFrame(
         [(n_docs, avgdl, stats_row["config"], stats_row["prep_version"],
-          int(stats_row["n_buckets"]), int(stats_row["block_span"]),
-          int(gen))],
+          int(stats_row["n_buckets"]), int(gen))],
         STATS_SCHEMA,
     ).write.option("compression", INDEX_CODEC).mode("overwrite").parquet(paths.stats)
 
@@ -114,8 +83,6 @@ def _reaggregate(spark: SparkSession, paths: IndexPaths, stats_row,
                  new_gen: int) -> None:
     """Dictionary + corpus stats from the current (tombstone-filtered) row
     tables — metadata-scale relative to postings."""
-    from ..plans.index_build import _apply_tombstones
-
     tokens = spark.read.parquet(paths.tokens)
     postings = spark.read.parquet(paths.postings)
     if _path_exists(spark, paths.tombstones):
@@ -131,14 +98,6 @@ def _reaggregate(spark: SparkSession, paths: IndexPaths, stats_row,
              .withColumn("idf", idf_expr(F.col("df"), n_docs)))
     terms.write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.terms)
     _write_stats(spark, paths, n_docs, avgdl, stats_row, gen=new_gen)
-
-
-def _write_stale_marker(spark: SparkSession, paths: IndexPaths,
-                        buckets: list[int], gen: int) -> None:
-    """bucket = -1 is the wildcard ("all buckets touched")."""
-    spark.createDataFrame(
-        [(int(b), int(gen)) for b in buckets], "bucket int, gen int"
-    ).write.option("compression", INDEX_CODEC).mode("append").parquet(paths.stale)
 
 
 def merge_batch(
@@ -168,7 +127,7 @@ def merge_batch(
     from pyspark.sql import Column as _Column
 
     paths = IndexPaths(index_dir)
-    stats = spark.read.parquet(paths.stats).first()
+    stats = _read_stats(spark, paths)
     n_buckets = int(stats["n_buckets"])
     new_gen = int(stats["gen"]) + 1
 
@@ -208,20 +167,13 @@ def merge_batch(
                                   .cast("int"))
                       .withColumn("gen", F.lit(new_gen)))
 
-    # the batch is small (a micro-batch); one action finds its touched
-    # buckets so the marker — and later the compaction — stays targeted
-    touched = sorted(r["bucket"] for r in
-                     batch_postings.select("bucket").distinct().collect())
     if replace:
-        # replaced docs' OLD postings live in arbitrary buckets; the
-        # wildcard makes compaction rebuild everything they could shadow
-        touched = [-1]
         # validate BEFORE any append: a doc_id that does not cast to
         # long would become a NULL tombstone that joins no postings in
         # _apply_tombstones — the replace silently degrades to a
         # duplicate-producing plain append. Same refusal contract as
-        # delete_docs' DataFrame form; checked here, ahead of the
-        # marker, so a refused batch leaves the index untouched.
+        # delete_docs' DataFrame form; a refused batch leaves the index
+        # untouched.
         if analyzed.where(F.col("doc_id").try_cast("long").isNull()) \
                 .limit(1).count():
             analyzed.unpersist()
@@ -231,25 +183,10 @@ def merge_batch(
                 "tombstones would be silent no-ops, so refusing the "
                 "whole batch")
 
-    # marker FIRST: any reader from here on sees packed=None, never new
-    # rows scored against stale block metadata
-    _write_stale_marker(spark, paths, touched, new_gen)
-
     analyzed.select("doc_id", "tokens", "dl", "sha256") \
         .withColumn("gen", F.lit(new_gen)) \
         .write.option("compression", INDEX_CODEC).mode("append").parquet(paths.tokens)
-
-    # match the base table's schema: a positions-free scoring projection
-    # (lean layout) stays positions-free in postings/, and the positional
-    # copy of the batch goes to pending/ for compaction to pack
-    existing_cols = spark.read.parquet(paths.postings).columns
-    if "positions" not in existing_cols:
-        (batch_postings.repartition("bucket")
-         .write.option("compression", INDEX_CODEC).mode("append").partitionBy("bucket").parquet(paths.pending))
-        row_out = batch_postings.drop("positions")
-    else:
-        row_out = batch_postings
-    (row_out.repartition("bucket")
+    (batch_postings.repartition("bucket")
      .write.option("compression", INDEX_CODEC).mode("append").partitionBy("bucket").parquet(paths.postings))
 
     if replace:
@@ -258,8 +195,8 @@ def merge_batch(
         # Written distributed — the batch's id set never lands on the
         # driver (a 10^8-doc re-crawl batch must not OOM it). Lineage is
         # safe against recache-by-path: `analyzed` is cached (materialized
-        # by the touched-buckets action above) and roots at batch_docs,
-        # never at the index's own tables.
+        # by the tokens append above) and roots at batch_docs, never at
+        # the index's own tables.
         (analyzed.select(F.col("doc_id").try_cast("long").alias("doc_id"))
          .distinct()
          .withColumn("before_gen", F.lit(new_gen).cast("int"))
@@ -283,9 +220,9 @@ def upsert_documents(
     content the index already holds — the sha256 recall column doubles as
     a change detector, so a mostly-unchanged re-crawl (the common case at
     corpus scale) costs one column-pruned (doc_id, sha256) scan and
-    leaves the index — including its packed store — untouched
-    when nothing changed. Changed doc_ids are replaced (tombstone + new
-    generation, merge_batch semantics); unseen doc_ids append.
+    leaves the index untouched when nothing changed. Changed doc_ids are
+    replaced (tombstone + new generation, merge_batch semantics); unseen
+    doc_ids append.
 
     Returns {"unchanged": n, "changed": n, "new": n}.
 
@@ -335,7 +272,7 @@ def upsert_documents(
         for r in flagged.groupBy("_status").count().collect():  # ≤ 3 rows
             report[r["_status"]] = int(r["count"])
         if report["changed"] + report["new"] == 0:
-            # no gen bump, no stale marker: the packed store stays live
+            # no gen bump: the index is left byte-identical
             return report
         ids_df = (flagged.where(F.col("_status") != "unchanged")
                   .select(F.col("doc_id").alias(doc_id)))
@@ -362,7 +299,7 @@ def delete_docs(spark: SparkSession, index_dir: str,
                 through_gen: int | None = None) -> None:
     """Tombstone-delete documents: queries stop seeing them immediately
     (broadcast tombstone filter in load_index); compact_index physically
-    drops their rows and repacks.
+    drops their rows.
 
     `doc_ids` is either a driver-side list (ad-hoc deletes) or a
     single-column DataFrame of ids — the scale form: the id set never
@@ -370,7 +307,7 @@ def delete_docs(spark: SparkSession, index_dir: str,
     scratch table BEFORE the first index mutation, both to break
     recache-by-path lineage (an id plan derived from the index's own
     tables would otherwise re-evaluate against the tombstones this call
-    appends) and to pin the id set against the marker write.
+    appends) and to pin the id set before the tombstone write.
 
     `through_gen` overrides the tombstone generation (default
     stats.gen + 1 — everything currently visible dies). A crash-recovery
@@ -381,7 +318,7 @@ def delete_docs(spark: SparkSession, index_dir: str,
     stats generation advances to `through_gen` so the recovery re-merge
     lands above the sweep (streaming replay — see corpus_ingest)."""
     paths = IndexPaths(index_dir)
-    stats = spark.read.parquet(paths.stats).first()
+    stats = _read_stats(spark, paths)
     new_gen = (int(through_gen) if through_gen is not None
                else int(stats["gen"]) + 1)
     if new_gen <= int(stats["gen"]):
@@ -417,9 +354,6 @@ def delete_docs(spark: SparkSession, index_dir: str,
             tombs = spark.createDataFrame(
                 [(int(i), new_gen) for i in doc_ids],
                 "doc_id long, before_gen int")
-        # deleted docs' postings span arbitrary term buckets → wildcard
-        # marker
-        _write_stale_marker(spark, paths, [-1], new_gen)
         tombs.write.option("compression", INDEX_CODEC).mode("append") \
             .parquet(paths.tombstones)
         _reaggregate(spark, paths, stats, new_gen)
@@ -428,214 +362,46 @@ def delete_docs(spark: SparkSession, index_dir: str,
             _delete_path(spark, scratch)
 
 
-def _decode_packed_rows(tomb_ids: set):
-    """mapInPandas kernel: packed payloads → positional postings rows
-    (term, bucket, doc_id, tf, dl, positions). Tombstoned docs are dropped
-    during decode: every live tombstone postdates the last pack, so ALL
-    packed rows of a tombstoned doc are shadowed."""
+def compact_index(spark: SparkSession, index_dir: str) -> None:
+    """Tombstone fold: rewrite tokens/postings without the rows that
+    tombstones shadow, re-aggregate terms/stats, then clear the
+    tombstones. No document is re-analyzed. A no-op when the index has
+    no tombstones.
 
-    def gen(batches):
-        import numpy as np
+    The tombstones are cleared LAST: until then a reader or a re-run
+    still applies them, and applying them to already-folded tables
+    changes nothing. Each table's swap (delete, then rename the staged
+    copy into place) is not atomic."""
+    from ..plans.fsck import _footer_rows
 
-        from ..plans.packing import decode_block_positions, decode_block_scores
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for term, bucket, payload, base in zip(
-                    pdf["term"], pdf["bucket"], pdf["payload"],
-                    pdf["base_doc"]):
-                payload = bytes(payload)
-                doc_ids, tfs, dls = decode_block_scores(payload, int(base))
-                _, flat, counts = decode_block_positions(payload, int(base))
-                splits = np.split(flat, np.cumsum(counts)[:-1])
-                for d, tf, dl, poss in zip(doc_ids.tolist(), tfs.tolist(),
-                                           dls.tolist(), splits):
-                    if int(d) in tomb_ids:
-                        continue
-                    out.append((term, int(bucket), int(d), int(tf), int(dl),
-                                [int(p) for p in poss]))
-            yield pd.DataFrame(out, columns=[
-                "term", "bucket", "doc_id", "tf", "dl", "positions"])
-
-    return gen
-
-
-def compact_index(spark: SparkSession, index_dir: str,
-                  full: bool = False,
-                  postings_partitions: int | None = None) -> list[int]:
-    """Targeted repack: bring the packed positions store live again after
-    merges/deletes by rebuilding packed blocks for ONLY the buckets the
-    stale markers name (no document is re-analyzed), physically dropping
-    tombstoned rows, then clearing pending/markers/tombstones. Returns
-    the repacked bucket list. `full=True` repacks every bucket."""
     t0 = time.time()
     paths = IndexPaths(index_dir)
-    stats = spark.read.parquet(paths.stats).first()
-    n_buckets = int(stats["n_buckets"])
-    block_span = int(stats["block_span"])
-    has_stale = _path_exists(spark, paths.stale)
-    has_tombs = _path_exists(spark, paths.tombstones)
-    if not has_stale and not full:
-        return []
-
-    wildcard = full
-    touched: set[int] = set()
-    if has_stale:
-        for r in spark.read.parquet(paths.stale).collect():
-            if int(r["bucket"]) < 0:
-                wildcard = True
-            else:
-                touched.add(int(r["bucket"]))
-    buckets = sorted(range(n_buckets)) if wildcard else sorted(touched)
-
-    tomb_ids: set = set()
-    tomb_anti: DataFrame | None = None
-    if has_tombs:
-        tomb_dids = (spark.read.parquet(paths.tombstones)
-                     .select("doc_id").distinct())
-        # bounded driver work: a small tombstone set rides the decode
-        # kernel (dead rows are never even decoded); a mass-delete's set
-        # would bloat the driver and every task closure, so past the cap
-        # the drop becomes a distributed anti-join on the decoded rows
-        # instead (sound on doc_id alone: every packed row predates every
-        # live tombstone — see _decode_packed_rows)
-        if tomb_dids.count() <= TOMBSTONE_DECODE_CAP:
-            tomb_ids = {int(r["doc_id"]) for r in tomb_dids.collect()}
-        else:
-            tomb_anti = tomb_dids
-    live_tombs = bool(tomb_ids) or tomb_anti is not None
-
-    # ---- gather positional rows for the buckets being repacked ----
-    lean = "positions" not in spark.read.parquet(paths.postings).columns
-    if lean:
-        src = None
-        if _path_exists(spark, paths.packed):
-            packed_old = (spark.read.parquet(paths.packed)
-                          .where(F.col("bucket").isin(buckets)))
-            src = (packed_old
-                   .select("term", "bucket", "base_doc", "payload")
-                   .mapInPandas(
-                       _decode_packed_rows(tomb_ids),
-                       schema="term string, bucket int, doc_id long, "
-                              "tf int, dl int, positions array<int>"))
-            if tomb_anti is not None:
-                src = src.join(tomb_anti, on="doc_id", how="left_anti")
-        pending_df = _try_parquet(spark, paths.pending)
-        if pending_df is not None:
-            pending = pending_df.where(F.col("bucket").isin(buckets))
-            if live_tombs:
-                from ..plans.index_build import _apply_tombstones
-                pending = _apply_tombstones(
-                    pending, spark.read.parquet(paths.tombstones))
-            pending = pending.select("term", "bucket", "doc_id", "tf", "dl",
-                                     "positions")
-            src = pending if src is None else src.unionByName(pending)
-        if src is None:
-            src = spark.createDataFrame(
-                [], "term string, bucket int, doc_id long, tf int, dl int, "
-                    "positions array<int>")
-    else:
-        rows = (spark.read.parquet(paths.postings)
-                .where(F.col("bucket").isin(buckets)))
-        if live_tombs:
-            from ..plans.index_build import _apply_tombstones
-            rows = _apply_tombstones(
-                rows, spark.read.parquet(paths.tombstones))
-        src = rows.select("term", "bucket", "doc_id", "tf", "dl", "positions")
-
-    sort_parts = (postings_partitions if postings_partitions is not None
-                  else spark.sparkContext.defaultParallelism * 2)
-    repacked = (src
-                .repartitionByRange(sort_parts, "bucket", "term", "doc_id")
-                .sortWithinPartitions("bucket", "term", "doc_id")
-                .mapInPandas(_streaming_packer(block_span),
-                             schema=PACKED_SCHEMA))
-    # stage to a temp dir (the job READS paths.packed — Spark rightly
-    # refuses a self-overwrite), then swap ONLY the repacked buckets'
-    # directories; untouched bucket dirs are left byte-identical
-    packed_tmp = paths.packed + "_compact_tmp"
-    _delete_path(spark, packed_tmp)
-    repacked.write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(packed_tmp)
-    for b in buckets:
-        _delete_path(spark, f"{paths.packed}/bucket={b}")
-        if _path_exists(spark, f"{packed_tmp}/bucket={b}"):
-            _rename_path(spark, f"{packed_tmp}/bucket={b}",
-                         f"{paths.packed}/bucket={b}")
-    if not _path_exists(spark, paths.packed):
-        # fresh/empty index edge: ensure the directory exists so loaders
-        # see an (empty) packed store rather than an error
-        fs, p, _ = _fs(spark, paths.packed)
-        fs.mkdirs(p)
-    _delete_path(spark, packed_tmp)
-
-    # ---- physical tombstone apply (only when tombstones exist) ----
-    if live_tombs:
-        from ..plans.index_build import _apply_tombstones
-        tombs = spark.read.parquet(paths.tombstones)
-        for tbl, part_by in ((paths.tokens, None),
-                             (paths.postings, "bucket"),
-                             (paths.pending if lean else None, "bucket")):
-            if tbl is None or _try_parquet(spark, tbl) is None:
-                continue
-            filtered = _apply_tombstones(spark.read.parquet(tbl), tombs)
-            tmp = tbl + "_compact_tmp"
-            w = filtered.write.option("compression", INDEX_CODEC).mode("overwrite")
-            if part_by:
-                w = w.partitionBy(part_by)
-            w.parquet(tmp)
-            _delete_path(spark, tbl)
-            _rename_path(spark, tmp, tbl)
-
-    # pending rows for the repacked buckets are now IN packed; with a
-    # wildcard everything pending was consumed
-    if lean and _path_exists(spark, paths.pending):
-        if wildcard:
-            _delete_path(spark, paths.pending)
-        else:
-            for b in buckets:
-                _delete_path(spark, f"{paths.pending}/bucket={b}")
-            if _try_parquet(spark, paths.pending) is None:
-                _delete_path(spark, paths.pending)  # nothing left in it
-
+    if not _path_exists(spark, paths.tombstones):
+        return
+    stats = _read_stats(spark, paths)
+    tombs = spark.read.parquet(paths.tombstones)
+    lineage = []
+    for tbl, part_by in ((paths.tokens, None), (paths.postings, "bucket")):
+        # stage to a temp dir (the job READS tbl — Spark rightly refuses a
+        # self-overwrite), then swap it into place
+        tmp = tbl + "_compact_tmp"
+        _delete_path(spark, tmp)
+        w = (_apply_tombstones(spark.read.parquet(tbl), tombs)
+             .write.option("compression", INDEX_CODEC).mode("overwrite"))
+        if part_by:
+            w = w.partitionBy(part_by)
+        w.parquet(tmp)
+        _delete_path(spark, tbl)
+        _rename_path(spark, tmp, tbl)
+        # lineage from parquet footers (no Spark job): tokens rows as
+        # partition 0, postings rows as partition 1
+        lineage.append((len(lineage), _footer_rows(spark, tbl) or 0, None))
+    _reaggregate(spark, paths, stats, int(stats["gen"]))
     _delete_path(spark, paths.tombstones)
-
-    # refresh stats/dictionary (n_docs/avgdl exclude dropped docs; gen is
-    # preserved)
-    tokens = spark.read.parquet(paths.tokens)
-    srow = tokens.select(F.count("*").alias("n"),
-                         F.avg("dl").alias("a")).first()
-    postings = spark.read.parquet(paths.postings)
-    n_docs = int(srow["n"])
-    terms = (postings.groupBy("term")
-             .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"),
-                  F.first("bucket").alias("bucket"))
-             .withColumn("idf", idf_expr(F.col("df"), n_docs)))
-    terms.write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.terms)
-    _write_stats(spark, paths, n_docs, float(srow["a"] or 0.0), stats,
-                 gen=int(stats["gen"]))
-
-    # marker removed LAST: readers keep seeing packed=None until every
-    # write above is complete
-    _delete_path(spark, paths.stale)
-
-    # lineage: one manifest row per repacked bucket (compaction is keyed
-    # by wall time, not input signature — it consumes merge state)
-    import pyarrow.parquet as pq
-    rows = []
-    for b in buckets:
-        try:
-            files = spark.read.parquet(f"{paths.packed}/bucket={b}").inputFiles()
-            n = sum(pq.ParquetFile(
-                f[len("file:"):] if f.startswith("file:") else f
-            ).metadata.num_rows for f in files)
-        except Exception:
-            n = 0
-        rows.append((b, n, None))
-    _write_manifest(spark, paths, "compact", (0, 0), rows,
+    # compaction is keyed by wall time, not input signature — it consumes
+    # merge state
+    _write_manifest(spark, paths, "compact", (0, 0), lineage,
                     int((time.time() - t0) * 1000))
-    return buckets
 
 
 def attach_incremental_indexer(

@@ -108,7 +108,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     idx_dir = tempfile.mkdtemp(prefix="tsp_demo_idx_")
     stage("index build", lambda: build_index(
         spark, clean.selectExpr("doc_id", "text as content"), idx_dir,
-        config="simple", n_buckets=16, block_span=128) and "ok")
+        config="simple", n_buckets=16) and "ok")
     index = load_index(spark, idx_dir)
     terms = ["spark", "query"]
     top = bm25_topk(index, terms, k=20).cache()

@@ -89,7 +89,7 @@ def main():
         shutil.rmtree(idx_dir, ignore_errors=True)
         t0 = time.time()
         build_index(spark, docs, idx_dir, config="english",
-                    n_buckets=32, block_span=128, resume=False,
+                    n_buckets=32, resume=False,
                     min_analyze_partitions=0)
         build_sec = time.time() - t0
         index = load_index(spark, idx_dir)

@@ -176,7 +176,7 @@ def main():
     # actually scales with executors.
     shutil.rmtree(out_dir + "_warm", ignore_errors=True)
     build_index(spark, base.limit(200), out_dir + "_warm",
-                config="english", n_buckets=4, block_span=128, resume=False)
+                config="english", n_buckets=4, resume=False)
     shutil.rmtree(out_dir + "_warm", ignore_errors=True)
 
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -199,7 +199,7 @@ def main():
     # the small-input guard keys off source inputFiles and would add a
     # shuffle that REDUCES parallelism here
     build_index(spark, docs, out_dir, config="english",
-                n_buckets=32, block_span=128, resume=False,
+                n_buckets=32, resume=False,
                 min_analyze_partitions=0, metrics=metrics,
                 cache_level=cache_level)
     wall = time.time() - t0

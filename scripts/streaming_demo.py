@@ -7,7 +7,7 @@ end-to-end on real testdata:
                                   CROSS-batch exact + substring dedup,
                                   kept rows folded into a BM25 index)
       → percolate_stream         (standing queries alert per batch)
-      → compact_index            (repack the packed store after the merges)
+      → compact_index            (fold tombstoned rows after the merges)
       → bm25 / search            (query the continuously-built index)
 
 Run:  python scripts/streaming_demo.py [sf_dir]   (default sf0.01)
@@ -70,7 +70,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     idx_dir = f"{work}/index"
     build_index(spark, docs.limit(1).selectExpr("doc_id",
                                                 "text as content"),
-                idx_dir, config="simple", n_buckets=8, block_span=128)
+                idx_dir, config="simple", n_buckets=8)
 
     corpus_dir = f"{work}/corpus"
     q = attach_corpus_preparer(
@@ -109,9 +109,9 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
                    f"{sum(c for _, c in alerts)} matches "
                    f"over {len(alerts)} batches")[1])
 
-    # the merged index answers queries; compaction repacks the packed store
+    # the merged index answers queries; compaction folds tombstoned rows
     stage("compact merged index",
-          lambda: f"repacked buckets: {compact_index(spark, idx_dir)}")
+          lambda: (compact_index(spark, idx_dir), "done")[1])
     index = load_index(spark, idx_dir)
     stage("bm25 over streamed index",
           lambda: bm25_topk(index, ["spark", "window"], k=10).count())

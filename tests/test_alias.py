@@ -16,12 +16,10 @@ def two_indexes(spark, tmp_path_factory):
     blue, green = str(root / "blue"), str(root / "green")
     build_index(spark, spark.createDataFrame(
         [(1, "blue corpus alpha"), (2, "blue corpus beta")],
-        ["doc_id", "content"]), blue, config=CONFIG, n_buckets=4,
-        block_span=8, build_packed=False)
+        ["doc_id", "content"]), blue, config=CONFIG, n_buckets=4)
     build_index(spark, spark.createDataFrame(
         [(10, "green corpus alpha"), (11, "green corpus gamma")],
-        ["doc_id", "content"]), green, config=CONFIG, n_buckets=4,
-        block_span=8, build_packed=False)
+        ["doc_id", "content"]), green, config=CONFIG, n_buckets=4)
     return str(root), blue, green
 
 

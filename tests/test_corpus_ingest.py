@@ -1,6 +1,8 @@
 """Streaming/incremental corpus preparation: cross-batch exact dedup via
 the persisted fingerprint store, idempotent replays, per-batch reports."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -218,8 +220,7 @@ class TestIndexedIngest:
         seed = spark.createDataFrame(
             [(100, "seed document about spark windows and batches")],
             "doc_id long, content string")
-        build_index(spark, seed, idx, config="simple", n_buckets=4,
-                    block_span=8)
+        build_index(spark, seed, idx, config="simple", n_buckets=4)
         return idx
 
     def test_kept_rows_reach_the_index(self, spark, batches, tmp_path):
@@ -263,7 +264,7 @@ class TestIndexedIngest:
 def test_streaming_with_index_and_periodic_compaction(spark, batches,
                                                       tmp_path):
     """compact_every=1: after the stream drains, the dedup stores are
-    folded and the index is repacked (packed store live again)."""
+    folded and the index holds no unfolded tombstones."""
     from pg_ts_semantic_headline_spark.plans.index_build import (
         build_index, load_index)
     b1, b2 = batches
@@ -271,7 +272,7 @@ def test_streaming_with_index_and_periodic_compaction(spark, batches,
     build_index(spark, spark.createDataFrame(
         [(100, "seed document about spark windows and batches")],
         "doc_id long, content string"), idx, config="simple",
-        n_buckets=4, block_span=8)
+        n_buckets=4)
     src = str(tmp_path / "src")
     b1.coalesce(1).write.parquet(src)
     b2.coalesce(1).write.mode("append").parquet(src)
@@ -283,7 +284,7 @@ def test_streaming_with_index_and_periodic_compaction(spark, batches,
                                compact_every=1)
     q.awaitTermination(180)
     index = load_index(spark, idx)
-    assert index.packed is not None            # packed store live again
+    assert not os.path.exists(f"{idx}/_tombstones")   # nothing to fold
     live = sorted(r["doc_id"] for r in
                   index.tokens.select("doc_id").collect())
     # one indexed copy of each distinct eligible text + the seed doc

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from pg_ts_semantic_headline_spark.functions.lexize import analyze_document
 from pg_ts_semantic_headline_spark.plans.index_build import (
     B, K1, build_index, load_index)
-from pg_ts_semantic_headline_spark.plans.packing import pack_block, unpack_block
 from pg_ts_semantic_headline_spark.plans.query_compiler import (
     phraseto_tspquery, to_tspquery)
 from pg_ts_semantic_headline_spark.plans.search import (
@@ -42,22 +41,9 @@ def corpus():
 
 @pytest.fixture(scope="module")
 def index(spark, corpus, tmp_path_factory):
-    # row_positions=True: several tests assert the row-level positional
-    # projection directly (the dual-store debugging mode)
     out = str(tmp_path_factory.mktemp("idx"))
     df = spark.createDataFrame(corpus, ["doc_id", "content"])
-    build_index(spark, df, out, config=CONFIG, n_buckets=8, block_span=8,
-                row_positions=True)
-    return load_index(spark, out)
-
-
-@pytest.fixture(scope="module")
-def lean_index(spark, corpus, tmp_path_factory):
-    # the scale default: packed store is the ONLY positional copy; row
-    # postings are a compact (doc_id, dl, term, tf) scoring projection
-    out = str(tmp_path_factory.mktemp("idx_lean"))
-    df = spark.createDataFrame(corpus, ["doc_id", "content"])
-    build_index(spark, df, out, config=CONFIG, n_buckets=8, block_span=8)
+    build_index(spark, df, out, config=CONFIG, n_buckets=8)
     return load_index(spark, out)
 
 
@@ -92,43 +78,6 @@ def python_bm25(corpus, terms, k):
     return ranked[:k]
 
 
-class TestPacking:
-    def test_roundtrip(self):
-        docs = [3, 9, 11, 200, 5000]
-        tfs = [1, 4, 2, 1, 9]
-        dls = [30, 55, 12, 400, 99]
-        poss = [[1], [2, 5, 9, 100], [3, 4], [16383], list(range(1, 10))]
-        payload = pack_block(docs, tfs, dls, poss, base_doc=0)
-        assert unpack_block(payload, 0) == (docs, tfs, dls, poss)
-
-    def test_compression_is_compact(self):
-        docs = list(range(1000, 1128))
-        tfs = [1] * 128
-        dls = [64] * 128
-        poss = [[i] for i in range(1, 129)]
-        payload = pack_block(docs, tfs, dls, poss, base_doc=1000)
-        # 128 docs * (1B delta + 1B tf + 1B dl + 1B count + 1-2B pos) ≈ ~750B
-        assert len(payload) < 1000
-
-    def test_score_prefix_decode_matches_full(self):
-        import numpy as np
-
-        from pg_ts_semantic_headline_spark.plans.packing import (
-            decode_block_scores)
-
-        docs = [128, 130, 200, 255]
-        tfs = [7, 1, 300, 2]
-        dls = [1000, 3, 70000, 128]
-        poss = [[1, 5, 9, 10, 11, 30, 31], [2], sorted(
-            np.random.RandomState(0).choice(
-                range(1, 100000), 300, replace=False).tolist()), [5, 7]]
-        payload = pack_block(docs, tfs, dls, poss, base_doc=128)
-        d, t, l = decode_block_scores(payload, 128)
-        assert d.tolist() == docs
-        assert t.tolist() == tfs
-        assert l.tolist() == dls
-
-
 class TestIndexBuild:
     def test_df_cf_match_oracle(self, index, corpus):
         post, _ = python_postings(corpus)
@@ -149,27 +98,14 @@ class TestIndexBuild:
         got = {r["doc_id"]: list(r["positions"]) for r in rows}
         assert got == post["needle"]
 
-    def test_packed_roundtrip_against_rows(self, index):
-        packed = index.packed.where(F.col("term") == "spark").collect()
-        rows = index.postings.where(F.col("term") == "spark").collect()
-        want = {r["doc_id"]: (r["tf"], r["dl"], list(r["positions"]))
-                for r in rows}
-        got = {}
-        for blk in packed:
-            docs, tfs, dls, poss = unpack_block(
-                bytes(blk["payload"]), blk["base_doc"])
-            for d, tf, dl, ps in zip(docs, tfs, dls, poss):
-                got[d] = (tf, dl, ps)
-        assert got == want
-
     def test_resume_skips_completed_stages(self, spark, index, corpus):
         mani = spark.read.parquet(index.paths.manifest)
         before = mani.count()
         stages = {r["stage"] for r in mani.select("stage").distinct().collect()}
-        assert stages == {"tokens", "postings", "terms", "packed"}
+        assert stages == {"tokens", "postings", "terms"}
         df = spark.createDataFrame(corpus, ["doc_id", "content"])
         build_index(spark, df, index.paths.root, config=CONFIG,
-                    n_buckets=8, block_span=8)  # same signature: no-op
+                    n_buckets=8)  # same signature: no-op
         after = spark.read.parquet(index.paths.manifest).count()
         assert after == before
 
@@ -190,45 +126,6 @@ class TestBM25:
         assert [d for d, _ in got] == [d for d, _ in want]
         for (_, gs), (_, ws) in zip(got, want):
             assert abs(gs - ws) < 1e-9
-
-
-class TestLeanIndexPositionsFromPacked:
-    """With the default build, row postings carry NO positions column —
-    phrase verification and headlines decode the packed store and must be
-    indistinguishable from the dual-store index."""
-
-    def test_row_projection_is_lean(self, lean_index):
-        assert "positions" not in lean_index.postings.columns
-
-    def test_phrase_docs_match_dual_store(self, index, lean_index, corpus):
-        q = phraseto_tspquery(CONFIG, "needle phrase target")
-        lean = {(r["doc_id"], r["n_matches"])
-                for r in phrase_match_docs(lean_index, q).collect()}
-        dual = {(r["doc_id"], r["n_matches"])
-                for r in phrase_match_docs(index, q).collect()}
-        assert lean == dual
-        assert lean  # non-trivial
-
-    def test_boolean_filter_matches(self, index, lean_index):
-        q = to_tspquery(CONFIG, "needle & !unique")
-        lean = {r["doc_id"] for r in matching_docs(lean_index, q).collect()}
-        dual = {r["doc_id"] for r in matching_docs(index, q).collect()}
-        assert lean == dual
-
-    def test_headlines_match(self, index, lean_index):
-        q = phraseto_tspquery(CONFIG, "needle phrase target")
-        lean = {r["doc_id"]: r["headline"] for r in
-                search_with_headlines(lean_index, q, k=3).collect()}
-        dual = {r["doc_id"]: r["headline"] for r in
-                search_with_headlines(index, q, k=3).collect()}
-        assert lean == dual and lean
-
-    def test_bm25_identical(self, index, lean_index):
-        a = [(r["doc_id"], round(r["score"], 10)) for r in
-             bm25_topk(lean_index, ["spark", "window"], k=10).collect()]
-        b = [(r["doc_id"], round(r["score"], 10)) for r in
-             bm25_topk(index, ["spark", "window"], k=10).collect()]
-        assert a == b
 
 
 class TestSearch:
@@ -368,13 +265,13 @@ class TestAnchoredBoolean:
             q = to_tspquery(CONFIG, raw)
             assert _required_lexemes(q.root) == req, raw
 
-    def test_anchor_equivalence(self, lean_index, monkeypatch):
+    def test_anchor_equivalence(self, index, monkeypatch):
         from pg_ts_semantic_headline_spark.plans import search as searchmod
         anchored = {}
         for raw in self.QUERIES:
             q = to_tspquery(CONFIG, raw)
             anchored[raw] = {r["doc_id"] for r in
-                             matching_docs(lean_index, q).collect()}
+                             matching_docs(index, q).collect()}
         # at least one query must actually exercise a non-empty anchored
         # result (guard against vacuous equivalence)
         assert any(anchored.values())
@@ -384,7 +281,7 @@ class TestAnchoredBoolean:
         for raw in self.QUERIES:
             q = to_tspquery(CONFIG, raw)
             plain = {r["doc_id"] for r in
-                     matching_docs(lean_index, q).collect()}
+                     matching_docs(index, q).collect()}
             assert plain == anchored[raw], raw
 
 
@@ -410,59 +307,6 @@ class TestXxHash64Parity:
                         .cast("int").alias("b")).collect())
         for r in rows:
             assert term_bucket(r["t"], 32) == r["b"], r["t"]
-
-
-class TestVectorizedPackingParity:
-    """The numpy varint encoder must be byte-identical to the scalar
-    reference implementation — payload format is the on-disk contract."""
-
-    def test_pack_block_byte_identity(self):
-        import random
-
-        import numpy as np
-
-        from pg_ts_semantic_headline_spark.plans.packing import (
-            encode_varints, encode_varints_np, pack_block, unpack_block)
-
-        def pack_scalar(doc_ids, tfs, dls, positions_lists, base_doc):
-            out = bytearray()
-            encode_varints([len(doc_ids)], out)
-            prev = base_doc
-            deltas = []
-            for d in doc_ids:
-                deltas.append(d - prev)
-                prev = d
-            encode_varints(deltas, out)
-            encode_varints(tfs, out)
-            encode_varints(dls, out)
-            for poss in positions_lists:
-                encode_varints([len(poss)], out)
-                prev_p = 0
-                pdeltas = []
-                for p in poss:
-                    pdeltas.append(p - prev_p)
-                    prev_p = p
-                encode_varints(pdeltas, out)
-            return bytes(out)
-
-        rng = random.Random(7)
-        for trial in range(50):
-            base = rng.randrange(0, 10 ** 9) * 128
-            n = rng.randrange(1, 60)
-            ids = sorted(rng.sample(range(base, base + 128), n))
-            tfs = [rng.randrange(1, 300) for _ in range(n)]
-            dls = [rng.randrange(1, 100000) for _ in range(n)]
-            poss = [sorted(rng.sample(range(1, 20000), tf)) for tf in tfs]
-            assert pack_block(ids, tfs, dls, poss, base) == \
-                pack_scalar(ids, tfs, dls, poss, base), trial
-            assert unpack_block(pack_block(ids, tfs, dls, poss, base),
-                                base) == (ids, tfs, dls, poss), trial
-        for _ in range(20):
-            vals = [rng.randrange(0, 2 ** rng.randrange(1, 63))
-                    for _ in range(rng.randrange(0, 500))]
-            out = bytearray()
-            encode_varints(vals, out)
-            assert bytes(out) == encode_varints_np(np.array(vals, np.int64))
 
 
 class TestFusedAnalysisConsistency:
@@ -522,8 +366,7 @@ def test_hybrid_search_rrf(spark, tmp_path):
         [(i, f"alpha doc{i} " + ("spark window " * (i % 4)))
          for i in range(30)], ["doc_id", "content"])
     idx_dir = str(tmp_path / "hidx")
-    build_index(spark, docs, idx_dir, config="simple", n_buckets=4,
-                block_span=8, build_packed=False)
+    build_index(spark, docs, idx_dir, config="simple", n_buckets=4)
     index = load_index(spark, idx_dir)
     rng = random.Random(3)
     emb = spark.createDataFrame(
@@ -569,8 +412,7 @@ def test_hybrid_rrf_ann_branch(spark, tmp_path):
         [(i, f"beta doc{i} " + ("spark window " * (i % 3)))
          for i in range(20)], ["doc_id", "content"])
     idx_dir = str(tmp_path / "hidx2")
-    build_index(spark, docs, idx_dir, config="simple", n_buckets=4,
-                block_span=8, build_packed=False)
+    build_index(spark, docs, idx_dir, config="simple", n_buckets=4)
     index = load_index(spark, idx_dir)
     rng = random.Random(5)
     emb = spark.createDataFrame(
@@ -774,8 +616,9 @@ def test_index_stats(index, corpus):
     row = index_stats(index).first()
     assert row["n_docs"] == len(corpus)
     assert row["n_terms"] > 0 and row["n_postings"] >= row["n_terms"]
-    assert row["packed"] is True and row["config"] == CONFIG
-    assert row["n_buckets"] == 8 and row["block_span"] == 8
+    assert row["config"] == CONFIG and row["n_buckets"] == 8
+    assert set(row.asDict()) == {"n_docs", "avgdl_e6", "n_terms",
+                                 "n_postings", "n_buckets", "config", "gen"}
 
 
 class TestBm25F:
@@ -1086,7 +929,7 @@ def test_fielded_bm25f_phrase_filtered_composition(spark, tmp_path):
     build_index(spark,
                 df.select("doc_id",
                           F.concat_ws(" ", "title", "body").alias("content")),
-                md, config="simple", n_buckets=4, block_span=8)
+                md, config="simple", n_buckets=4)
     midx = load_index(spark, md)
     cands = matching_docs(midx, phraseto_tspquery("simple", "needle phrase"))
     got = [r["doc_id"] for r in
@@ -1146,26 +989,26 @@ class TestPrefixSearch:
             assert expand_prefix(eng, "the") == []
 
 
-def test_plan_search_explains_terms(lean_index, corpus):
+def test_plan_search_explains_terms(index, corpus):
     from pg_ts_semantic_headline_spark.plans.search import plan_search
 
     post, _ = python_postings(corpus)
     rows = {r["term"]: r for r in plan_search(
-        lean_index, ["spark", "snowflake", "absentterm"]).collect()}
+        index, ["spark", "snowflake", "absentterm"]).collect()}
     assert set(rows) == {"spark", "snowflake", "absentterm"}
     assert rows["spark"]["df"] == len(post["spark"])
-    assert rows["spark"]["in_dictionary"] and rows["spark"]["packed"]
+    assert rows["spark"]["in_dictionary"]
     assert 0 < rows["spark"]["corpus_frac"] <= 1.0
     assert not rows["absentterm"]["in_dictionary"]
     assert rows["absentterm"]["df"] == 0 and rows["absentterm"]["idf"] is None
 
 
-def test_headlines_over_websearch_query(lean_index, corpus):
+def test_headlines_over_websearch_query(index, corpus):
     from pg_ts_semantic_headline_spark.plans.query_compiler import (
         websearch_to_tspquery)
 
     q = websearch_to_tspquery("simple", '"needle phrase" or snowflake')
-    hits = search_with_headlines(lean_index, q, k=5).collect()
+    hits = search_with_headlines(index, q, k=5).collect()
     assert hits, "corpus guarantees needle-phrase docs"
     for r in hits:
         h = r["headline"]
@@ -1191,43 +1034,41 @@ class TestSearchBatch:
             out[qid] = fn(CONFIG, text)
         return out
 
-    @pytest.mark.parametrize("which", ["lean_index", "index"])
-    def test_rank_identical_to_per_query_search(self, which, request):
+    def test_rank_identical_to_per_query_search(self, index):
         from pg_ts_semantic_headline_spark.plans.search import (
             search, search_batch)
 
-        idx = request.getfixturevalue(which)
         qs = self._compiled()
-        got = search_batch(idx, qs, k=7).collect()
+        got = search_batch(index, qs, k=7).collect()
         by_q: dict = {}
         for r in got:
             by_q.setdefault(r["query_id"], []).append(
                 (r["rank"], r["doc_id"], round(r["score"], 9)))
         for qid, q in qs.items():
             want = [(i + 1, r["doc_id"], round(r["score"], 9))
-                    for i, r in enumerate(search(idx, q, k=7).collect())]
+                    for i, r in enumerate(search(index, q, k=7).collect())]
             assert sorted(by_q.get(qid, [])) == want, qid
 
-    def test_single_scored_scan(self, lean_index):
+    def test_single_scored_scan(self, index):
         # the whole batch's ranking reads the postings row table ONCE
         from pg_ts_semantic_headline_spark.plans.search import search_batch
 
-        plan = search_batch(lean_index, self._compiled(), k=5) \
+        plan = search_batch(index, self._compiled(), k=5) \
             ._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan parquet") <= 4  # postings row scan +
-        # packed positional scan + tokens universe (NOT query) + terms idf
+        # positional postings scan + tokens universe (NOT query) + terms idf
 
-    def test_arrow_eval_mode_rank_identical(self, lean_index):
+    def test_arrow_eval_mode_rank_identical(self, index):
         # the large-workload Arrow boolean fold returns the same ranks
         from pg_ts_semantic_headline_spark.plans.search import search_batch
 
         qs = self._compiled()
         want = sorted((r["query_id"], r["rank"], r["doc_id"],
                        round(r["score"], 9))
-                      for r in search_batch(lean_index, qs, k=7).collect())
+                      for r in search_batch(index, qs, k=7).collect())
         got = sorted((r["query_id"], r["rank"], r["doc_id"],
                       round(r["score"], 9))
-                     for r in search_batch(lean_index, qs, k=7,
+                     for r in search_batch(index, qs, k=7,
                                            eval_mode="arrow").collect())
         assert got == want
 
@@ -1242,12 +1083,12 @@ def test_federated_equals_monolithic(spark, corpus, tmp_path_factory):
         out = str(tmp_path_factory.mktemp(f"fed{i}"))
         build_index(spark, spark.createDataFrame(
             part, ["doc_id", "content"]), out, config=CONFIG,
-            n_buckets=8, block_span=8)
+            n_buckets=8)
         shards.append(load_index(spark, out))
     mono_dir = str(tmp_path_factory.mktemp("fedall"))
     build_index(spark, spark.createDataFrame(
         corpus, ["doc_id", "content"]), mono_dir, config=CONFIG,
-        n_buckets=8, block_span=8)
+        n_buckets=8)
     mono = load_index(spark, mono_dir)
 
     for terms in (["spark", "snowflake"], ["needle"], ["merge", "sort"]):
@@ -1271,12 +1112,12 @@ def test_search_federated_equals_monolithic(spark, corpus,
         out = str(tmp_path_factory.mktemp(f"sfed{i}"))
         build_index(spark, spark.createDataFrame(
             part, ["doc_id", "content"]), out, config=CONFIG,
-            n_buckets=8, block_span=8)
+            n_buckets=8)
         shards.append(load_index(spark, out))
     mono_dir = str(tmp_path_factory.mktemp("sfedall"))
     build_index(spark, spark.createDataFrame(
         corpus, ["doc_id", "content"]), mono_dir, config=CONFIG,
-        n_buckets=8, block_span=8)
+        n_buckets=8)
     mono = load_index(spark, mono_dir)
 
     for qtext in ("needle<->phrase & !snowflake", "spark & merge",
@@ -1365,8 +1206,8 @@ def test_index_tables_written_zstd(spark, tmp_path):
         ["doc_id", "content"])
     out = str(tmp_path / "zstd_idx")
     build_index(spark, docs, out, config="simple", n_buckets=4,
-                block_span=8, resume=False)
-    for table in ("tokens", "postings", "terms", "packed"):
+                resume=False)
+    for table in ("tokens", "postings", "terms"):
         files = glob.glob(f"{out}/{table}/**/*.parquet", recursive=True)
         assert files, table
         meta = pq.ParquetFile(files[0]).metadata

@@ -20,7 +20,7 @@ def english_index(spark, tmp_path_factory):
     swift = load_reference_corpus("jswift_modest_proposal_test.sql")
     df = spark.createDataFrame(
         [(1, content), (2, swift)], ["doc_id", "content"])
-    build_index(spark, df, out, config="english", n_buckets=4, block_span=64)
+    build_index(spark, df, out, config="english", n_buckets=4)
     return load_index(spark, out)
 
 

@@ -1,5 +1,5 @@
 """Lifecycle soak: a MIXED mutation history (merge, delete, replace,
-targeted compact, full compact) must leave an index query-equivalent to
+two compactions) must leave an index query-equivalent to
 one built from scratch over the same final corpus — the invariant that
 catches state leaking across maintenance cycles (stale generations,
 drifted df/idf, a stale avgdl) that single-transition tests cannot see.
@@ -35,9 +35,8 @@ def soaked(spark, tmp_path_factory):
     rebuilt = str(root / "rebuilt")
 
     build_index(spark, spark.createDataFrame(BASE, ["doc_id", "content"]),
-                mutated, config=CONFIG, n_buckets=8, block_span=8,
-                build_packed=True)
-    # cycle 1: merge two docs, delete one old + one just-merged, repack
+                mutated, config=CONFIG, n_buckets=8)
+    # cycle 1: merge two docs, delete one old + one just-merged, compact
     merge_batch(spark, mutated, spark.createDataFrame(
         [(100, "alpha beta fresh needle phrase target arrives"),
          (101, "another fresh document beta gamma")],
@@ -45,12 +44,12 @@ def soaked(spark, tmp_path_factory):
     delete_docs(spark, mutated, [3, 101])
     compact_index(spark, mutated)
     # cycle 2: replace an original doc AND insert a new one through the
-    # same replace-mode batch, then a full repack
+    # same replace-mode batch, then compact again
     merge_batch(spark, mutated, spark.createDataFrame(
         [(5, "replaced brandnew shiny alpha content"),
          (200, "cycle two zeta needle document")],
         ["doc_id", "content"]), config=CONFIG, replace=True)
-    compact_index(spark, mutated, full=True)
+    compact_index(spark, mutated)
 
     final_corpus = ([r for r in BASE if r[0] not in (3, 5)]
                     + [(5, "replaced brandnew shiny alpha content"),
@@ -58,8 +57,7 @@ def soaked(spark, tmp_path_factory):
                        (200, "cycle two zeta needle document")])
     build_index(spark, spark.createDataFrame(final_corpus,
                                              ["doc_id", "content"]),
-                rebuilt, config=CONFIG, n_buckets=8, block_span=8,
-                build_packed=True)
+                rebuilt, config=CONFIG, n_buckets=8)
     return mutated, rebuilt
 
 
@@ -111,9 +109,10 @@ class TestLifecycleSoak:
         assert not bad, bad
 
     def test_no_leftover_mutation_state(self, spark, soaked):
-        """Tombstones / stale markers / pending rows are all consumed —
-        nothing for the next cycle to trip over."""
+        """Tombstones and compaction temp dirs are all consumed — nothing
+        for the next cycle to trip over."""
         import os
         mutated, _ = soaked
-        for sub in ("_tombstones", "_stale", "pending"):
+        for sub in ("_tombstones", "tokens_compact_tmp",
+                    "postings_compact_tmp"):
             assert not os.path.exists(os.path.join(mutated, sub)), sub

@@ -60,8 +60,7 @@ def test_headline_merges_fragments_across_the_boundary(spark, long_doc):
 def test_index_positions_exact_past_the_cap(spark, long_doc, tmp_path):
     out = str(tmp_path / "long_idx")
     build_index(spark, long_doc.select("doc_id", "content"), out,
-                config=CONFIG, n_buckets=4, block_span=8,
-                row_positions=True)
+                config=CONFIG, n_buckets=4)
     index = load_index(spark, out)
     rows = index.postings.where(F.col("term") == "needle").collect()
     assert len(rows) == 1

@@ -1,9 +1,7 @@
 """Property-based tests (hypothesis): randomized inputs against
 independent reference implementations.
 
-Three layers, cheapest first:
-- codec properties: the packed-block varint/delta codec round-trips and
-  the scalar and vectorized encoders agree byte-for-byte (pure driver);
+Two layers, cheapest first:
 - analyze properties: the engine-wide position-alignment invariant
   (token i <-> lexeme i, `problems/exact_matches.md:306-329`) holds for
   arbitrary unicode input (pure driver);
@@ -19,93 +17,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pg_ts_semantic_headline_spark.functions.lexize import analyze_document
-from pg_ts_semantic_headline_spark.plans.packing import (
-    decode_block_positions, decode_block_scores, decode_varints,
-    encode_varints, encode_varints_np, pack_block, unpack_block)
 from pg_ts_semantic_headline_spark.plans.query_compiler import (
     Node, phraseto_tspquery, to_tspquery)
-
-# ------------------------------------------------------------------ codec
-
-nonneg = st.integers(min_value=0, max_value=(1 << 62) - 1)
-
-
-class TestVarintProperties:
-    @given(st.lists(nonneg, max_size=200))
-    @settings(max_examples=200, deadline=None)
-    def test_scalar_vector_encoders_agree(self, values):
-        import numpy as np
-
-        scalar = bytearray()
-        encode_varints(values, scalar)
-        vec = encode_varints_np(np.asarray(values, dtype=np.int64))
-        assert bytes(scalar) == vec
-
-    @given(st.lists(nonneg, min_size=1, max_size=200))
-    @settings(max_examples=200, deadline=None)
-    def test_decode_inverts_encode(self, values):
-        buf = bytearray()
-        encode_varints(values, buf)
-        got, pos = decode_varints(bytes(buf), 0, len(values))
-        assert got == values
-        assert pos == len(buf)
-
-
-@st.composite
-def block_inputs(draw):
-    """A valid packed-block input: ascending unique doc_ids >= base_doc,
-    per-doc tf/dl, ascending positive positions with len == tf."""
-    base_doc = draw(st.integers(min_value=0, max_value=1 << 40))
-    n = draw(st.integers(min_value=0, max_value=12))
-    gaps = draw(st.lists(st.integers(min_value=1, max_value=1 << 20),
-                         min_size=n, max_size=n))
-    doc_ids, cur = [], base_doc
-    for g in gaps:
-        cur += g
-        doc_ids.append(cur)
-    positions_lists = []
-    for _ in range(n):
-        m = draw(st.integers(min_value=0, max_value=8))
-        pgaps = draw(st.lists(st.integers(min_value=1, max_value=500),
-                              min_size=m, max_size=m))
-        poss, p = [], 0
-        for g in pgaps:
-            p += g
-            poss.append(p)
-        positions_lists.append(poss)
-    tfs = [len(p) for p in positions_lists]
-    dls = draw(st.lists(st.integers(min_value=0, max_value=100_000),
-                        min_size=n, max_size=n))
-    return base_doc, doc_ids, tfs, dls, positions_lists
-
-
-class TestPackBlockProperties:
-    @given(block_inputs())
-    @settings(max_examples=150, deadline=None)
-    def test_roundtrip(self, inp):
-        base_doc, doc_ids, tfs, dls, positions_lists = inp
-        payload = pack_block(doc_ids, tfs, dls, positions_lists, base_doc)
-        d, t, l, p = unpack_block(payload, base_doc)
-        assert (d, t, l, p) == (doc_ids, tfs, dls, positions_lists)
-
-    @given(block_inputs())
-    @settings(max_examples=100, deadline=None)
-    def test_partial_decoders_agree_with_full(self, inp):
-        base_doc, doc_ids, tfs, dls, positions_lists = inp
-        payload = pack_block(doc_ids, tfs, dls, positions_lists, base_doc)
-        sd, stf, sdl = decode_block_scores(payload, base_doc)
-        assert list(sd) == doc_ids
-        assert list(stf) == tfs
-        assert list(sdl) == dls
-        pdoc, flat, counts = decode_block_positions(payload, base_doc)
-        assert list(pdoc) == doc_ids
-        assert list(counts) == [len(p) for p in positions_lists]
-        rebuilt, off = [], 0
-        for c in counts:
-            rebuilt.append([int(x) for x in flat[off:off + int(c)]])
-            off += int(c)
-        assert rebuilt == positions_lists
-
 
 # ---------------------------------------------------------------- analyze
 

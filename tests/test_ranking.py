@@ -59,51 +59,41 @@ def corpus():
 
 
 @pytest.fixture(scope="module")
-def lean_index(spark, corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("rank_idx_lean"))
+def index(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("rank_idx"))
     df = spark.createDataFrame(corpus, ["doc_id", "content"])
-    build_index(spark, df, out, config=CONFIG, n_buckets=8, block_span=8)
-    return load_index(spark, out)
-
-
-@pytest.fixture(scope="module")
-def row_index(spark, corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("rank_idx_row"))
-    df = spark.createDataFrame(corpus, ["doc_id", "content"])
-    build_index(spark, df, out, config=CONFIG, n_buckets=8, block_span=8,
-                row_positions=True)
+    build_index(spark, df, out, config=CONFIG, n_buckets=8)
     return load_index(spark, out)
 
 
 @pytest.mark.parametrize("terms", [["needle", "target"],
                                    ["spark", "query", "window"]])
-def test_min_span_matches_bruteforce(lean_index, row_index, corpus, terms):
+def test_min_span_matches_bruteforce(index, corpus, terms):
     expected = {}
     for doc_id, text in corpus:
         s = brute_min_span(text.split(" "), terms)
         if s is not None:
             expected[doc_id] = s
-    for idx in (lean_index, row_index):
-        got = {r["doc_id"]: r["span"]
-               for r in min_span_docs(idx, terms).collect()}
-        assert got == expected
-
-
-def test_min_span_single_term(lean_index, corpus):
     got = {r["doc_id"]: r["span"]
-           for r in min_span_docs(lean_index, ["needle"]).collect()}
+           for r in min_span_docs(index, terms).collect()}
+    assert got == expected
+
+
+def test_min_span_single_term(index, corpus):
+    got = {r["doc_id"]: r["span"]
+           for r in min_span_docs(index, ["needle"]).collect()}
     expected = {doc_id: 1 for doc_id, text in corpus
                 if "needle" in text.split(" ")}
     assert got == expected
 
 
-def test_min_span_candidate_pruning(lean_index, corpus):
+def test_min_span_candidate_pruning(index, corpus):
     terms = ["needle", "target"]
     full = {r["doc_id"]: r["span"]
-            for r in min_span_docs(lean_index, terms).collect()}
+            for r in min_span_docs(index, terms).collect()}
     some = sorted(full)[:3]
     got = {r["doc_id"]: r["span"]
-           for r in min_span_docs(lean_index, terms,
+           for r in min_span_docs(index, terms,
                                   candidate_ids=some).collect()}
     assert got == {d: full[d] for d in some}
 
@@ -128,13 +118,13 @@ def _py_bm25(corpus, terms, config_words=None):
     return out
 
 
-def test_proximity_rerank_boosts_tight_windows(lean_index, corpus):
+def test_proximity_rerank_boosts_tight_windows(index, corpus):
     terms = ["needle", "target"]
     base = {r["doc_id"]: r["score"]
-            for r in bm25_topk(lean_index, terms, k=1000).collect()}
+            for r in bm25_topk(index, terms, k=1000).collect()}
     spans = {r["doc_id"]: r["span"]
-             for r in min_span_docs(lean_index, terms).collect()}
-    res = proximity_rerank(lean_index, terms, k=1000, depth=1000,
+             for r in min_span_docs(index, terms).collect()}
+    res = proximity_rerank(index, terms, k=1000, depth=1000,
                            alpha=2.0).collect()
     assert res, "expected matches"
     got = {r["doc_id"]: (r["score"], r["span"]) for r in res}
@@ -151,23 +141,23 @@ def test_proximity_rerank_boosts_tight_windows(lean_index, corpus):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_proximity_rerank_deep_branch_agrees(lean_index):
+def test_proximity_rerank_deep_branch_agrees(index):
     terms = ["spark", "window"]
     shallow = [(r["doc_id"], round(r["score"], 9))
-               for r in proximity_rerank(lean_index, terms, k=20,
+               for r in proximity_rerank(index, terms, k=20,
                                          depth=500).collect()]
     deep = [(r["doc_id"], round(r["score"], 9))
-            for r in proximity_rerank(lean_index, terms, k=20,
+            for r in proximity_rerank(index, terms, k=20,
                                       depth=600).collect()]
     assert shallow == deep
 
 
-def test_rm3_expand_selection_rule(lean_index, corpus):
+def test_rm3_expand_selection_rule(index, corpus):
     from collections import Counter
 
     terms = ["needle", "target"]
     fb = [int(r["doc_id"])
-          for r in bm25_topk(lean_index, terms, k=5).collect()]
+          for r in bm25_topk(index, terms, k=5).collect()]
     docs = dict(corpus)
     tf = Counter()
     for d in fb:
@@ -177,7 +167,7 @@ def test_rm3_expand_selection_rule(lean_index, corpus):
         dfs.update(set(text.split(" ")))
     cands = sorted(t for t in tf if t not in set(terms))
     expected = sorted(cands, key=lambda t: (-tf[t], dfs[t], t))[:6]
-    got = rm3_expand(lean_index, terms, fb_docs=5, max_terms=6).collect()
+    got = rm3_expand(index, terms, fb_docs=5, max_terms=6).collect()
     assert [r["term"] for r in got] == expected
     assert [r["rank"] for r in got] == list(range(1, len(expected) + 1))
     for r in got:
@@ -185,24 +175,24 @@ def test_rm3_expand_selection_rule(lean_index, corpus):
         assert r["df"] == dfs[r["term"]]
 
 
-def test_prf_search_is_bm25_over_union(lean_index):
+def test_prf_search_is_bm25_over_union(index):
     terms = ["needle", "target"]
     exp = [r["term"] for r in
-           rm3_expand(lean_index, terms, fb_docs=5, max_terms=4).collect()]
+           rm3_expand(index, terms, fb_docs=5, max_terms=4).collect()]
     want = [(r["doc_id"], round(r["score"], 9)) for r in
-            bm25_topk(lean_index, sorted(set(terms) | set(exp)),
+            bm25_topk(index, sorted(set(terms) | set(exp)),
                       k=15).collect()]
     got = [(r["doc_id"], round(r["score"], 9)) for r in
-           prf_search(lean_index, terms, k=15, fb_docs=5,
+           prf_search(index, terms, k=15, fb_docs=5,
                       max_terms=4).collect()]
     assert got == want
 
 
-def test_ltr_features_values(lean_index, corpus):
+def test_ltr_features_values(index, corpus):
     terms = ["spark", "query", "window"]
     docs = {d: t.split(" ") for d, t in corpus}
     bm25 = _py_bm25(corpus, terms)
-    rows = ltr_features(lean_index, terms).collect()
+    rows = ltr_features(index, terms).collect()
     assert rows
     for r in rows:
         words = docs[r["doc_id"]]
@@ -216,11 +206,11 @@ def test_ltr_features_values(lean_index, corpus):
     assert {r["doc_id"] for r in rows} == set(bm25)
 
 
-def test_ltr_features_candidate_narrowing(lean_index):
+def test_ltr_features_candidate_narrowing(index):
     terms = ["spark", "window"]
-    full = {r["doc_id"]: r for r in ltr_features(lean_index, terms).collect()}
+    full = {r["doc_id"]: r for r in ltr_features(index, terms).collect()}
     ids = sorted(full)[:4]
-    got = ltr_features(lean_index, terms, candidate_ids=ids).collect()
+    got = ltr_features(index, terms, candidate_ids=ids).collect()
     assert {r["doc_id"] for r in got} == set(ids)
     for r in got:
         assert r["bm25"] == pytest.approx(full[r["doc_id"]]["bm25"],
@@ -292,7 +282,7 @@ def test_rank_metrics_against_python_oracle(spark):
     assert "q5" in got and got["q5"][1] == 0
 
 
-def test_rank_metrics_on_real_bm25(spark, lean_index, corpus):
+def test_rank_metrics_on_real_bm25(spark, index, corpus):
     # evaluate actual engine rankings against synthetic judgments:
     # docs containing both terms adjacent are rel=2, both terms rel=1
     terms = ["needle", "target"]
@@ -302,7 +292,7 @@ def test_rank_metrics_on_real_bm25(spark, lean_index, corpus):
         if all(t in words for t in terms):
             span = brute_min_span(words, terms)
             qrels.append(("q", doc_id, 2 if span == 2 else 1))
-    res = (bm25_topk(lean_index, terms, k=10)
+    res = (bm25_topk(index, terms, k=10)
            .withColumn("query_id", F.lit("q"))
            .select("query_id", "doc_id", "score"))
     qrel_df = spark.createDataFrame(qrels,
@@ -342,7 +332,7 @@ def brute_rank_cd(words, terms):
 @pytest.mark.parametrize("terms", [["needle", "target"],
                                    ["spark", "query", "window"],
                                    ["needle"]])
-def test_ts_rank_cd_matches_bruteforce(lean_index, row_index, corpus, terms):
+def test_ts_rank_cd_matches_bruteforce(index, corpus, terms):
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
 
     expected = {}
@@ -351,45 +341,44 @@ def test_ts_rank_cd_matches_bruteforce(lean_index, row_index, corpus, terms):
         if r is not None:
             expected[doc_id] = r
     assert expected, "corpus must exercise the operator"
-    for idx in (lean_index, row_index):
-        got = {r["doc_id"]: r["rank_e6"]
-               for r in ts_rank_cd(idx, terms).collect()}
-        assert got == expected
+    got = {r["doc_id"]: r["rank_e6"]
+           for r in ts_rank_cd(index, terms).collect()}
+    assert got == expected
 
 
-def test_ts_rank_cd_single_term_is_tf(lean_index, corpus):
+def test_ts_rank_cd_single_term_is_tf(index, corpus):
     # every occurrence of a 1-term query is its own width-1 cover
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
 
     got = {r["doc_id"]: r["rank_e6"]
-           for r in ts_rank_cd(lean_index, ["needle"]).collect()}
+           for r in ts_rank_cd(index, ["needle"]).collect()}
     for doc_id, text in corpus:
         tf = text.split(" ").count("needle")
         if tf:
             assert got[doc_id] == tf * 1_000_000
 
 
-def test_ts_rank_cd_normalization(lean_index, corpus):
+def test_ts_rank_cd_normalization(index, corpus):
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
 
     terms = ["needle", "target"]
     raw = {r["doc_id"]: r["rank"]
-           for r in ts_rank_cd(lean_index, terms).collect()}
+           for r in ts_rank_cd(index, terms).collect()}
     dls = {doc_id: len(text.split(" ")) for doc_id, text in corpus}
     n1 = {r["doc_id"]: r["rank"]
-          for r in ts_rank_cd(lean_index, terms, normalization=1).collect()}
+          for r in ts_rank_cd(index, terms, normalization=1).collect()}
     n2 = {r["doc_id"]: r["rank"]
-          for r in ts_rank_cd(lean_index, terms, normalization=2).collect()}
+          for r in ts_rank_cd(index, terms, normalization=2).collect()}
     n32 = {r["doc_id"]: r["rank"]
-           for r in ts_rank_cd(lean_index, terms, normalization=32).collect()}
+           for r in ts_rank_cd(index, terms, normalization=32).collect()}
     for d, r in raw.items():
         assert n1[d] == pytest.approx(r / (1 + math.log(dls[d])))
         assert n2[d] == pytest.approx(r / dls[d])
         assert n32[d] == pytest.approx(r / (r + 1))
     with pytest.raises(ValueError, match="bitmask"):
-        ts_rank_cd(lean_index, terms, normalization=64)
+        ts_rank_cd(index, terms, normalization=64)
     with pytest.raises(ValueError, match="bitmask"):
-        ts_rank_cd(lean_index, terms, normalization=-1)
+        ts_rank_cd(index, terms, normalization=-1)
 
 
 def brute_covers(words, terms):
@@ -422,16 +411,16 @@ def brute_extdist_divisor(covers):
     return len(covers) / (sumdist_e9 / 1e9)
 
 
-def test_ts_rank_cd_extdist_replay(lean_index, corpus):
+def test_ts_rank_cd_extdist_replay(index, corpus):
     """normalization=4 (RANK_NORM_EXTDIST) against a pure-Python replay
     of tsrank.c's extent bookkeeping over brute-force minimal covers."""
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
 
     terms = ["needle", "target"]
     raw = {r["doc_id"]: r["rank"]
-           for r in ts_rank_cd(lean_index, terms).collect()}
+           for r in ts_rank_cd(index, terms).collect()}
     n4 = {r["doc_id"]: r["rank"]
-          for r in ts_rank_cd(lean_index, terms, normalization=4).collect()}
+          for r in ts_rank_cd(index, terms, normalization=4).collect()}
     assert set(n4) == set(raw)
     single_extent_seen = multi_extent_seen = False
     for doc_id, text in corpus:
@@ -450,7 +439,7 @@ def test_ts_rank_cd_extdist_replay(lean_index, corpus):
     del single_extent_seen    # no-op branch optional on this corpus
 
 
-def test_ts_rank_cd_uniq_flags_replay(lean_index, corpus):
+def test_ts_rank_cd_uniq_flags_replay(index, corpus):
     """normalization=8 (÷ distinct lexemes) and 16 (÷(1+ln distinct)):
     the engine's txt->size analog is the doc's distinct-term count."""
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
@@ -458,11 +447,11 @@ def test_ts_rank_cd_uniq_flags_replay(lean_index, corpus):
     terms = ["needle", "target"]
     nuniq = {doc_id: len(set(text.split(" "))) for doc_id, text in corpus}
     raw = {r["doc_id"]: r["rank"]
-           for r in ts_rank_cd(lean_index, terms).collect()}
+           for r in ts_rank_cd(index, terms).collect()}
     n8 = {r["doc_id"]: r["rank"]
-          for r in ts_rank_cd(lean_index, terms, normalization=8).collect()}
+          for r in ts_rank_cd(index, terms, normalization=8).collect()}
     n16 = {r["doc_id"]: r["rank"]
-           for r in ts_rank_cd(lean_index, terms,
+           for r in ts_rank_cd(index, terms,
                                normalization=16).collect()}
     assert set(n8) == set(raw) and set(n16) == set(raw)
     for d, r in raw.items():
@@ -471,7 +460,7 @@ def test_ts_rank_cd_uniq_flags_replay(lean_index, corpus):
                                        rel=1e-9)
 
 
-def test_ts_rank_cd_normalization_composes(lean_index, corpus):
+def test_ts_rank_cd_normalization_composes(index, corpus):
     """Flags are a bitmask, applied in PG's order — 2|32 divides by dl
     FIRST, then applies r/(r+1) to the result."""
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
@@ -479,28 +468,28 @@ def test_ts_rank_cd_normalization_composes(lean_index, corpus):
     terms = ["needle", "target"]
     dls = {doc_id: len(text.split(" ")) for doc_id, text in corpus}
     raw = {r["doc_id"]: r["rank"]
-           for r in ts_rank_cd(lean_index, terms).collect()}
+           for r in ts_rank_cd(index, terms).collect()}
     combo = {r["doc_id"]: r["rank"]
-             for r in ts_rank_cd(lean_index, terms,
+             for r in ts_rank_cd(index, terms,
                                  normalization=2 | 32).collect()}
     for d, r in raw.items():
         v = r / dls[d]
         assert combo[d] == pytest.approx(v / (v + 1), rel=1e-9)
 
 
-def test_ts_rank_cd_candidate_narrowing(lean_index, corpus):
+def test_ts_rank_cd_candidate_narrowing(index, corpus):
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank_cd
 
     full = {r["doc_id"]: r["rank_e6"]
-            for r in ts_rank_cd(lean_index, ["needle", "target"]).collect()}
+            for r in ts_rank_cd(index, ["needle", "target"]).collect()}
     some = sorted(full)[:3]
     got = {r["doc_id"]: r["rank_e6"]
-           for r in ts_rank_cd(lean_index, ["needle", "target"],
+           for r in ts_rank_cd(index, ["needle", "target"],
                                candidate_ids=some).collect()}
     assert got == {d: full[d] for d in some}
 
 
-def test_slop_match_docs(lean_index, corpus):
+def test_slop_match_docs(index, corpus):
     from pg_ts_semantic_headline_spark.plans.ranking import slop_match_docs
 
     terms = ["needle", "target"]
@@ -512,15 +501,15 @@ def test_slop_match_docs(lean_index, corpus):
     for slop in (0, 3, 50):
         want = {d for d, s in spans.items() if s <= len(terms) + slop}
         got = {r["doc_id"] for r in
-               slop_match_docs(lean_index, terms, slop=slop).collect()}
+               slop_match_docs(index, terms, slop=slop).collect()}
         assert got == want, slop
     # slop=0 means adjacent-in-some-order; the corpus plants adjacent
     # needle/target pairs so the tightest setting still matches some
     assert {r["doc_id"] for r in
-            slop_match_docs(lean_index, terms, slop=0).collect()}
+            slop_match_docs(index, terms, slop=0).collect()}
     import pytest as _pytest
     with _pytest.raises(ValueError):
-        slop_match_docs(lean_index, terms, slop=-1)
+        slop_match_docs(index, terms, slop=-1)
 
 
 def brute_ts_rank(words, items, variant, w0=0.1):
@@ -565,8 +554,7 @@ def brute_ts_rank(words, items, variant, w0=0.1):
     ("and", ["needle", "target"]),
     ("and", ["spark", "query", "window"]),
 ])
-def test_ts_rank_matches_tsrank_replay(lean_index, row_index, corpus,
-                                       variant, items):
+def test_ts_rank_matches_tsrank_replay(index, corpus, variant, items):
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank
 
     expected = {}
@@ -575,16 +563,15 @@ def test_ts_rank_matches_tsrank_replay(lean_index, row_index, corpus,
         if r is not None:
             expected[doc_id] = r
     assert expected, "oracle found no ranked docs — corpus shape changed?"
-    for idx in (lean_index, row_index):
-        got = {r["doc_id"]: r["rank"]
-               for r in ts_rank(idx, items, variant=variant).collect()}
-        assert set(got) == set(expected)
-        for d, want in expected.items():
-            assert got[d] == pytest.approx(want, rel=2e-3, abs=1e-6), \
-                (d, variant)
+    got = {r["doc_id"]: r["rank"]
+           for r in ts_rank(index, items, variant=variant).collect()}
+    assert set(got) == set(expected)
+    for d, want in expected.items():
+        assert got[d] == pytest.approx(want, rel=2e-3, abs=1e-6), \
+            (d, variant)
 
 
-def test_ts_rank_variant_dispatch(lean_index):
+def test_ts_rank_variant_dispatch(index):
     from pg_ts_semantic_headline_spark.plans.query_compiler import to_tspquery
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank
 
@@ -593,10 +580,10 @@ def test_ts_rank_variant_dispatch(lean_index):
     # AND root takes the pairwise-proximity form, OR root the harmonic
     # form — on this corpus the two give different values
     r_and = {r["doc_id"]: r["rank"]
-             for r in ts_rank(lean_index, q_and).collect()}
-    r_or = {r["doc_id"]: r["rank"] for r in ts_rank(lean_index, q_or).collect()}
+             for r in ts_rank(index, q_and).collect()}
+    r_or = {r["doc_id"]: r["rank"] for r in ts_rank(index, q_or).collect()}
     forced = {r["doc_id"]: r["rank"]
-              for r in ts_rank(lean_index, q_and, variant="or").collect()}
+              for r in ts_rank(index, q_and, variant="or").collect()}
     assert r_and and r_or
     assert forced == r_or  # forcing 'or' on an AND query = OR math
     assert r_and != r_or
@@ -604,32 +591,32 @@ def test_ts_rank_variant_dispatch(lean_index):
     assert set(r_and) <= set(r_or)
 
 
-def test_ts_rank_rank_e6_deterministic_and_normalization(lean_index, corpus):
+def test_ts_rank_rank_e6_deterministic_and_normalization(index, corpus):
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank
 
     a = {r["doc_id"]: r["rank_e6"]
-         for r in ts_rank(lean_index, ["needle", "target"],
+         for r in ts_rank(index, ["needle", "target"],
                           variant="and").collect()}
     b = {r["doc_id"]: r["rank_e6"]
-         for r in ts_rank(lean_index, ["needle", "target"],
+         for r in ts_rank(index, ["needle", "target"],
                           variant="and").collect()}
     assert a == b and a
     dls = {doc_id: len(text.split(" ")) for doc_id, text in corpus}
     raw = {r["doc_id"]: r["rank"]
-           for r in ts_rank(lean_index, ["spark"]).collect()}
+           for r in ts_rank(index, ["spark"]).collect()}
     n2 = {r["doc_id"]: r["rank"]
-          for r in ts_rank(lean_index, ["spark"], normalization=2).collect()}
+          for r in ts_rank(index, ["spark"], normalization=2).collect()}
     n32 = {r["doc_id"]: r["rank"]
-           for r in ts_rank(lean_index, ["spark"], normalization=32).collect()}
+           for r in ts_rank(index, ["spark"], normalization=32).collect()}
     nuniq = {doc_id: len(set(text.split(" "))) for doc_id, text in corpus}
     n8 = {r["doc_id"]: r["rank"]
-          for r in ts_rank(lean_index, ["spark"], normalization=8).collect()}
+          for r in ts_rank(index, ["spark"], normalization=8).collect()}
     n16 = {r["doc_id"]: r["rank"]
-           for r in ts_rank(lean_index, ["spark"],
+           for r in ts_rank(index, ["spark"],
                             normalization=16).collect()}
     # flag 4 is extent-based: like PG's calc_rank, accepted and ignored
     n4 = {r["doc_id"]: r["rank"]
-          for r in ts_rank(lean_index, ["spark"], normalization=4).collect()}
+          for r in ts_rank(index, ["spark"], normalization=4).collect()}
     for d, v in raw.items():
         assert n2[d] == pytest.approx(v / dls[d], rel=1e-9)
         assert n32[d] == pytest.approx(v / (v + 1), rel=1e-9)
@@ -638,23 +625,23 @@ def test_ts_rank_rank_e6_deterministic_and_normalization(lean_index, corpus):
                                        rel=1e-9)
         assert n4[d] == pytest.approx(v, rel=1e-9)
     with pytest.raises(ValueError, match="bitmask"):
-        ts_rank(lean_index, ["spark"], normalization=64)
+        ts_rank(index, ["spark"], normalization=64)
     with pytest.raises(ValueError):
-        ts_rank(lean_index, ["spark"], weights=(2.0, 0.2, 0.4, 1.0))
+        ts_rank(index, ["spark"], weights=(2.0, 0.2, 0.4, 1.0))
     with pytest.raises(ValueError):
-        ts_rank(lean_index, ["spark"], variant="nope")
+        ts_rank(index, ["spark"], variant="nope")
 
 
-def test_ts_rank_candidate_narrowing(lean_index):
+def test_ts_rank_candidate_narrowing(index):
     from pg_ts_semantic_headline_spark.plans.ranking import ts_rank
 
     for variant in ("or", "and"):
         full = {r["doc_id"]: r["rank_e6"]
-                for r in ts_rank(lean_index, ["needle", "target"],
+                for r in ts_rank(index, ["needle", "target"],
                                  variant=variant).collect()}
         some = sorted(full)[:3]
         got = {r["doc_id"]: r["rank_e6"]
-               for r in ts_rank(lean_index, ["needle", "target"],
+               for r in ts_rank(index, ["needle", "target"],
                                 variant=variant,
                                 candidate_ids=some).collect()}
         assert got == {d: full[d] for d in some}, variant

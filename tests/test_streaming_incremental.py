@@ -19,8 +19,7 @@ NEW = [(100, "alpha beta fresh needle phrase target arrives"),
 def index_dir(spark, tmp_path):
     out = str(tmp_path / "idx")
     df = spark.createDataFrame(BASE, ["doc_id", "content"])
-    build_index(spark, df, out, config=CONFIG, n_buckets=4,
-                block_span=8, build_packed=False)
+    build_index(spark, df, out, config=CONFIG, n_buckets=4)
     return out
 
 
@@ -52,75 +51,102 @@ def test_merge_replace_refuses_uncastable_doc_ids(spark, index_dir):
     n_before = before.n_docs
     with pytest.raises(ValueError, match="non-numeric doc_ids"):
         merge_batch(spark, index_dir, bad, config=CONFIG, replace=True)
-    # refusal happened ahead of the stale marker + appends: index unchanged
+    # refusal happened ahead of any append: index unchanged
     after = load_index(spark, index_dir)
     assert after.n_docs == n_before
     assert after.tokens.where(F.col("doc_id").isNull()).count() == 0
 
 
-def test_merge_invalidates_packed_blocks(spark, tmp_path):
-    """A merge must not leave a stale packed store live: merged docs are
-    absent from packed/. After a merge, packed is gone — BM25 still sees
-    the new docs; a lean phrase query refuses until compaction."""
-    out = str(tmp_path / "idx_packed")
-    df = spark.createDataFrame(BASE, ["doc_id", "content"])
-    build_index(spark, df, out, config=CONFIG, n_buckets=4,
-                block_span=8, build_packed=True)
-    assert load_index(spark, out).packed is not None
+def _phrase_answers(index, queries):
+    """Per query: the `<->` phrase `search` ranking and the
+    `search_with_headlines` rows, scores rounded past float-summation
+    noise."""
+    from pg_ts_semantic_headline_spark.plans.search import (
+        search, search_with_headlines)
+    out = []
+    for q in queries:
+        out.append([(r["doc_id"], round(r["score"], 9)) for r in
+                    search(index, q, k=25).collect()])
+        out.append([(r["doc_id"], round(r["score"], 9), r["headline"])
+                    for r in search_with_headlines(index, q, k=25).collect()])
+    return out
 
-    batch = spark.createDataFrame(NEW, ["doc_id", "content"])
-    merge_batch(spark, out, batch, config=CONFIG)
 
-    after = load_index(spark, out)
-    assert after.packed is None
-    top = bm25_topk(after, ["fresh"], k=5).collect()
-    assert {r["doc_id"] for r in top} == {100, 101}
-    # default (lean) layout: packed was the only positional copy, so a
-    # positional query after the merge must direct to compaction instead
-    # of silently returning partial results
-    q = phraseto_tspquery(CONFIG, "needle phrase target")
-    with pytest.raises(ValueError, match="positions"):
-        phrase_match_docs(after, q).collect()
+def test_phrase_queries_after_mutation_match_rebuild(spark, tmp_path):
+    """Row postings are the only positional store, so `<->` phrase
+    queries and headlines see an upsert's changed and new docs, and stop
+    seeing deleted ones, at once — with no compaction in between — and
+    answer exactly like an index rebuilt from the final corpus."""
+    from pg_ts_semantic_headline_spark.streaming import (
+        delete_docs, upsert_documents)
+
+    out = str(tmp_path / "idx_mut")
+    build_index(spark, spark.createDataFrame(BASE, ["doc_id", "content"]),
+                out, config=CONFIG, n_buckets=4)
+    changed = [(5, "needle phrase target replaces alpha beta gamma"),
+               (6, "gamma alpha beta reordered words here")]
+    rep = upsert_documents(spark, out, spark.createDataFrame(
+        changed + NEW, ["doc_id", "content"]))
+    assert rep == {"unchanged": 0, "changed": 2, "new": 2}
+    queries = [phraseto_tspquery(CONFIG, "alpha beta gamma"),
+               phraseto_tspquery(CONFIG, "needle phrase target")]
+
+    def rebuilt(final, name):
+        d = str(tmp_path / name)
+        build_index(spark, spark.createDataFrame(final,
+                                                 ["doc_id", "content"]),
+                    d, config=CONFIG, n_buckets=4)
+        return load_index(spark, d)
+
+    final = dict(BASE)
+    final.update(dict(changed + NEW))
+    want = _phrase_answers(rebuilt(sorted(final.items()), "rebuilt_ups"),
+                           queries)
+    assert {d for d, _ in want[0]} == set(range(20)) - {6}
+    assert {d for d, _ in want[2]} == {5, 100}
+    assert _phrase_answers(load_index(spark, out), queries) == want
+
+    delete_docs(spark, out, [5, 7])
+    for d in (5, 7):
+        del final[d]
+    want = _phrase_answers(rebuilt(sorted(final.items()), "rebuilt_del"),
+                           queries)
+    assert {d for d, _ in want[2]} == {100}
+    assert _phrase_answers(load_index(spark, out), queries) == want
 
 
 class TestCompaction:
-    """Targeted repack: merges/deletes/replaces are folded back into
-    the packed store without re-analyzing any document."""
+    """Tombstone fold: rows shadowed by deletes/replaces are dropped
+    physically without re-analyzing any document."""
 
     def _build(self, spark, tmp_path, n_buckets=16):
         out = str(tmp_path / "idxc")
         df = spark.createDataFrame(BASE, ["doc_id", "content"])
-        build_index(spark, df, out, config=CONFIG, n_buckets=n_buckets,
-                    block_span=8, build_packed=True)
+        build_index(spark, df, out, config=CONFIG, n_buckets=n_buckets)
         return out
 
     def _ranks(self, index, terms, k=10):
         return [(r["doc_id"], round(r["score"], 10)) for r in
                 bm25_topk(index, terms, k=k).collect()]
 
-    def test_compact_restores_packed_with_merged_docs(self, spark, tmp_path):
+    def test_compact_keeps_merged_docs(self, spark, tmp_path):
         from pg_ts_semantic_headline_spark.streaming import compact_index
         out = self._build(spark, tmp_path)
         merge_batch(spark, out, spark.createDataFrame(NEW, ["doc_id", "content"]),
                     config=CONFIG)
-        assert load_index(spark, out).packed is None
-
-        repacked = compact_index(spark, out)
-        # targeted: only the batch terms' buckets were rebuilt
-        assert repacked and len(repacked) < 16
+        # a plain merge writes no tombstones: compaction has nothing to
+        # fold and leaves no manifest row
+        compact_index(spark, out)
+        m = spark.read.parquet(f"{out}/_manifest")
+        assert m.where(F.col("stage") == "compact").count() == 0
 
         after = load_index(spark, out)
-        assert after.packed is not None and after.n_docs == 22
+        assert after.n_docs == 22
         got = self._ranks(after, ["fresh"], k=5)
         assert {d for d, _ in got} == {100, 101}
-        # positions were repacked too: phrase search finds the merged doc
         q = phraseto_tspquery(CONFIG, "needle phrase target")
         assert {r["doc_id"] for r in
                 phrase_match_docs(after, q).collect()} == {100}
-        # manifest records exactly the repacked buckets
-        m = spark.read.parquet(f"{out}/_manifest")
-        rows = m.where(F.col("stage") == "compact").collect()
-        assert sorted(int(r["partition_id"]) for r in rows) == repacked
 
         # a second merge+compact cycle keeps working
         merge_batch(spark, out, spark.createDataFrame(
@@ -152,7 +178,7 @@ class TestCompaction:
 
         compact_index(spark, out)
         after = load_index(spark, out)
-        assert after.n_docs == 20 and after.packed is not None
+        assert after.n_docs == 20
         got = self._ranks(after, ["brandnew"], k=5)
         assert {d for d, _ in got} == {5}
         # physical apply: shadowed generations are gone from the tables
@@ -167,145 +193,71 @@ class TestCompaction:
         delete_docs(spark, out, [3])
 
         mid = load_index(spark, out)
-        assert mid.n_docs == 19 and mid.packed is None
+        assert mid.n_docs == 19
         assert bm25_topk(mid, ["doc3"], k=5).count() == 0
         assert 3 not in {r["doc_id"] for r in
                          bm25_topk(mid, ["alpha"], k=25).collect()}
 
         compact_index(spark, out)
         after = load_index(spark, out)
-        assert after.n_docs == 19 and after.packed is not None
+        assert after.n_docs == 19
         got = self._ranks(after, ["alpha"], k=25)
         assert 3 not in {d for d, _ in got}
         assert spark.read.parquet(f"{out}/tokens").count() == 19
+        # the fold leaves a manifest row: tokens rows, then postings rows
+        m = spark.read.parquet(f"{out}/_manifest")
+        rows = {int(r["partition_id"]): int(r["row_count"]) for r in
+                m.where(F.col("stage") == "compact").collect()}
+        assert rows == {0: 19,
+                        1: spark.read.parquet(f"{out}/postings").count()}
 
-    def test_mass_delete_compacts_via_anti_join(self, spark, tmp_path,
-                                                monkeypatch):
-        """Past TOMBSTONE_DECODE_CAP the tombstone drop must not collect
-        ids to the driver: force the cap to 0 so the distributed
-        anti-join path runs, and assert it produces exactly the same
-        index as the small-set decode-time drop would."""
+    def test_mass_delete_compacts_via_anti_join(self, spark, tmp_path):
+        """A multi-doc delete folds through the distributed tombstone
+        join (no id set is collected to the driver): the dead docs'
+        tokens, scores and positions are all gone afterwards."""
         from pg_ts_semantic_headline_spark.streaming import (
             compact_index, delete_docs)
-        from pg_ts_semantic_headline_spark.streaming import (
-            incremental as inc)
         out = self._build(spark, tmp_path)
         delete_docs(spark, out, [3, 7, 11])
-        monkeypatch.setattr(inc, "TOMBSTONE_DECODE_CAP", 0)
         compact_index(spark, out)
         after = load_index(spark, out)
-        assert after.n_docs == 17 and after.packed is not None
+        assert after.n_docs == 17
         got = self._ranks(after, ["alpha"], k=25)
         assert {d for d, _ in got} & {3, 7, 11} == set()
         assert spark.read.parquet(f"{out}/tokens").count() == 17
-        # positions survived the anti-join repack
+        # positions of the live docs survived the fold
         q = phraseto_tspquery(CONFIG, "alpha beta gamma")
         assert 3 not in {r["doc_id"] for r in
                          phrase_match_docs(after, q).collect()}
 
 
-# per-block impact bounds the retired block-max scorer stored: packed/
-# carried two extra columns and stats/ one, all written by the same
-# PREP_VERSION as today's layout
-LEGACY_PACKED_COLS = {"max_tf": "int", "_".join(("max_tf", "norm")): "double"}
-LEGACY_STATS_COL = "_".join(("avgdl", "packed"))
-
-
-def _rewrite_table(path, df, partition_by=None):
+def test_v3_index_must_be_rebuilt(spark, tmp_path):
+    """An index written under the previous layout version (tsp-spark-3)
+    may hold its positions outside row postings: loading it and merging
+    into it must refuse with a message that says to rebuild, and fsck
+    must fail the version check."""
     import shutil
 
-    tmp = path + "_legacy_tmp"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-
-
-def _to_legacy_layout(spark, out):
-    packed = spark.read.parquet(f"{out}/packed")
-    _rewrite_table(f"{out}/packed", packed.select(
-        "term", "bucket", "block_id", "base_doc", "n_docs",
-        *[F.lit(1).cast(t).alias(c) for c, t in LEGACY_PACKED_COLS.items()],
-        "payload"), partition_by="bucket")
-    stats = spark.read.parquet(f"{out}/stats")
-    cols = stats.columns
-    _rewrite_table(f"{out}/stats", stats.select(
-        *cols[:cols.index("gen")],
-        F.col("avgdl").alias(LEGACY_STATS_COL), "gen"))
-
-
-def _packed_bucket_columns(out):
-    """{bucket: column names of its parquet files} straight from the
-    footers (a Spark read would infer one schema for the whole table)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    got = {}
-    for d in glob.glob(f"{out}/packed/bucket=*"):
-        files = glob.glob(os.path.join(d, "*.parquet"))
-        if files:
-            got[int(d.rsplit("=", 1)[1])] = set(
-                pq.read_schema(files[0]).names)
-    return got
-
-
-def test_index_with_legacy_block_max_columns_still_works(spark, tmp_path):
-    """An index written before the block-max scorer was removed keeps its
-    bound columns on disk. It must load and answer exactly as before, and
-    a targeted compaction that leaves old and new packed buckets side by
-    side must keep deep fsck green and phrase results right."""
     from pg_ts_semantic_headline_spark.plans.fsck import verify_index
-    from pg_ts_semantic_headline_spark.plans.search import search
-    from pg_ts_semantic_headline_spark.streaming import compact_index
 
-    out = str(tmp_path / "legacy")
+    out = str(tmp_path / "v3")
     build_index(spark, spark.createDataFrame(BASE, ["doc_id", "content"]),
-                out, config=CONFIG, n_buckets=16, block_span=8)
-    phrase = phraseto_tspquery(CONFIG, "alpha beta gamma")
+                out, config=CONFIG, n_buckets=4)
+    stats = spark.read.parquet(f"{out}/stats")
+    stats.withColumn("prep_version", F.lit("tsp-spark-3")) \
+        .write.mode("overwrite").parquet(f"{out}/stats_v3")
+    shutil.rmtree(f"{out}/stats")
+    shutil.move(f"{out}/stats_v3", f"{out}/stats")
 
-    def answers(index):
-        return ([(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, ["alpha", "doc3"], k=10).collect()],
-                [(r["doc_id"], round(r["score"], 10)) for r in
-                 search(index, phrase, k=25).collect()])
-
-    want = answers(load_index(spark, out))
-    _to_legacy_layout(spark, out)
-    assert set(LEGACY_PACKED_COLS) <= set(
-        spark.read.parquet(f"{out}/packed").columns)
-    assert LEGACY_STATS_COL in spark.read.parquet(f"{out}/stats").columns
-
-    legacy = load_index(spark, out)
-    assert legacy.packed is not None and "positions" not in \
-        legacy.postings.columns
-    assert answers(legacy) == want
-    assert len(want[1]) == 20
-
-    merge_batch(spark, out, spark.createDataFrame(NEW, ["doc_id", "content"]),
-                config=CONFIG)
-    repacked = compact_index(spark, out)
-    by_bucket = _packed_bucket_columns(out)
-    new_style = {b for b, cols in by_bucket.items()
-                 if not set(LEGACY_PACKED_COLS) & cols}
-    assert new_style == set(repacked) and new_style < set(by_bucket)
-
-    rep = {r["check"]: r for r in
-           verify_index(spark, out, deep=True).collect()}
-    bad = {k: (v["status"], v["detail"]) for k, v in rep.items()
-           if v["status"] == "fail"}
-    assert not bad, bad
-
-    after = load_index(spark, out)
-    assert after.packed is not None and after.n_docs == 22
-    assert {r["doc_id"] for r in phrase_match_docs(after, phrase).collect()} \
-        == set(range(20))
-    fresh = phraseto_tspquery(CONFIG, "needle phrase target")
-    assert {r["doc_id"] for r in search(after, fresh, k=5).collect()} \
-        == {100}
+    with pytest.raises(ValueError, match="rebuild"):
+        load_index(spark, out)
+    # writers refuse too, before touching any table
+    with pytest.raises(ValueError, match="rebuild"):
+        merge_batch(spark, out, spark.createDataFrame(
+            NEW, ["doc_id", "content"]), config=CONFIG)
+    rep = {r["check"]: r for r in verify_index(spark, out).collect()}
+    assert rep["prep_version"]["status"] == "fail"
+    assert rep["prep_version"]["actual"] == "tsp-spark-3"
 
 
 def test_windowed_term_counts_stream(spark, tmp_path):
@@ -381,7 +333,7 @@ def test_merge_batch_config_defaults_and_guards(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("cfg_merge_idx"))
     build_index(spark, spark.createDataFrame(
         [(0, "running dogs")], ["doc_id", "content"]), out,
-        config="english", n_buckets=4, block_span=8)
+        config="english", n_buckets=4)
     # default config=None analyzes with the INDEX's config: the new
     # doc's 'jumping' must stem ('jump'), proving english was applied
     with warnings.catch_warnings():
@@ -400,7 +352,7 @@ def test_merge_batch_config_defaults_and_guards(spark, tmp_path_factory):
     build_index(spark, spark.createDataFrame(
         [(0, "en", "running dogs")], ["doc_id", "lang", "content"]), out2,
         config=F.when(F.col("lang") == "de", "german").otherwise("english"),
-        n_buckets=4, block_span=8)
+        n_buckets=4)
     with _pytest.raises(ValueError, match="per-document config"):
         merge_batch(spark, out2, spark.createDataFrame(
             [(1, "jumping cats")], ["doc_id", "content"]))
@@ -417,7 +369,7 @@ def test_merge_batch_config_defaults_and_guards(spark, tmp_path_factory):
 
 class TestUpsertDocuments:
     """sha256-gated re-crawl ingestion: unchanged batches are free and
-    leave the packed store live; changed docs replace; new docs append."""
+    leave the index untouched; changed docs replace; new docs append."""
 
     @staticmethod
     def _build(spark, tmp, docs):
@@ -426,7 +378,7 @@ class TestUpsertDocuments:
         out = str(tmp)
         df = spark.createDataFrame(docs, ["doc_id", "content"])
         build_index(spark, df, out, config="simple", n_buckets=4,
-                    block_span=8, resume=False)
+                    resume=False)
         return out
 
     def test_unchanged_recrawl_is_a_noop(self, spark, tmp_path_factory):
@@ -441,8 +393,8 @@ class TestUpsertDocuments:
             spark, out, spark.createDataFrame(docs, ["doc_id", "content"]))
         assert rep == {"unchanged": 2, "changed": 0, "new": 0}
         idx = load_index(spark, out)
-        assert idx.gen == gen_before
-        assert idx.packed is not None  # packed store still live: no merge ran
+        assert idx.gen == gen_before   # no merge ran
+        assert idx.tokens.count() == 2
 
     def test_changed_and_new_docs(self, spark, tmp_path_factory):
         from pg_ts_semantic_headline_spark.plans.index_build import (
@@ -475,8 +427,8 @@ class TestUpsertDocuments:
                                            monkeypatch):
         """The classification/ingest path must stay distributed: no single
         driver collect during an upsert may return O(batch) rows (the
-        3-row status counts, ≤n_buckets touched buckets, and 1-row stats
-        reads are the only permitted driver landings). Guards the
+        3-row status counts and 1-row stats reads are the only permitted
+        driver landings). Guards the
         scale contract: a 10^8-doc re-crawl batch must not OOM the
         driver."""
         from pg_ts_semantic_headline_spark.streaming.incremental import (
@@ -512,13 +464,13 @@ class TestUpsertDocuments:
             IndexPaths, load_index)
         from pg_ts_semantic_headline_spark.plans.search import bm25_topk
         from pg_ts_semantic_headline_spark.streaming.incremental import (
-            _try_parquet, upsert_documents)
+            _path_exists, upsert_documents)
         docs = [(1, "alpha beta gamma")]
         out = self._build(spark, tmp_path_factory.mktemp("ups_new"), docs)
         rep = upsert_documents(spark, out, spark.createDataFrame(
             [(5, "fresh words only")], ["doc_id", "content"]))
         assert rep == {"unchanged": 0, "changed": 0, "new": 1}
-        assert _try_parquet(spark, IndexPaths(out).tombstones) is None
+        assert not _path_exists(spark, IndexPaths(out).tombstones)
         idx = load_index(spark, out)
         assert {r["doc_id"] for r in
                 bm25_topk(idx, ["fresh"], k=10).collect()} == {5}
@@ -538,7 +490,7 @@ def test_delete_docs_dataframe_form(spark, tmp_path):
     build_index(spark, spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma delta"), (3, "epsilon zeta")],
         ["doc_id", "content"]), out, config="simple", n_buckets=4,
-        block_span=8, resume=False)
+        resume=False)
     with pytest.raises(ValueError, match="one column"):
         delete_docs(spark, out, spark.createDataFrame(
             [(1, "x")], ["doc_id", "junk"]))
@@ -578,7 +530,7 @@ def test_streaming_upsert_mode_is_replay_idempotent(spark, tmp_path):
     out = str(tmp_path / "ups_idx")
     build_index(spark, spark.createDataFrame(
         [(1, "alpha beta gamma")], ["doc_id", "content"]),
-        out, config="simple", n_buckets=4, block_span=8, resume=False)
+        out, config="simple", n_buckets=4, resume=False)
 
     src = str(tmp_path / "src")
     batch = spark.createDataFrame(

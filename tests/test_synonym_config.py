@@ -72,8 +72,7 @@ class TestDistributed:
                 (3, "running dogs run fast")]
         out = str(tmp_path_factory.mktemp("synidx"))
         df = spark.createDataFrame(docs, ["doc_id", "content"])
-        build_index(spark, df, out, config=syn_config, n_buckets=4,
-                    block_span=8)
+        build_index(spark, df, out, config=syn_config, n_buckets=4)
         index = load_index(spark, out)
         # the config string round-trips through the persisted stats
         assert index.config == syn_config
@@ -174,7 +173,7 @@ class TestThesaurus:
         out = str(tmp_path_factory.mktemp("thesidx"))
         build_index(spark, spark.createDataFrame(
             docs, ["doc_id", "content"]), out, config=thes_config,
-            n_buckets=4, block_span=8)
+            n_buckets=4)
         index = load_index(spark, out)
         assert index.config == thes_config
         # the phrase query substitutes through the same dictionary, so
@@ -204,7 +203,7 @@ class TestPerColumnConfig:
         build_index(spark, docs, out,
                     config=F.when(F.col("lang") == "de", "german")
                     .otherwise("english"),
-                    n_buckets=4, block_span=8)
+                    n_buckets=4)
         return load_index(spark, out)
 
     def test_stats_marker_roundtrip(self, ml_index):
@@ -321,7 +320,7 @@ class TestCodeConfig:
         out = str(tmp_path_factory.mktemp("codeidx"))
         build_index(spark, spark.createDataFrame(
             docs, ["doc_id", "content"]), out, config="code",
-            n_buckets=4, block_span=8)
+            n_buckets=4)
         index = load_index(spark, out)
         # 'queryPlan' matches camelCase, PascalCase AND snake_case forms
         q = to_tspquery("code", "queryPlan")
