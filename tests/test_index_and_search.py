@@ -47,6 +47,17 @@ def index(spark, corpus, tmp_path_factory):
     return load_index(spark, out)
 
 
+@pytest.fixture(scope="module")
+def lean_index(spark, corpus, tmp_path_factory):
+    # the same corpus in the leanest physical layout: 2 term buckets and
+    # one postings sort partition, so many terms share each bucket file
+    out = str(tmp_path_factory.mktemp("idx_lean"))
+    df = spark.createDataFrame(corpus, ["doc_id", "content"])
+    build_index(spark, df, out, config=CONFIG, n_buckets=2,
+                postings_partitions=1)
+    return load_index(spark, out)
+
+
 def python_postings(corpus):
     """Oracle: term -> {doc: [positions]} from the same analyzer."""
     post = {}
@@ -1034,19 +1045,21 @@ class TestSearchBatch:
             out[qid] = fn(CONFIG, text)
         return out
 
-    def test_rank_identical_to_per_query_search(self, index):
+    @pytest.mark.parametrize("which", ["lean_index", "index"])
+    def test_rank_identical_to_per_query_search(self, which, request):
         from pg_ts_semantic_headline_spark.plans.search import (
             search, search_batch)
 
+        idx = request.getfixturevalue(which)
         qs = self._compiled()
-        got = search_batch(index, qs, k=7).collect()
+        got = search_batch(idx, qs, k=7).collect()
         by_q: dict = {}
         for r in got:
             by_q.setdefault(r["query_id"], []).append(
                 (r["rank"], r["doc_id"], round(r["score"], 9)))
         for qid, q in qs.items():
             want = [(i + 1, r["doc_id"], round(r["score"], 9))
-                    for i, r in enumerate(search(index, q, k=7).collect())]
+                    for i, r in enumerate(search(idx, q, k=7).collect())]
             assert sorted(by_q.get(qid, [])) == want, qid
 
     def test_single_scored_scan(self, index):
