@@ -3,8 +3,8 @@
 - `cosine_topk`: brute-force exact top-k, pure JVM column expressions
   (zip_with dot product) — the correctness baseline, embarrassingly parallel
   (map + TakeOrdered k; no shuffle of the embedding table).
-- `cosine_topk_arrow`: the same math through a vectorized Arrow UDF using a
-  single numpy matrix-vector product per batch — the throughput path.
+- `cosine_topk_arrow`: the same math through a vectorized Arrow UDF, one
+  numpy pass per batch — the throughput path.
 - `lsh_ann_topk`: random-hyperplane LSH bucketing: 100 TB path — candidates
   share the query's sign-bucket (optionally within hamming radius 1), exact
   cosine re-rank inside the bucket.
@@ -15,6 +15,7 @@ and oracle-checkable.
 
 from __future__ import annotations
 
+from .. import lifecycle as lc
 from ..io_codec import INDEX_CODEC
 
 import math
@@ -63,8 +64,9 @@ def cosine_topk(df: DataFrame, query_vec, k: int = 10,
 def cosine_topk_arrow(df: DataFrame, query_vec, k: int = 10,
                       emb_col: str = "embedding",
                       id_col: str = "vec_id") -> DataFrame:
-    """Same ranking via a numpy-vectorized Arrow UDF (one BLAS matvec per
-    Arrow batch instead of per-element codegen)."""
+    """Same ranking via a numpy-vectorized Arrow UDF (one vectorized
+    pass per Arrow batch instead of per-element codegen); each row's
+    cosine is independent of the batch it lands in."""
     import numpy as np
 
     q = np.asarray(list(map(float, query_vec)))
@@ -72,8 +74,13 @@ def cosine_topk_arrow(df: DataFrame, query_vec, k: int = 10,
 
     @F.pandas_udf(DoubleType())
     def cos(emb: pd.Series) -> pd.Series:
+        # row-wise multiply + reduce, not a BLAS matvec: a matvec's
+        # summation order can depend on the batch's shape, so two equal
+        # vectors landing in different Arrow batches could differ in the
+        # last ulp and the vec_id tie-break would never decide
         mat = np.vstack(emb.to_numpy())
-        sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * qn)
+        sims = ((mat * q).sum(axis=1)
+                / (np.sqrt((mat * mat).sum(axis=1)) * qn))
         return pd.Series(sims)
 
     return (df.select(F.col(id_col), cos(F.col(emb_col)).alias("cosine"))
@@ -158,15 +165,8 @@ def build_ann_index(df: DataFrame, out_dir: str, n_planes: int = 8,
     spark = df.sparkSession
     dim = len(df.select(emb_col).first()[0])
     planes = random_hyperplanes(dim, n_planes, seed)
-    # storage is CANONICAL (vec_id, embedding) regardless of input names:
-    # incremental appends and tombstone joins must agree with the built
-    # files byte-for-byte (mixed per-file schemas read back as nulls)
-    (df.select(F.col(id_col).alias("vec_id"),
-               F.col(emb_col).alias("embedding"))
-       .withColumn("bucket", lsh_bucket_arrow(planes)(F.col("embedding")))
-       .withColumn("gen", F.lit(0).cast("long"))
-       .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket")
-       .parquet(f"{out_dir}/vectors"))
+    _write_vectors(df, emb_col, id_col, "bucket", lsh_bucket_arrow(planes),
+                   0, _fresh(out_dir))
     spark.createDataFrame([(n_planes, seed, dim)],
                           "n_planes int, seed int, dim int") \
         .write.option("compression", INDEX_CODEC).mode("overwrite").parquet(f"{out_dir}/meta")
@@ -175,7 +175,7 @@ def build_ann_index(df: DataFrame, out_dir: str, n_planes: int = 8,
 class AnnIndex:
     """Loaded handle over a persisted ANN index: plane metadata is read
     ONCE, so each query is a single bucket-pruned scan action. Carries
-    the generation state (operators/generations.py) for the incremental
+    the generation state (lifecycle.py) for the incremental
     add/delete/compact flow."""
 
     def __init__(self, vectors: DataFrame, planes, spark=None,
@@ -189,9 +189,8 @@ class AnnIndex:
         self.tombstones = tombstones
 
     def candidates(self, query_vec, multiprobe: bool = True) -> DataFrame:
-        from .generations import live_rows
         probes = query_probes(query_vec, self.planes, multiprobe)
-        return live_rows(self.vectors.where(F.col("bucket").isin(probes)),
+        return lc.live_rows(self.vectors.where(F.col("bucket").isin(probes)),
                          self.tombstones, "vec_id")
 
     def query(self, query_vec, k: int = 10, emb_col: str = "embedding",
@@ -305,14 +304,8 @@ def build_ivf_index(df: DataFrame, out_dir: str, n_lists: int = 64,
     spark = df.sparkSession
     centroids = train_ivf_centroids(df, n_lists, seed, emb_col, id_col,
                                     sample_rows, approx_total=approx_total)
-    # canonical (vec_id, embedding) storage — see build_ann_index
-    (df.select(F.col(id_col).alias("vec_id"),
-               F.col(emb_col).alias("embedding"))
-       .withColumn("list_id",
-                   ivf_assign_arrow(centroids)(F.col("embedding")))
-       .withColumn("gen", F.lit(0).cast("long"))
-       .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("list_id")
-       .parquet(f"{out_dir}/vectors"))
+    _write_vectors(df, emb_col, id_col, "list_id",
+                   ivf_assign_arrow(centroids), 0, _fresh(out_dir))
     spark.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
         "list_id int, centroid array<double>") \
@@ -358,8 +351,7 @@ class IvfIndex:
         return _nearest_centroid_lists(self.centroids, query_vec, nprobe)
 
     def candidates(self, query_vec, nprobe: int = 8) -> DataFrame:
-        from .generations import live_rows
-        return live_rows(
+        return lc.live_rows(
             self.vectors.where(
                 F.col("list_id").isin(self.probe_lists(query_vec, nprobe))),
             self.tombstones, "vec_id")
@@ -373,13 +365,16 @@ class IvfIndex:
                                  query_vec, k, emb_col, id_col)
 
 
-def load_ivf_index(spark, out_dir: str) -> IvfIndex:
+def _stack_centroids(rows, key: str = "list_id"):
+    """The `centroid` arrays of `rows`, stacked in `key` order (float64)."""
     import numpy as np
+    return np.vstack([np.asarray(r["centroid"], dtype=np.float64)
+                      for r in sorted(rows, key=lambda r: r[key])])
 
-    rows = spark.read.parquet(f"{out_dir}/centroids").collect()
-    rows.sort(key=lambda r: r["list_id"])
-    centroids = np.vstack([np.asarray(r["centroid"], dtype=np.float64)
-                           for r in rows])
+
+def load_ivf_index(spark, out_dir: str) -> IvfIndex:
+    centroids = _stack_centroids(
+        spark.read.parquet(f"{out_dir}/centroids").collect())
     max_gen, tombs = _gen_state(spark, out_dir)
     return IvfIndex(spark.read.parquet(f"{out_dir}/vectors"), centroids,
                     spark, out_dir, max_gen, tombs)
@@ -535,24 +530,8 @@ def build_ivfpq_index(df: DataFrame, out_dir: str, n_lists: int = 64,
     splits = _pq_splits(dim, m)
     books = train_pq_codebooks(x, m=m, nbits=nbits, seed=seed)
 
-    # canonical (vec_id, embedding) storage — see build_ann_index
-    enc = (df.select(F.col(id_col).alias("vec_id"),
-                     F.col(emb_col).alias("embedding"))
-             .withColumn("list_id",
-                         ivf_assign_arrow(coarse)(F.col("embedding")))
-             .withColumn("code",
-                         pq_encode_arrow(books, splits)(F.col("embedding")))
-             .withColumn("gen", F.lit(0).cast("long")))
-    enc.persist()
-    try:
-        (enc.select("vec_id", "code", "gen", "list_id")
-            .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("list_id")
-            .parquet(f"{out_dir}/codes"))
-        (enc.drop("code")
-            .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("list_id")
-            .parquet(f"{out_dir}/vectors"))
-    finally:
-        enc.unpersist()
+    _write_vectors(df, emb_col, id_col, "list_id", ivf_assign_arrow(coarse),
+                   0, _fresh(out_dir), pq_encode_arrow(books, splits))
     spark.createDataFrame(
         [(i, [float(v) for v in c]) for i, c in enumerate(coarse)],
         "list_id int, centroid array<double>") \
@@ -598,14 +577,12 @@ class IvfPqIndex:
         mode), re-rank those at full precision. The shortlist rides a
         broadcast semi-join, so the full-vector read is pruned to the same
         nprobe directories AND the ~rerank winning row groups."""
-        from .generations import live_rows
-
         probes = self.probe_lists(query_vec, nprobe)
-        cands = live_rows(self.vectors.where(F.col("list_id").isin(probes)),
+        cands = lc.live_rows(self.vectors.where(F.col("list_id").isin(probes)),
                           self.tombstones, id_col)
         if rerank is not None:
             adc = pq_adc_arrow(self.codebooks, self.splits, query_vec)
-            short = (live_rows(
+            short = (lc.live_rows(
                         self.codes.where(F.col("list_id").isin(probes)),
                         self.tombstones, id_col)
                      .select(id_col, adc(F.col("code")).alias("_adc"))
@@ -651,20 +628,11 @@ def _kmeans_spherical(x, n_lists: int, seed: int, n_iter: int = 25):
 
 
 def load_ivfpq_index(spark, out_dir: str) -> IvfPqIndex:
-    import numpy as np
-
-    crows = spark.read.parquet(f"{out_dir}/centroids").collect()
-    crows.sort(key=lambda r: r["list_id"])
-    centroids = np.vstack([np.asarray(r["centroid"], dtype=np.float64)
-                           for r in crows])
+    centroids = _stack_centroids(
+        spark.read.parquet(f"{out_dir}/centroids").collect())
     prows = spark.read.parquet(f"{out_dir}/pq").collect()
-    n_sub = max(r["subspace"] for r in prows) + 1
-    books = []
-    for j in range(n_sub):
-        sub = sorted((r for r in prows if r["subspace"] == j),
-                     key=lambda r: r["code"])
-        books.append(np.vstack([np.asarray(r["centroid"], dtype=np.float64)
-                                for r in sub]))
+    books = [_stack_centroids([r for r in prows if r["subspace"] == j], "code")
+             for j in range(max(r["subspace"] for r in prows) + 1)]
     dim = sum(b.shape[1] for b in books)
     max_gen, tombs = _gen_state(spark, out_dir)
     return IvfPqIndex(spark.read.parquet(f"{out_dir}/codes"),
@@ -679,8 +647,9 @@ def load_ivfpq_index(spark, out_dir: str) -> IvfPqIndex:
 # at build time, so adding vectors is pure assignment with the stored
 # parameters — O(new vectors), appended into the existing directory
 # layout, never O(index). Deletes follow the shared generation contract
-# (operators/generations.py): O(deletes) tombstone appends, folded in by
-# `compact_vector_index`. Quantizer drift (the data distribution moving
+# (lifecycle.py): O(deletes) tombstone appends, folded in by
+# `compact_vector_index`. Every write publishes through one lifecycle
+# commit. Quantizer drift (the data distribution moving
 # away from what the centroids were trained on) degrades recall, not
 # correctness — retrain with a fresh build when adds dominate the corpus.
 # ---------------------------------------------------------------------------
@@ -688,24 +657,13 @@ def load_ivfpq_index(spark, out_dir: str) -> IvfPqIndex:
 
 def _gen_state(spark, out_dir: str):
     """(max_gen, tombstones|None) from the sidecar tables; a fresh build
-    has neither (0, None). Only a MISSING path maps to the default — any
-    other read failure propagates (a swallowed tombstone read would
-    silently resurrect deleted vectors)."""
-    from ..plans.index_build import _path_exists
-
+    has neither (0, None)."""
+    lc.check_committed(spark, out_dir)
     max_gen = 0
-    if _path_exists(spark, f"{out_dir}/genmeta"):
+    if lc.path_exists(spark, f"{out_dir}/genmeta"):
         max_gen = int(spark.read.parquet(f"{out_dir}/genmeta")
                       .first()["max_gen"])
-    tombs = None
-    if _path_exists(spark, f"{out_dir}/tombstones"):
-        tombs = spark.read.parquet(f"{out_dir}/tombstones")
-    return max_gen, tombs
-
-
-def _write_gen_meta(spark, out_dir: str, max_gen: int) -> None:
-    spark.createDataFrame([(max_gen,)], "max_gen long") \
-        .write.option("compression", INDEX_CODEC).mode("overwrite").parquet(f"{out_dir}/genmeta")
+    return max_gen, lc.read_tombstones(spark, f"{out_dir}/tombstones")
 
 
 def _require_writable(index, fn: str) -> None:
@@ -715,26 +673,63 @@ def _require_writable(index, fn: str) -> None:
             "path and generation state); ad-hoc handles are read-only")
 
 
+def _write_vectors(df: DataFrame, emb_col: str, id_col: str, part: str,
+                   assign, gen: int, write, encode=None) -> None:
+    """Write `df`'s data tables at generation `gen` via `write(name, rows,
+    part)`: vectors placed by the quantizer kernel `assign` (partition
+    column `part`) and, with `encode`, their PQ codes from the same
+    pass. Storage is CANONICAL (vec_id, embedding) regardless of input
+    names: appends and tombstone joins must agree with the built files
+    byte-for-byte (mixed per-file schemas read back as nulls)."""
+    rows = (df.select(F.col(id_col).alias("vec_id"),
+                      F.col(emb_col).alias("embedding"))
+            .withColumn(part, assign(F.col("embedding")))
+            .withColumn("gen", F.lit(gen).cast("long")))
+    if encode is None:
+        write("vectors", rows, part)
+        return
+    rows = rows.withColumn("code", encode(F.col("embedding"))).persist()
+    try:
+        write("codes", rows.select("vec_id", "code", "gen", part), part)
+        write("vectors", rows.drop("code"), part)
+    finally:
+        rows.unpersist()
+
+
+def _fresh(out_dir: str):
+    """`_write_vectors` sink of a build: plain writes into a new index."""
+    return lambda name, rows, part: lc.write_table(rows, f"{out_dir}/{name}",
+                                                   part)
+
+
+def _add_vectors(index, fn: str, df: DataFrame, emb_col: str, id_col: str,
+                 part: str, assign, encode=None) -> None:
+    """One commit per add: the rows, placed by the STORED quantizers and
+    stamped with the next generation, are appended and genmeta advances
+    with them."""
+    _require_writable(index, fn)
+    spark, root, new_gen = index.spark, index.out_dir, index.max_gen + 1
+    lc.recover(spark, root)
+    _write_vectors(df, emb_col, id_col, part, assign, new_gen,
+                   lambda name, rows, p: lc.stage(spark, root, name, rows, p,
+                                                  append=True), encode)
+    lc.stage(spark, root, "genmeta",
+             spark.createDataFrame([(new_gen,)], "max_gen long"))
+    lc.publish(spark, root)
+    index.max_gen = new_gen
+
+
 def ann_add_vectors(index: AnnIndex, df: DataFrame,
                     emb_col: str = "embedding",
                     id_col: str = "vec_id") -> None:
     """Append vectors to a persisted LSH-ANN index: bucket with the
-    STORED hyperplanes, stamp the next generation, two O(new) writes.
+    STORED hyperplanes, stamp the next generation, one commit.
     Re-adding a vec_id after `delete_vectors` replaces it (higher gen
     wins); adding a live vec_id twice duplicates it until a delete.
     Reload with `load_ann_index` to query the appended rows (the old
     handle's scan snapshot predates them)."""
-    _require_writable(index, "ann_add_vectors")
-    new_gen = index.max_gen + 1
-    (df.select(F.col(id_col).alias("vec_id"),
-               F.col(emb_col).alias("embedding"))
-       .withColumn("bucket", lsh_bucket_arrow(index.planes)(
-           F.col("embedding")))
-       .withColumn("gen", F.lit(new_gen).cast("long"))
-       .write.option("compression", INDEX_CODEC).mode("append").partitionBy("bucket")
-       .parquet(f"{index.out_dir}/vectors"))
-    _write_gen_meta(index.spark, index.out_dir, new_gen)
-    index.max_gen = new_gen
+    _add_vectors(index, "ann_add_vectors", df, emb_col, id_col, "bucket",
+                 lsh_bucket_arrow(index.planes))
 
 
 def ivf_add_vectors(index: IvfIndex, df: DataFrame,
@@ -742,47 +737,19 @@ def ivf_add_vectors(index: IvfIndex, df: DataFrame,
                     id_col: str = "vec_id") -> None:
     """Append vectors to a persisted IVF index: assign with the STORED
     centroids (one Arrow pass), stamp the next generation, append."""
-    _require_writable(index, "ivf_add_vectors")
-    new_gen = index.max_gen + 1
-    (df.select(F.col(id_col).alias("vec_id"),
-               F.col(emb_col).alias("embedding"))
-       .withColumn("list_id", ivf_assign_arrow(index.centroids)(
-           F.col("embedding")))
-       .withColumn("gen", F.lit(new_gen).cast("long"))
-       .write.option("compression", INDEX_CODEC).mode("append").partitionBy("list_id")
-       .parquet(f"{index.out_dir}/vectors"))
-    _write_gen_meta(index.spark, index.out_dir, new_gen)
-    index.max_gen = new_gen
+    _add_vectors(index, "ivf_add_vectors", df, emb_col, id_col, "list_id",
+                 ivf_assign_arrow(index.centroids))
 
 
 def ivfpq_add_vectors(index: IvfPqIndex, df: DataFrame,
                       emb_col: str = "embedding",
                       id_col: str = "vec_id") -> None:
     """Append vectors to a persisted IVF-PQ index: assign + PQ-encode
-    with the STORED quantizers in one Arrow pass, append to both the
-    codes and full-precision sides."""
-    _require_writable(index, "ivfpq_add_vectors")
-    new_gen = index.max_gen + 1
-    enc = (df.select(F.col(id_col).alias("vec_id"),
-                     F.col(emb_col).alias("embedding"))
-           .withColumn("list_id", ivf_assign_arrow(index.centroids)(
-               F.col("embedding")))
-           .withColumn("code", pq_encode_arrow(index.codebooks,
-                                               index.splits)(
-               F.col("embedding")))
-           .withColumn("gen", F.lit(new_gen).cast("long")))
-    enc.persist()
-    try:
-        (enc.select("vec_id", "code", "gen", "list_id")
-            .write.option("compression", INDEX_CODEC).mode("append").partitionBy("list_id")
-            .parquet(f"{index.out_dir}/codes"))
-        (enc.drop("code")
-            .write.option("compression", INDEX_CODEC).mode("append").partitionBy("list_id")
-            .parquet(f"{index.out_dir}/vectors"))
-    finally:
-        enc.unpersist()
-    _write_gen_meta(index.spark, index.out_dir, new_gen)
-    index.max_gen = new_gen
+    with the STORED quantizers, append to both the codes and
+    full-precision sides in one commit."""
+    _add_vectors(index, "ivfpq_add_vectors", df, emb_col, id_col, "list_id",
+                 ivf_assign_arrow(index.centroids),
+                 pq_encode_arrow(index.codebooks, index.splits))
 
 
 def ivf_probes_arrow(centroids, nprobe: int):
@@ -838,15 +805,13 @@ def ivf_knn_join(index: IvfIndex, queries: DataFrame, k: int = 10,
     import numpy as np
     from pyspark.sql import Window
 
-    from .generations import live_rows
-
     probed = (queries
               .select(F.col(query_id).alias("query_id"),
                       F.col(query_emb).alias("_q"))
               .withColumn("list_id",
                           F.explode(ivf_probes_arrow(index.centroids,
                                                      nprobe)(F.col("_q")))))
-    vecs = (live_rows(index.vectors, index.tombstones, "vec_id")
+    vecs = (lc.live_rows(index.vectors, index.tombstones, "vec_id")
             .select("list_id", F.col(id_col).alias("vec_id"),
                     F.col(emb_col).alias("_v")))
     return _knn_cogroup(probed, vecs, "list_id", k, salt,
@@ -933,8 +898,6 @@ def ann_knn_join(index: AnnIndex, queries: DataFrame, k: int = 10,
     buckets, all computed as column algebra (bucket int XOR bit masks),
     then the shared cogroup-matmul top-k. Approximate (LSH recall);
     same deterministic tiebreak and salt lever."""
-    from .generations import live_rows
-
     n_planes = len(index.planes)
     probed = (queries
               .select(F.col(query_id).alias("query_id"),
@@ -949,7 +912,7 @@ def ann_knn_join(index: AnnIndex, queries: DataFrame, k: int = 10,
     else:
         probed = probed.withColumn("bucket", F.col("_b0"))
     probed = probed.drop("_b0")
-    vecs = (live_rows(index.vectors, index.tombstones, "vec_id")
+    vecs = (lc.live_rows(index.vectors, index.tombstones, "vec_id")
             .select("bucket", F.col(id_col).alias("vec_id"),
                     F.col(emb_col).alias("_v")))
     return _knn_cogroup(probed, vecs, "bucket", k, salt,
@@ -965,41 +928,26 @@ def delete_vectors(index, vec_ids) -> None:
     until `compact_vector_index` folds it in."""
     _require_writable(index, "delete_vectors")
     id_type = index.vectors.schema["vec_id"].dataType.simpleString()
-    index.spark.createDataFrame(
-        [(v, index.max_gen) for v in vec_ids],
-        f"vec_id {id_type}, gen long") \
-        .write.option("compression", INDEX_CODEC).mode("append").parquet(f"{index.out_dir}/tombstones")
+    lc.recover(index.spark, index.out_dir)
+    lc.stage(index.spark, index.out_dir, "tombstones",
+             index.spark.createDataFrame(
+                 [(v, index.max_gen) for v in vec_ids],
+                 f"vec_id {id_type}, gen long"), append=True)
+    lc.publish(index.spark, index.out_dir)
 
 
 def compact_vector_index(spark, out_dir: str) -> None:
     """Fold tombstones into a persisted vector index (works on all three
-    layouts — the codes/ side is detected): rewrite each data table minus
-    superseded rows, swap with Hadoop FS ops (non-local storage safe; a
-    failed rename raises with data preserved in the _tmp path), drop the
-    tombstones LAST. Generations are PRESERVED, not reset: every
-    surviving row has gen > its doc's newest tombstone, so a crash
-    anywhere in the sequence leaves a consistent index — leftover
-    tombstones shadow nothing live, and a retried compaction just
-    removes them. (Resetting gens to 0 would open a window where a
+    layouts — the codes/ side is detected) with
+    `lifecycle.fold_tombstones`: rewrite each data table minus dead rows
+    in one commit, drop the tombstones LAST. Generations are PRESERVED,
+    not reset: every surviving row has gen > its doc's newest tombstone,
+    so leftover tombstones shadow nothing live, and a retried compaction
+    just removes them. (Resetting gens to 0 would open a window where a
     crash between the swap and the tombstone delete permanently killed
     re-added rows.)"""
-    from ..plans.index_build import _path_exists
-    from ..streaming.incremental import _delete_path, _rename_path
-    from .generations import live_rows
-
-    _, tombs = _gen_state(spark, out_dir)
-    if tombs is None:
-        return
-    tables = ["vectors"]
-    if _path_exists(spark, f"{out_dir}/codes"):
-        tables.append("codes")
-    for tbl in tables:
-        df = spark.read.parquet(f"{out_dir}/{tbl}")
-        part_col = "bucket" if "bucket" in df.columns else "list_id"
-        (live_rows(df, tombs, "vec_id")
-            .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy(part_col)
-            .parquet(f"{out_dir}/{tbl}_tmp"))
-    for tbl in tables:
-        _delete_path(spark, f"{out_dir}/{tbl}")
-        _rename_path(spark, f"{out_dir}/{tbl}_tmp", f"{out_dir}/{tbl}")
-    _delete_path(spark, f"{out_dir}/tombstones")
+    tables = {"vectors": ("bucket" if lc.path_exists(spark, f"{out_dir}/meta")
+                          else "list_id")}
+    if lc.path_exists(spark, f"{out_dir}/codes"):
+        tables["codes"] = "list_id"
+    lc.fold_tombstones(spark, out_dir, "tombstones", tables, "vec_id")

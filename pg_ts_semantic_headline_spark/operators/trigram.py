@@ -45,14 +45,13 @@ Query planning:
 
 from __future__ import annotations
 
-from ..io_codec import INDEX_CODEC
-
 import re
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import lifecycle as lc
 from ..functions.xxhash import term_bucket
 
 _RUN_RE = re.compile(r"[a-z0-9]+")
@@ -208,11 +207,10 @@ def regex_required_trigrams(pattern: str) -> list[str]:
 
 # ------------------------------------------------------------------ build
 
-def _write_trgm_meta(spark: SparkSession, out_dir: str, n_buckets: int,
-                     max_gen: int) -> None:
-    spark.createDataFrame([(n_buckets, max_gen)],
-                          "n_buckets int, max_gen long") \
-        .write.option("compression", INDEX_CODEC).mode("overwrite").parquet(f"{out_dir}/meta")
+def _trgm_meta(spark: SparkSession, n_buckets: int,
+               max_gen: int) -> DataFrame:
+    return spark.createDataFrame([(n_buckets, max_gen)],
+                                 "n_buckets int, max_gen long")
 
 
 def build_trigram_index(docs: DataFrame, out_dir: str,
@@ -234,21 +232,32 @@ def build_trigram_index(docs: DataFrame, out_dir: str,
     within every written file, so parquet RLE makes the column ~free."""
     spark = docs.sparkSession
     parts = max(spark.sparkContext.defaultParallelism, n_buckets)
-    (docs.select(F.col(id_col).alias("doc_id"),
-                 F.explode(trigrams_col(text_col)).alias("tg"))
-         .withColumn("bucket",
-                     F.pmod(F.xxhash64("tg"), F.lit(n_buckets)).cast("int"))
-         .withColumn("gen", F.lit(0).cast("long"))
-         .repartitionByRange(parts, "bucket", "tg", "doc_id")
-         .sortWithinPartitions("bucket", "tg", "doc_id")
-         .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket")
-         .parquet(f"{out_dir}/postings"))
-    (docs.select(F.col(id_col).alias("doc_id"),
-                 F.size(trigrams_col(text_col)).alias("n_trigrams"),
-                 F.lit(0).cast("long").alias("gen"))
-         .where(F.col("n_trigrams") > 0)
-         .write.option("compression", INDEX_CODEC).mode("overwrite").parquet(f"{out_dir}/docstats"))
-    _write_trgm_meta(spark, out_dir, n_buckets, 0)
+    for name, (df, part) in _trgm_tables(docs, id_col, text_col, n_buckets,
+                                         0, parts).items():
+        lc.write_table(df, f"{out_dir}/{name}", part)
+    lc.write_table(_trgm_meta(spark, n_buckets, 0), f"{out_dir}/meta", None)
+
+
+def _trgm_sorted(postings: DataFrame, parts: int) -> DataFrame:
+    return (postings.repartitionByRange(parts, "bucket", "tg", "doc_id")
+            .sortWithinPartitions("bucket", "tg", "doc_id"))
+
+
+def _trgm_tables(docs: DataFrame, id_col: str, text_col: str,
+                 n_buckets: int, gen: int, parts: int) -> dict:
+    """postings and docstats rows of `docs` stamped with `gen`, as
+    {name: (rows, partition column)} — shared by build and add."""
+    postings = (docs.select(F.col(id_col).alias("doc_id"),
+                            F.explode(trigrams_col(text_col)).alias("tg"))
+                .withColumn("bucket", F.pmod(F.xxhash64("tg"),
+                                             F.lit(n_buckets)).cast("int"))
+                .withColumn("gen", F.lit(gen).cast("long")))
+    docstats = (docs.select(F.col(id_col).alias("doc_id"),
+                            F.size(trigrams_col(text_col)).alias("n_trigrams"),
+                            F.lit(gen).cast("long").alias("gen"))
+                .where(F.col("n_trigrams") > 0))
+    return {"postings": (_trgm_sorted(postings, parts), "bucket"),
+            "docstats": (docstats, None)}
 
 
 class TrigramIndex:
@@ -260,36 +269,13 @@ class TrigramIndex:
 
     def __init__(self, spark: SparkSession, out_dir: str, n_buckets: int,
                  max_gen: int = 0):
-        from ..plans.index_build import _path_exists
-
         self.spark = spark
         self.out_dir = out_dir
         self.n_buckets = n_buckets
         self.max_gen = max_gen
         self.postings = spark.read.parquet(f"{out_dir}/postings")
         self.docstats = spark.read.parquet(f"{out_dir}/docstats")
-        # Only a MISSING tombstone table means "no deletes": any other read
-        # failure (corrupt footer, permissions, transient FS error) must
-        # propagate — mapping it to None would silently resurrect deleted
-        # docs with results that look normal.
-        if _path_exists(spark, f"{out_dir}/tombstones"):
-            self.tombstones = spark.read.parquet(f"{out_dir}/tombstones")
-        else:
-            self.tombstones = None
-
-    def _tomb_max(self) -> DataFrame:
-        """(doc_id, _tgen): the newest tombstone generation per doc."""
-        from .generations import tombstone_max
-        return tombstone_max(self.tombstones, "doc_id")
-
-    def _live(self, df: DataFrame) -> DataFrame:
-        """Filter rows superseded by a tombstone (the shared generation
-        contract — see operators/generations.py): rows re-added AFTER a
-        delete survive (the replace flow). Broadcast: the tombstone set
-        is small between compactions — `compact_trigram_index` folds it
-        in."""
-        from .generations import live_rows
-        return live_rows(df, self.tombstones, "doc_id")
+        self.tombstones = lc.read_tombstones(spark, f"{out_dir}/tombstones")
 
     def dead_doc_ids(self) -> DataFrame | None:
         """Tombstoned doc_ids with NO live docstats row (deleted and not
@@ -301,13 +287,12 @@ class TrigramIndex:
         the re-add). Tombstone-set sized."""
         if self.tombstones is None:
             return None
-        tmax = self._tomb_max()
-        live_g = (self.docstats.join(F.broadcast(tmax), on="doc_id")
-                  .groupBy("doc_id").agg(F.max("gen").alias("_g")))
-        return (tmax.join(live_g, on="doc_id", how="left")
-                .where(F.col("_g").isNull()
-                       | (F.col("_g") <= F.col("_tgen")))
-                .select("doc_id"))
+        ids = self.tombstones.select("doc_id").distinct()
+        alive = lc.live_rows(
+            self.docstats.join(F.broadcast(ids), on="doc_id",
+                               how="left_semi"),
+            self.tombstones, "doc_id")
+        return ids.join(alive.select("doc_id"), on="doc_id", how="left_anti")
 
     # ---- candidate generation (AND-intersection over required trigrams)
 
@@ -340,13 +325,15 @@ class TrigramIndex:
                 f"{len(required)} trigrams (candidates widen, result stays "
                 "exact)", stacklevel=2)
             required = required[:MAX_QUERY_TRIGRAMS]
-        return (self._live(self._pruned(required))
+        return (lc.live_rows(self._pruned(required), self.tombstones,
+                             "doc_id")
                 .groupBy("doc_id").agg(F.count("*").alias("_n"))
                 .where(F.col("_n") >= len(required))
                 .select("doc_id"))
 
 
 def load_trigram_index(spark: SparkSession, out_dir: str) -> TrigramIndex:
+    lc.check_committed(spark, out_dir)
     meta = spark.read.parquet(f"{out_dir}/meta").first()
     max_gen = int(meta["max_gen"]) if "max_gen" in meta else 0
     return TrigramIndex(spark, out_dir, int(meta["n_buckets"]), max_gen)
@@ -447,14 +434,16 @@ def similarity_scores(index: TrigramIndex, query: str,
     qtg = sorted(text_trigrams(query))
     n_q = len(qtg)
     if n_q == 0:
-        return index._live(index.docstats).select(
+        return lc.live_rows(index.docstats, index.tombstones,
+                            "doc_id").select(
             "doc_id", F.lit(0.0).alias("similarity")).where(
             F.lit(threshold) <= 0.0)
-    # _live BEFORE the count: superseded rows of a replaced doc must not
+    # live_rows BEFORE the count: superseded rows of a replaced doc must not
     # inflate its intersection (similarity has no exact verify step)
-    inter = (index._live(index._pruned(qtg))
+    inter = (lc.live_rows(index._pruned(qtg), index.tombstones, "doc_id")
              .groupBy("doc_id").agg(F.count("*").alias("_inter")))
-    sim = (index._live(index.docstats).join(inter, on="doc_id", how="left")
+    sim = (lc.live_rows(index.docstats, index.tombstones, "doc_id")
+           .join(inter, on="doc_id", how="left")
            .select("doc_id",
                    (F.coalesce("_inter", F.lit(0)).cast("double")
                     / (F.col("n_trigrams") + F.lit(n_q)
@@ -621,7 +610,7 @@ def suggest_terms_multi(terms_df: DataFrame, words: list[str],
 def add_documents(index: TrigramIndex, docs: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text") -> None:
     """Incremental ingest: trigram postings are per-document independent,
-    so adding documents is two APPEND writes in the existing layout —
+    so adding documents appends to the existing layout in one commit —
     O(new docs), never O(corpus). Rows are stamped with the next
     generation, so re-adding a doc_id AFTER `delete_documents` (the
     replace flow) is fully supported: queries see only the new rows.
@@ -630,24 +619,16 @@ def add_documents(index: TrigramIndex, docs: DataFrame,
     stay exact via the verify; similarity would double-count).
     Reload with `load_trigram_index` to see the appended rows."""
     spark = docs.sparkSession
+    lc.recover(spark, index.out_dir)
     parts = max(spark.sparkContext.defaultParallelism // 2, 1)
     new_gen = index.max_gen + 1
-    (docs.select(F.col(id_col).alias("doc_id"),
-                 F.explode(trigrams_col(text_col)).alias("tg"))
-         .withColumn("bucket",
-                     F.pmod(F.xxhash64("tg"),
-                            F.lit(index.n_buckets)).cast("int"))
-         .withColumn("gen", F.lit(new_gen).cast("long"))
-         .repartitionByRange(parts, "bucket", "tg", "doc_id")
-         .sortWithinPartitions("bucket", "tg", "doc_id")
-         .write.option("compression", INDEX_CODEC).mode("append").partitionBy("bucket")
-         .parquet(f"{index.out_dir}/postings"))
-    (docs.select(F.col(id_col).alias("doc_id"),
-                 F.size(trigrams_col(text_col)).alias("n_trigrams"),
-                 F.lit(new_gen).cast("long").alias("gen"))
-         .where(F.col("n_trigrams") > 0)
-         .write.option("compression", INDEX_CODEC).mode("append").parquet(f"{index.out_dir}/docstats"))
-    _write_trgm_meta(spark, index.out_dir, index.n_buckets, new_gen)
+    for name, (df, part) in _trgm_tables(docs, id_col, text_col,
+                                         index.n_buckets, new_gen,
+                                         parts).items():
+        lc.stage(spark, index.out_dir, name, df, part, append=True)
+    lc.stage(spark, index.out_dir, "meta",
+             _trgm_meta(spark, index.n_buckets, new_gen))
+    lc.publish(spark, index.out_dir)
     index.max_gen = new_gen
 
 
@@ -657,39 +638,28 @@ def delete_documents(index: TrigramIndex, doc_ids) -> None:
     later `add_documents` of the same doc_id (higher gen) resurrects the
     doc with only its new content. Queries anti-join the (small,
     broadcast) tombstone set until `compact_trigram_index` folds it in."""
-    index.spark.createDataFrame(
-        [(int(d), index.max_gen) for d in doc_ids],
-        "doc_id long, gen long") \
-        .write.option("compression", INDEX_CODEC).mode("append").parquet(f"{index.out_dir}/tombstones")
+    lc.recover(index.spark, index.out_dir)
+    lc.stage(index.spark, index.out_dir, "tombstones",
+             index.spark.createDataFrame(
+                 [(int(d), index.max_gen) for d in doc_ids],
+                 "doc_id long, gen long"), append=True)
+    lc.publish(index.spark, index.out_dir)
 
 
 def compact_trigram_index(spark: SparkSession, out_dir: str) -> None:
-    """Fold tombstones into the index: rewrite postings and docstats
-    minus superseded rows, then drop the tombstone table LAST. A doc's
-    trigrams scatter across ALL buckets, so the rewrite is inherently
-    full-index (unlike the BM25 index's per-bucket repack) — run it when
-    the tombstone set has grown enough to hurt the per-query anti-join.
-    Uses Hadoop FileSystem ops (not local shutil) so non-local out_dirs
-    (hdfs://, s3a://) compact too; the swap deletes a live table only
-    after its replacement is fully written, and a failed rename raises
-    with the data preserved in the _tmp path. Generations are PRESERVED:
-    every surviving row has gen > its doc's newest tombstone, so a crash
-    anywhere in the sequence leaves a consistent index (resetting gens
-    would let leftover tombstones kill re-added rows)."""
-    from ..streaming.incremental import _delete_path, _rename_path
+    """Fold tombstones into the index (`lifecycle.fold_tombstones`):
+    rewrite postings and docstats minus dead rows in one commit, then
+    drop the tombstone table LAST. A doc's trigrams scatter across ALL
+    buckets, so the rewrite is inherently full-index — run it when the
+    tombstone set has grown enough to hurt the per-query anti-join.
+    Generations are PRESERVED: every surviving row has gen > its doc's
+    newest tombstone, so leftover tombstones kill nothing live
+    (resetting gens would let them kill re-added rows)."""
+    parts = max(spark.sparkContext.defaultParallelism,
+                int(spark.read.parquet(f"{out_dir}/meta")
+                    .first()["n_buckets"]))
 
-    idx = load_trigram_index(spark, out_dir)
-    if idx.tombstones is None:
-        return
-    parts = max(spark.sparkContext.defaultParallelism, idx.n_buckets)
-    (idx._live(idx.postings)
-        .repartitionByRange(parts, "bucket", "tg", "doc_id")
-        .sortWithinPartitions("bucket", "tg", "doc_id")
-        .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket")
-        .parquet(f"{out_dir}/postings_tmp"))
-    (idx._live(idx.docstats)
-        .write.option("compression", INDEX_CODEC).mode("overwrite").parquet(f"{out_dir}/docstats_tmp"))
-    for tbl in ("postings", "docstats"):
-        _delete_path(spark, f"{out_dir}/{tbl}")
-        _rename_path(spark, f"{out_dir}/{tbl}_tmp", f"{out_dir}/{tbl}")
-    _delete_path(spark, f"{out_dir}/tombstones")
+    lc.fold_tombstones(
+        spark, out_dir, "tombstones", {"postings": "bucket", "docstats": None},
+        "doc_id", shape=lambda name, df: (_trgm_sorted(df, parts)
+                                          if name == "postings" else df))

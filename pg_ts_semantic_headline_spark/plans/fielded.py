@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import lifecycle as lc
 from .index_build import B, K1
 
 
@@ -64,12 +65,10 @@ def build_fielded_index(
     postings unioned with a field code and range-written bucket-
     partitioned; the analyzed frame is persisted for the duration so the
     per-field branches and the stats aggregate share one UDF pass."""
-    from .analyze import analyze_index_udf
-    from ..functions.xxhash import term_bucket  # noqa: F401  (parity doc)
-
     fields = list(field_cols)
     if not fields:
         raise ValueError("field_cols must name at least one column")
+    lc.recover(spark, out_dir)  # the meta step below publishes
     rows, a = _field_rows(docs, fields, config, n_buckets, id_col, gen=0)
     try:
         (rows.repartition("bucket")
@@ -111,43 +110,48 @@ def _field_rows(docs: DataFrame, fields: list[str], config: str,
     return rows, a
 
 
-def _live_postings(spark: SparkSession, out_dir: str) -> DataFrame:
-    from ..operators.generations import live_rows
-    from .index_build import _path_exists
-
+def _live_postings(spark: SparkSession, out_dir: str,
+                   pending: bool = False) -> DataFrame:
+    """Live postings; with `pending`, as they will be once the calling
+    writer publishes what it staged (lifecycle.with_staged)."""
     post = spark.read.parquet(f"{out_dir}/postings")
-    tombs = (spark.read.parquet(f"{out_dir}/_tombstones")
-             if _path_exists(spark, f"{out_dir}/_tombstones") else None)
-    return live_rows(post, tombs, "doc_id")
+    tombs = lc.read_tombstones(spark, f"{out_dir}/_tombstones")
+    if pending:
+        post = lc.with_staged(spark, out_dir, "postings", post)
+        tombs = lc.with_staged(spark, out_dir, "_tombstones", tombs)
+    return lc.live_rows(post, tombs, "doc_id")
 
 
 def _recompute_meta(spark: SparkSession, out_dir: str, fields: list[str],
                     config: str, n_buckets: int, gen: int) -> None:
     """Dictionary + corpus stats from the live (tombstone-filtered)
-    postings — same policy as the main index's `_reaggregate` (idf/df
-    never drift after adds/deletes). The OUTPUT is metadata-scale, but
-    the aggregation reads the postings' skinny columns once per call:
-    batch your mutations to whatever cadence amortizes that scan."""
-    live = _live_postings(spark, out_dir)
+    postings, staged next to whatever the caller staged and published
+    with it in one commit — same policy as the main index's
+    `_reaggregate` (idf/df never drift after adds/deletes). The OUTPUT
+    is metadata-scale, but the aggregation reads the postings' skinny
+    columns once per call: batch your mutations to whatever cadence
+    amortizes that scan."""
+    live = _live_postings(spark, out_dir, pending=True)
     terms = (live.groupBy("term")
              .agg(F.count_distinct("doc_id").alias("df"),
                   F.first("bucket").alias("bucket")))
-    (terms.write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket")
-     .parquet(f"{out_dir}/terms"))
+    lc.stage(spark, out_dir, "terms", terms, "bucket")
     per_doc = live.groupBy("doc_id").agg(F.first("dls").alias("dls"))
     st = per_doc.agg(F.count("*").alias("n"),
                      *[F.sum(F.col("dls")[i]).alias(f"s{i}")
                        for i in range(len(fields))]).first()
-    spark.createDataFrame(
+    lc.stage(spark, out_dir, "stats", spark.createDataFrame(
         [(int(st["n"]),
           [int(st[f"s{i}"] or 0) for i in range(len(fields))],
           fields, config, int(n_buckets), int(gen))],
         "n_docs long, sumdls array<long>, fields array<string>, "
         "config string, n_buckets int, gen long"
-    ).coalesce(1).write.option("compression", INDEX_CODEC).mode("overwrite").parquet(f"{out_dir}/stats")
+    ).coalesce(1))
+    lc.publish(spark, out_dir)
 
 
 def load_fielded_index(spark: SparkSession, out_dir: str) -> FieldedIndex:
+    lc.check_committed(spark, out_dir)
     st = spark.read.parquet(f"{out_dir}/stats").first()
     return FieldedIndex(
         root=out_dir,
@@ -162,47 +166,36 @@ def load_fielded_index(spark: SparkSession, out_dir: str) -> FieldedIndex:
     )
 
 
-def bm25f_topk_batch(
-    index: FieldedIndex,
-    field_weights: dict[str, float],
-    queries: dict[str, list[str]],
-    k: int = 10,
-) -> DataFrame:
-    """Top-k for MANY BM25F queries in ONE plan (the offline-retrieval
-    shape, mirroring `search.bm25_topk_batch`): the union of all query
-    terms prunes one postings scan, the per-(doc, term) weighted fold
-    happens once for the whole workload, a tiny broadcast
-    (query_id, term) table fans each folded row out to the queries
-    containing its term, and one window per query cuts the top-k.
-    Rank-identical to per-query `bm25f_topk` (tested). Returns
-    (query_id, doc_id, score, rank), ties score desc / doc_id asc."""
+def _scored_terms(index: FieldedIndex, field_weights: dict[str, float],
+                  terms: list[str],
+                  candidate_docs: DataFrame | None = None) -> DataFrame | None:
+    """Per-(doc, term) BM25F contributions `_s` for the sorted distinct
+    `terms`: one bucket-pruned postings scan, the per-(doc, term)
+    weighted-tf fold (map-side combinable — at most |fields| rows per
+    key), a broadcast idf join. The fold `bm25f_topk` and
+    `bm25f_topk_batch` both sum; None when nothing can score."""
     import math
 
-    from pyspark.sql import Window
+    from ..functions.xxhash import term_bucket
 
-    spark = index.postings.sparkSession
-    qterms = {qid: sorted(set(ts)) for qid, ts in queries.items()}
-    pairs = [(qid, t) for qid, ts in qterms.items() for t in ts]
-    if not pairs:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
-    all_terms = sorted({t for _, t in pairs})
     unknown = set(field_weights) - set(index.fields)
     if unknown:
         raise ValueError(f"unknown fields {sorted(unknown)}; "
                          f"index has {index.fields}")
     w = [float(field_weights.get(f, 0.0)) for f in index.fields]
+    # exact integer weighted sum, ONE division — bit-identical to the
+    # ad-hoc path's avg(wdl) (see module docstring)
     avgwdl = (sum(wi * si for wi, si in zip(w, index.sumdls))
               / index.n_docs) if index.n_docs else 0.0
     if avgwdl <= 0:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
-
-    from ..functions.xxhash import term_bucket
-    buckets = sorted({term_bucket(t, index.n_buckets) for t in all_terms})
+        return None
+    buckets = sorted({term_bucket(t, index.n_buckets) for t in terms})
     rows = (index.postings
             .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(all_terms)))
+            .where(F.col("term").isin(terms)))
+    if candidate_docs is not None:
+        rows = rows.join(candidate_docs.select("doc_id"), on="doc_id",
+                         how="left_semi")
     wexpr = F.lit(0.0)
     for i, wi in enumerate(w):
         wexpr = F.when(F.col("field") == i, F.lit(wi)).otherwise(wexpr)
@@ -219,22 +212,50 @@ def bm25f_topk_batch(
                                      / (int(r["df"]) + 0.5)))
                 for r in (index.terms
                           .where(F.col("bucket").isin(buckets))
-                          .where(F.col("term").isin(all_terms))
+                          .where(F.col("term").isin(terms))
                           .select("term", "df").collect())]
     if not idf_rows:
+        return None
+    idf_df = index.postings.sparkSession.createDataFrame(
+        idf_rows, "term string, idf double")
+    return (per_term.join(F.broadcast(idf_df), on="term")
+            .withColumn("_wdl", wdl)
+            .withColumn(
+                "_s",
+                F.col("idf") * F.col("wtf") * (K1 + 1)
+                / (F.col("wtf")
+                   + K1 * (1 - B + B * F.col("_wdl") / F.lit(avgwdl)))))
+
+
+def bm25f_topk_batch(
+    index: FieldedIndex,
+    field_weights: dict[str, float],
+    queries: dict[str, list[str]],
+    k: int = 10,
+) -> DataFrame:
+    """Top-k for MANY BM25F queries in ONE plan (the offline-retrieval
+    shape, mirroring `search.bm25_topk_batch`): the union of all query
+    terms prunes one postings scan, the per-(doc, term) weighted fold
+    happens once for the whole workload, a tiny broadcast
+    (query_id, term) table fans each folded row out to the queries
+    containing its term, and one window per query cuts the top-k.
+    Rank-identical to per-query `bm25f_topk` (tested). Returns
+    (query_id, doc_id, score, rank), ties score desc / doc_id asc."""
+    from pyspark.sql import Window
+
+    spark = index.postings.sparkSession
+    qterms = {qid: sorted(set(ts)) for qid, ts in queries.items()}
+    pairs = [(qid, t) for qid, ts in qterms.items() for t in ts]
+    if not pairs:
         return spark.createDataFrame(
             [], "query_id string, doc_id long, score double, rank int")
-    idf_df = spark.createDataFrame(idf_rows, "term string, idf double")
-    qdf = spark.createDataFrame(pairs, "query_id string, term string")
-
-    scored = (per_term.join(F.broadcast(idf_df), on="term")
-              .withColumn("_wdl", wdl)
-              .withColumn(
-                  "_s",
-                  F.col("idf") * F.col("wtf") * (K1 + 1)
-                  / (F.col("wtf")
-                     + K1 * (1 - B + B * F.col("_wdl") / F.lit(avgwdl))))
-              .join(F.broadcast(qdf), on="term"))
+    scored = _scored_terms(index, field_weights,
+                           sorted({t for _, t in pairs}))
+    if scored is None:
+        return spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
+    scored = scored.join(F.broadcast(spark.createDataFrame(
+        pairs, "query_id string, term string")), on="term")
     agg = (scored.groupBy("query_id", "doc_id")
            .agg(F.sum("_s").alias("score")))
     win = Window.partitionBy("query_id").orderBy(F.desc("score"),
@@ -248,17 +269,18 @@ def add_documents(index: FieldedIndex, docs: DataFrame,
                   id_col: str = "doc_id") -> None:
     """Incremental add: analyze ONLY the batch (O(batch)), append its
     postings at gen+1, then recompute the metadata-scale dictionary and
-    stats from live rows. Re-adding an existing doc_id without deleting
-    first duplicates it (the shared generation contract —
-    `operators/generations.py`); replace = `delete_documents` then add."""
+    stats from live rows; both publish in one commit. Re-adding an
+    existing doc_id without deleting first duplicates it (the shared
+    generation contract — `lifecycle.py`); replace = `delete_documents`
+    then add."""
     spark = index.postings.sparkSession
+    lc.recover(spark, index.root)
     new_gen = index.gen + 1
     rows, a = _field_rows(docs, index.fields, index.config,
                           index.n_buckets, id_col, gen=new_gen)
     try:
-        (rows.repartition("bucket")
-         .write.option("compression", INDEX_CODEC).mode("append").partitionBy("bucket")
-         .parquet(f"{index.root}/postings"))
+        lc.stage(spark, index.root, "postings", rows.repartition("bucket"),
+                 "bucket", append=True)
     finally:
         a.unpersist()
     _recompute_meta(spark, index.root, index.fields, index.config,
@@ -273,37 +295,22 @@ def delete_documents(index: FieldedIndex, doc_ids: list[int]) -> None:
     """Tombstone-delete: rows with gen <= the tombstone's die (see the
     shared contract); queries through a fresh `load_fielded_index` stop
     seeing them immediately, `compact_fielded_index` drops them
-    physically. O(deletes) writes + a metadata recompute."""
+    physically. O(deletes) writes + a metadata recompute, one commit."""
     spark = index.postings.sparkSession
-    spark.createDataFrame(
-        [(int(i), index.gen) for i in doc_ids], "doc_id long, gen long"
-    ).write.option("compression", INDEX_CODEC).mode("append").parquet(f"{index.root}/_tombstones")
+    lc.recover(spark, index.root)
+    lc.stage(spark, index.root, "_tombstones", spark.createDataFrame(
+        [(int(i), index.gen) for i in doc_ids], "doc_id long, gen long"),
+        append=True)
     _recompute_meta(spark, index.root, index.fields, index.config,
                     index.n_buckets, gen=index.gen)
 
 
 def compact_fielded_index(spark: SparkSession, out_dir: str) -> None:
-    """Physically drop tombstoned rows: rewrite live postings (gens
-    PRESERVED — surviving rows must stay above any tombstone a crash
-    leaves behind), swap directories, delete tombstones LAST. A crash at
-    any point leaves a correct index: before the swap the old store is
-    intact; between the swap and the tombstone delete the tombstones
-    still classify every surviving row live."""
-    from .index_build import _path_exists
-    from ..streaming.incremental import _delete_path, _rename_path
-
-    st = spark.read.parquet(f"{out_dir}/stats").first()
-    live = _live_postings(spark, out_dir)
-    tmp = f"{out_dir}/.postings_tmp"
-    _delete_path(spark, tmp)
-    (live.repartition("bucket")
-     .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(tmp))
-    _delete_path(spark, f"{out_dir}/postings")
-    _rename_path(spark, tmp, f"{out_dir}/postings")
-    if _path_exists(spark, f"{out_dir}/_tombstones"):
-        _delete_path(spark, f"{out_dir}/_tombstones")
-    _recompute_meta(spark, out_dir, list(st["fields"]), str(st["config"]),
-                    int(st["n_buckets"]), gen=int(st["gen"]))
+    """Physically drop tombstoned rows (`lifecycle.fold_tombstones`):
+    rewrite live postings with gens PRESERVED, delete the tombstones
+    LAST. terms/stats already describe the live rows."""
+    lc.fold_tombstones(spark, out_dir, "_tombstones", {"postings": "bucket"},
+                       "doc_id", shape=lambda _, df: df.repartition("bucket"))
 
 
 def bm25f_topk(
@@ -330,63 +337,11 @@ def bm25f_topk(
     or boolean-FILTERED BM25F composes exactly this way: build the main
     positional index over the concatenated fields and pass its
     `matching_docs(query)` here (tested)."""
-    import math
-
     spark = index.postings.sparkSession
     ts = sorted(set(terms))
-    if not ts:
+    scored = _scored_terms(index, field_weights, ts, candidate_docs) \
+        if ts else None
+    if scored is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    unknown = set(field_weights) - set(index.fields)
-    if unknown:
-        raise ValueError(f"unknown fields {sorted(unknown)}; "
-                         f"index has {index.fields}")
-    w = [float(field_weights.get(f, 0.0)) for f in index.fields]
-    # exact integer weighted sum, ONE division — bit-identical to the
-    # ad-hoc path's avg(wdl) (see module docstring)
-    avgwdl = (sum(wi * si for wi, si in zip(w, index.sumdls))
-              / index.n_docs) if index.n_docs else 0.0
-    if avgwdl <= 0:
-        return spark.createDataFrame([], "doc_id long, score double")
-
-    from ..functions.xxhash import term_bucket
-    buckets = sorted({term_bucket(t, index.n_buckets) for t in ts})
-    rows = (index.postings
-            .where(F.col("bucket").isin(buckets))
-            .where(F.col("term").isin(ts)))
-    if candidate_docs is not None:
-        rows = rows.join(candidate_docs.select("doc_id"), on="doc_id",
-                         how="left_semi")
-
-    wexpr = F.lit(0.0)
-    for i, wi in enumerate(w):
-        wexpr = F.when(F.col("field") == i, F.lit(wi)).otherwise(wexpr)
-    wdl = F.lit(0.0)
-    for i, wi in enumerate(w):
-        wdl = wdl + F.lit(wi) * F.col("dls").getItem(i).cast("double")
-
-    per_term = (rows.groupBy("doc_id", "term")
-                .agg(F.sum(wexpr * F.col("tf").cast("double")).alias("wtf"),
-                     F.first("dls").alias("dls"))
-                .where(F.col("wtf") > 0))
-
-    idf = (index.terms
-           .where(F.col("bucket").isin(buckets))
-           .where(F.col("term").isin(ts))
-           .select("term", "df").collect())
-    n = index.n_docs
-    idf_rows = [(r["term"], math.log(1 + (n - int(r["df"]) + 0.5)
-                                     / (int(r["df"]) + 0.5)))
-                for r in idf]
-    if not idf_rows:
-        return spark.createDataFrame([], "doc_id long, score double")
-    idf_df = spark.createDataFrame(idf_rows, "term string, idf double")
-
-    scored = (per_term.join(F.broadcast(idf_df), on="term")
-              .withColumn("_wdl", wdl)
-              .withColumn(
-                  "_s",
-                  F.col("idf") * F.col("wtf") * (K1 + 1)
-                  / (F.col("wtf")
-                     + K1 * (1 - B + B * F.col("_wdl") / F.lit(avgwdl)))))
     return (scored.groupBy("doc_id").agg(F.sum("_s").alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))

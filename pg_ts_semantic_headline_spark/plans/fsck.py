@@ -22,7 +22,8 @@ shallow (metadata reads + count-only column-pruned scans):
   - stats.n_docs / stats.avgdl equal the live (tombstone-filtered)
     tokens table — `_reaggregate` republishes both on every mutation
   - terms dictionary bucket routing (bucket == xxhash64(term) mod NB)
-  - tombstone generations never exceed the published stats generation
+  - no interrupted table swap (lifecycle commit record left behind)
+  - tombstone generations stay below the published stats generation
 
 deep (adds full scans / one groupBy over postings):
   - postings bucket routing (zero misrouted rows)
@@ -40,27 +41,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .index_build import (PREP_VERSION, IndexPaths, _apply_tombstones,
-                          _path_exists)
+from .. import lifecycle as lc
+from .index_build import PREP_VERSION, IndexPaths, _footer_counts
 
 REPORT_SCHEMA = ("check string, status string, expected string, "
                  "actual string, detail string")
 
 
 def _footer_rows(spark: SparkSession, path: str) -> int | None:
-    """Total row count from parquet footers (driver-side metadata read,
-    no Spark job); None when the directory is absent/unreadable."""
+    """Total row count from parquet footers (no Spark job); None when the
+    directory is absent/unreadable."""
     try:
-        files = spark.read.parquet(path).inputFiles()
-        import pyarrow.parquet as pq
-
-        def n(f):
-            local = f[len("file:"):] if f.startswith("file:") else f
-            return pq.ParquetFile(local).metadata.num_rows
-
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            return int(sum(pool.map(n, files)))
+        return sum(_footer_counts(spark, path))
     except Exception:
         return None
 
@@ -73,6 +65,8 @@ def verify_index(spark: SparkSession, index_dir: str,
     dictionary-vs-postings, build checksums)."""
     paths = IndexPaths(index_dir)
     rows, add = _new_report()
+    if _interrupted_swap(spark, index_dir, add):
+        return _report(spark, rows)
 
     # ---- stats + layout ----
     try:
@@ -80,7 +74,7 @@ def verify_index(spark: SparkSession, index_dir: str,
     except Exception as exc:
         add("stats_readable", "fail", "readable stats/", type(exc).__name__,
             "cannot read stats; aborting remaining checks")
-        return spark.createDataFrame(rows, REPORT_SCHEMA)
+        return _report(spark, rows)
     add("stats_readable", "ok")
     if stats["prep_version"] != PREP_VERSION:
         add("prep_version", "fail", PREP_VERSION, stats["prep_version"],
@@ -91,14 +85,9 @@ def verify_index(spark: SparkSession, index_dir: str,
     gen = int(stats["gen"])
     n_buckets = int(stats["n_buckets"])
 
-    present = {}
-    for name in ("tokens", "postings", "terms"):
-        present[name] = _path_exists(spark, getattr(paths, name))
-        add(f"layout_{name}", "ok" if present[name] else "fail",
-            "directory present", present[name])
-    if not (present["tokens"] and present["postings"] and present["terms"]):
-        return spark.createDataFrame(rows, REPORT_SCHEMA)
-    tombs_dir = _path_exists(spark, paths.tombstones)
+    if not _layout_ok(spark, index_dir, ("tokens", "postings", "terms"), add):
+        return _report(spark, rows)
+    tombs = lc.read_tombstones(spark, paths.tombstones)
 
     # ---- manifest internal consistency + files vs manifest ----
     manifest = None
@@ -129,9 +118,23 @@ def verify_index(spark: SparkSession, index_dir: str,
             "; ".join(bad) if bad else "consistent",
             "per-file footer counts vs the write-pass Observation")
 
+        # a compaction shrinks tokens/postings to the row counts its
+        # manifest rows record (partition 0 = tokens, 1 = postings)
+        for r in (manifest.where(F.col("stage") == "compact")
+                  .groupBy("partition_id")
+                  .agg(F.min("row_count").alias("n")).collect()):
+            stage_globals.setdefault(
+                ("tokens", "postings")[int(r["partition_id"])], []
+            ).append(int(r["n"]))
+
         for name in ("tokens", "postings", "terms"):
             expect = stage_globals.get(name, [])
             if not expect:
+                continue
+            if name == "terms" and gen > 0:
+                add("files_vs_manifest_terms", "skip", expect, "",
+                    "every mutation rewrites terms from the live rows; "
+                    "terms_vs_postings_* reconcile it instead")
                 continue
             cur = _footer_rows(spark, getattr(paths, name))
             if cur is None:
@@ -148,16 +151,13 @@ def verify_index(spark: SparkSession, index_dir: str,
                     "(truncated/partial copy?)")
 
     # ---- live row tables (tombstone-filtered, as load_index sees them) ----
-    tokens = spark.read.parquet(paths.tokens)
-    postings = spark.read.parquet(paths.postings)
-    if tombs_dir:
-        tombs = spark.read.parquet(paths.tombstones)
-        tokens = _apply_tombstones(tokens, tombs)
-        postings = _apply_tombstones(postings, tombs)
-        _check_tombstone_gen(
-            add, tombs, gen, "stats.gen", gen_col="before_gen",
-            detail="a tombstone postdates the published generation — a "
-                   "writer died between tombstone append and stats publish")
+    tokens = lc.live_rows(spark.read.parquet(paths.tokens), tombs, "doc_id")
+    postings = lc.live_rows(spark.read.parquet(paths.postings), tombs,
+                            "doc_id")
+    if tombs is not None:
+        # every mutation publishes a new generation and stamps its
+        # tombstones one below it, so a published tombstone is < stats.gen
+        _check_tombstone_gen(add, tombs, gen - 1, "stats.gen-1")
 
     live = tokens.agg(F.count("*").alias("n"),
                       F.avg("dl").alias("a")).first()
@@ -185,7 +185,7 @@ def verify_index(spark: SparkSession, index_dir: str,
         "bucket != xxhash64(term) % n_buckets breaks directory pruning")
 
     if not deep:
-        return spark.createDataFrame(rows, REPORT_SCHEMA)
+        return _report(spark, rows)
 
     # ---- deep: bucket routing on postings ----
     bad_post = misrouted(postings)
@@ -208,7 +208,7 @@ def verify_index(spark: SparkSession, index_dir: str,
     # ---- deep: recompute build-signature checksums ----
     sigs = (manifest.select("sig_n", "sig_h").distinct().count()
             if manifest is not None else 0)
-    if manifest is None or gen != 0 or tombs_dir or sigs != 1:
+    if manifest is None or gen != 0 or tombs is not None or sigs != 1:
         add("build_checksums", "skip", "", "",
             "only meaningful at gen 0 with a single build signature "
             "(appends/tombstones legitimately change the xor)")
@@ -236,7 +236,7 @@ def verify_index(spark: SparkSession, index_dir: str,
                 "" if ok else "file contents differ from what the build "
                 "wrote (bitrot / partial restore)")
 
-    return spark.createDataFrame(rows, REPORT_SCHEMA)
+    return _report(spark, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -271,16 +271,37 @@ def _new_report() -> tuple:
     return rows, add
 
 
-def _check_tombstone_gen(add, tombs, bound: int, bound_label: str,
-                         gen_col: str = "gen",
-                         detail: str = "a tombstone postdates the "
-                                       "published generation") -> None:
+def _interrupted_swap(spark: SparkSession, index_dir: str, add) -> bool:
+    """Shared first check of every family: a publish that began and did
+    not finish (lifecycle commit record present) leaves live tables half
+    swapped, so the remaining checks would read a mix. True = abort."""
+    if lc.interrupted(spark, index_dir):
+        add("interrupted_swap", "fail", "no lifecycle commit record",
+            f"{lc.STAGED}/{lc.COMMIT} present",
+            "a writer died mid-publish; lifecycle.recover (which the "
+            "next write runs first) rolls the publish forward")
+        return True
+    add("interrupted_swap", "ok")
+    return False
+
+
+def _layout_ok(spark: SparkSession, index_dir: str, names, add) -> bool:
+    """One `layout_<name>` row per table directory; True iff all exist."""
+    here = [lc.path_exists(spark, f"{index_dir}/{n}") for n in names]
+    for name, ok in zip(names, here):
+        add(f"layout_{name}", "ok" if ok else "fail", "directory present",
+            ok)
+    return all(here)
+
+
+def _check_tombstone_gen(add, tombs, bound: int, bound_label: str) -> None:
     """Shared invariant across every generation-stamped family: no
     tombstone may postdate the published generation bound."""
-    tgen = tombs.agg(F.max(gen_col).alias("m")).first()["m"]
+    tgen = tombs.agg(F.max("gen").alias("m")).first()["m"]
     if tgen is not None and int(tgen) > bound:
         add("tombstone_gen", "fail", f"<= {bound_label}={bound}", tgen,
-            detail)
+            "a tombstone postdates the published generation — a writer "
+            "died between its tombstone write and its generation publish")
     else:
         add("tombstone_gen", "ok", f"<= {bound_label}={bound}", tgen)
 
@@ -292,9 +313,9 @@ def verify_fielded_index(spark: SparkSession, index_dir: str,
     integer sumdls are republished from live rows on every mutation) and
     the delete-then-re-add replace contract (at most one live generation
     per doc). Same report shape as `verify_index`."""
-    from ..operators.generations import live_rows
-
     rows, add = _new_report()
+    if _interrupted_swap(spark, index_dir, add):
+        return _report(spark, rows)
 
     try:
         st = spark.read.parquet(f"{index_dir}/stats").first()
@@ -312,17 +333,10 @@ def verify_fielded_index(spark: SparkSession, index_dir: str,
         return _report(spark, rows)
     add("stats_fields", "ok", len(fields), len(sumdls))
 
-    ok_layout = True
-    for name in ("postings", "terms"):
-        here = _path_exists(spark, f"{index_dir}/{name}")
-        add(f"layout_{name}", "ok" if here else "fail",
-            "directory present", here)
-        ok_layout = ok_layout and here
-    if not ok_layout:
+    if not _layout_ok(spark, index_dir, ("postings", "terms"), add):
         return _report(spark, rows)
 
-    tombs = (spark.read.parquet(f"{index_dir}/_tombstones")
-             if _path_exists(spark, f"{index_dir}/_tombstones") else None)
+    tombs = lc.read_tombstones(spark, f"{index_dir}/_tombstones")
     if tombs is not None:
         _check_tombstone_gen(add, tombs, gen, "stats.gen")
 
@@ -338,7 +352,7 @@ def verify_fielded_index(spark: SparkSession, index_dir: str,
     bad_post = _misrouted(post, "term", n_buckets)
     add("bucket_routing_postings", "fail" if bad_post else "ok", 0, bad_post)
 
-    live = live_rows(post, tombs, "doc_id")
+    live = lc.live_rows(post, tombs, "doc_id")
     multi_gen = (live.groupBy("doc_id")
                  .agg(F.count_distinct("gen").alias("g"))
                  .where(F.col("g") > 1).count())
@@ -383,9 +397,9 @@ def verify_trigram_index(spark: SparkSession, index_dir: str,
     """Audit a trigram index — operators/trigram.py layout: distinct
     (tg, doc_id, gen) postings routed by xxhash64(tg), docstats carrying
     each live doc's |T(doc)|, generation-stamped tombstones."""
-    from ..operators.generations import live_rows
-
     rows, add = _new_report()
+    if _interrupted_swap(spark, index_dir, add):
+        return _report(spark, rows)
 
     try:
         meta = spark.read.parquet(f"{index_dir}/meta").first()
@@ -397,17 +411,10 @@ def verify_trigram_index(spark: SparkSession, index_dir: str,
     n_buckets = int(meta["n_buckets"])
     max_gen = int(meta["max_gen"]) if "max_gen" in meta else 0
 
-    ok_layout = True
-    for name in ("postings", "docstats"):
-        here = _path_exists(spark, f"{index_dir}/{name}")
-        add(f"layout_{name}", "ok" if here else "fail",
-            "directory present", here)
-        ok_layout = ok_layout and here
-    if not ok_layout:
+    if not _layout_ok(spark, index_dir, ("postings", "docstats"), add):
         return _report(spark, rows)
 
-    tombs = (spark.read.parquet(f"{index_dir}/tombstones")
-             if _path_exists(spark, f"{index_dir}/tombstones") else None)
+    tombs = lc.read_tombstones(spark, f"{index_dir}/tombstones")
     if tombs is not None:
         _check_tombstone_gen(add, tombs, max_gen, "meta.max_gen")
 
@@ -428,9 +435,9 @@ def verify_trigram_index(spark: SparkSession, index_dir: str,
     add("postings_distinct", "fail" if dup else "ok", 0, dup,
         "duplicate (tg, doc_id, gen) rows inflate AND-count candidates")
 
-    live_post = live_rows(post, tombs, "doc_id")
-    live_stats = live_rows(spark.read.parquet(f"{index_dir}/docstats"),
-                           tombs, "doc_id")
+    live_post = lc.live_rows(post, tombs, "doc_id")
+    live_stats = lc.live_rows(spark.read.parquet(f"{index_dir}/docstats"),
+                              tombs, "doc_id")
     per_doc = (live_post.groupBy("doc_id")
                .agg(F.count_distinct("tg").alias("tg_live")))
     mism = (per_doc.join(live_stats.select("doc_id", "n_trigrams"),
@@ -451,13 +458,13 @@ def verify_vector_index(spark: SparkSession, index_dir: str,
     centroids) and counts disagreements: a misassigned row is silently
     unreachable at query time (the probe set never reads its directory),
     which no query-path test can catch."""
-    from ..operators.generations import live_rows
-
     rows, add = _new_report()
+    if _interrupted_swap(spark, index_dir, add):
+        return _report(spark, rows)
 
-    has_meta = _path_exists(spark, f"{index_dir}/meta")
-    has_cent = _path_exists(spark, f"{index_dir}/centroids")
-    has_pq = _path_exists(spark, f"{index_dir}/pq")
+    has_meta = lc.path_exists(spark, f"{index_dir}/meta")
+    has_cent = lc.path_exists(spark, f"{index_dir}/centroids")
+    has_pq = lc.path_exists(spark, f"{index_dir}/pq")
     family = ("lsh" if has_meta else
               "ivfpq" if has_cent and has_pq else
               "ivf" if has_cent else None)
@@ -466,36 +473,31 @@ def verify_vector_index(spark: SparkSession, index_dir: str,
             "not a vector index directory")
         return _report(spark, rows)
     add("family", "ok", "", family)
-    if not _path_exists(spark, f"{index_dir}/vectors"):
-        add("layout_vectors", "fail", "directory present", False)
+    if not _layout_ok(spark, index_dir, ("vectors",), add):
         return _report(spark, rows)
-    add("layout_vectors", "ok", "directory present", True)
-
-    import numpy as np
 
     if family == "lsh":
         meta = spark.read.parquet(f"{index_dir}/meta").first()
         dim = int(meta["dim"])
         part_col = "bucket"
     else:
+        from ..operators.similarity import _stack_centroids
         crows = spark.read.parquet(f"{index_dir}/centroids").collect()
-        crows.sort(key=lambda r: r["list_id"])
-        cent = np.vstack([np.asarray(r["centroid"], dtype=np.float64)
-                          for r in crows])
+        cent = _stack_centroids(crows)
         dim = cent.shape[1]
         part_col = "list_id"
-        ids_ok = [int(r["list_id"]) for r in crows] == list(range(len(crows)))
+        ids_ok = (sorted(int(r["list_id"]) for r in crows)
+                  == list(range(len(crows))))
         add("centroid_ids_dense", "ok" if ids_ok else "fail",
             f"0..{len(crows) - 1}", "dense" if ids_ok else "gapped",
             "" if ids_ok else "loaders vstack by sorted list_id; a gap "
             "shifts every later list's centroid")
 
     max_gen = 0
-    if _path_exists(spark, f"{index_dir}/genmeta"):
+    if lc.path_exists(spark, f"{index_dir}/genmeta"):
         max_gen = int(spark.read.parquet(f"{index_dir}/genmeta")
                       .first()["max_gen"])
-    tombs = (spark.read.parquet(f"{index_dir}/tombstones")
-             if _path_exists(spark, f"{index_dir}/tombstones") else None)
+    tombs = lc.read_tombstones(spark, f"{index_dir}/tombstones")
     if tombs is not None:
         _check_tombstone_gen(add, tombs, max_gen, "genmeta.max_gen")
 
@@ -512,7 +514,7 @@ def verify_vector_index(spark: SparkSession, index_dir: str,
     # embedding_dim fail count; one corrupt row must not abort the audit)
     wellformed = (vectors if not bad_dim
                   else vectors.where(F.size("embedding") == dim))
-    live = live_rows(vectors, tombs, "vec_id")
+    live = lc.live_rows(vectors, tombs, "vec_id")
     dup = (live.groupBy("vec_id").count()
            .where(F.col("count") > 1).count())
     add("unique_live_ids", "fail" if dup else "ok", 0, dup,
@@ -539,13 +541,13 @@ def verify_vector_index(spark: SparkSession, index_dir: str,
         # restore can present an ivfpq index with codes/ missing — that
         # is a fail row for the report, not a raw AnalysisException that
         # aborts the audit (and the publish_index(verify=True) pre-flight)
-        if not _path_exists(spark, f"{index_dir}/codes"):
+        if not lc.path_exists(spark, f"{index_dir}/codes"):
             add("layout_codes", "fail", "directory present", False,
                 "ivfpq index without its codes/ table — ADC shortlist "
                 "has nothing to scan")
             return _report(spark, rows)
         codes = spark.read.parquet(f"{index_dir}/codes")
-        live_codes = live_rows(codes, tombs, "vec_id")
+        live_codes = lc.live_rows(codes, tombs, "vec_id")
         bad_ids = (live.select("vec_id")
                    .exceptAll(live_codes.select("vec_id")).count()
                    + live_codes.select("vec_id")
@@ -568,7 +570,7 @@ def detect_index_family(spark: SparkSession, index_dir: str) -> str:
     main and fielded both carry stats/ (distinguished by which schema the
     one-row table has); trigram and LSH carry meta/ (distinguished by
     fields); IVF / IVF-PQ carry centroids/. Raises on none of the above."""
-    if _path_exists(spark, f"{index_dir}/stats"):
+    if lc.path_exists(spark, f"{index_dir}/stats"):
         st = spark.read.parquet(f"{index_dir}/stats").first()
         if "prep_version" in st.__fields__:
             return "main"
@@ -576,7 +578,7 @@ def detect_index_family(spark: SparkSession, index_dir: str) -> str:
             return "fielded"
         raise ValueError(f"{index_dir}/stats has neither a main nor a "
                          f"fielded schema: {st.__fields__}")
-    if _path_exists(spark, f"{index_dir}/meta"):
+    if lc.path_exists(spark, f"{index_dir}/meta"):
         meta = spark.read.parquet(f"{index_dir}/meta").first()
         if "n_planes" in meta.__fields__:
             return "vector"
@@ -589,7 +591,7 @@ def detect_index_family(spark: SparkSession, index_dir: str) -> str:
             return "trigram"
         raise ValueError(f"{index_dir}/meta has neither a trigram nor an "
                          f"LSH schema: {meta.__fields__}")
-    if _path_exists(spark, f"{index_dir}/centroids"):
+    if lc.path_exists(spark, f"{index_dir}/centroids"):
         return "vector"
     raise ValueError(f"{index_dir} is not a persisted index of any family "
                      "(no stats/, meta/, or centroids/)")
@@ -599,7 +601,12 @@ def verify_any_index(spark: SparkSession, index_dir: str,
                      deep: bool = False) -> DataFrame:
     """Family-dispatching audit: detect what lives at `index_dir` and run
     the matching verifier. The one-call pre-flight `publish_index(...,
-    verify=True)` uses before flipping an alias."""
+    verify=True)` uses before flipping an alias. An interrupted table
+    swap is reported before detection, which it can defeat (the table
+    the detection reads may be the one renamed aside)."""
+    rows, add = _new_report()
+    if _interrupted_swap(spark, index_dir, add):
+        return _report(spark, rows)
     family = detect_index_family(spark, index_dir)
     fn = {"main": verify_index, "fielded": verify_fielded_index,
           "trigram": verify_trigram_index, "vector": verify_vector_index}

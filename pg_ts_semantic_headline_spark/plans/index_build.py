@@ -56,16 +56,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .. import lifecycle as lc
+
 K1 = 1.2
 B = 0.75
 # v3: tokens/postings rows carry a `gen` (generation) column so doc
-# replaces/deletes resolve by tombstone (doc_id, before_gen) without
-# rewriting the append-only tables, and stats carries `gen`. v4: row
-# postings always carry positions (the one positional store). The
-# version gate in load_index rejects indexes written under older
-# layouts: a v3 index may hold its positions only in a compressed block
-# store this engine no longer reads, so it must be rebuilt.
-PREP_VERSION = "tsp-spark-4"
+# replaces/deletes resolve by tombstone without rewriting the
+# append-only tables, and stats carries `gen`. v4: row postings always
+# carry positions (the one positional store). v5: tombstones are
+# (doc_id, gen = last dead generation), the encoding every index family
+# shares (lifecycle.live_rows). The version gate in load_index rejects
+# indexes written under older layouts, which must be rebuilt.
+PREP_VERSION = "tsp-spark-5"
 
 STATS_SCHEMA = ("n_docs long, avgdl double, config string, "
                 "prep_version string, n_buckets int, gen int")
@@ -91,8 +93,8 @@ class IndexPaths:
     @property
     def manifest(self): return f"{self.root}/_manifest"
     # incremental-maintenance state (see streaming/incremental.py):
-    # _tombstones (doc_id, before_gen): rows of doc_id with gen <
-    #             before_gen are dead (doc replace/delete)
+    # _tombstones (doc_id, gen): rows of doc_id with gen <= the
+    #             tombstone's gen are dead (lifecycle.live_rows)
     @property
     def tombstones(self): return f"{self.root}/_tombstones"
 
@@ -154,28 +156,34 @@ def _checksum_observation(name: str, checksum_col):
                             F.lit(0)).alias("h")]
 
 
+def _footer_counts(spark: SparkSession, path: str) -> list[int]:
+    """Per-file row counts of the table at `path` from parquet FOOTERS
+    (a driver-side metadata read — no data scan, no Spark job), files in
+    path order. Raises where the files are not local."""
+    import pyarrow.parquet as pq
+    from concurrent.futures import ThreadPoolExecutor
+
+    def n_rows(f):
+        local = f[len("file:"):] if f.startswith("file:") else f
+        return pq.ParquetFile(local).metadata.num_rows
+    # footer opens are independent ~ms-scale IO calls; a serial loop
+    # over a few hundred files was costing whole seconds of build wall
+    with ThreadPoolExecutor(max_workers=16) as pool:
+        return list(pool.map(n_rows,
+                             sorted(spark.read.parquet(path).inputFiles())))
+
+
 def _file_lineage(spark: SparkSession, out_path: str, observation,
                   count_key: str = "c", hash_key: str = "h",
                   fallback_df: DataFrame = None,
                   fallback_checksum_col=None) -> list:
-    """Per-partition lineage rows: per-file row counts from parquet FOOTERS
-    (a driver-side metadata read — no data scan, no extra Spark job) plus
-    one global row (partition_id = -1) carrying the observed checksum of the
-    write pass. Falls back to an aggregation job for non-local filesystems."""
-    rows = []
+    """Per-partition lineage rows: per-file row counts from parquet
+    footers plus one global row (partition_id = -1) carrying the observed
+    checksum of the write pass. Falls back to an aggregation job for
+    non-local filesystems."""
     try:
-        files = sorted(spark.read.parquet(out_path).inputFiles())
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
-        def n_rows(f):
-            local = f[len("file:"):] if f.startswith("file:") else f
-            return pq.ParquetFile(local).metadata.num_rows
-        # footer opens are independent ~ms-scale IO calls; a serial loop
-        # over a few hundred files was costing whole seconds of build wall
-        with ThreadPoolExecutor(max_workers=16) as pool:
-            counts = list(pool.map(n_rows, files))
-        rows = list(zip(range(len(files)), counts, [None] * len(files)))
+        rows = [(i, c, None)
+                for i, c in enumerate(_footer_counts(spark, out_path))]
     except Exception:
         if fallback_df is not None:
             return _lineage(fallback_df, F.spark_partition_id(),
@@ -184,6 +192,31 @@ def _file_lineage(spark: SparkSession, out_path: str, observation,
     got = observation.get
     rows.append((-1, int(got[count_key]), int(got[hash_key])))
     return rows
+
+
+def _analyze_docs(docs: DataFrame, content_col: str, cfg_col,
+                  doc_id: str) -> DataFrame:
+    """(doc_id, tokens, dl, postings, sha256) per document: the one
+    analysis pass the build and the incremental merge share."""
+    from .analyze import analyze_index_udf
+
+    return (docs.withColumn("_a", analyze_index_udf(F.col(content_col),
+                                                    cfg_col))
+            .select(F.col(doc_id).alias("doc_id"),
+                    F.col("_a.tokens").alias("tokens"),
+                    F.col("_a.dl").alias("dl"),
+                    F.col("_a.postings").alias("postings"),
+                    F.sha2(F.col(content_col), 256).alias("sha256")))
+
+
+def _posting_rows(analyzed: DataFrame, n_buckets: int) -> DataFrame:
+    """One (doc_id, dl, term, tf, positions, bucket) row per (term, doc)."""
+    return (analyzed.select("doc_id", "dl", F.explode("postings").alias("p"))
+            .select("doc_id", "dl", F.col("p.term").alias("term"),
+                    F.col("p.tf").alias("tf"),
+                    F.col("p.positions").alias("positions"))
+            .withColumn("bucket", F.pmod(F.xxhash64("term"),
+                                         F.lit(n_buckets)).cast("int")))
 
 
 def build_index(
@@ -265,21 +298,12 @@ def build_index(
         if few_splits:
             docs = docs.repartition(target_parts)
 
-    from .analyze import analyze_index_udf
-
     # Single-pass analysis: tokens + dl + doc-local postings in one Arrow
     # roundtrip; content is dropped from the cached projection, so the
     # expensive tokenize runs exactly once and every downstream stage reads
     # the compact cache (no raw lexeme stream is ever cached or shuffled)
-    analyzed = (docs
-                .withColumn("_a", analyze_index_udf(
-                    F.col(content_col), cfg_col))
-                .select(F.col(doc_id).alias("doc_id"),
-                        F.col("_a.tokens").alias("tokens"),
-                        F.col("_a.dl").alias("dl"),
-                        F.col("_a.postings").alias("postings"),
-                        F.sha2(F.col(content_col), 256).alias("sha256"))
-                .persist(storage))
+    analyzed = _analyze_docs(docs, content_col, cfg_col,
+                             doc_id).persist(storage)
 
     # ---- stage: tokens (recall vectors + invariant column) ----
     corpus_obs = None
@@ -310,15 +334,7 @@ def build_index(
     # per-(term, doc) aggregation happened doc-locally inside the analysis
     # UDF (map-side combine): no shuffle ever carries one-row-per-token —
     # the downstream shuffles move one compact row per (term, doc)
-    per_term_doc = (analyzed
-                    .select("doc_id", "dl", F.explode("postings").alias("p"))
-                    .select("doc_id", "dl",
-                            F.col("p.term").alias("term"),
-                            F.col("p.tf").alias("tf"),
-                            F.col("p.positions").alias("positions"))
-                    .withColumn("bucket",
-                                F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-                                .cast("int")))
+    per_term_doc = _posting_rows(analyzed, n_buckets)
 
     # ONE shuffle produces the postings table's physical layout (globally
     # range-ordered by bucket, term, doc_id); persisting it lets the terms
@@ -406,46 +422,18 @@ class Index:
     gen: int = 0
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _apply_tombstones(df: DataFrame, tombs: DataFrame) -> DataFrame:
-    """Drop rows shadowed by a (doc_id, before_gen) tombstone. The
-    tombstone list is replace/delete metadata — tiny — so this is a
-    broadcast join, never a shuffle of the base table."""
-    t = (tombs.groupBy("doc_id")
-         .agg(F.max("before_gen").alias("_before_gen")))
-    return (df.join(F.broadcast(t), on="doc_id", how="left")
-            .where(F.col("_before_gen").isNull()
-                   | (F.col("gen") >= F.col("_before_gen")))
-            .drop("_before_gen"))
-
-
 def _alias_versions(spark: SparkSession, alias_dir: str) -> list[int]:
     """COMPLETE alias versions under `alias_dir`, ascending: `v=N`
     subdirectories whose Spark commit finished (_SUCCESS present) — a
     publish that died mid-write is invisible to readers."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(alias_dir)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
+    if not lc.path_exists(spark, alias_dir):
         return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v="):
-            try:
-                n = int(name[2:])
-            except ValueError:
-                continue
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(
-                    f"{alias_dir}/{name}/_SUCCESS")):
-                out.append(n)
-    return sorted(out)
+    fs, p, _ = lc._fs(spark, alias_dir)
+    names = [st.getPath().getName() for st in fs.listStatus(p)
+             if st.isDirectory()]
+    return sorted(int(n[2:]) for n in names
+                  if n.startswith("v=") and n[2:].isdigit()
+                  and lc.path_exists(spark, f"{alias_dir}/{n}/_SUCCESS"))
 
 
 def publish_index(spark: SparkSession, index_dir: str,
@@ -456,24 +444,19 @@ def publish_index(spark: SparkSession, index_dir: str,
     under the alias every reader loads. Returns the new alias version.
 
     Reader-safe AND writer-safe: each publish writes a fresh pointer
-    under a hidden temp name, then CLAIMS `v=N+1` with a non-overwriting
-    atomic rename — readers take the highest version whose commit
-    completed (_SUCCESS), so a reader racing a publish sees either the
-    old target or the new one, never a half state; and two concurrent
-    publishers that both computed v=N+1 cannot silently clobber each
-    other — the claim uses FileContext.rename, which is atomic and
-    THROWS if the destination exists (unlike FileSystem.rename, whose
-    move-INTO-existing-directory semantics would let the losing racer
-    "succeed" with its pointer nested invisibly inside the winner's), so
-    exactly one claims the version and the loser raises (retry to land
-    at v=N+2). Alias dirs therefore belong on a filesystem with atomic
-    directory rename (HDFS, local, ABFS) — on a rename-by-copy object
-    store put the alias on the metastore-grade path. The previous
-    `keep-1` versions are retained so an in-flight reader that already
-    resolved an older pointer can finish against its target; prune the
-    superseded index DIRECTORIES themselves on whatever delay covers the
-    longest-running query. Validates the target before publishing (a
-    typo'd path must not brick every reader at resolve time).
+    under a hidden temp name, then CLAIMS `v=N+1` with an atomic rename
+    that throws if the version exists (`lifecycle.claim_path`): readers
+    take the highest version whose commit completed (_SUCCESS), so a
+    racing reader sees the old target or the new one, never a half
+    state, and of two concurrent publishers exactly one claims the
+    version while the loser raises (retry to land at v=N+2). Alias dirs
+    therefore belong on a filesystem with atomic directory rename (HDFS,
+    local, ABFS). The previous `keep-1` versions are retained so an
+    in-flight reader that already resolved an older pointer can finish
+    against its target; prune the superseded index DIRECTORIES on
+    whatever delay covers the longest-running query. Validates the
+    target before publishing (a typo'd path must not brick every reader
+    at resolve time).
 
     Works for EVERY persisted index family: the main/fielded indexes
     carry `stats/`, the trigram and LSH indexes carry `meta/`, the
@@ -487,9 +470,9 @@ def publish_index(spark: SparkSession, index_dir: str,
     pointing traffic at a restored or freshly-compacted index."""
     if keep < 1:
         raise ValueError("keep must be >= 1")
-    if not (_path_exists(spark, IndexPaths(index_dir).stats)
-            or _path_exists(spark, f"{index_dir}/meta")
-            or _path_exists(spark, f"{index_dir}/centroids")):
+    if not (lc.path_exists(spark, IndexPaths(index_dir).stats)
+            or lc.path_exists(spark, f"{index_dir}/meta")
+            or lc.path_exists(spark, f"{index_dir}/centroids")):
         raise ValueError(
             f"{index_dir} is not a built index (no stats/, meta/, or "
             f"centroids/)")
@@ -516,34 +499,18 @@ def publish_index(spark: SparkSession, index_dir: str,
     (spark.createDataFrame([(index_dir,)], "target string")
      .coalesce(1).write.option("compression", INDEX_CODEC)
      .mode("overwrite").parquet(tmp))
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    fs = hpath(alias_dir).getFileSystem(conf)
-    # claim v=N with FileContext.rename and NO Options.Rename.OVERWRITE:
-    # atomic, and it THROWS FileAlreadyExistsException when dst exists.
-    # (FileSystem.rename is the wrong primitive here: into an existing
-    # directory it moves the source INSIDE and returns true, so a losing
-    # concurrent publisher would "succeed" while its pointer sits nested
-    # and invisible — a silently lost publish.) tmp is a fully-committed
-    # pointer dir (the parquet commit put _SUCCESS inside) BEFORE the
-    # rename, so every v=N this protocol produces is complete: dead
-    # half-publishes cannot exist and no reclaim path is needed. A v=N
-    # WITHOUT _SUCCESS therefore came from outside the protocol; refuse
-    # it rather than delete it — any auto-reclaim is check-then-delete,
-    # and two reclaimers can destroy each other's committed pointer.
-    dst = hpath(f"{alias_dir}/v={n}")
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        hpath(alias_dir).toUri(), conf)
-    no_overwrite = spark.sparkContext._gateway.new_array(
-        jvm.org.apache.hadoop.fs.Options.Rename, 0)
+    # tmp is a fully-committed pointer dir (_SUCCESS inside) BEFORE the
+    # claim, so every v=N this protocol produces is complete. A v=N
+    # WITHOUT _SUCCESS came from outside the protocol; refuse it rather
+    # than delete it — any auto-reclaim is check-then-delete, and two
+    # reclaimers can destroy each other's committed pointer.
     try:
-        fc.rename(hpath(tmp), dst, no_overwrite)
+        lc.claim_path(spark, tmp, f"{alias_dir}/v={n}")
     except Exception as e:
-        fs.delete(hpath(tmp), True)
+        lc.delete_path(spark, tmp)
         if "FileAlreadyExistsException" not in str(e):
             raise
-        if fs.exists(hpath(f"{alias_dir}/v={n}/_SUCCESS")):
+        if lc.path_exists(spark, f"{alias_dir}/v={n}/_SUCCESS"):
             raise RuntimeError(
                 f"publish race: {alias_dir}/v={n} was claimed by a "
                 f"concurrent publisher — retry to publish as v={n + 1}"
@@ -554,7 +521,7 @@ def publish_index(spark: SparkSession, index_dir: str,
             f"fully-committed pointer dirs into place); remove the "
             f"directory manually, then retry") from e
     for old in versions[:max(0, len(versions) - (keep - 1))]:
-        fs.delete(hpath(f"{alias_dir}/v={old}"), True)
+        lc.delete_path(spark, f"{alias_dir}/v={old}")
     return n
 
 
@@ -583,7 +550,7 @@ def _read_stats(spark: SparkSession, paths: IndexPaths):
 
 def load_index(spark: SparkSession, out_dir: str) -> Index:
     paths = IndexPaths(out_dir)
-    if not _path_exists(spark, paths.stats):
+    if not lc.path_exists(spark, paths.stats):
         # alias indirection: a directory holding v=N pointer versions
         # instead of index tables redirects to its newest target (ONE
         # level — an alias must name a real index, not another alias)
@@ -591,22 +558,19 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
         if versions:
             target = resolve_index_alias(spark, out_dir)
             t = IndexPaths(target)
-            if not _path_exists(spark, t.stats):
+            if not lc.path_exists(spark, t.stats):
                 raise ValueError(
                     f"alias {out_dir} points at {target}, which is not a "
                     f"built index (chained aliases are not followed)")
             paths = t
+    lc.check_committed(spark, paths.root)
     stats = _read_stats(spark, paths)
-    tokens = spark.read.parquet(paths.tokens)
-    postings = spark.read.parquet(paths.postings)
-    if _path_exists(spark, paths.tombstones):
-        tombs = spark.read.parquet(paths.tombstones)
-        tokens = _apply_tombstones(tokens, tombs)
-        postings = _apply_tombstones(postings, tombs)
+    tombs = lc.read_tombstones(spark, paths.tombstones)
     return Index(
         paths=paths,
-        tokens=tokens,
-        postings=postings,
+        tokens=lc.live_rows(spark.read.parquet(paths.tokens), tombs, "doc_id"),
+        postings=lc.live_rows(spark.read.parquet(paths.postings), tombs,
+                              "doc_id"),
         terms=spark.read.parquet(paths.terms),
         n_docs=int(stats["n_docs"]),
         avgdl=float(stats["avgdl"]),

@@ -405,19 +405,21 @@ def _merge_into_index(spark: SparkSession, index_dir: str, kept: DataFrame,
 
     Replay idempotence uses marker-BEFORE-merge: the marker under
     `_indexed/batch_id=N` is written before the first merge attempt, so
-    a replay (marker present) knows rows may already exist — possibly
-    from a merge that died mid-append — and sweeps them with
-    `delete_docs(through_gen=stats.gen + 2)` (covers even orphan rows a
-    crashed merge left above the visible generation) before re-merging.
+    a replay (marker present) knows rows may already exist — from a
+    merge that published, or one that died mid-publish and is rolled
+    forward by the sweep's own `lifecycle.recover` — and sweeps them
+    with `delete_docs(through_gen=stats.gen + 2)` before re-merging.
     The kept set is deterministic on replay (the dedup-store reads
     exclude the batch's own attempt), so the sweep ids are exactly the
     crashed attempt's ids."""
-    from ..plans.index_build import IndexPaths, _path_exists, _read_stats
+    from ..lifecycle import path_exists, recover
+    from ..plans.index_build import IndexPaths, _read_stats
     from .incremental import delete_docs, merge_batch
 
     marker = f"{out_dir}/_indexed/batch_id={batch_id}"
+    recover(spark, index_dir)
     stats = _read_stats(spark, IndexPaths(index_dir))
-    if _path_exists(spark, marker):
+    if path_exists(spark, marker):
         # distributed sweep: the kept ids go to delete_docs as a DataFrame
         # (materialized to a scratch table inside), never to the driver —
         # a giant replayed batch must not OOM it. Callers guarantee kept
@@ -454,7 +456,7 @@ def compact_corpus_stores(spark: SparkSession, out_dir: str,
     loss — re-running the compaction is always safe.
 
     Returns {store_name: n_batches_folded}."""
-    from .incremental import _delete_path, _rename_path
+    from ..lifecycle import delete_path, rename_path
 
     stats: dict = {}
     for store in ("_seen", "_minhash", "_substr/data"):
@@ -472,13 +474,13 @@ def compact_corpus_stores(spark: SparkSession, out_dir: str,
         merged = (df.where(F.col("batch_id").isin(merge))
                   .drop("batch_id").distinct())
         tmp = f"{path}/.compact_tmp"
-        _delete_path(spark, tmp)
+        delete_path(spark, tmp)
         merged.write.parquet(tmp)
         for b in merge:
             if b != 0:
-                _delete_path(spark, f"{path}/batch_id={b}")
-        _delete_path(spark, f"{path}/batch_id=0")
-        _rename_path(spark, tmp, f"{path}/batch_id=0")
+                delete_path(spark, f"{path}/batch_id={b}")
+        delete_path(spark, f"{path}/batch_id=0")
+        rename_path(spark, tmp, f"{path}/batch_id=0")
         stats[store] = len(merge)
     return stats
 

@@ -7,8 +7,8 @@ and `percolate_stream`.
 Each batch is one generation: O(batch) assignment + append, never
 O(index). Deletes still go through `delete_vectors` on a loaded handle;
 `compact_vector_index` folds them in. Readers see old-consistent data
-until the batch's append completes (parquet appends are new files; a
-concurrent reader's scan snapshot simply predates them).
+until the batch's lifecycle commit publishes (a concurrent reader's scan
+snapshot simply predates it).
 
 The handle is RELOADED once per batch (cheap: genmeta + tombstones +
 plane/centroid side tables) so generation numbers stay correct across

@@ -58,6 +58,13 @@ def test_tombstoned_delete_keeps_invariants(spark, index_dir):
     assert rep["tombstone_gen"]["status"] == "ok"
     assert rep["stats_n_docs"]["status"] == "ok"
     assert rep["terms_vs_postings_df"]["status"] == "ok"
+    # a tombstone at stats.gen was written by a writer that never
+    # published that generation (every published one is stamped below it)
+    spark.createDataFrame([(5, 1)], "doc_id long, gen long") \
+        .write.mode("append").parquet(f"{index_dir}/_tombstones")
+    rep = _report(spark, index_dir)
+    assert rep["tombstone_gen"]["status"] == "fail"
+    assert rep["tombstone_gen"]["actual"] == "1"
 
 
 def test_corrupt_stats_detected(spark, index_dir):
@@ -184,6 +191,14 @@ class TestVerifyTrigramIndex:
         delete_documents(load_trigram_index(spark, tdir), [1, 4])
         rep = _fam_report(verify_trigram_index(spark, tdir, deep=True))
         _no_fails(rep)
+        assert rep["tombstone_gen"]["status"] == "ok"
+        # a tombstone above meta.max_gen (a writer that died before its
+        # generation publish) is the tombstone_gen fail
+        spark.createDataFrame([(2, 1)], "doc_id long, gen long") \
+            .write.mode("append").parquet(f"{tdir}/tombstones")
+        rep = _fam_report(verify_trigram_index(spark, tdir))
+        assert rep["tombstone_gen"]["status"] == "fail"
+        assert rep["tombstone_gen"]["actual"] == "1"
 
     def test_tampered_docstats_detected(self, spark, tdir):
         from pg_ts_semantic_headline_spark.plans.fsck import (

@@ -893,9 +893,8 @@ class TestFieldedIncremental:
         compact_fielded_index(spark, d)
         fidx2 = load_fielded_index(spark, d)
         assert self._query(fidx2) == before
-        from pg_ts_semantic_headline_spark.plans.index_build import (
-            _path_exists)
-        assert not _path_exists(spark, f"{d}/_tombstones")
+        from pg_ts_semantic_headline_spark.lifecycle import path_exists
+        assert not path_exists(spark, f"{d}/_tombstones")
         # exactly one live copy of the victim's rows survives physically
         raw = spark.read.parquet(f"{d}/postings")
         assert raw.where((F.col("doc_id") == victim)

@@ -109,10 +109,11 @@ class TestLifecycleSoak:
         assert not bad, bad
 
     def test_no_leftover_mutation_state(self, spark, soaked):
-        """Tombstones and compaction temp dirs are all consumed — nothing
-        for the next cycle to trip over."""
+        """Tombstones and the lifecycle's staged and aside dirs are all
+        consumed — nothing for the next cycle to trip over."""
         import os
+
+        from pg_ts_semantic_headline_spark import lifecycle
         mutated, _ = soaked
-        for sub in ("_tombstones", "tokens_compact_tmp",
-                    "postings_compact_tmp"):
+        for sub in ("_tombstones", lifecycle.STAGED, lifecycle.ASIDE):
             assert not os.path.exists(os.path.join(mutated, sub)), sub

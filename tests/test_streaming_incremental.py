@@ -232,10 +232,11 @@ class TestCompaction:
 
 
 def test_v3_index_must_be_rebuilt(spark, tmp_path):
-    """An index written under the previous layout version (tsp-spark-3)
-    may hold its positions outside row postings: loading it and merging
-    into it must refuse with a message that says to rebuild, and fsck
-    must fail the version check."""
+    """An index written under an older layout version must be rebuilt:
+    tsp-spark-3 may hold its positions outside row postings, and
+    tsp-spark-4 encodes tombstones as (doc_id, before_gen). Loading it
+    and merging into it must refuse with a message that says to rebuild,
+    and fsck must fail the version check."""
     import shutil
 
     from pg_ts_semantic_headline_spark.plans.fsck import verify_index
@@ -243,21 +244,22 @@ def test_v3_index_must_be_rebuilt(spark, tmp_path):
     out = str(tmp_path / "v3")
     build_index(spark, spark.createDataFrame(BASE, ["doc_id", "content"]),
                 out, config=CONFIG, n_buckets=4)
-    stats = spark.read.parquet(f"{out}/stats")
-    stats.withColumn("prep_version", F.lit("tsp-spark-3")) \
-        .write.mode("overwrite").parquet(f"{out}/stats_v3")
-    shutil.rmtree(f"{out}/stats")
-    shutil.move(f"{out}/stats_v3", f"{out}/stats")
+    for old in ("tsp-spark-3", "tsp-spark-4"):
+        stats = spark.read.parquet(f"{out}/stats")
+        stats.withColumn("prep_version", F.lit(old)) \
+            .write.mode("overwrite").parquet(f"{out}/stats_old")
+        shutil.rmtree(f"{out}/stats")
+        shutil.move(f"{out}/stats_old", f"{out}/stats")
 
-    with pytest.raises(ValueError, match="rebuild"):
-        load_index(spark, out)
-    # writers refuse too, before touching any table
-    with pytest.raises(ValueError, match="rebuild"):
-        merge_batch(spark, out, spark.createDataFrame(
-            NEW, ["doc_id", "content"]), config=CONFIG)
-    rep = {r["check"]: r for r in verify_index(spark, out).collect()}
-    assert rep["prep_version"]["status"] == "fail"
-    assert rep["prep_version"]["actual"] == "tsp-spark-3"
+        with pytest.raises(ValueError, match="rebuild"):
+            load_index(spark, out)
+        # writers refuse too, before touching any table
+        with pytest.raises(ValueError, match="rebuild"):
+            merge_batch(spark, out, spark.createDataFrame(
+                NEW, ["doc_id", "content"]), config=CONFIG)
+        rep = {r["check"]: r for r in verify_index(spark, out).collect()}
+        assert rep["prep_version"]["status"] == "fail"
+        assert rep["prep_version"]["actual"] == old
 
 
 def test_windowed_term_counts_stream(spark, tmp_path):
@@ -463,14 +465,15 @@ class TestUpsertDocuments:
         from pg_ts_semantic_headline_spark.plans.index_build import (
             IndexPaths, load_index)
         from pg_ts_semantic_headline_spark.plans.search import bm25_topk
+        from pg_ts_semantic_headline_spark.lifecycle import path_exists
         from pg_ts_semantic_headline_spark.streaming.incremental import (
-            _path_exists, upsert_documents)
+            upsert_documents)
         docs = [(1, "alpha beta gamma")]
         out = self._build(spark, tmp_path_factory.mktemp("ups_new"), docs)
         rep = upsert_documents(spark, out, spark.createDataFrame(
             [(5, "fresh words only")], ["doc_id", "content"]))
         assert rep == {"unchanged": 0, "changed": 0, "new": 1}
-        assert not _path_exists(spark, IndexPaths(out).tombstones)
+        assert not path_exists(spark, IndexPaths(out).tombstones)
         idx = load_index(spark, out)
         assert {r["doc_id"] for r in
                 bm25_topk(idx, ["fresh"], k=10).collect()} == {5}
@@ -484,8 +487,9 @@ def test_delete_docs_dataframe_form(spark, tmp_path):
     from pg_ts_semantic_headline_spark.plans.index_build import (
         IndexPaths, build_index, load_index)
     from pg_ts_semantic_headline_spark.plans.search import bm25_topk
+    from pg_ts_semantic_headline_spark.lifecycle import path_exists
     from pg_ts_semantic_headline_spark.streaming.incremental import (
-        _path_exists, delete_docs)
+        delete_docs)
     out = str(tmp_path / "del_df_idx")
     build_index(spark, spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma delta"), (3, "epsilon zeta")],
@@ -501,8 +505,8 @@ def test_delete_docs_dataframe_form(spark, tmp_path):
     with pytest.raises(ValueError, match="non-numeric"):
         delete_docs(spark, out, spark.createDataFrame(
             [("not-a-doc-id",), ("2",)], ["doc_id"]))
-    assert not _path_exists(spark, f"{out}/_delete_scratch")
-    assert not _path_exists(spark, IndexPaths(out).tombstones)
+    assert not path_exists(spark, f"{out}/_delete_scratch")
+    assert not path_exists(spark, IndexPaths(out).tombstones)
     assert len(load_index(spark, out).tokens
                .select("doc_id").distinct().collect()) == 3
     ids = spark.createDataFrame([(1,), (3,)], ["doc_id"])
@@ -513,8 +517,8 @@ def test_delete_docs_dataframe_form(spark, tmp_path):
     assert not bm25_topk(idx, ["alpha"], k=5).collect()
     assert [r["doc_id"] for r in
             bm25_topk(idx, ["gamma"], k=5).collect()] == [2]
-    assert not _path_exists(spark, f"{out}/_delete_scratch")
-    assert _path_exists(spark, IndexPaths(out).tombstones)
+    assert not path_exists(spark, f"{out}/_delete_scratch")
+    assert path_exists(spark, IndexPaths(out).tombstones)
 
 
 def test_streaming_upsert_mode_is_replay_idempotent(spark, tmp_path):
