@@ -56,29 +56,6 @@ DOC_POSTINGS_SCHEMA = ArrayType(StructType([
     StructField("positions", ArrayType(IntegerType()), False),
 ]))
 
-
-def _doc_postings_batch(lexemes: pd.Series) -> pd.Series:
-    """Per-document posting rows computed doc-locally (map-side combine):
-    the (term, doc) aggregation never shuffles raw position streams — the
-    shuffle downstream moves one compact row per (term, doc) instead of one
-    row per token occurrence."""
-    out = []
-    for lexs in lexemes:
-        if lexs is None:
-            out.append(None)
-            continue
-        d: dict = {}
-        for i, lx in enumerate(lexs):
-            if lx is not None:
-                d.setdefault(lx, []).append(i + 1)
-        out.append([{"term": t, "tf": len(ps), "positions": ps}
-                    for t, ps in d.items()])
-    return pd.Series(out)
-
-
-doc_postings_udf = F.pandas_udf(_doc_postings_batch,
-                                returnType=DOC_POSTINGS_SCHEMA)
-
 INDEX_ANALYSIS_SCHEMA = StructType([
     StructField("tokens", ArrayType(StringType()), True),
     StructField("dl", IntegerType(), True),

@@ -22,6 +22,11 @@ re-expressed Spark-first:
 Scale note: the only shuffle is the groupBy on (doc_id, phrase_id,
 range_start) — a key that is near-unique, so it distributes evenly even when
 one term is hot; the query side is always broadcast.
+
+Steps 2-4 are `phrase_occurrences`, the one alignment kernel every phrase
+match in the engine runs: this ad-hoc operator, the indexed boolean filter
+(`search.phrase_match_docs`) and the registry matcher `match_registry`,
+which `search.search_batch` and the percolator share.
 """
 
 from __future__ import annotations
@@ -33,7 +38,7 @@ from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from ..functions.lexize import analyze_text_simple
-from .query_compiler import CompiledQuery
+from .query_compiler import CompiledQuery, Node, require_no_prefixes
 
 PHRASE_TABLE_SCHEMA = StructType([
     StructField("phrase_id", IntegerType(), False),
@@ -58,6 +63,38 @@ def explode_lexemes(docs: DataFrame, doc_id: str = "doc_id") -> DataFrame:
             .select(doc_id, F.posexplode("lexemes").alias("pos0", "lex"))
             .where(F.col("lex").isNotNull())
             .select(doc_id, (F.col("pos0") + 1).alias("pos"), "lex"))
+
+
+def phrase_occurrences(hay: DataFrame, phrases: DataFrame, keys: list[str],
+                       carry: tuple[str, ...] = (),
+                       lex: str = "lex") -> DataFrame:
+    """Every exact occurrence of every phrase: (keys…, phrase_id,
+    start_pos, end_pos, carry…).
+
+    `hay` holds (doc_id, pos, `lex`) rows — one per lexeme occurrence,
+    pruned to the phrase lexemes by the caller — and `phrases` the
+    broadcast phrase table (…, phrase_id, q_lexeme, q_pos, q_len,
+    q_span). Each hay row aligns to the phrase start it implies
+    (range_start = pos - q_pos + 1); a (keys, phrase, range_start) group
+    holding all q_len lexemes over exactly q_span positions is an
+    occurrence. `keys` is [doc_id] for one query, [doc_id, query_id]
+    for a registry (query_id comes from the phrase table); `carry`
+    names phrase-table columns to keep."""
+    joined = hay.join(F.broadcast(phrases), hay[lex] == phrases.q_lexeme)
+    aligned = joined.withColumn(
+        "range_start", F.col("pos") - F.col("q_pos") + F.lit(1))
+    return (aligned
+            .groupBy(*keys, "phrase_id", "range_start")
+            .agg(F.count("*").alias("n_hits"),
+                 F.min("pos").alias("start_pos"),
+                 F.max("pos").alias("end_pos"),
+                 F.first("q_len").alias("q_len"),
+                 F.first("q_span").alias("q_span"),
+                 *[F.first(c).alias(c) for c in carry])
+            .where((F.col("n_hits") == F.col("q_len"))
+                   & (F.col("end_pos") - F.col("start_pos")
+                      == F.col("q_span")))
+            .select(*keys, "phrase_id", "start_pos", "end_pos", *carry))
 
 
 def phrase_in_text(items, text: str, config: str) -> bool:
@@ -101,7 +138,6 @@ def tsp_query_matches(
 
     Returns (doc_id, phrase_id, words, ts_query, start_pos, end_pos).
     """
-    from .query_compiler import require_no_prefixes
     require_no_prefixes(query, "tsp_query_matches (ad-hoc, no dictionary)")
     spark = docs.sparkSession
     if not query.phrases:
@@ -121,20 +157,7 @@ def tsp_query_matches(
     # optimizer can push down / turn into a bloom-ish semi filter)
     hay = hay.where(F.col("lex").isin(list(query.lexemes)))
 
-    joined = hay.join(F.broadcast(qdf), hay.lex == qdf.q_lexeme)
-    aligned = joined.withColumn(
-        "range_start", F.col("pos") - F.col("q_pos") + F.lit(1))
-
-    grouped = (aligned
-               .groupBy(doc_id, "phrase_id", "range_start")
-               .agg(F.count("*").alias("n_hits"),
-                    F.min("pos").alias("start_pos"),
-                    F.max("pos").alias("end_pos"),
-                    F.first("q_len").alias("q_len"),
-                    F.first("q_span").alias("q_span"),
-                    F.first("phrase_query").alias("ts_query"))
-               .where((F.col("n_hits") == F.col("q_len"))
-                      & (F.col("end_pos") - F.col("start_pos") == F.col("q_span"))))
+    grouped = phrase_occurrences(hay, qdf, [doc_id], carry=("phrase_query",))
 
     # semi-join the recall vectors to the matched docs FIRST: only winners'
     # token arrays enter the words join — the match stream is usually a
@@ -161,8 +184,176 @@ def tsp_query_matches(
                .withColumn("_rn", F.row_number().over(w))
                .where(F.col("_rn") <= match_limit))
 
-    return limited.select(doc_id, "phrase_id", "words", "ts_query",
+    return limited.select(doc_id, "phrase_id", "words",
+                          F.col("phrase_query").alias("ts_query"),
                           "start_pos", "end_pos")
+
+
+def _tree_ops(node: Node | None) -> set[str]:
+    if node is None:
+        return set()
+    out = {node.op}
+    for c in node.children:
+        out |= _tree_ops(c)
+    return out
+
+
+def _distinct_phrases(node: Node | None) -> list:
+    """Every distinct phrase of the tree (by items, first-seen order),
+    negated ones included: the boolean fold needs match sets for NOT
+    branches too, unlike highlighting's `CompiledQuery.phrases`."""
+    out, seen = [], set()
+
+    def walk(n: Node | None) -> None:
+        if n is None:
+            return
+        if n.op == "phrase":
+            if n.phrase.items not in seen:
+                seen.add(n.phrase.items)
+                out.append(n.phrase)
+            return
+        for c in n.children:
+            walk(c)
+
+    walk(node)
+    return out
+
+
+def _tree_expr(node: Node | None, pid_by_items) -> F.Column:
+    """Boolean AST -> JVM column expression over the ok_phrases array."""
+    if node is None:
+        return F.lit(False)
+    if node.op == "phrase":
+        return F.array_contains(F.col("ok_phrases"),
+                                pid_by_items[node.phrase.items])
+    if node.op == "not":
+        return ~_tree_expr(node.children[0], pid_by_items)
+    sub = [_tree_expr(c, pid_by_items) for c in node.children]
+    out = sub[0]
+    for s in sub[1:]:
+        out = (out & s) if node.op == "and" else (out | s)
+    return out
+
+
+def _tree_spec(node: Node | None, pid_by_items):
+    """Boolean AST -> a plain-tuple spec for the executor-side evaluator:
+    ('p', gid) | ('not', spec) | ('and'|'or', (spec, ...))."""
+    if node is None:
+        return ("or", ())
+    if node.op == "phrase":
+        return ("p", pid_by_items[node.phrase.items])
+    if node.op == "not":
+        return ("not", _tree_spec(node.children[0], pid_by_items))
+    return (node.op, tuple(_tree_spec(c, pid_by_items)
+                           for c in node.children))
+
+
+def _eval_spec(spec, ok: set) -> bool:
+    op = spec[0]
+    if op == "p":
+        return spec[1] in ok
+    if op == "not":
+        return not _eval_spec(spec[1], ok)
+    if op == "and":
+        return all(_eval_spec(c, ok) for c in spec[1])
+    return any(_eval_spec(c, ok) for c in spec[1])
+
+
+REGISTRY_TABLE_SCHEMA = StructType([
+    StructField("query_id", StringType(), False),
+    StructField("phrase_id", IntegerType(), False),
+    StructField("q_lexeme", StringType(), False),
+    StructField("q_pos", IntegerType(), False),
+    StructField("q_len", IntegerType(), False),
+    StructField("q_span", IntegerType(), False),
+])
+
+
+def _flatten_queries(queries: dict[str, CompiledQuery]):
+    """Rows for the unified phrase table + per-query (tree, phrase->gid map,
+    has_negation). phrase_id is globally unique across the registry, so
+    one alignment join serves every query at once."""
+    rows, meta = [], {}
+    gid = 0
+    for qid, q in queries.items():
+        # a registry has no dictionary to expand a ':*' prefix against;
+        # search_batch expands against its index BEFORE matching
+        require_no_prefixes(q, f"standing query {qid!r} (no dictionary)")
+        pid_by_items = {}
+        for ph in _distinct_phrases(q.root):
+            pid_by_items[ph.items] = gid
+            for lex, pos in ph.items:
+                rows.append((qid, gid, lex, pos, ph.length, ph.span))
+            gid += 1
+        meta[qid] = (q.root, pid_by_items, "not" in _tree_ops(q.root))
+    return rows, meta
+
+
+# registries up to this size fold as one nested JVM CASE expression,
+# larger ones through the vectorized Arrow spec evaluator: the CASE fold
+# skips the Python round trip, which wins at a handful of queries, but
+# its expression depth (planning and codegen) grows with the registry
+# (measured, BENCH/BASELINE.md §3d)
+CASE_CHAIN_MAX_QUERIES = 4
+
+
+def _flags_filter_udf(specs: dict):
+    @F.pandas_udf(BooleanType())
+    def ok(query_id: pd.Series, ok_phrases: pd.Series) -> pd.Series:
+        return pd.Series([
+            _eval_spec(specs[q], set(p) if p is not None else set())
+            for q, p in zip(query_id, ok_phrases)])
+
+    return ok
+
+
+def match_registry(queries: dict[str, CompiledQuery], hay,
+                   universe: DataFrame,
+                   doc_id: str = "doc_id") -> DataFrame:
+    """(doc_id, query_id) — every query of a registry each doc satisfies.
+
+    `hay(lexemes)` returns the (doc_id, pos, lex) rows of the registry's
+    lexemes; `universe` holds the doc ids a query with a negation ranges
+    over (a doc matching no phrase can still satisfy it), so those
+    queries — and only those — pay a universe × negated-queries frame.
+    Per (doc, query) the satisfied phrase set folds through the query's
+    boolean tree: a nested CASE for registries of at most
+    CASE_CHAIN_MAX_QUERIES, else the Arrow spec evaluator, whose plan
+    size does not grow with the registry."""
+    spark = universe.sparkSession
+    rows, meta = _flatten_queries(queries)
+    if rows:
+        qdf = spark.createDataFrame(rows, REGISTRY_TABLE_SCHEMA)
+        hits = phrase_occurrences(hay(sorted({r[2] for r in rows})), qdf,
+                                  [doc_id, "query_id"])
+        flags = (hits.groupBy(doc_id, "query_id")
+                 .agg(F.collect_set("phrase_id").alias("ok_phrases")))
+    else:
+        # no phrase anywhere (empty queries): nothing to align
+        flags = spark.createDataFrame(
+            [], f"{doc_id} long, query_id string, ok_phrases array<int>")
+
+    neg_qids = [qid for qid, (_, _, neg) in meta.items() if neg]
+    if neg_qids:
+        pairs = (universe.select(doc_id)
+                 .crossJoin(F.broadcast(
+                     spark.createDataFrame([(q,) for q in neg_qids],
+                                           "query_id string"))))
+        flags = (pairs.join(flags, on=[doc_id, "query_id"], how="full")
+                 .withColumn("ok_phrases",
+                             F.coalesce(F.col("ok_phrases"),
+                                        F.array().cast("array<int>"))))
+
+    if len(meta) <= CASE_CHAIN_MAX_QUERIES:
+        ok = F.lit(False)
+        for qid, (root, pid_by_items, _) in meta.items():
+            ok = F.when(F.col("query_id") == qid,
+                        _tree_expr(root, pid_by_items)).otherwise(ok)
+    else:
+        specs = {qid: _tree_spec(root, pid_by_items)
+                 for qid, (root, pid_by_items, _) in meta.items()}
+        ok = _flags_filter_udf(specs)(F.col("query_id"), F.col("ok_phrases"))
+    return flags.where(ok).select(doc_id, "query_id")
 
 
 def ts_stat(

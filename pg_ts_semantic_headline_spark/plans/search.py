@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .index_build import B, K1, Index
+from .matches import (_distinct_phrases, _tree_expr, _tree_ops,
+                      match_registry, phrase_occurrences, phrase_table_df)
 from .query_compiler import CompiledQuery, Node
 
 
@@ -414,7 +416,6 @@ def phrase_match_docs(index: Index, query: CompiledQuery,
 
     multi_hits = None
     if multi_lexemes:
-        from .matches import phrase_table_df
         qdf = (phrase_table_df(spark, query)
                .where(F.col("q_len") > 1))
         if anchor_docs is not None and anchor_small:
@@ -425,35 +426,13 @@ def phrase_match_docs(index: Index, query: CompiledQuery,
             hay = _positions_hay(index, multi_lexemes)
             if anchor_docs is not None:
                 hay = hay.join(anchor_docs, on="doc_id", how="left_semi")
-        joined = hay.join(F.broadcast(qdf), hay.term == qdf.q_lexeme)
-        aligned = joined.withColumn("range_start",
-                                    F.col("pos") - F.col("q_pos") + F.lit(1))
-        multi_hits = (aligned
-                      .groupBy("doc_id", "phrase_id", "range_start")
-                      .agg(F.count("*").alias("n_hits"),
-                           F.min("pos").alias("first"), F.max("pos").alias("last"),
-                           F.first("q_len").alias("q_len"), F.first("q_span").alias("q_span"))
-                      .where((F.col("n_hits") == F.col("q_len"))
-                             & (F.col("last") - F.col("first") == F.col("q_span")))
+        multi_hits = (phrase_occurrences(hay, qdf, ["doc_id"], lex="term")
                       .groupBy("doc_id", "phrase_id")
                       .agg(F.count("*").alias("n_matches")))
 
     if single_hits is not None and multi_hits is not None:
         return single_hits.unionByName(multi_hits)
     return single_hits if single_hits is not None else multi_hits
-
-
-def _all_phrases(node: Node | None) -> list:
-    """Every phrase in the tree, including negated ones (the boolean filter
-    needs match sets for NOT branches too, unlike highlighting)."""
-    if node is None:
-        return []
-    if node.op == "phrase":
-        return [node.phrase]
-    out = []
-    for c in node.children:
-        out.extend(_all_phrases(c))
-    return out
 
 
 def _required_lexemes(node: Node | None) -> set[str]:
@@ -500,11 +479,7 @@ def matching_docs(index: Index, query: CompiledQuery) -> DataFrame:
 
     query = expand_query_prefixes(index, query)
     spark = index.postings.sparkSession
-    phrases, seen = [], set()
-    for ph in _all_phrases(query.root):
-        if ph.items not in seen:
-            seen.add(ph.items)
-            phrases.append(ph)
+    phrases = _distinct_phrases(query.root)
     full_query = replace(query, phrases=tuple(phrases))
 
     anchor = None
@@ -532,23 +507,7 @@ def matching_docs(index: Index, query: CompiledQuery) -> DataFrame:
              .agg(F.collect_set("phrase_id").alias("ok_phrases")))
 
     phrase_ids = {ph.items: pid for pid, ph in enumerate(phrases)}
-
-    def to_expr(node: Node | None):
-        if node is None:
-            return F.lit(False)
-        if node.op == "phrase":
-            pid = phrase_ids[node.phrase.items]
-            return F.array_contains(F.col("ok_phrases"), pid)
-        if node.op == "not":
-            return ~to_expr(node.children[0])
-        sub = [to_expr(c) for c in node.children]
-        out = sub[0]
-        for s in sub[1:]:
-            out = (out & s) if node.op == "and" else (out | s)
-        return out
-
-    has_negation = "not" in _ops(query.root)
-    if has_negation:
+    if "not" in _tree_ops(query.root):
         # NOT semantics need the full doc universe, not just phrase
         # hitters — unless an anchor exists, in which case the anchor's
         # docs ARE the universe of possible matches
@@ -556,16 +515,7 @@ def matching_docs(index: Index, query: CompiledQuery) -> DataFrame:
                     else index.tokens.select("doc_id"))
         flags = universe.join(flags, on="doc_id", how="left").withColumn(
             "ok_phrases", F.coalesce(F.col("ok_phrases"), F.array().cast("array<int>")))
-    return flags.where(to_expr(query.root)).select("doc_id")
-
-
-def _ops(node: Node | None) -> set[str]:
-    if node is None:
-        return set()
-    out = {node.op}
-    for c in node.children:
-        out |= _ops(c)
-    return out
+    return flags.where(_tree_expr(query.root, phrase_ids)).select("doc_id")
 
 
 def search(
@@ -587,23 +537,20 @@ def search_batch(
     index: Index,
     queries: dict[str, CompiledQuery],
     k: int = 10,
-    eval_mode: str = "auto",
 ) -> DataFrame:
     """N full boolean+phrase retrievals in ONE pair of index scans — the
     batched form of `search` the way `bm25_topk_batch` batches
     `bm25_topk` (offline query workloads: eval sets, alert backfills,
     saved-search refreshes must not launch N driver actions).
 
-    Plan: all queries' phrase patterns flatten into one broadcast table
-    (the percolator's registry shape, streaming/percolate.py); ONE
-    positional scan pruned to the union of every query's lexemes feeds
-    the pos−rel_pos alignment join, and each query's boolean AST folds
-    over its satisfied-phrase set — a JVM CASE expression for small
-    workloads, the percolator's Arrow spec evaluator past
-    CASE_CHAIN_MAX_QUERIES (`eval_mode`, same contract as `percolate`:
-    plan size must not grow with an offline workload's query count).
-    The match set then semi-joins `bm25_topk_batch`'s single scored
-    scan per query.
+    Plan: the registry matcher the percolator runs
+    (`matches.match_registry`) over ONE positional scan pruned to the
+    union of every query's lexemes: one broadcast phrase table for all
+    queries, one alignment, and each query's boolean tree folded over
+    its satisfied-phrase set — a JVM CASE expression for a handful of
+    queries, the Arrow spec evaluator past that, so plan size does not
+    grow with an offline workload's query count. The match set then
+    semi-joins `bm25_topk_batch`'s single scored scan per query.
 
     NOT semantics: queries containing a negation must see every corpus
     doc (a doc matching no phrase can still satisfy them), so those —
@@ -613,54 +560,18 @@ def search_batch(
     like `search`, a query with no positive lexeme ranks nothing.
 
     Returns (query_id, doc_id, score, rank) with rank 1..k per query."""
-    from ..streaming.percolate import (STANDING_TABLE_SCHEMA,
-                                       _boolean_fold_filter,
-                                       _flatten_queries)
-
     spark = index.postings.sparkSession
-    out_schema = "query_id string, doc_id long, score double, rank int"
     if not queries:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
     queries = {qid: expand_query_prefixes(index, q)
                for qid, q in queries.items()}
-    rows, meta = _flatten_queries(queries)
-    all_lex = sorted({r[2] for r in rows})
-
-    if all_lex:
-        hay = (_positions_hay(index, all_lex)
-               .select("doc_id", "pos", F.col("term").alias("lex")))
-        qdf = spark.createDataFrame(rows, STANDING_TABLE_SCHEMA)
-        joined = hay.join(F.broadcast(qdf), hay.lex == qdf.q_lexeme)
-        aligned = joined.withColumn(
-            "range_start", F.col("pos") - F.col("q_pos") + F.lit(1))
-        hits = (aligned
-                .groupBy("doc_id", "query_id", "phrase_id", "range_start")
-                .agg(F.count("*").alias("n_hits"),
-                     F.min("pos").alias("p0"), F.max("pos").alias("p1"),
-                     F.first("q_len").alias("q_len"),
-                     F.first("q_span").alias("q_span"))
-                .where((F.col("n_hits") == F.col("q_len"))
-                       & (F.col("p1") - F.col("p0") == F.col("q_span"))))
-        flags = (hits.groupBy("doc_id", "query_id")
-                 .agg(F.collect_set("phrase_id").alias("ok_phrases")))
-    else:
-        flags = spark.createDataFrame(
-            [], "doc_id long, query_id string, ok_phrases array<int>")
-
-    neg_qids = [qid for qid, (_, _, neg) in meta.items() if neg]
-    if neg_qids:
-        universe = (index.tokens.select("doc_id")
-                    .crossJoin(F.broadcast(
-                        spark.createDataFrame([(q,) for q in neg_qids],
-                                              "query_id string"))))
-        flags = (universe.join(flags, on=["doc_id", "query_id"],
-                               how="full")
-                 .withColumn("ok_phrases",
-                             F.coalesce(F.col("ok_phrases"),
-                                        F.array().cast("array<int>"))))
-
-    matches = (_boolean_fold_filter(flags, meta, eval_mode)
-               .select("query_id", "doc_id"))
+    matches = match_registry(
+        queries,
+        lambda lexemes: (_positions_hay(index, lexemes)
+                         .select("doc_id", "pos",
+                                 F.col("term").alias("lex"))),
+        index.tokens)
     return bm25_topk_batch(index, queries, k=k, candidates=matches)
 
 

@@ -13,20 +13,21 @@ Spark-first design, one plan for ALL standing queries:
    (query_id, phrase_id, q_lexeme, q_pos, q_len, q_span) — phrase_id is
    globally unique across queries, so one alignment join serves every
    query at once;
-2. each batch's docs analyze once (the same fused Arrow UDF as the index
-   build), explode to (doc_id, pos, lex) pruned to the UNION of all query
-   lexemes before the join;
+2. each batch's docs analyze once (`with_analysis`, unless they already
+   carry `lexemes`), explode to (doc_id, pos, lex) pruned to the UNION of
+   all query lexemes before the join;
 3. the self-alignment trick (pos - rel_pos) + groupBy HAVING count==len
-   and exact span finds every exact phrase occurrence — identical
-   semantics to tsp_query_matches (/root/reference/sql/tsp_query_matches.sql:85-94);
+   and exact span finds every exact phrase occurrence — the one
+   alignment kernel of plans/matches.py, identical semantics to
+   tsp_query_matches (reference sql/tsp_query_matches.sql:85-94);
 4. per (doc, query) the satisfied phrase set folds through that query's
-   boolean AST — compiled to ONE JVM CASE expression keyed on query_id
-   for small registries (no Python anywhere), or evaluated by a
-   vectorized Arrow kernel holding the tree specs when the registry is
-   large (a nested CASE's expression depth grows with the registry;
-   the Arrow form keeps plan size O(1) in #queries and touches only
-   the sparse flag rows). `eval_mode` picks; 'auto' switches at
-   CASE_CHAIN_MAX_QUERIES. Result-identical by test.
+   boolean AST — one JVM CASE expression keyed on query_id for a handful
+   of queries, a vectorized Arrow kernel holding the tree specs past
+   that (plan size O(1) in #queries; it touches only the sparse flag
+   rows).
+
+Steps 1 and 3-4 are `plans.matches.match_registry`, which
+`plans.search.search_batch` runs over an index too.
 
 NOT semantics: a query whose tree contains a negation can match a document
 that satisfies NO phrase at all, so negated queries are evaluated against
@@ -45,146 +46,11 @@ the streaming form runs in foreachBatch — the same pattern as
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (IntegerType, StringType, StructField,
-                               StructType)
 
-from ..plans.query_compiler import CompiledQuery, Node
-
-STANDING_TABLE_SCHEMA = StructType([
-    StructField("query_id", StringType(), False),
-    StructField("phrase_id", IntegerType(), False),
-    StructField("q_lexeme", StringType(), False),
-    StructField("q_pos", IntegerType(), False),
-    StructField("q_len", IntegerType(), False),
-    StructField("q_span", IntegerType(), False),
-])
-
-
-def _flatten_queries(queries: dict[str, CompiledQuery]):
-    """Rows for the unified phrase table + per-query (tree, phrase->gid map,
-    has_negation). phrase_id is globally unique across standing queries.
-    Phrases come from the TREE (negated phrases need match sets too —
-    same reason as plans/search._all_phrases), not the highlight list."""
-    from ..plans.search import _all_phrases
-
-    from ..plans.query_compiler import require_no_prefixes
-
-    rows, meta = [], {}
-    gid = 0
-    for qid, q in queries.items():
-        # standing queries match against document streams, not an index
-        # dictionary — a ':*' prefix cannot be expanded here. search_batch
-        # expands against its index BEFORE flattening, so it never trips.
-        require_no_prefixes(q, f"standing query {qid!r} (no dictionary)")
-        pid_by_items = {}
-        for ph in _all_phrases(q.root):
-            if ph.items in pid_by_items:
-                continue
-            pid_by_items[ph.items] = gid
-            for lex, pos in ph.items:
-                rows.append((qid, gid, lex, pos, ph.length, ph.span))
-            gid += 1
-        meta[qid] = (q.root, pid_by_items, "not" in _tree_ops(q.root))
-    return rows, meta
-
-
-def _tree_ops(node: Node | None) -> set[str]:
-    if node is None:
-        return set()
-    out = {node.op}
-    for c in node.children:
-        out |= _tree_ops(c)
-    return out
-
-
-def _tree_expr(node: Node | None, pid_by_items) -> F.Column:
-    """Boolean AST -> JVM column expression over the ok_phrases array."""
-    if node is None:
-        return F.lit(False)
-    if node.op == "phrase":
-        return F.array_contains(F.col("ok_phrases"),
-                                pid_by_items[node.phrase.items])
-    if node.op == "not":
-        return ~_tree_expr(node.children[0], pid_by_items)
-    sub = [_tree_expr(c, pid_by_items) for c in node.children]
-    out = sub[0]
-    for s in sub[1:]:
-        out = (out & s) if node.op == "and" else (out | s)
-    return out
-
-
-def _tree_spec(node: Node | None, pid_by_items):
-    """Boolean AST -> a plain-tuple spec for the executor-side evaluator:
-    ('p', gid) | ('not', spec) | ('and'|'or', (spec, ...))."""
-    if node is None:
-        return ("or", ())
-    if node.op == "phrase":
-        return ("p", pid_by_items[node.phrase.items])
-    if node.op == "not":
-        return ("not", _tree_spec(node.children[0], pid_by_items))
-    return (node.op, tuple(_tree_spec(c, pid_by_items)
-                           for c in node.children))
-
-
-def _eval_spec(spec, ok: set) -> bool:
-    op = spec[0]
-    if op == "p":
-        return spec[1] in ok
-    if op == "not":
-        return not _eval_spec(spec[1], ok)
-    if op == "and":
-        return all(_eval_spec(c, ok) for c in spec[1])
-    return any(_eval_spec(c, ok) for c in spec[1])
-
-
-# above this many standing queries the nested-CASE plan is replaced by a
-# vectorized Arrow evaluator: a CASE chain's expression depth grows with
-# the registry, so both codegen time (16.9 s COLD for 128 queries; warm
-# 2.1→4.8 s from 16→128, superlinear) and planning blow up, while the
-# evaluator stays flat (~1.8 s for any registry ≤128 on the same corpus,
-# 1024 queries in 5.9 s — measured, BENCH/BASELINE.md). The threshold
-# keeps the zero-Python CASE plan only where the difference is noise.
-CASE_CHAIN_MAX_QUERIES = 32
-
-
-def _flags_filter_udf(specs: dict):
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def ok(query_id: pd.Series, ok_phrases: pd.Series) -> pd.Series:
-        return pd.Series([
-            _eval_spec(specs[q], set(p) if p is not None else set())
-            for q, p in zip(query_id, ok_phrases)])
-
-    return ok
-
-
-def _boolean_fold_filter(flags: DataFrame, meta: dict,
-                         eval_mode: str) -> DataFrame:
-    """Filter (…, query_id, ok_phrases) flag rows to the ones whose
-    query's boolean AST is satisfied — nested-CASE for small registries,
-    the Arrow spec evaluator past CASE_CHAIN_MAX_QUERIES (shared by the
-    percolator and `plans.search.search_batch`)."""
-    if eval_mode not in ("auto", "case", "arrow"):
-        raise ValueError(f"eval_mode must be 'auto', 'case' or 'arrow', "
-                         f"got {eval_mode!r}")
-    use_case = (eval_mode == "case"
-                or (eval_mode == "auto"
-                    and len(meta) <= CASE_CHAIN_MAX_QUERIES))
-    if use_case:
-        expr = F.lit(False)
-        for qid, (root, pid_by_items, _) in meta.items():
-            expr = F.when(F.col("query_id") == qid,
-                          _tree_expr(root, pid_by_items)).otherwise(expr)
-    else:
-        specs = {qid: _tree_spec(root, pid_by_items)
-                 for qid, (root, pid_by_items, _) in meta.items()}
-        expr = _flags_filter_udf(specs)(F.col("query_id"),
-                                        F.col("ok_phrases"))
-    return flags.where(expr)
+from ..plans.matches import explode_lexemes, match_registry
+from ..plans.query_compiler import CompiledQuery
 
 
 def percolate(
@@ -193,77 +59,31 @@ def percolate(
     doc_id: str = "doc_id",
     content_col: str = "content",
     config: str | None = None,
-    eval_mode: str = "auto",
 ) -> DataFrame:
     """(doc_id, query_id) — every standing query each document satisfies.
 
     `docs` either already carries a `lexemes` column (analyzed form) or raw
     `content_col` + `config` naming the text search config to analyze with
-    (defaults to the first standing query's config).
-
-    `eval_mode`: how the per-(doc, query) boolean fold runs — 'case'
-    compiles every tree into one nested JVM CASE expression (zero Python,
-    right for small registries), 'arrow' ships the tree specs to
-    executors once and evaluates the sparse flag rows in a vectorized
-    Arrow batch (plan size independent of registry size — the 10^4+
-    standing-queries shape), 'auto' picks by registry size
-    (CASE_CHAIN_MAX_QUERIES). Both modes are result-identical (tested).
+    (defaults to the first standing query's config). Each (doc, query)
+    boolean fold runs in the registry matcher (`match_registry`): a JVM
+    CASE expression for a handful of queries, the Arrow spec evaluator
+    for larger registries.
     """
-    spark = docs.sparkSession
-    out_schema = f"{doc_id} long, query_id string"
-    if eval_mode not in ("auto", "case", "arrow"):
-        raise ValueError(f"eval_mode must be 'auto', 'case' or 'arrow', "
-                         f"got {eval_mode!r}")  # fail before any job runs
     if not queries:
-        return spark.createDataFrame([], out_schema)
-    rows, meta = _flatten_queries(queries)
-
+        return docs.sparkSession.createDataFrame(
+            [], f"{doc_id} long, query_id string")
     if "lexemes" not in docs.columns:
         from ..plans.analyze import with_analysis
         cfg = config or next(iter(queries.values())).config
         docs = with_analysis(docs, content_col, cfg)
     docs = docs.select(doc_id, "lexemes")
-
-    all_lex = sorted({r[2] for r in rows})
-    hay = (docs
-           .select(doc_id, F.posexplode("lexemes").alias("pos0", "lex"))
-           .where(F.col("lex").isNotNull() & F.col("lex").isin(all_lex))
-           .select(doc_id, (F.col("pos0") + 1).alias("pos"), "lex"))
-
-    if rows:
-        qdf = spark.createDataFrame(rows, STANDING_TABLE_SCHEMA)
-        joined = hay.join(F.broadcast(qdf), hay.lex == qdf.q_lexeme)
-        aligned = joined.withColumn(
-            "range_start", F.col("pos") - F.col("q_pos") + F.lit(1))
-        hits = (aligned
-                .groupBy(doc_id, "query_id", "phrase_id", "range_start")
-                .agg(F.count("*").alias("n_hits"),
-                     F.min("pos").alias("p0"), F.max("pos").alias("p1"),
-                     F.first("q_len").alias("q_len"),
-                     F.first("q_span").alias("q_span"))
-                .where((F.col("n_hits") == F.col("q_len"))
-                       & (F.col("p1") - F.col("p0") == F.col("q_span"))))
-        flags = (hits.groupBy(doc_id, "query_id")
-                 .agg(F.collect_set("phrase_id").alias("ok_phrases")))
-    else:
-        # registry of purely-negated queries: no phrase table at all
-        flags = spark.createDataFrame(
-            [], f"{doc_id} long, query_id string, ok_phrases array<int>")
-
-    neg_qids = [qid for qid, (_, _, neg) in meta.items() if neg]
-    if neg_qids:
-        # negated queries must see every batch doc, even phraseless ones
-        universe = (docs.select(doc_id)
-                    .crossJoin(F.broadcast(
-                        spark.createDataFrame([(q,) for q in neg_qids],
-                                              "query_id string"))))
-        flags = (universe.join(flags, on=[doc_id, "query_id"], how="full")
-                 .withColumn("ok_phrases",
-                             F.coalesce(F.col("ok_phrases"),
-                                        F.array().cast("array<int>"))))
-
-    return (_boolean_fold_filter(flags, meta, eval_mode)
-            .select(F.col(doc_id).cast("long").alias(doc_id), "query_id"))
+    matches = match_registry(
+        queries,
+        lambda lexemes: (explode_lexemes(docs, doc_id)
+                         .where(F.col("lex").isin(lexemes))),
+        docs, doc_id=doc_id)
+    return matches.select(F.col(doc_id).cast("long").alias(doc_id),
+                          "query_id")
 
 
 def percolate_stream(
@@ -274,19 +94,16 @@ def percolate_stream(
     content_col: str = "content",
     config: str | None = None,
     checkpoint_dir: str | None = None,
-    eval_mode: str = "auto",
 ):
     """Run the percolator over a streaming DataFrame via foreachBatch.
 
     `on_batch(matches_df, batch_id)` receives each micro-batch's
     (doc_id, query_id) matches — route them to a sink/alert bus there.
     Returns the StreamingQuery handle (caller owns trigger/await).
-    `eval_mode` forwards to `percolate` (the boolean-fold plan choice).
     """
     def _handle(batch_df, batch_id):
         on_batch(percolate(batch_df, queries, doc_id=doc_id,
-                           content_col=content_col, config=config,
-                           eval_mode=eval_mode),
+                           content_col=content_col, config=config),
                  batch_id)
 
     writer = stream_docs.writeStream.foreachBatch(_handle)
@@ -309,16 +126,15 @@ PATTERNS_INLINE_MAX = 16
 def percolate_patterns(docs: DataFrame, patterns: dict[str, str],
                        kind: str = "substring",
                        id_col: str = "doc_id",
-                       text_col: str = "text",
-                       plan: str = "auto") -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """(doc_id, query_id) for every standing SUBSTRING or REGEX pattern a
     document matches — the keyword/PII-filter counterpart of `percolate`
     (which handles boolean/phrase TSPQueries). One plan for ALL patterns,
-    in either of two result-identical shapes (`plan`, 'auto' switches at
-    PATTERNS_INLINE_MAX):
+    in either of two result-identical shapes, switched at
+    PATTERNS_INLINE_MAX patterns:
 
-    'inline' — each document's trigram set is computed ONCE
-    (`trigrams_col`, pure codegen), and every pattern contributes a
+    inline (small registries) — each document's trigram set is computed
+    ONCE (`trigrams_col`, pure codegen), and every pattern contributes a
     cheap candidate predicate — ALL-of containment via array_intersect
     size — from its provably-required trigrams (`pattern_trigrams` /
     `regex_required_trigrams`, the index-side extraction reused
@@ -326,17 +142,17 @@ def percolate_patterns(docs: DataFrame, patterns: dict[str, str],
     only on candidate rows. Plan width grows with the registry: right
     for tens of patterns.
 
-    'join' — the 10^4-registry shape: required trigrams become ONE
-    broadcast (query_id, tg) table equi-joined against the exploded doc
-    trigram sets; a (doc, query) pair whose matched-trigram count hits
-    the pattern's requirement count is a candidate, and candidates
-    verify with the COLUMN forms of the same predicates
-    (`contains(lower(text), lower(pattern))` / `regexp_like(text,
-    pattern)` — still the JVM regex engine, so 'join' and 'inline'
-    agree on every pattern). Patterns with no required trigram (too
-    short, alternations) verify every row in both shapes — the same
-    loud degradation contract as the trigram index; in 'join' they ride
-    a (docs × ungated) broadcast cross join, so keep them rare.
+    join (large registries) — the 10^4-registry shape: required
+    trigrams become ONE broadcast (query_id, tg) table equi-joined
+    against the exploded doc trigram sets; a (doc, query) pair whose
+    matched-trigram count hits the pattern's requirement count is a
+    candidate, and candidates verify with the COLUMN forms of the same
+    predicates (`contains(lower(text), lower(pattern))` /
+    `regexp_like(text, pattern)` — still the JVM regex engine, so both
+    shapes agree on every pattern). Patterns with no required trigram
+    (too short, alternations) verify every row in both shapes — the
+    same loud degradation contract as the trigram index; in the join
+    they ride a (docs × ungated) broadcast cross join, so keep them rare.
 
     kind: 'substring' (case-insensitive contains) or 'regex' (rlike)."""
     from ..operators.trigram import (pattern_trigrams,
@@ -344,18 +160,13 @@ def percolate_patterns(docs: DataFrame, patterns: dict[str, str],
 
     if kind not in ("substring", "regex"):
         raise ValueError(f"kind must be 'substring' or 'regex', got {kind!r}")
-    if plan not in ("auto", "inline", "join"):
-        raise ValueError(f"plan must be 'auto', 'inline' or 'join', "
-                         f"got {plan!r}")
     spark = docs.sparkSession
     if not patterns:
         return spark.createDataFrame([], "doc_id long, query_id string")
     extract = (pattern_trigrams if kind == "substring"
                else regex_required_trigrams)
-    if plan == "auto":
-        plan = "inline" if len(patterns) <= PATTERNS_INLINE_MAX else "join"
 
-    if plan == "inline":
+    if len(patterns) <= PATTERNS_INLINE_MAX:
         doc_tg = trigrams_col(text_col)
         hay = F.lower(F.col(text_col))
         matches = []
@@ -425,14 +236,13 @@ def percolate_patterns_stream(stream_docs: DataFrame,
                               id_col: str = "doc_id",
                               text_col: str = "text",
                               checkpoint_dir: str | None = None,
-                              trigger_available_now: bool = True,
-                              plan: str = "auto"):
+                              trigger_available_now: bool = True):
     """Streaming form: per micro-batch, `sink_fn(matches_df, batch_id)`
     receives the (doc_id, query_id) matches — same foreachBatch shape as
-    `percolate_stream`. `plan` forwards to `percolate_patterns`."""
+    `percolate_stream`."""
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         sink_fn(percolate_patterns(batch_df, patterns, kind,
-                                   id_col, text_col, plan=plan), batch_id)
+                                   id_col, text_col), batch_id)
 
     from .wiring import start_foreach_batch
     return start_foreach_batch(stream_docs, handle, checkpoint_dir,

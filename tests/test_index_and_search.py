@@ -1070,20 +1070,6 @@ class TestSearchBatch:
         assert plan.count("FileScan parquet") <= 4  # postings row scan +
         # positional postings scan + tokens universe (NOT query) + terms idf
 
-    def test_arrow_eval_mode_rank_identical(self, index):
-        # the large-workload Arrow boolean fold returns the same ranks
-        from pg_ts_semantic_headline_spark.plans.search import search_batch
-
-        qs = self._compiled()
-        want = sorted((r["query_id"], r["rank"], r["doc_id"],
-                       round(r["score"], 9))
-                      for r in search_batch(index, qs, k=7).collect())
-        got = sorted((r["query_id"], r["rank"], r["doc_id"],
-                      round(r["score"], 9))
-                     for r in search_batch(index, qs, k=7,
-                                           eval_mode="arrow").collect())
-        assert got == want
-
 
 def test_federated_equals_monolithic(spark, corpus, tmp_path_factory):
     from pg_ts_semantic_headline_spark.plans.search import (

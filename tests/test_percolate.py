@@ -118,26 +118,16 @@ class TestPercolateBatch:
         docs = spark.createDataFrame(DOCS, ["doc_id", "content"])
         assert percolate(docs, {}, config=CONFIG).count() == 0
 
-    def test_arrow_mode_identical_to_case(self, spark, queries):
-        """The large-registry Arrow evaluator and the nested-CASE plan
-        are result-identical on every operator shape (incl. negation's
-        phraseless-doc universe rows)."""
-        docs = spark.createDataFrame(DOCS, ["doc_id", "content"])
-        want = expected_matches(queries)
-        for mode in ("case", "arrow"):
-            got = {(r["doc_id"], r["query_id"]) for r in
-                   percolate(docs, queries, config=CONFIG,
-                             eval_mode=mode).collect()}
-            assert got == want, mode
-
     def test_large_registry_switches_to_arrow(self, spark, queries):
-        """auto mode past CASE_CHAIN_MAX_QUERIES: a registry CASE chains
-        would choke on (expression depth = #queries) runs and matches the
-        independent evaluator; the known queries keep their exact sets."""
-        from pg_ts_semantic_headline_spark.streaming.percolate import (
+        """A registry past CASE_CHAIN_MAX_QUERIES folds through the Arrow
+        spec evaluator (a nested CASE's expression depth grows with the
+        registry) and matches the independent evaluator; the known
+        queries keep their exact sets."""
+        from pg_ts_semantic_headline_spark.plans.matches import (
             CASE_CHAIN_MAX_QUERIES)
         big = dict(queries)
-        n_filler = CASE_CHAIN_MAX_QUERIES + 40
+        n_filler = 72
+        assert len(big) + n_filler > CASE_CHAIN_MAX_QUERIES
         for i in range(n_filler):
             # half match some docs (shared fixture lexemes), half never do
             txt = "fox & dog" if i % 2 == 0 else f"nosuchword{i}"
@@ -146,11 +136,6 @@ class TestPercolateBatch:
         got = {(r["doc_id"], r["query_id"]) for r in
                percolate(docs, big, config=CONFIG).collect()}
         assert got == expected_matches(big)
-
-    def test_bad_eval_mode_raises(self, spark, queries):
-        docs = spark.createDataFrame(DOCS, ["doc_id", "content"])
-        with pytest.raises(ValueError, match="eval_mode"):
-            percolate(docs, queries, config=CONFIG, eval_mode="nope")
 
 
 class TestPercolateStream:
@@ -207,13 +192,23 @@ class TestPatternPercolation:
         # only the dashed doc matches it
         assert got == {(0, "r_ws"), (1, "r_any")}
 
-    def test_join_plan_identical_to_inline(self, spark):
+    def test_join_plan_identical_to_inline(self, spark, monkeypatch):
         """The 10^4-registry broadcast-join plan and the inline plan are
         result-identical on both kinds — including patterns with NO
         required trigram (p_xy / the alternation), which full-verify in
-        both shapes."""
+        both shapes. Each side is forced through PATTERNS_INLINE_MAX."""
+        import importlib
+
         from pg_ts_semantic_headline_spark.streaming import (
             percolate_patterns)
+        module = importlib.import_module(
+            "pg_ts_semantic_headline_spark.streaming.percolate")
+
+        def run(pats, kind, inline_max):
+            monkeypatch.setattr(module, "PATTERNS_INLINE_MAX", inline_max)
+            return {(r["doc_id"], r["query_id"]) for r in
+                    percolate_patterns(docs, pats, kind=kind).collect()}
+
         docs = spark.createDataFrame(
             [(0, "alpha merge join beta"), (1, "nothing relevant"),
              (2, "MERGE JOIN uppercase"), (3, "xy"), (4, None),
@@ -226,12 +221,8 @@ class TestPatternPercolation:
                        "r_alt": r"alpha|uppercase"}),
         ]
         for kind, pats in cases:
-            want = {(r["doc_id"], r["query_id"]) for r in
-                    percolate_patterns(docs, pats, kind=kind,
-                                       plan="inline").collect()}
-            got = {(r["doc_id"], r["query_id"]) for r in
-                   percolate_patterns(docs, pats, kind=kind,
-                                      plan="join").collect()}
+            want = run(pats, kind, inline_max=len(pats))
+            got = run(pats, kind, inline_max=0)
             assert got == want, kind
             assert want  # the fixture actually matches something
 
@@ -249,13 +240,6 @@ class TestPatternPercolation:
         got = {(r["doc_id"], r["query_id"]) for r in
                percolate_patterns(docs, pats).collect()}
         assert got == {(0, "p_mj")}
-
-    def test_bad_plan_raises(self, spark):
-        from pg_ts_semantic_headline_spark.streaming import (
-            percolate_patterns)
-        docs = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="plan"):
-            percolate_patterns(docs, {"p": "x"}, plan="nope")
 
     def test_pattern_stream_matches_batch(self, spark, tmp_path):
         from pg_ts_semantic_headline_spark.streaming import (

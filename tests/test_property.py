@@ -5,10 +5,11 @@ Two layers, cheapest first:
 - analyze properties: the engine-wide position-alignment invariant
   (token i <-> lexeme i, `problems/exact_matches.md:306-329`) holds for
   arbitrary unicode input (pure driver);
-- matcher properties: phrase matching and boolean percolation over
-  randomized corpora+queries equal a naive pure-Python evaluator written
-  directly from the Phrase/Node semantics (one Spark action per example,
-  small example budgets).
+- matcher properties: phrase matching and the boolean filter (percolator,
+  indexed `matching_docs`, `search_batch`) over randomized
+  corpora+queries equal a naive pure-Python evaluator written directly
+  from the Phrase/Node semantics (a few Spark actions per example, small
+  example budgets).
 """
 
 import pytest
@@ -147,6 +148,19 @@ def corpus_docs(spark):
     return df, lex
 
 
+@pytest.fixture(scope="module")
+def corpus_index(spark, corpus_docs, tmp_path_factory):
+    """The same 30 docs as a persisted index, built once."""
+    from pg_ts_semantic_headline_spark.plans.index_build import (
+        build_index, load_index)
+
+    df, _ = corpus_docs
+    out = str(tmp_path_factory.mktemp("property_index"))
+    build_index(spark, df.select("doc_id", "content"), out, config="simple",
+                n_buckets=4)
+    return load_index(spark, out)
+
+
 class TestMatcherProperties:
     """Engine vs naive evaluator on randomized corpora+queries. Example
     budgets are small: each example is a Spark action."""
@@ -172,16 +186,29 @@ class TestMatcherProperties:
     @settings(max_examples=12, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture,
                                      HealthCheck.too_slow])
-    def test_percolate_equals_naive_boolean_eval(self, corpus_docs, qtext):
+    def test_percolate_equals_naive_boolean_eval(self, corpus_docs,
+                                                 corpus_index, qtext):
+        """The three callers of the phrase-match kernel — the percolator,
+        the indexed boolean filter and the batched search — against the
+        same naive evaluator."""
+        from pg_ts_semantic_headline_spark.plans.search import (
+            matching_docs, search_batch)
         from pg_ts_semantic_headline_spark.streaming import percolate
 
         df, lex = corpus_docs
         q = to_tspquery("simple", qtext)
+        want = {doc for doc, lxs in lex.items() if naive_eval(q.root, lxs)}
         got = {r["doc_id"] for r in
                percolate(df.select("doc_id", F.col("content")), {"q0": q},
                          config="simple").collect()}
-        want = {doc for doc, lxs in lex.items() if naive_eval(q.root, lxs)}
         assert got == want
+        got = {r["doc_id"] for r in matching_docs(corpus_index, q).collect()}
+        assert got == want
+        # BM25 ranks only the matches that hold a positive query lexeme
+        ranked = {doc for doc in want if set(q.lexemes) & set(lex[doc])}
+        got = {r["doc_id"] for r in
+               search_batch(corpus_index, {"q0": q}, k=len(lex)).collect()}
+        assert got == ranked
 
 
 # --------------------------------------------------------------- chunking
