@@ -509,20 +509,24 @@ def _passage_selector(query: CompiledQuery, cfg: str, min_words: int,
     return one
 
 
-def _passage_headline(query: CompiledQuery, cfg: str, o: _FastOptions):
-    """Phase 2: passage -> raw fast-path headline, or None when no phrase
-    matches.  Per row, the same rules as `ts_fast_headline(with_analysis(
-    passage), query, options)` before its present-text cleanup:
-    aligned phrase matches (the `tsp_query_matches` self-alignment) with
-    the semantic re-check, the first MaxFragments+6 by (start_pos,
-    phrase_id), cover-density buckets, pad/slice/highlight, then
-    fragments in (density DESC, bucket ASC) order."""
-    acfg = analysis_config(cfg)
+def _fast_headline_kernel(query: CompiledQuery, o: _FastOptions):
+    """One document's fast-path headline: (recall array, position-aligned
+    lexeme stream with None in the unindexed slots) -> raw headline, or
+    None when no phrase matches.  Per document, the same rules as
+    `ts_fast_headline` before its present-text cleanup: aligned phrase
+    matches (the `tsp_query_matches` self-alignment) with the semantic
+    re-check, the first MaxFragments+6 by (start_pos, phrase_id),
+    cover-density buckets, pad/slice/highlight, then fragments in
+    (density DESC, bucket ASC) order.
+
+    Two callers: `_semantic_headline_udf` (phase 2 of the ad-hoc
+    `ts_semantic_headline`, over each analyzed passage) and
+    `search.search_with_headlines` (the k winners' recall arrays and
+    the lexeme streams rebuilt from their row postings)."""
     width = o.max_words + 1
     match_limit = o.max_fragments + 6
 
-    def one(passage: str) -> str | None:
-        toks, lexs = analyze_document(passage, acfg)
+    def kernel(toks: list, lexs: list) -> str | None:
         found = []                  # (start_pos, phrase_id, end_pos, words)
         for pid, ph in enumerate(query.phrases):
             starts, span = _phrase_starts(ph, lexs)
@@ -549,7 +553,7 @@ def _passage_headline(query: CompiledQuery, cfg: str, o: _FastOptions):
         frags.sort()
         return o.delimiter.join(h for _, _, h in frags[:o.max_fragments])
 
-    return one
+    return kernel
 
 
 def _semantic_headline_udf(query: CompiledQuery, cfg: str, options: str):
@@ -565,12 +569,15 @@ def _semantic_headline_udf(query: CompiledQuery, cfg: str, options: str):
     effective = (options + ("," if options else "")
                  + "MaxFragments=30,MinWords=64,MaxWords=64")
     o = _fast_options(effective)
-    fast = _passage_headline(query, cfg, o)
+    acfg = analysis_config(cfg)
+    fast = _fast_headline_kernel(query, o)
 
     def run(content: pd.Series) -> pd.Series:
         passages = [select(text) for text in content]
-        raw = pd.Series([None if p is None else fast(p) for p in passages],
-                        dtype=object)
+        # phase 2: the kernel over each passage, analyzed under `cfg`
+        raw = pd.Series([None if p is None
+                         else fast(*analyze_document(p, acfg))
+                         for p in passages], dtype=object)
         out = pd.Series([None if p is None else p.strip(" ")
                          for p in passages], dtype=object)
         hit = raw.notna()

@@ -58,9 +58,16 @@ def phrase_table_df(spark: SparkSession, query: CompiledQuery) -> DataFrame:
 
 def explode_lexemes(docs: DataFrame, doc_id: str = "doc_id") -> DataFrame:
     """(doc_id, pos, lex) with 1-based positions; null lexemes (stopword
-    slots) are dropped — their positions are already burned into `pos`."""
+    slots) are dropped — their positions are already burned into `pos`.
+
+    The outer explode's extra row for an empty or null array has a null
+    `lex` and is dropped by the same filter. The plain explode would let
+    the optimizer infer a `size(lexemes) > 0` filter and push it below
+    the projection, so over `with_analysis` input the analysis UDF would
+    run twice per row: once for the filter and once for the stream."""
     return (docs
-            .select(doc_id, F.posexplode("lexemes").alias("pos0", "lex"))
+            .select(doc_id,
+                    F.posexplode_outer("lexemes").alias("pos0", "lex"))
             .where(F.col("lex").isNotNull())
             .select(doc_id, (F.col("pos0") + 1).alias("pos"), "lex"))
 
@@ -159,14 +166,11 @@ def tsp_query_matches(
 
     grouped = phrase_occurrences(hay, qdf, [doc_id], carry=("phrase_query",))
 
-    # semi-join the recall vectors to the matched docs FIRST: only winners'
-    # token arrays enter the words join — the match stream is usually a
-    # tiny fraction of the corpus, and token arrays are the heavy column
-    matched_ids = grouped.select(doc_id).distinct()
-    matched_tokens = (docs.select(doc_id, "tokens")
-                      .join(matched_ids, on=doc_id, how="left_semi"))
+    # `grouped` is referenced once: a self-semi-join of the recall arrays
+    # to its doc ids would plan (and run) the whole alignment a second
+    # time; a small match stream broadcasts into this join under AQE
     with_words = (grouped
-                  .join(matched_tokens, on=doc_id)
+                  .join(docs.select(doc_id, "tokens"), on=doc_id)
                   .withColumn(
                       "words",
                       F.array_join(

@@ -584,34 +584,23 @@ def search_with_headlines(
     """Top-k + whole-phrase highlighted headline per hit (the fast path over
     the persisted index: position lookup + recall-array slicing only).
 
-    The k hits are COLLECTED first (k rows — bounded driver work), so the
-    winner doc_ids reach the tokens and positional scans as IN-list
-    literals: parquet row-group pruning instead of a broadcast semi-join
-    that must read every recall vector to drop all but k of them. Past
-    512 winners the plan falls back to in-plan semi-joins."""
-    from .headline import ts_fast_headline
-
+    The k hits are COLLECTED first (k rows — bounded driver work). One
+    more job, narrowed to the winner doc_ids as IN-list literals (parquet
+    row-group pruning), reads their recall arrays from `tokens` and their
+    query-lexeme rows from the bucket-pruned row postings. The driver
+    rebuilds each winner's lexeme stream from those positions and runs
+    the per-document fast-headline kernel the ad-hoc path shares
+    (`headline._fast_headline_kernel`); the answer is a driver-local
+    frame in rank order, so the caller's collect runs no job. Past 512
+    winners the hits stay in the plan and `ts_fast_headline` runs over
+    in-plan semi-joins."""
     # expand prefixes up front: the headline stage must highlight the
     # concrete expansions, not the raw ':*' lexeme
     query = expand_query_prefixes(index, query)
     hits = search(index, query, k=k)
-    spark = index.postings.sparkSession
-    if k <= 512:
-        rows = hits.collect()
-        ids = [int(r["doc_id"]) for r in rows]
-        if not ids:
-            # materialize the known-empty answer: returning the lazy
-            # `hits` plan would re-run the whole search on the caller's
-            # next action
-            empty = spark.createDataFrame([], hits.schema)
-            return empty.withColumn("headline", F.lit(None).cast("string"))
-        hits = spark.createDataFrame(rows, hits.schema)
-        winners = None
-        docs = (index.tokens.where(F.col("doc_id").isin(ids))
-                .select("doc_id", "tokens"))
-        hay = (_positions_hay(index, list(query.lexemes), candidate_ids=ids)
-               .select("doc_id", "pos", F.col("term").alias("lex")))
-    else:
+    if k > 512:
+        from .headline import ts_fast_headline
+
         winners = hits.select("doc_id")
         docs = (index.tokens.join(winners, on="doc_id", how="left_semi")
                 .select("doc_id", "tokens"))
@@ -621,9 +610,76 @@ def search_with_headlines(
         hay = (_positions_hay(index, list(query.lexemes),
                               candidate_docs=winners)
                .select("doc_id", "pos", F.col("term").alias("lex")))
-    headlines = ts_fast_headline(docs, query, options, hay=hay)
-    return (hits.join(headlines, on="doc_id", how="left")
-            .orderBy(F.desc("score"), F.asc("doc_id")))
+        headlines = ts_fast_headline(docs, query, options, hay=hay)
+        return (hits.join(headlines, on="doc_id", how="left")
+                .orderBy(F.desc("score"), F.asc("doc_id")))
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    rows = hits.collect()
+    heads = _winner_headlines(index, query, options,
+                              [int(r["doc_id"]) for r in rows])
+    # an Arrow table becomes a driver-local relation: the caller's collect
+    # reads it back without a Spark job (a list of rows would be
+    # parallelized, and its collect run as a job of its own)
+    table = pa.table({**{c: [r[c] for r in rows] for c in hits.columns},
+                      "headline": heads})
+    schema = StructType(hits.schema.fields
+                        + [StructField("headline", StringType())])
+    return index.postings.sparkSession.createDataFrame(table, schema)
+
+
+def _winner_headlines(index: Index, query: CompiledQuery, options: str,
+                      ids: list[int]) -> list:
+    """Headlines of the docs `ids`, in order (None where no phrase
+    matches). One Spark job reads both inputs, narrowed to `ids` as
+    IN-list literals: the recall arrays from `tokens` and the query
+    lexemes' row postings. Per doc, the positions rebuild the lexeme
+    stream (None in every other slot) and `_fast_headline_kernel` runs
+    over it."""
+    import pandas as pd
+
+    from ..functions.textprep import tsp_present_series
+    from .headline import _fast_headline_kernel, _fast_options
+
+    if not ids:
+        return []
+    recall = (index.tokens.where(F.col("doc_id").isin(ids))
+              .select("doc_id", "tokens"))
+    occurrences = (_narrow_candidates(
+        _pruned_postings(index, list(query.lexemes)), ids, None)
+        .select("doc_id", "term", "positions"))
+    tokens: dict = {}
+    occ: dict = {}
+    for r in (recall.unionByName(occurrences, allowMissingColumns=True)
+              .collect()):
+        if r["term"] is None:
+            tokens[r["doc_id"]] = r["tokens"]
+        else:
+            occ.setdefault(r["doc_id"], []).append(
+                (r["term"], r["positions"]))
+    o = _fast_options(options)
+    kernel = _fast_headline_kernel(query, o)
+    raw = []
+    for d in ids:
+        if d not in tokens:
+            raw.append(None)
+            continue
+        toks = tokens[d]
+        terms = occ.get(d, [])
+        lexs = [None] * max([len(toks)] + [max(ps) for _, ps in terms])
+        for term, ps in terms:
+            for p in ps:
+                # one lexeme per position: the analyzer emits at most one
+                # per token
+                assert lexs[p - 1] is None, (d, p, lexs[p - 1], term)
+                lexs[p - 1] = term
+        raw.append(kernel(toks, lexs))
+    raw = pd.Series(raw, dtype=object)
+    hit = raw.notna()
+    if hit.any():
+        raw[hit] = tsp_present_series(raw[hit], o.stop_sel)
+    return raw.tolist()
 
 
 def hybrid_search_rrf(

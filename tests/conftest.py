@@ -44,3 +44,18 @@ def reference_available() -> bool:
 
 requires_reference = pytest.mark.skipif(
     not reference_available(), reason="reference corpus not available")
+
+
+def count_jobs(spark, action) -> int:
+    """The number of Spark jobs `action()` runs (plan construction
+    included), counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

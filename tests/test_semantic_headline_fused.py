@@ -16,6 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from conftest import count_jobs
+
 from pg_ts_semantic_headline_spark.plans.analyze import with_analysis
 from pg_ts_semantic_headline_spark.plans.headline import (
     _passage_selector, parse_headline_options, ts_fast_headline,
@@ -149,13 +151,6 @@ def test_duplicate_doc_ids_get_their_own_headline(spark):
 def test_plan_is_one_job_without_exchange(spark, english_docs):
     query = to_tspquery("english", "quick <-> brown & !lazy | merge <2> sort")
     out = ts_semantic_headline(english_docs, query)
-    sc = spark.sparkContext
-    group = "ts-semantic-headline-plan-shape"
-    sc.setJobGroup(group, "plan shape")
-    try:
-        out.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert count_jobs(spark, out.collect) == 1
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
