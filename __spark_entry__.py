@@ -400,14 +400,17 @@ def _bm25_per_doc(spark, sf, terms, docs=None):
     return docs, scored
 
 
+#: the flagship's input: the 500-document scale factor
+FLAGSHIP_SF_DIR = "/root/testdata/sf0.001"
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: analyze sf0.001 docs, BM25-rank 'spark window', highlight."""
     from pg_ts_semantic_headline_spark.plans.headline import ts_fast_headline
     from pg_ts_semantic_headline_spark.plans.query_compiler import to_tspquery
 
-    sf_dir = "/root/testdata/sf0.001"
     query = to_tspquery("simple", "spark & window")
-    docs, scored = _bm25_per_doc(spark, sf_dir, list(query.lexemes))
+    docs, scored = _bm25_per_doc(spark, FLAGSHIP_SF_DIR, list(query.lexemes))
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
     heads = ts_fast_headline(
         docs.join(top, on="doc_id", how="left_semi"), query, "MaxWords=16")

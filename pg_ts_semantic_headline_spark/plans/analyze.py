@@ -35,17 +35,17 @@ def analysis_config(cfg: str) -> str:
     return cfg if is_supported_config(cfg) else "simple"
 
 
-def _analyze_batch(content: pd.Series, config: pd.Series) -> pd.DataFrame:
-    toks_out, lex_out = [], []
+def _analyze_rows(content: pd.Series, config: pd.Series):
+    """(tokens, lexemes) per row, (None, None) for null content."""
     for text, cfg in zip(content, config):
-        if text is None:
-            toks_out.append(None)
-            lex_out.append(None)
-            continue
-        toks, lexs = analyze_document(text, analysis_config(cfg))
-        toks_out.append(toks)
-        lex_out.append(lexs)
-    return pd.DataFrame({"tokens": toks_out, "lexemes": lex_out})
+        yield ((None, None) if text is None
+               else analyze_document(text, analysis_config(cfg)))
+
+
+def _analyze_batch(content: pd.Series, config: pd.Series) -> pd.DataFrame:
+    rows = list(_analyze_rows(content, config))
+    return pd.DataFrame({"tokens": [t for t, _ in rows],
+                         "lexemes": [lx for _, lx in rows]})
 
 
 analyze_udf = F.pandas_udf(_analyze_batch, returnType=ANALYSIS_SCHEMA)
@@ -65,25 +65,22 @@ INDEX_ANALYSIS_SCHEMA = StructType([
 
 def _analyze_index_batch(content: pd.Series, config: pd.Series) -> pd.DataFrame:
     """Single-pass index analysis: tokens + doc length + doc-local postings
-    in ONE Arrow roundtrip. The lexeme stream never crosses the
-    Python↔JVM boundary — only its aggregate (the per-doc postings) does,
-    which halves the UDF traffic of the build's hottest stage."""
+    in ONE Arrow roundtrip, from `_analyze_batch`'s rows. The lexeme
+    stream never crosses the Python↔JVM boundary — only its aggregate
+    (the per-doc postings) does, which halves the UDF traffic of the
+    build's hottest stage."""
     toks_out, dl_out, post_out = [], [], []
-    for text, cfg in zip(content, config):
-        if text is None:
-            toks_out.append(None)
+    for toks, lexs in _analyze_rows(content, config):
+        toks_out.append(toks)
+        if lexs is None:
             dl_out.append(None)
             post_out.append(None)
             continue
-        toks, lexs = analyze_document(text, analysis_config(cfg))
         d: dict = {}
-        dl = 0
         for i, lx in enumerate(lexs):
             if lx is not None:
-                dl += 1
                 d.setdefault(lx, []).append(i + 1)
-        toks_out.append(toks)
-        dl_out.append(dl)
+        dl_out.append(len(lexs) - lexs.count(None))
         post_out.append([{"term": t, "tf": len(ps), "positions": ps}
                          for t, ps in d.items()])
     return pd.DataFrame(

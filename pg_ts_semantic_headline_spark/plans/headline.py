@@ -1,12 +1,20 @@
 """Whole-phrase headline generation.
 
-- `ts_fast_headline_cover_density`
-  (/root/reference/sql/ts_fast_headline_cover_density.sql:58-97): bucket the
-  exact matches by word window, slice the recall array around each bucket,
-  wrap every matched string with the selection tags in one regex pass, rank
-  buckets by match density.
-- `ts_fast_headline` (/root/reference/sql/ts_fast_headline.sql:51-66): join
-  fragments with the delimiter and strip indexing tokens.
+The fast-path rules live once, in the per-document kernel
+(`_fast_fragments` + `_fast_headline_kernel`), and every fast-path
+headline runs it.  The reference evaluates them as one scalar function
+per row over a precomputed array and tsvector
+(/root/reference/sql/ts_fast_headline_cover_density.sql:58-97,
+ts_fast_headline.sql:51-66), so each public function is one Arrow UDF
+per batch over the `tokens`/`lexemes` columns: no join, no shuffle, one
+Spark job, one output per input row.
+
+- `ts_fast_headline_cover_density`: bucket the exact matches by word
+  window, slice the recall array around each bucket, wrap every matched
+  string with the selection tags in one regex pass, rank buckets by
+  match density; one row per kept fragment.
+- `ts_fast_headline`: join the fragments with the delimiter and strip
+  indexing tokens; one row per input row with a match.
 - `ts_semantic_headline` (reference ts_semantic_headline.sql:52-70): the
   1:1 ts_headline replacement, one output row per input row.  The plan is
   one scan plus ONE Arrow UDF over the content column: no join, no
@@ -23,19 +31,17 @@
     ends early); covers compete on query-item word count within the
     resized window, first wins ties; with no cover, the document-head
     MinWords passage (no ShortWord logic);
-  - phase 2 runs the fast path over ONLY that ~MaxWords-word passage,
-    under the reference's forced MaxFragments=30,MinWords=64,MaxWords=64
-    overlay (:64-68): the same per-string rules as the DataFrame plans
-    above (`highlight_fragment`, `matches.phrase_in_text`,
-    `tsp_present_series`), applied to one short string;
+  - phase 2 runs the fast-path kernel over ONLY that ~MaxWords-word
+    passage, analyzed, under the reference's forced
+    MaxFragments=30,MinWords=64,MaxWords=64 overlay (:64-68);
   - COALESCE to the trimmed passage on no exact phrase match (:69).
   The two-phase flow was verified string-exact against every ad-hoc pgTAP
   assertion in english_lang_test.sql:33-95 and german_lang_test.sql:111-149,
   and fuzz-validated 0-divergent against the live reference extension
   running in PostgreSQL (scripts/validate_reference_pg.py, ~1000 doc×query
-  cases across several seeds), with phase 2 as the DataFrame fast path;
-  tests/test_semantic_headline_fused.py holds the one-pass kernel to that
-  composition.
+  cases across several seeds), with phase 2 then a multi-stage DataFrame
+  plan; tests/fast_headline_golden.json freezes that plan's outputs, and
+  the kernel is held to them.
 
 All arithmetic (option parsing defaults, integer division, the pad formula,
 bucket key, density ordering) follows the reference line for line.
@@ -47,14 +53,15 @@ import re
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
+                               StructType)
 
 from ..functions.lexize import analyze_document
 from .analyze import analysis_config
-from .matches import phrase_in_text, tsp_query_matches
-from .query_compiler import CompiledQuery
+from .matches import phrase_in_text
+from .query_compiler import CompiledQuery, require_no_prefixes
 
 _RE_OPTION = re.compile(r'(\w+)=(?:"([^"]+)"|((?:(?![\s,]+\w+=).)+))')
 # the reference's regex-escape character set (ts_fast_headline_cover_density.sql:84)
@@ -74,8 +81,7 @@ def parse_headline_options(options: str | None) -> dict[str, str]:
 @dataclass(frozen=True)
 class _FastOptions:
     """The fast path's options, with the reference's defaults and
-    MinWords halving; shared by the DataFrame plans and the one-pass
-    kernel."""
+    MinWords halving."""
     start_sel: str
     stop_sel: str
     delimiter: str
@@ -113,25 +119,91 @@ def highlight_fragment(fragment: str, words, start_sel: str,
                   fragment)
 
 
-def _highlight_udf(start_sel: str, stop_sel: str):
-    """Arrow UDF: `highlight_fragment` over (fragment, words) rows."""
+def _fast_fragments(query: CompiledQuery, o: _FastOptions):
+    """The fast path's fragments step for one document: (recall array,
+    position-aligned lexeme stream with None in the unindexed slots) ->
+    [(density, bucket, highlighted fragment)], at most MaxFragments, in
+    (density DESC, bucket ASC) order; [] when no phrase matches.
 
-    def run(fragment: pd.Series, words_list: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if frag is None
-            else highlight_fragment(frag, words, start_sel, stop_sel)
-            for frag, words in zip(fragment, words_list)])
+    The reference's rules (cover_density.sql:58-97) per document:
+    aligned phrase matches (tsp_query_matches.sql:85-94) with the
+    semantic re-check (:95-96), the first MaxFragments+6 by (start_pos,
+    phrase_id) (:97), word-window buckets, pad/slice/highlight, density
+    ranking.  Fragments still carry indexing tokens, like the
+    reference's intermediate."""
+    width = o.max_words + 1
+    match_limit = o.max_fragments + 6
 
-    return F.pandas_udf(run, returnType=StringType())
+    def fragments(toks: list, lexs: list) -> list:
+        found = []                  # (start_pos, phrase_id, end_pos, words)
+        for pid, ph in enumerate(query.phrases):
+            starts, span = _phrase_starts(ph, lexs)
+            for s0 in starts:
+                words = " ".join(toks[s0:s0 + span + 1])
+                if (o.disable_semantics
+                        or phrase_in_text(ph.items, words, query.config)):
+                    found.append((s0 + 1, pid, s0 + span + 1, words))
+        found.sort()
+        buckets: dict = {}
+        for m in found[:match_limit]:
+            buckets.setdefault(m[0] // width * width, []).append(m)
+        frags = []
+        for bucket, ms in buckets.items():
+            s, e = ms[0][0], max(m[2] for m in ms)
+            # pad = GREATEST(max_offset - (e - s/2 + 1), min_words)
+            pad = max(o.max_offset - (e - s // 2 + 1), o.min_words)
+            lo, hi = max(s - pad, 1), e + pad
+            fragment = " " + " ".join(toks[lo - 1:hi]) + " "
+            words = [w for _, w in sorted((m[0], m[3]) for m in ms)]
+            frags.append((len(ms), bucket, highlight_fragment(
+                fragment, words, o.start_sel, o.stop_sel)))
+        frags.sort(key=lambda f: (-f[0], f[1]))
+        return frags[:o.max_fragments]
+
+    return fragments
 
 
-def _present_udf(stop_sel: str):
+def _fast_headline_kernel(query: CompiledQuery, o: _FastOptions):
+    """One document's raw fast-path headline (before present-text
+    cleanup): its `_fast_fragments` joined by FragmentDelimiter
+    (ts_fast_headline.sql:51-66), or None when no phrase matches.
+
+    Every fast-path headline runs it: `ts_fast_headline`, phase 2 of
+    `ts_semantic_headline` (over each analyzed passage) and
+    `search.search_with_headlines` (the winners' recall arrays and the
+    lexeme streams rebuilt from their row postings)."""
+    fragments = _fast_fragments(query, o)
+
+    def kernel(toks: list, lexs: list) -> str | None:
+        frags = fragments(toks, lexs)
+        return o.delimiter.join(h for _, _, h in frags) if frags else None
+
+    return kernel
+
+
+def _present_headlines(raw: list, stop_sel: str) -> pd.Series:
+    """`tsp_present_series` over the non-null raw headlines."""
     from ..functions.textprep import tsp_present_series
 
-    def run(text: pd.Series) -> pd.Series:
-        return tsp_present_series(text, stop_sel)
+    out = pd.Series(raw, dtype=object)
+    hit = out.notna()
+    if hit.any():
+        out[hit] = tsp_present_series(out[hit], stop_sel)
+    return out
 
-    return F.pandas_udf(run, returnType=StringType())
+
+def _per_row(step, tokens: pd.Series, lexemes: pd.Series) -> list:
+    """`step(toks, lexs)` per (tokens, lexemes) row; None where either
+    array is null."""
+    return [None if t is None or lx is None else step(list(t), list(lx))
+            for t, lx in zip(tokens, lexemes)]
+
+
+FRAGMENTS_SCHEMA = ArrayType(StructType([
+    StructField("headline", StringType(), True),
+    StructField("density", LongType(), False),
+    StructField("bucket", LongType(), True),
+]), containsNull=False)
 
 
 def ts_fast_headline_cover_density(
@@ -139,59 +211,24 @@ def ts_fast_headline_cover_density(
     query: CompiledQuery,
     options: str = "",
     doc_id: str = "doc_id",
-    hay: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, headline, density) — up to MaxFragments fragments per doc,
-    highlighted but NOT yet present-text-cleaned (fragments still carry
-    indexing tokens, exactly like the reference's intermediate)."""
-    o = _fast_options(options)
+    """(doc_id, headline, density, bucket): up to MaxFragments fragments
+    per input row, highlighted but NOT yet present-text-cleaned.  `docs`
+    needs `tokens` and `lexemes` (`analyze.with_analysis`).  One Arrow
+    UDF runs `_fast_fragments` per row and the array explodes: no join,
+    no shuffle, one Spark job."""
+    require_no_prefixes(query, "ts_fast_headline_cover_density "
+                               "(ad-hoc, no dictionary)")
+    fragments = _fast_fragments(query, _fast_options(options))
 
-    matches = tsp_query_matches(
-        docs, query,
-        match_limit=o.max_fragments + 6,
-        disable_semantic_check=o.disable_semantics,
-        doc_id=doc_id, hay=hay)
+    def run(tokens: pd.Series, lexemes: pd.Series) -> pd.Series:
+        return pd.Series([
+            [{"headline": h, "density": d, "bucket": b}
+             for d, b, h in fs or ()]
+            for fs in _per_row(fragments, tokens, lexemes)])
 
-    bucket = (F.floor(F.col("start_pos") / (o.max_words + 1))
-              * (o.max_words + 1)).alias("bucket")
-
-    grouped = (matches
-               .groupBy(doc_id, bucket)
-               .agg(F.count("*").alias("density"),
-                    F.min("start_pos").alias("s"),
-                    F.max("end_pos").alias("e"),
-                    # matched strings in document order for the alternation
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("start_pos", "words"))),
-                        lambda x: x["words"]).alias("match_words")))
-
-    # pad = GREATEST(max_offset - (e - s/2 + 1), min_words)  [integer div]
-    pad = F.greatest(
-        F.lit(o.max_offset) - (F.col("e") - F.floor(F.col("s") / 2) + 1),
-        F.lit(o.min_words)).cast("int")
-
-    sliced = (grouped
-              .withColumn("pad", pad)
-              .join(docs.select(doc_id, "tokens"), on=doc_id)
-              .withColumn("lo", F.greatest(F.col("s") - F.col("pad"), F.lit(1)))
-              .withColumn("hi", F.col("e") + F.col("pad"))
-              .withColumn("fragment", F.concat(
-                  F.lit(" "),
-                  F.array_join(F.slice(
-                      F.col("tokens"), F.col("lo"),
-                      F.col("hi") - F.col("lo") + 1), " "),
-                  F.lit(" "))))
-
-    highlight = _highlight_udf(o.start_sel, o.stop_sel)
-    lit = sliced.withColumn(
-        "headline", highlight(F.col("fragment"), F.col("match_words")))
-
-    w = Window.partitionBy(doc_id).orderBy(F.desc("density"), F.asc("bucket"))
-    return (lit
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= o.max_fragments)
-            .select(doc_id, "headline", "density", "bucket"))
+    udf = F.pandas_udf(run, returnType=FRAGMENTS_SCHEMA)
+    return docs.select(doc_id, F.inline(udf("tokens", "lexemes")))
 
 
 def ts_fast_headline(
@@ -199,25 +236,26 @@ def ts_fast_headline(
     query: CompiledQuery,
     options: str = "",
     doc_id: str = "doc_id",
-    hay: DataFrame | None = None,
 ) -> DataFrame:
-    """(doc_id, headline) — fragments joined by FragmentDelimiter in
-    (density DESC, bucket ASC) order, then present-text cleanup."""
+    """(doc_id, headline): per input row, the fragments joined by
+    FragmentDelimiter in (density DESC, bucket ASC) order, then
+    present-text cleanup; rows where no phrase matches are dropped.
+    One Arrow UDF over `tokens`/`lexemes` returns zero or one headline
+    per row and the array explodes (a null filter over the UDF's output
+    would be pushed below it and run both UDFs twice): no join, no
+    shuffle, one Spark job."""
+    require_no_prefixes(query, "ts_fast_headline (ad-hoc, no dictionary)")
     o = _fast_options(options)
-    frags = ts_fast_headline_cover_density(docs, query, options, doc_id, hay=hay)
-    assembled = (frags
-                 .groupBy(doc_id)
-                 .agg(F.array_join(
-                     F.transform(
-                         F.array_sort(F.collect_list(F.struct(
-                             (-F.col("density")).alias("k1"),
-                             F.col("bucket").alias("k2"),
-                             F.col("headline").alias("h")))),
-                         lambda x: x["h"]),
-                     o.delimiter).alias("raw_headline")))
-    present = _present_udf(o.stop_sel)
-    return assembled.select(
-        doc_id, present(F.col("raw_headline")).alias("headline"))
+    kernel = _fast_headline_kernel(query, o)
+
+    def run(tokens: pd.Series, lexemes: pd.Series) -> pd.Series:
+        heads = _present_headlines(_per_row(kernel, tokens, lexemes),
+                                   o.stop_sel)
+        return pd.Series([[] if h is None else [h] for h in heads])
+
+    udf = F.pandas_udf(run, returnType=ArrayType(StringType()))
+    return docs.select(doc_id,
+                       F.explode(udf("tokens", "lexemes")).alias("headline"))
 
 
 _RE_STRIP_LEAD = re.compile(r"^\W+", re.UNICODE)
@@ -509,59 +547,10 @@ def _passage_selector(query: CompiledQuery, cfg: str, min_words: int,
     return one
 
 
-def _fast_headline_kernel(query: CompiledQuery, o: _FastOptions):
-    """One document's fast-path headline: (recall array, position-aligned
-    lexeme stream with None in the unindexed slots) -> raw headline, or
-    None when no phrase matches.  Per document, the same rules as
-    `ts_fast_headline` before its present-text cleanup: aligned phrase
-    matches (the `tsp_query_matches` self-alignment) with the semantic
-    re-check, the first MaxFragments+6 by (start_pos, phrase_id),
-    cover-density buckets, pad/slice/highlight, then fragments in
-    (density DESC, bucket ASC) order.
-
-    Two callers: `_semantic_headline_udf` (phase 2 of the ad-hoc
-    `ts_semantic_headline`, over each analyzed passage) and
-    `search.search_with_headlines` (the k winners' recall arrays and
-    the lexeme streams rebuilt from their row postings)."""
-    width = o.max_words + 1
-    match_limit = o.max_fragments + 6
-
-    def kernel(toks: list, lexs: list) -> str | None:
-        found = []                  # (start_pos, phrase_id, end_pos, words)
-        for pid, ph in enumerate(query.phrases):
-            starts, span = _phrase_starts(ph, lexs)
-            for s0 in starts:
-                words = " ".join(toks[s0:s0 + span + 1])
-                if (o.disable_semantics
-                        or phrase_in_text(ph.items, words, query.config)):
-                    found.append((s0 + 1, pid, s0 + span + 1, words))
-        if not found:
-            return None
-        found.sort()
-        buckets: dict = {}
-        for m in found[:match_limit]:
-            buckets.setdefault(m[0] // width * width, []).append(m)
-        frags = []
-        for bucket, ms in buckets.items():
-            s, e = ms[0][0], max(m[2] for m in ms)
-            pad = max(o.max_offset - (e - s // 2 + 1), o.min_words)
-            lo, hi = max(s - pad, 1), e + pad
-            fragment = " " + " ".join(toks[lo - 1:hi]) + " "
-            words = [w for _, w in sorted((m[0], m[3]) for m in ms)]
-            frags.append((-len(ms), bucket, highlight_fragment(
-                fragment, words, o.start_sel, o.stop_sel)))
-        frags.sort()
-        return o.delimiter.join(h for _, _, h in frags[:o.max_fragments])
-
-    return kernel
-
-
 def _semantic_headline_udf(query: CompiledQuery, cfg: str, options: str):
     """Arrow UDF: raw content -> headline, both phases in one Python pass
     per row; COALESCE to the trimmed passage on no exact phrase match
     (ts_semantic_headline.sql:69)."""
-    from ..functions.textprep import tsp_present_series
-
     opts = parse_headline_options(options)
     select = _passage_selector(query, cfg, int(opts.get("MinWords", 15)),
                                int(opts.get("MaxWords", 35)),
@@ -575,15 +564,12 @@ def _semantic_headline_udf(query: CompiledQuery, cfg: str, options: str):
     def run(content: pd.Series) -> pd.Series:
         passages = [select(text) for text in content]
         # phase 2: the kernel over each passage, analyzed under `cfg`
-        raw = pd.Series([None if p is None
-                         else fast(*analyze_document(p, acfg))
-                         for p in passages], dtype=object)
-        out = pd.Series([None if p is None else p.strip(" ")
-                         for p in passages], dtype=object)
-        hit = raw.notna()
-        if hit.any():
-            out[hit] = tsp_present_series(raw[hit], o.stop_sel)
-        return out
+        heads = _present_headlines(
+            [None if p is None else fast(*analyze_document(p, acfg))
+             for p in passages], o.stop_sel)
+        return pd.Series([p.strip(" ") if h is None and p is not None
+                          else h for h, p in zip(heads, passages)],
+                         dtype=object)
 
     return F.pandas_udf(run, returnType=StringType())
 
@@ -602,7 +588,6 @@ def ts_semantic_headline(
     path over ONLY the selected passage, so phase 2 pays for ~MaxWords
     words per doc, not the whole document, and the plan is one scan plus
     one Python pass: no join, no shuffle."""
-    from .query_compiler import require_no_prefixes
     require_no_prefixes(query, "ts_semantic_headline (ad-hoc, no dictionary)")
     headline = _semantic_headline_udf(query, config or query.config, options)
     return docs.select(doc_id,

@@ -137,11 +137,8 @@ def tsp_query_matches(
     match_limit: int = 5,
     disable_semantic_check: bool = False,
     doc_id: str = "doc_id",
-    hay: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact phrase matches over analyzed docs (needs tokens+lexemes cols;
-    or pass `hay` = pre-exploded (doc_id, pos, lex) rows — e.g. decoded
-    postings — and docs only needs doc_id+tokens).
+    """Exact phrase matches over analyzed docs (needs tokens+lexemes cols).
 
     Returns (doc_id, phrase_id, words, ts_query, start_pos, end_pos).
     """
@@ -158,11 +155,10 @@ def tsp_query_matches(
         ]))
 
     qdf = phrase_table_df(spark, query)
-    if hay is None:
-        hay = explode_lexemes(docs, doc_id)
     # lexeme pruning before the join (isin folds to a literal filter the
     # optimizer can push down / turn into a bloom-ish semi filter)
-    hay = hay.where(F.col("lex").isin(list(query.lexemes)))
+    hay = (explode_lexemes(docs, doc_id)
+           .where(F.col("lex").isin(list(query.lexemes))))
 
     grouped = phrase_occurrences(hay, qdf, [doc_id], carry=("phrase_query",))
 

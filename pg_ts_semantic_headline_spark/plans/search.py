@@ -575,6 +575,11 @@ def search_batch(
     return bm25_topk_batch(index, queries, k=k, candidates=matches)
 
 
+#: winners per `_winner_headlines` job of `search_with_headlines`: the
+#: IN-list literals and the collected recall arrays stay bounded
+HEADLINE_CHUNK = 512
+
+
 def search_with_headlines(
     index: Index,
     query: CompiledQuery,
@@ -584,41 +589,26 @@ def search_with_headlines(
     """Top-k + whole-phrase highlighted headline per hit (the fast path over
     the persisted index: position lookup + recall-array slicing only).
 
-    The k hits are COLLECTED first (k rows — bounded driver work). One
-    more job, narrowed to the winner doc_ids as IN-list literals (parquet
-    row-group pruning), reads their recall arrays from `tokens` and their
-    query-lexeme rows from the bucket-pruned row postings. The driver
-    rebuilds each winner's lexeme stream from those positions and runs
-    the per-document fast-headline kernel the ad-hoc path shares
-    (`headline._fast_headline_kernel`); the answer is a driver-local
-    frame in rank order, so the caller's collect runs no job. Past 512
-    winners the hits stay in the plan and `ts_fast_headline` runs over
-    in-plan semi-joins."""
+    The k hits are COLLECTED first (k rows — bounded driver work). Then
+    one job per HEADLINE_CHUNK (512) winners, narrowed to their doc_ids
+    as IN-list literals (parquet row-group pruning), reads their recall
+    arrays from `tokens` and their query-lexeme rows from the
+    bucket-pruned row postings, and the driver runs the fast-headline
+    kernel over them (`_winner_headlines`). The answer is a driver-local
+    frame in rank order, so the caller's collect runs no job."""
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
     # expand prefixes up front: the headline stage must highlight the
     # concrete expansions, not the raw ':*' lexeme
     query = expand_query_prefixes(index, query)
     hits = search(index, query, k=k)
-    if k > 512:
-        from .headline import ts_fast_headline
-
-        winners = hits.select("doc_id")
-        docs = (index.tokens.join(winners, on="doc_id", how="left_semi")
-                .select("doc_id", "tokens"))
-        # haystack rows come straight from the pruned row postings: the
-        # precomputed-TSV trick as a persisted position lookup joined to
-        # content, pre-pruned to the winners' docs before the explode
-        hay = (_positions_hay(index, list(query.lexemes),
-                              candidate_docs=winners)
-               .select("doc_id", "pos", F.col("term").alias("lex")))
-        headlines = ts_fast_headline(docs, query, options, hay=hay)
-        return (hits.join(headlines, on="doc_id", how="left")
-                .orderBy(F.desc("score"), F.asc("doc_id")))
-    import pyarrow as pa
-    from pyspark.sql.types import StringType, StructField, StructType
-
     rows = hits.collect()
-    heads = _winner_headlines(index, query, options,
-                              [int(r["doc_id"]) for r in rows])
+    ids = [int(r["doc_id"]) for r in rows]
+    heads = []
+    for i in range(0, len(ids), HEADLINE_CHUNK):
+        heads += _winner_headlines(index, query, options,
+                                   ids[i:i + HEADLINE_CHUNK])
     # an Arrow table becomes a driver-local relation: the caller's collect
     # reads it back without a Spark job (a list of rows would be
     # parallelized, and its collect run as a job of its own)
@@ -631,19 +621,16 @@ def search_with_headlines(
 
 def _winner_headlines(index: Index, query: CompiledQuery, options: str,
                       ids: list[int]) -> list:
-    """Headlines of the docs `ids`, in order (None where no phrase
-    matches). One Spark job reads both inputs, narrowed to `ids` as
-    IN-list literals: the recall arrays from `tokens` and the query
-    lexemes' row postings. Per doc, the positions rebuild the lexeme
-    stream (None in every other slot) and `_fast_headline_kernel` runs
-    over it."""
-    import pandas as pd
+    """Headlines of the docs `ids` (one chunk of winners), in order (None
+    where no phrase matches). One Spark job reads both inputs, narrowed
+    to `ids` as IN-list literals: the recall arrays from `tokens` and the
+    query lexemes' row postings. Per doc, the positions rebuild the
+    lexeme stream (None in every other slot) and the fast-headline
+    kernel runs over it, as `headline.ts_fast_headline` runs it over an
+    analyzed row."""
+    from .headline import (_fast_headline_kernel, _fast_options,
+                           _present_headlines)
 
-    from ..functions.textprep import tsp_present_series
-    from .headline import _fast_headline_kernel, _fast_options
-
-    if not ids:
-        return []
     recall = (index.tokens.where(F.col("doc_id").isin(ids))
               .select("doc_id", "tokens"))
     occurrences = (_narrow_candidates(
@@ -675,11 +662,7 @@ def _winner_headlines(index: Index, query: CompiledQuery, options: str,
                 assert lexs[p - 1] is None, (d, p, lexs[p - 1], term)
                 lexs[p - 1] = term
         raw.append(kernel(toks, lexs))
-    raw = pd.Series(raw, dtype=object)
-    hit = raw.notna()
-    if hit.any():
-        raw[hit] = tsp_present_series(raw[hit], o.stop_sel)
-    return raw.tolist()
+    return _present_headlines(raw, o.stop_sel).tolist()
 
 
 def hybrid_search_rrf(

@@ -1,3 +1,4 @@
+import json
 import os
 import re
 import sys
@@ -59,3 +60,24 @@ def count_jobs(spark, action) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "fast_headline_golden.json")
+
+
+def fast_headline_golden() -> dict:
+    """The frozen fast-path outputs (tests/fast_headline_golden.json):
+    what the multi-stage DataFrame plan of `ts_fast_headline` and
+    `ts_fast_headline_cover_density` answered before the per-row kernel
+    replaced it (see that file's `about`)."""
+    with open(_GOLDEN, encoding="utf-8") as fh:
+        return json.load(fh)
+
+
+def golden_record(section: str, **key) -> dict:
+    """The one record of `section` whose fields equal `key`."""
+    found = [r for r in fast_headline_golden()[section]
+             if all(r[k] == v for k, v in key.items())]
+    assert len(found) == 1, (section, key, len(found))
+    return found[0]

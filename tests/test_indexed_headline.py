@@ -1,29 +1,36 @@
-"""`search_with_headlines` builds its k ≤ 512 headlines on the driver.
+"""`search_with_headlines` builds its headlines on the driver, one job
+per 512 winners; `ts_fast_headline` and `ts_fast_headline_cover_density`
+run the same per-document kernel as one Arrow UDF per row.
 
-- per-row identity with the DataFrame plan that path replaced:
-  `ts_fast_headline` over the winners' recall arrays with the row
-  postings' positions as its haystack, left-joined to the collected hits;
-- the k > 512 branch, which keeps that plan, answers the same first rows;
+- identity with the frozen outputs of the DataFrame plan the kernel
+  replaced (tests/fast_headline_golden.json): the driver pass over the
+  winners, and both public functions over `with_analysis` of the corpus;
+- the driver pass against `ts_fast_headline` over `with_analysis` of the
+  winners' content, which checks the lexeme stream the driver rebuilds
+  from row postings;
+- chunked winners answer as one chunk, one job per chunk;
 - the job budget: at most one job more than `search` on the same query;
-- `tsp_query_matches`, which the DataFrame plan runs, plans its alignment
-  and the analysis UDF once each.
+- `tsp_query_matches` plans its alignment and the analysis UDF once each.
 """
 
+import math
 import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import count_jobs
+from conftest import count_jobs, fast_headline_golden, golden_record
 
+from pg_ts_semantic_headline_spark.plans import search as search_mod
 from pg_ts_semantic_headline_spark.plans.analyze import with_analysis
-from pg_ts_semantic_headline_spark.plans.headline import ts_fast_headline
+from pg_ts_semantic_headline_spark.plans.headline import (
+    ts_fast_headline, ts_fast_headline_cover_density)
 from pg_ts_semantic_headline_spark.plans.index_build import (
     build_index, load_index)
 from pg_ts_semantic_headline_spark.plans.matches import tsp_query_matches
 from pg_ts_semantic_headline_spark.plans.query_compiler import to_tspquery
 from pg_ts_semantic_headline_spark.plans.search import (
-    _positions_hay, expand_query_prefixes, search, search_with_headlines)
+    expand_query_prefixes, search, search_with_headlines)
 
 _FILLER = ("the a of and to in is was for on with as by at from this that "
            "system data query index search result merge sort sorted sorting "
@@ -54,11 +61,19 @@ def _corpus(seed: int, n: int) -> list:
 
 
 @pytest.fixture(scope="module")
-def index(spark, tmp_path_factory):
+def corpus(spark):
+    return spark.createDataFrame(_corpus(11, 160), ["doc_id", "content"])
+
+
+@pytest.fixture(scope="module")
+def analyzed(corpus):
+    return with_analysis(corpus, content_col="content", config="english")
+
+
+@pytest.fixture(scope="module")
+def index(spark, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("headline_idx"))
-    build_index(spark, spark.createDataFrame(_corpus(11, 160),
-                                             ["doc_id", "content"]),
-                out, config="english", n_buckets=4)
+    build_index(spark, corpus, out, config="english", n_buckets=4)
     return load_index(spark, out)
 
 
@@ -74,31 +89,35 @@ def synonym_index(spark, tmp_path_factory):
             (2, "pgsql replication and postgres replication streams"),
             (3, "theory of colour mixing; colour theory again")]
     out = str(tmp_path_factory.mktemp("syn_idx"))
-    build_index(spark, spark.createDataFrame(docs, ["doc_id", "content"]),
-                out, config=cfg, n_buckets=2)
-    return load_index(spark, out), cfg
+    docs = spark.createDataFrame(docs, ["doc_id", "content"])
+    build_index(spark, docs, out, config=cfg, n_buckets=2)
+    return (load_index(spark, out), cfg,
+            with_analysis(docs, content_col="content", config=cfg))
 
 
-def _dataframe_plan(index, query, k, options):
-    """The plan the driver pass replaced: the collected hits' recall
-    arrays and positions, narrowed by IN-list, through `ts_fast_headline`
-    and left-joined back in rank order."""
+def _frozen(index_name, cfg, q, options, k) -> list:
+    """The DataFrame plan's (doc_id, headline) rows, in rank order."""
+    return [tuple(r) for r in golden_record(
+        "indexed", index=index_name, config=cfg, query=q, options=options,
+        k=k)["rows"]]
+
+
+def _analyzed_plan(analyzed, index, query, options, hits) -> list:
+    """The `hits` through `ts_fast_headline` over `with_analysis` of
+    their content, as (doc_id, headline) in rank order."""
+    ids = [d for d, _, _ in hits]
     query = expand_query_prefixes(index, query)
-    hits = search(index, query, k=k).collect()
-    ids = [r["doc_id"] for r in hits]
-    if not ids:
-        return []
-    docs = (index.tokens.where(F.col("doc_id").isin(ids))
-            .select("doc_id", "tokens"))
-    hay = (_positions_hay(index, list(query.lexemes), candidate_ids=ids)
-           .select("doc_id", "pos", F.col("term").alias("lex")))
-    heads = {r["doc_id"]: r["headline"] for r in
-             ts_fast_headline(docs, query, options, hay=hay).collect()}
-    return [(r["doc_id"], r["score"], heads.get(r["doc_id"])) for r in hits]
+    heads = {r["doc_id"]: r["headline"] for r in ts_fast_headline(
+        analyzed.where(F.col("doc_id").isin(ids)), query, options).collect()}
+    return [(d, heads.get(d)) for d in ids]
 
 
 def _rows(df) -> list:
     return [(r["doc_id"], r["score"], r["headline"]) for r in df.collect()]
+
+
+def _heads(rows) -> list:
+    return [(d, h) for d, _, h in rows]
 
 
 CASES = [
@@ -117,10 +136,11 @@ CASES = [
 
 
 @pytest.mark.parametrize("cfg,q,options", CASES)
-def test_driver_pass_matches_dataframe_plan(index, cfg, q, options):
+def test_driver_pass_matches_dataframe_plan(index, analyzed, cfg, q, options):
     query = to_tspquery(cfg, q)
     got = _rows(search_with_headlines(index, query, k=40, options=options))
-    assert got == _dataframe_plan(index, query, 40, options)
+    assert _heads(got) == _frozen("english", cfg, q, options, 40)
+    assert _heads(got) == _analyzed_plan(analyzed, index, query, options, got)
     sel = "<em>" if "<em>" in options else "<b>"
     assert got and all(h and sel in h for _, _, h in got)
 
@@ -132,23 +152,26 @@ def test_prefix_highlights_every_expansion(index):
         assert any(f"<b>{phrase}</b>" in h for h in heads), phrase
 
 
-def test_hit_without_exact_match_has_null_headline(index):
+def test_hit_without_exact_match_has_null_headline(index, analyzed):
     # the simple config does not stem: `sorted` is indexed (english) as
     # `sort`, so docs holding only `sorted`/`sorting` are hits, yet their
     # slices fail the re-check under the query's own config
     query = to_tspquery("simple", "sort")
     got = _rows(search_with_headlines(index, query, k=200))
-    assert got == _dataframe_plan(index, query, 200, "")
+    assert _heads(got) == _frozen("english", "simple", "sort", "", 200)
+    assert _heads(got) == _analyzed_plan(analyzed, index, query, "", got)
     heads = [h for _, _, h in got]
     assert None in heads and any(h and "<b>sort</b>" in h for h in heads)
 
 
 def test_synonym_config_index(synonym_index):
-    index, cfg = synonym_index
-    for q in ("colour <-> theory", "pgsql <-> replication | color"):
+    index, cfg, analyzed = synonym_index
+    for q in ("colour <-> theory", "pgsql <-> replication | color",
+              "color <-> theory"):
         query = to_tspquery(cfg, q)
         got = _rows(search_with_headlines(index, query, k=10))
-        assert got == _dataframe_plan(index, query, 10, "")
+        assert _heads(got) == _frozen("synonym", "synonym", q, "", 10)
+        assert _heads(got) == _analyzed_plan(analyzed, index, query, "", got)
         assert got and all(h and "<b>" in h for _, _, h in got)
     heads = {d: h for d, _, h in _rows(search_with_headlines(
         index, to_tspquery(cfg, "color <-> theory"), k=10))}
@@ -163,12 +186,18 @@ def test_empty_answer(index):
     assert out.collect() == []
 
 
-def test_branches_agree(index):
+def test_chunked_winners_agree(spark, index, monkeypatch):
     query = to_tspquery("english", "quick <-> brown | merge <-> sort")
-    short = _rows(search_with_headlines(index, query, k=10))
-    assert len(short) == 10
-    # k > 512 keeps the hits in the plan and runs ts_fast_headline
-    assert _rows(search_with_headlines(index, query, k=600))[:10] == short
+    whole = _rows(search_with_headlines(index, query, k=40))
+    assert len(whole) > 14
+    base = count_jobs(spark, lambda: search(index, query, k=40).collect())
+    monkeypatch.setattr(search_mod, "HEADLINE_CHUNK", 7)
+    got = []
+    jobs = count_jobs(spark, lambda: got.extend(_rows(
+        search_with_headlines(index, query, k=40))))
+    assert got == whole
+    # one headline job per chunk of 7 winners
+    assert jobs <= base + math.ceil(len(whole) / 7), (jobs, base)
 
 
 @pytest.mark.parametrize("q", ["quick <-> brown",
@@ -198,3 +227,25 @@ def test_matches_plan_runs_alignment_and_analysis_once(spark):
     assert sorted((r["doc_id"], r["start_pos"], r["words"])
                   for r in out.collect()) == [
         (0, 2, "quick brown"), (1, 2, "quick brown"), (1, 7, "quick brown")]
+
+
+FAST = fast_headline_golden()["fast"]
+
+
+@pytest.mark.parametrize("rec", FAST,
+                         ids=[f"{r['query']}-{r['options']}" for r in FAST])
+def test_fast_path_matches_dataframe_plan(index, analyzed, rec):
+    query = expand_query_prefixes(index, to_tspquery(rec["config"],
+                                                     rec["query"]))
+    heads = ts_fast_headline(analyzed, query, rec["options"])
+    cover = ts_fast_headline_cover_density(analyzed, query, rec["options"])
+    assert sorted([r["doc_id"], r["headline"]] for r in heads.collect()) \
+        == rec["ts_fast_headline"]
+    assert sorted([r["doc_id"], r["headline"], r["density"], r["bucket"]]
+                  for r in cover.collect()) \
+        == rec["ts_fast_headline_cover_density"]
+    schema = fast_headline_golden()["schema"]
+    for name, df in (("ts_fast_headline", heads),
+                     ("ts_fast_headline_cover_density", cover)):
+        assert [[f.name, f.dataType.simpleString(), f.nullable]
+                for f in df.schema.fields] == schema[name]

@@ -1,10 +1,10 @@
 """`ts_semantic_headline` runs both phases in one Arrow UDF per row.
 
-- a differential test against the composition the fused kernel replaces:
-  phase-1 passages -> `with_analysis` -> `ts_fast_headline` under the
+- identity with the frozen outputs of the two-phase composition it
+  replaced (tests/fast_headline_golden.json, section `fused`): phase-1
+  passages -> `with_analysis` -> the DataFrame fast-path plan under the
   forced MaxFragments=30,MinWords=64,MaxWords=64 overlay -> COALESCE to
-  the trimmed passage.  Those public functions keep their DataFrame
-  plans, so they are the oracle for the per-row phase 2;
+  the trimmed passage;
 - one output row per input row, built from that row's own content, even
   when two rows share a doc_id;
 - the plan shape: one Spark job, no Exchange.
@@ -13,15 +13,12 @@
 import random
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from conftest import count_jobs
+from conftest import count_jobs, golden_record
 
-from pg_ts_semantic_headline_spark.plans.analyze import with_analysis
 from pg_ts_semantic_headline_spark.plans.headline import (
-    _passage_selector, parse_headline_options, ts_fast_headline,
-    ts_semantic_headline)
+    _passage_selector, ts_semantic_headline)
 from pg_ts_semantic_headline_spark.plans.query_compiler import to_tspquery
 
 SCHEMA = StructType([StructField("doc_id", LongType()),
@@ -58,25 +55,10 @@ def _corpus(seed: int, n: int) -> list[str]:
     return docs
 
 
-def _reference(spark, df, query, options, config):
-    """The parent composition: passages, then the DataFrame fast path."""
-    cfg = config or query.config
-    opts = parse_headline_options(options)
-    select = _passage_selector(query, cfg, int(opts.get("MinWords", 15)),
-                               int(opts.get("MaxWords", 35)),
-                               int(opts.get("ShortWord", 3)))
-    passages = spark.createDataFrame(
-        [(r.doc_id, select(r.content)) for r in df.collect()],
-        StructType([StructField("doc_id", LongType()),
-                    StructField("_passage", StringType())]))
-    analyzed = with_analysis(passages, content_col="_passage", config=cfg)
-    effective = (options + ("," if options else "")
-                 + "MaxFragments=30,MinWords=64,MaxWords=64")
-    heads = ts_fast_headline(analyzed, query, effective)
-    return (passages.join(heads, on="doc_id", how="left")
-            .select("doc_id", F.coalesce(F.col("headline"),
-                                         F.trim(F.col("_passage")))
-                    .alias("headline")))
+def _frozen(config, q, options) -> dict:
+    """The composition's {doc_id: headline} (see the module docstring)."""
+    return dict(golden_record("fused", config=config, query=q,
+                              options=options)["rows"])
 
 
 def _rows(df) -> dict:
@@ -104,11 +86,10 @@ def english_docs(spark):
 
 
 @pytest.mark.parametrize("q,options", CASES)
-def test_fused_matches_composition(spark, english_docs, q, options):
+def test_fused_matches_composition(english_docs, q, options):
     query = to_tspquery("english", q)
     got = _rows(ts_semantic_headline(english_docs, query, options))
-    want = _rows(_reference(spark, english_docs, query, options, None))
-    assert got == want
+    assert got == _frozen("english", q, options)
     # the cases exercise the fast path, not only the passage fallback
     assert any(h and ("<b>" in h or "<em>" in h) for h in got.values())
 
@@ -119,9 +100,9 @@ def test_fused_matches_composition_german_and_fallback_config(spark):
             "Die Straße ist groß; das Mädchen singt über die Brücke.",
             "Grüße aus München: ein Mädchen spielt Fußball", None, ""]
     df = spark.createDataFrame(list(enumerate(docs)), SCHEMA)
-    query = to_tspquery("german", "mädchen <-> spielt | straße & !brücke")
-    got = _rows(ts_semantic_headline(df, query))
-    assert got == _rows(_reference(spark, df, query, "", None))
+    q = "mädchen <-> spielt | straße & !brücke"
+    got = _rows(ts_semantic_headline(df, to_tspquery("german", q)))
+    assert got == _frozen("german", q, "")
     assert any(h and "<b>" in h for h in got.values())
     # an unsupported config analyzes phase 2 as `simple`; content with no
     # lexizable word keeps phase 1 from ever lexizing under it, and the
