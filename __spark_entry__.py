@@ -908,7 +908,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q35(spark, sf):
         # boolean+phrase filtered retrieval over the persisted index
-        # (matching_docs anchor + exact BM25 over the matches); k covers
+        # (the tree per document + exact BM25 over the matches); k covers
         # the whole corpus at gate scale so the row set equals the
         # unranked phrase-filter oracle
         from pg_ts_semantic_headline_spark.plans.search import search

@@ -83,11 +83,15 @@ def claim_path(spark: SparkSession, src: str, dst: str) -> None:
         jvm.org.apache.hadoop.fs.Options.Rename, 0))
 
 
-def read_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    """The tombstone table at `path`; None only when the directory is
-    missing. Any other read failure raises: mapping it to "no deletes"
-    would silently resurrect deleted rows."""
-    return spark.read.parquet(path) if path_exists(spark, path) else None
+def read_tombstones(spark: SparkSession, path: str,
+                    schema: str | None = None) -> DataFrame | None:
+    """The tombstone table at `path` (read with `schema` when the caller
+    knows it, which spares the read its schema-inference job); None only
+    when the directory is missing. Any other read failure raises: mapping
+    it to "no deletes" would silently resurrect deleted rows."""
+    if not path_exists(spark, path):
+        return None
+    return (spark.read.schema(schema) if schema else spark.read).parquet(path)
 
 
 def live_rows(df: DataFrame, tombs: DataFrame | None,

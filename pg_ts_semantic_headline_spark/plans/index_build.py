@@ -71,6 +71,14 @@ PREP_VERSION = "tsp-spark-5"
 
 STATS_SCHEMA = ("n_docs long, avgdl double, config string, "
                 "prep_version string, n_buckets int, gen int")
+# the other tables as written (partition columns last); readers pass
+# them, since inferring a parquet schema costs a Spark job per table
+TOKENS_SCHEMA = ("doc_id long, tokens array<string>, dl int, "
+                 "sha256 string, gen int")
+POSTINGS_SCHEMA = ("doc_id long, dl int, term string, tf int, "
+                   "positions array<int>, gen int, bucket int")
+TERMS_SCHEMA = "term string, df long, cf long, idf double, bucket int"
+TOMBSTONES_SCHEMA = "doc_id long, gen long"
 
 
 def idf_expr(df_col, n_docs):
@@ -436,6 +444,11 @@ def _alias_versions(spark: SparkSession, alias_dir: str) -> list[int]:
                   and lc.path_exists(spark, f"{alias_dir}/{n}/_SUCCESS"))
 
 
+#: name prefix of a publisher's pointer before its claim, followed by
+#: `<version>_<uuid>`
+_PUBLISH_TMP = ".publish_tmp_"
+
+
 def publish_index(spark: SparkSession, index_dir: str,
                   alias_dir: str, keep: int = 2,
                   verify: "bool | str" = False) -> int:
@@ -495,7 +508,7 @@ def publish_index(spark: SparkSession, index_dir: str,
 
     versions = _alias_versions(spark, alias_dir)
     n = (versions[-1] + 1) if versions else 1
-    tmp = f"{alias_dir}/.publish_tmp_{uuid.uuid4().hex}"
+    tmp = f"{alias_dir}/{_PUBLISH_TMP}{n}_{uuid.uuid4().hex}"
     (spark.createDataFrame([(index_dir,)], "target string")
      .coalesce(1).write.option("compression", INDEX_CODEC)
      .mode("overwrite").parquet(tmp))
@@ -522,6 +535,14 @@ def publish_index(spark: SparkSession, index_dir: str,
             f"directory manually, then retry") from e
     for old in versions[:max(0, len(versions) - (keep - 1))]:
         lc.delete_path(spark, f"{alias_dir}/v={old}")
+    # a publisher killed before its claim left its pointer behind; one
+    # aimed at version <= n can no longer claim a version readers see
+    fs, p, _ = lc._fs(spark, alias_dir)
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        aim = name[len(_PUBLISH_TMP):].split("_")[0]
+        if name.startswith(_PUBLISH_TMP) and aim.isdigit() and int(aim) <= n:
+            lc.delete_path(spark, f"{alias_dir}/{name}")
     return n
 
 
@@ -531,15 +552,15 @@ def resolve_index_alias(spark: SparkSession, alias_dir: str) -> str:
     versions = _alias_versions(spark, alias_dir)
     if not versions:
         raise ValueError(f"{alias_dir} has no published alias version")
-    return str(spark.read.parquet(f"{alias_dir}/v={versions[-1]}")
-               .first()["target"])
+    return str(spark.read.schema("target string")
+               .parquet(f"{alias_dir}/v={versions[-1]}").first()["target"])
 
 
 def _read_stats(spark: SparkSession, paths: IndexPaths):
     """The index's stats row; raises unless the index was written under
     this engine's layout version — readers and writers alike must not
     touch an index whose tables they cannot interpret."""
-    stats = spark.read.parquet(paths.stats).first()
+    stats = spark.read.schema(STATS_SCHEMA).parquet(paths.stats).first()
     if stats["prep_version"] != PREP_VERSION:
         raise ValueError(
             f"index at {paths.root} was built with prep "
@@ -565,13 +586,14 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
             paths = t
     lc.check_committed(spark, paths.root)
     stats = _read_stats(spark, paths)
-    tombs = lc.read_tombstones(spark, paths.tombstones)
+    tombs = lc.read_tombstones(spark, paths.tombstones, TOMBSTONES_SCHEMA)
     return Index(
         paths=paths,
-        tokens=lc.live_rows(spark.read.parquet(paths.tokens), tombs, "doc_id"),
-        postings=lc.live_rows(spark.read.parquet(paths.postings), tombs,
-                              "doc_id"),
-        terms=spark.read.parquet(paths.terms),
+        tokens=lc.live_rows(spark.read.schema(TOKENS_SCHEMA)
+                            .parquet(paths.tokens), tombs, "doc_id"),
+        postings=lc.live_rows(spark.read.schema(POSTINGS_SCHEMA)
+                              .parquet(paths.postings), tombs, "doc_id"),
+        terms=spark.read.schema(TERMS_SCHEMA).parquet(paths.terms),
         n_docs=int(stats["n_docs"]),
         avgdl=float(stats["avgdl"]),
         config=stats["config"],

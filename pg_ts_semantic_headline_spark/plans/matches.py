@@ -1,59 +1,42 @@
-"""TSP_QUERY_MATCHES as a distributed DataFrame plan.
+"""TSP_QUERY_MATCHES as a distributed DataFrame plan, and the phrase
+checks the indexed plans share.
 
 The core phrase-match operator (/root/reference/sql/tsp_query_matches.sql:56-97),
-re-expressed Spark-first:
+re-expressed Spark-first and evaluated per input row, as the reference
+does:
 
-1. explode the lexeme stream to (doc_id, pos, lex), pruned to query lexemes
-   *before* any join — the semi-join analog of the reference's
-   ts_filter/setweight optimization (:42-54,68), which Catalyst pushes into
-   the scan;
-2. broadcast-hash-join the tiny exploded query table (:88-90);
-3. the self-alignment trick: range_start = pos - rel_pos + 1 turns phrase
-   adjacency into an equi group key (:85-87) — no range join needed;
-4. groupBy(doc, phrase, range_start) HAVING count == phrase length (:91-92)
-   and exact span (last-first == query span, :93-94) — this is exact
-   position-adjacency intersection: partial matches are impossible by
-   construction;
-5. optional semantic re-check: re-analyze the matched slice and require the
+1. prune the row's lexeme stream to the query lexemes, as a (lex, pos)
+   array — the analog of the reference's ts_filter/setweight
+   optimization (:42-54,68);
+2. `phrase_starts`: a phrase occurs at p iff each of its lexemes sits at
+   p plus its offset (:85-94) — exact position-adjacency intersection on
+   the row's own positions, so partial matches are impossible and rows
+   that share a doc_id never mix;
+3. optional semantic re-check: re-analyze the matched slice and require the
    phrase to match it (:95-96), in a vectorized Arrow UDF;
-6. per-document first-N matches in document order (:97 LIMIT, applied per
-   doc because the reference evaluates per row).
+4. per-row first-N matches in document order (:97 LIMIT).
 
-Scale note: the only shuffle is the groupBy on (doc_id, phrase_id,
-range_start) — a key that is near-unique, so it distributes evenly even when
-one term is hot; the query side is always broadcast.
+No join: the only shuffle is the per-row limit's window.
 
-Steps 2-4 are `phrase_occurrences`, the one alignment kernel every phrase
-match in the engine runs: this ad-hoc operator, the indexed boolean filter
-(`search.phrase_match_docs`) and the registry matcher `match_registry`,
-which `search.search_batch` and the percolator share.
+`phrase_starts` is also the phrase check of the indexed boolean filter
+(`search.matching_docs` / `search.search`), over a document's postings
+positions. `phrase_occurrences` aligns many queries' phrases in one pass
+for the registry matcher `match_registry`, which `search.search_batch`
+and the percolator share.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from ..functions.lexize import analyze_text_simple
 from .query_compiler import CompiledQuery, Node, require_no_prefixes
-
-PHRASE_TABLE_SCHEMA = StructType([
-    StructField("phrase_id", IntegerType(), False),
-    StructField("q_lexeme", StringType(), False),
-    StructField("q_pos", IntegerType(), False),
-    StructField("q_len", IntegerType(), False),
-    StructField("q_span", IntegerType(), False),
-    StructField("phrase_query", StringType(), False),
-])
-
-
-def phrase_table_df(spark: SparkSession, query: CompiledQuery) -> DataFrame:
-    rows = [(pid, lex, pos, length, span, rendered)
-            for pid, lex, pos, length, span, rendered in query.phrase_table()]
-    return spark.createDataFrame(rows, PHRASE_TABLE_SCHEMA)
 
 
 def explode_lexemes(docs: DataFrame, doc_id: str = "doc_id") -> DataFrame:
@@ -154,38 +137,45 @@ def tsp_query_matches(
             StructField("end_pos", IntegerType(), True),
         ]))
 
-    qdf = phrase_table_df(spark, query)
-    # lexeme pruning before the join (isin folds to a literal filter the
-    # optimizer can push down / turn into a bloom-ish semi filter)
-    hay = (explode_lexemes(docs, doc_id)
-           .where(F.col("lex").isin(list(query.lexemes))))
+    qlex = list(query.lexemes)
+    # each row's (lexeme, position) stream, pruned to the query lexemes
+    hits = F.filter(
+        F.transform("lexemes", lambda x, i: F.struct(x.alias("lex"),
+                                                     (i + 1).alias("pos"))),
+        lambda h: h["lex"].isin(qlex))
 
-    grouped = phrase_occurrences(hay, qdf, [doc_id], carry=("phrase_query",))
+    def positions(lex):
+        return F.transform(F.filter("_hits", lambda h: h["lex"] == lex),
+                           lambda h: h["pos"])
 
-    # `grouped` is referenced once: a self-semi-join of the recall arrays
-    # to its doc ids would plan (and run) the whole alignment a second
-    # time; a small match stream broadcasts into this join under AQE
-    with_words = (grouped
-                  .join(docs.select(doc_id, "tokens"), on=doc_id)
-                  .withColumn(
-                      "words",
-                      F.array_join(
-                          F.slice(F.col("tokens"),
-                                  F.greatest(F.col("start_pos"), F.lit(1)),
-                                  F.col("end_pos") - F.col("start_pos") + 1),
-                          " ")))
+    def match(pid, ph):
+        # one output struct per start position of phrase `pid` in the row
+        return lambda s: F.struct(
+            F.lit(pid).alias("phrase_id"),
+            F.array_join(F.slice("tokens", s, ph.span + 1), " ")
+            .alias("words"),
+            F.lit(ph.render()).alias("ts_query"),
+            s.alias("start_pos"), (s + ph.span).alias("end_pos"))
+
+    matches = F.flatten(F.array(*[
+        F.transform(phrase_starts(ph, positions), match(pid, ph))
+        for pid, ph in enumerate(query.phrases)]))
+    # every row aligns its own stream; `_row` keys the per-row limit, so
+    # rows sharing a doc_id never mix
+    found = (docs.select(doc_id, "tokens", hits.alias("_hits"),
+                         F.monotonically_increasing_id().alias("_row"))
+             .select(doc_id, "_row", F.inline(matches)))
 
     if not disable_semantic_check:
         check = _semantic_check_udf(query)
-        with_words = with_words.where(check(F.col("words"), F.col("phrase_id")))
+        found = found.where(check(F.col("words"), F.col("phrase_id")))
 
-    w = Window.partitionBy(doc_id).orderBy("start_pos", "phrase_id")
-    limited = (with_words
+    w = Window.partitionBy("_row").orderBy("start_pos", "phrase_id")
+    limited = (found
                .withColumn("_rn", F.row_number().over(w))
                .where(F.col("_rn") <= match_limit))
 
-    return limited.select(doc_id, "phrase_id", "words",
-                          F.col("phrase_query").alias("ts_query"),
+    return limited.select(doc_id, "phrase_id", "words", "ts_query",
                           "start_pos", "end_pos")
 
 
@@ -219,20 +209,34 @@ def _distinct_phrases(node: Node | None) -> list:
     return out
 
 
-def _tree_expr(node: Node | None, pid_by_items) -> F.Column:
-    """Boolean AST -> JVM column expression over the ok_phrases array."""
+def _tree_expr(node: Node | None, leaf) -> F.Column:
+    """Boolean AST -> JVM column expression; `leaf(phrase)` is the
+    column that says whether a row satisfies one phrase."""
     if node is None:
         return F.lit(False)
     if node.op == "phrase":
-        return F.array_contains(F.col("ok_phrases"),
-                                pid_by_items[node.phrase.items])
+        return leaf(node.phrase)
     if node.op == "not":
-        return ~_tree_expr(node.children[0], pid_by_items)
-    sub = [_tree_expr(c, pid_by_items) for c in node.children]
+        return ~_tree_expr(node.children[0], leaf)
+    sub = [_tree_expr(c, leaf) for c in node.children]
     out = sub[0]
     for s in sub[1:]:
         out = (out & s) if node.op == "and" else (out | s)
     return out
+
+
+def phrase_starts(phrase, positions) -> F.Column:
+    """The start positions of every exact occurrence of `phrase`, as an
+    array column: a start p of the first lexeme l0 holds iff every other
+    (lexeme l, offset o) has l at p + o - o0. `positions(lex)` is the
+    array column of `lex`'s positions in the row. Phrase adjacency is
+    positional arithmetic on each row's own positions, so rows never mix
+    and nothing is shuffled."""
+    (l0, o0), *rest = sorted(phrase.items, key=lambda it: it[1])
+    aligned = [(lex, off - o0) for lex, off in rest]
+    return F.filter(positions(l0), lambda p: reduce(
+        lambda acc, lo: acc & F.array_contains(positions(lo[0]), p + lo[1]),
+        aligned, F.lit(True)))
 
 
 def _tree_spec(node: Node | None, pid_by_items):
@@ -347,8 +351,10 @@ def match_registry(queries: dict[str, CompiledQuery], hay,
     if len(meta) <= CASE_CHAIN_MAX_QUERIES:
         ok = F.lit(False)
         for qid, (root, pid_by_items, _) in meta.items():
+            leaf = (lambda ph, pids=pid_by_items: F.array_contains(
+                F.col("ok_phrases"), pids[ph.items]))
             ok = F.when(F.col("query_id") == qid,
-                        _tree_expr(root, pid_by_items)).otherwise(ok)
+                        _tree_expr(root, leaf)).otherwise(ok)
     else:
         specs = {qid: _tree_spec(root, pid_by_items)
                  for qid, (root, pid_by_items, _) in meta.items()}

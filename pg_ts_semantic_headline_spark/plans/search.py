@@ -14,8 +14,13 @@ TakeOrdered k. A second, block-max WAND plan over per-block impact bounds
 is not kept: it measured slower at every size tried, its designed best
 case included (BENCH/BASELINE.md §2c-2e).
 
-Phrase verification reuses the *same* pruned postings rows (positions ride
-along), so a phrase query costs no second index scan.
+Boolean/phrase search (`search`, `matching_docs`) is the same scan and
+the same per-doc aggregation, which also collects each doc's (term,
+positions) rows: the AND/OR/NOT tree is one column expression over them
+(a phrase is positional arithmetic, `matches.phrase_starts`), evaluated
+before the top-k cut. A query costs one read of its lexemes' postings
+and 3 Spark jobs (the idf broadcast, the scan into the aggregation, the
+top-k), whatever its shape.
 """
 
 from __future__ import annotations
@@ -24,9 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .index_build import B, K1, Index
-from .matches import (_distinct_phrases, _tree_expr, _tree_ops,
-                      match_registry, phrase_occurrences, phrase_table_df)
-from .query_compiler import CompiledQuery, Node
+from .matches import (_distinct_phrases, _eval_spec, _tree_expr, _tree_spec,
+                      match_registry, phrase_starts)
+from .query_compiler import CompiledQuery
 
 
 def _score_col(avgdl: float):
@@ -182,10 +187,10 @@ def search_federated(
     k: int = 10,
 ) -> DataFrame:
     """`search` over shards: boolean/phrase filtering runs per shard
-    (each shard's `matching_docs` keeps its anchored, bucket-pruned
-    plan; shards hold disjoint doc_ids so the union IS the global match
-    set), then `bm25_topk_federated` ranks the union with global
-    statistics — rank-identical to `search` on a monolithic index."""
+    (each shard's `matching_docs` on its own bucket-pruned scan; shards
+    hold disjoint doc_ids so the union IS the global match set), then
+    `bm25_topk_federated` ranks the union with global statistics —
+    rank-identical to `search` on a monolithic index."""
     if not indexes:
         raise ValueError("need at least one index")
     cands = matching_docs(indexes[0], query)
@@ -371,151 +376,91 @@ def _positions_hay(index: Index, terms: list[str],
     return rows.select("doc_id", "term", F.explode("positions").alias("pos"))
 
 
-def phrase_match_docs(index: Index, query: CompiledQuery,
-                      anchor_docs: DataFrame | None = None,
-                      anchor_small: bool = False) -> DataFrame:
-    """(doc_id, phrase_id, n_matches) via positional intersection on the
-    pruned postings — the indexed form of the matches plan. NB phrase_id
-    numbering follows the query's OWN tree; callers that pass a prefix
-    query get it expanded here, so compute phrase ids from the SAME
-    expanded query (matching_docs expands before calling in).
+#: the element type of `_doc_hits`'s per-document `_hits` array
+_HITS_TYPE = "array<struct<term:string,positions:array<int>>>"
 
-    Length-1 "phrases" (plain boolean leaves like the `a` in `a & !b`)
-    never touch positions: occurrence == tf > 0, so they resolve from the
-    row postings' tf column (n_matches = tf). Only real multi-lexeme
-    phrases explode position arrays.
 
-    `anchor_docs` (a SUPERSET of every doc that can satisfy the boolean
-    query — see matching_docs) semi-joins each scan before any shuffle:
-    a common term AND-ed with a rare one shuffles only the rare term's
-    docs into the per-doc aggregation, not its own millions. With
-    `anchor_small` (the caller KNOWS the anchor's df is bounded) the
-    anchor broadcast-joins the positional rows BEFORE the explode — a
-    phrase containing a common lexeme explodes a handful of docs' arrays
-    instead of the lexeme's whole posting list."""
+def _tree_lexemes(query: CompiledQuery) -> list[str]:
+    """Every lexeme of the query tree, negated ones included."""
+    return sorted({lex for ph in _distinct_phrases(query.root)
+                   for lex, _ in ph.items})
+
+
+def _doc_hits(index: Index, terms: list[str],
+              scored_terms: list[str] | None = None) -> DataFrame:
+    """(doc_id, _hits[, score]) for every document holding any of
+    `terms`: ONE bucket-pruned postings scan and one aggregation per
+    document. `_hits` holds the doc's (term, positions) rows; a doc_id
+    with two live generations (`merge_batch(replace=False)`) simply has
+    two rows of a term there, whose positions `_positions` merges. With
+    `scored_terms`, `score` is the BM25 sum over those terms (broadcast
+    idf), NULL for a doc that holds none of them."""
+    rows = _pruned_postings(index, terms)
+    aggs = [F.collect_list(F.struct("term", "positions")).alias("_hits")]
+    if scored_terms is not None:
+        rows = (rows.join(F.broadcast(_idf_lookup(index, scored_terms)),
+                          on="term", how="left")
+                .withColumn("score", _score_col(index.avgdl)))
+        aggs.append(F.sum("score").alias("score"))
+    return rows.groupBy("doc_id").agg(*aggs)
+
+
+def _positions(lex: str) -> F.Column:
+    """`lex`'s positions in the doc of a `_doc_hits` row, over all of its
+    live rows."""
+    return F.flatten(F.transform(
+        F.filter("_hits", lambda h: h["term"] == lex),
+        lambda h: h["positions"]))
+
+
+def _holds(phrase) -> F.Column:
+    """Does the doc of a `_doc_hits` row contain `phrase`? A one-lexeme
+    phrase is term presence."""
+    if phrase.length == 1:
+        return F.exists("_hits", lambda h: h["term"] == phrase.items[0][0])
+    return F.size(phrase_starts(phrase, _positions)) > 0
+
+
+def phrase_match_docs(index: Index, query: CompiledQuery) -> DataFrame:
+    """(doc_id, phrase_id, n_matches): how often each positive phrase of
+    the query occurs in each doc, counted on the `_doc_hits` positions
+    (n_matches = tf for a one-lexeme phrase). phrase_id numbering follows
+    the query's OWN phrases after prefix expansion."""
     query = expand_query_prefixes(index, query)
     spark = index.postings.sparkSession
     if not query.phrases:
         return spark.createDataFrame([], "doc_id long, phrase_id int, n_matches long")
-
-    singles = [(pid, ph.items[0][0])
-               for pid, ph in enumerate(query.phrases) if ph.length == 1]
-    multi_lexemes = sorted({lex for ph in query.phrases if ph.length > 1
-                            for lex, _ in ph.items})
-
-    single_hits = None
-    if singles:
-        sdf = spark.createDataFrame(
-            [(t, pid) for pid, t in singles], "term string, phrase_id int")
-        rows = _pruned_postings(index, sorted({t for _, t in singles}))
-        if anchor_docs is not None:
-            rows = rows.join(anchor_docs, on="doc_id", how="left_semi")
-        single_hits = (rows.join(F.broadcast(sdf), on="term")
-                       .select("doc_id", "phrase_id",
-                               F.col("tf").cast("long").alias("n_matches")))
-
-    multi_hits = None
-    if multi_lexemes:
-        qdf = (phrase_table_df(spark, query)
-               .where(F.col("q_len") > 1))
-        if anchor_docs is not None and anchor_small:
-            # pre-explode pruning: semi-join the anchor's doc ids first
-            hay = _positions_hay(index, multi_lexemes,
-                                 candidate_docs=anchor_docs)
-        else:
-            hay = _positions_hay(index, multi_lexemes)
-            if anchor_docs is not None:
-                hay = hay.join(anchor_docs, on="doc_id", how="left_semi")
-        multi_hits = (phrase_occurrences(hay, qdf, ["doc_id"], lex="term")
-                      .groupBy("doc_id", "phrase_id")
-                      .agg(F.count("*").alias("n_matches")))
-
-    if single_hits is not None and multi_hits is not None:
-        return single_hits.unionByName(multi_hits)
-    return single_hits if single_hits is not None else multi_hits
-
-
-def _required_lexemes(node: Node | None) -> set[str]:
-    """Lexemes EVERY satisfying doc must contain: a phrase requires all its
-    lexemes, AND requires the union of its children's requirements, OR the
-    intersection (a lexeme required by every branch is required), NOT
-    nothing."""
-    if node is None:
-        return set()
-    if node.op == "phrase":
-        return {lex for lex, _ in node.phrase.items}
-    if node.op == "and":
-        out: set[str] = set()
-        for c in node.children:
-            out |= _required_lexemes(c)
-        return out
-    if node.op == "or" and node.children:
-        out = _required_lexemes(node.children[0])
-        for c in node.children[1:]:
-            out &= _required_lexemes(c)
-        return out
-    return set()
-
-
-# matching_docs: an anchor term with df at or below this cap is small
-# enough to broadcast its doc ids and prune the positional rows to them
-# before any position array is exploded (see phrase_match_docs)
-ANCHOR_PRUNE_DOC_CAP = 16_384
+    counts = F.array(*[
+        F.struct(F.lit(pid).alias("phrase_id"),
+                 F.size(phrase_starts(ph, _positions)).cast("long")
+                 .alias("n_matches"))
+        for pid, ph in enumerate(query.phrases)])
+    return (_doc_hits(index, list(query.lexemes))
+            .select("doc_id", F.inline(counts))
+            .where(F.col("n_matches") > 0))
 
 
 def matching_docs(index: Index, query: CompiledQuery) -> DataFrame:
     """Boolean @@ filter: docs satisfying the query's AND/OR/NOT tree, with
     phrase nodes requiring exact positional adjacency.
 
-    Selective-term-first evaluation: when the tree REQUIRES some lexeme
-    (see _required_lexemes) the rarest required one — df from a tiny
-    bucket-pruned dictionary lookup — anchors the plan: every other
-    term's scan is semi-joined down to the anchor's docs before the
-    per-doc aggregation, so `rare & common` shuffles O(df_rare) rows
-    instead of the common term's millions. A required lexeme absent from
-    the dictionary short-circuits to an empty result with no corpus
-    scan."""
-    from dataclasses import replace
-
+    The tree is one column expression (`_tree_expr` over `_holds`)
+    evaluated on `_doc_hits`, the per-document aggregation of one
+    bucket-pruned postings scan. Docs that hold none of the query's
+    lexemes are added, from the `tokens` doc ids, only when the tree is
+    true on such a doc (`!a`, `a | !b`), which the driver decides by
+    evaluating the tree on the empty set."""
     query = expand_query_prefixes(index, query)
-    spark = index.postings.sparkSession
-    phrases = _distinct_phrases(query.root)
-    full_query = replace(query, phrases=tuple(phrases))
-
-    anchor = None
-    anchor_small = False
-    required = _required_lexemes(query.root)
-    if required:
-        dfs = {r["term"]: int(r["df"]) for r in
-               _idf_lookup(index, sorted(required), cols=("term", "df"))
-               .collect()}
-        missing = required - set(dfs)
-        if missing:
-            return spark.createDataFrame([], "doc_id long")
-        rarest = min(sorted(required), key=lambda t: dfs[t])
-        # anchoring only pays when it actually shrinks the doc stream
-        if len(query.lexemes) > 1 and dfs[rarest] * 4 <= index.n_docs:
-            anchor = (_pruned_postings(index, [rarest])
-                      .select("doc_id"))
-            # a provably-bounded anchor can also prune the position
-            # explode (broadcast of ≤cap doc ids)
-            anchor_small = dfs[rarest] <= ANCHOR_PRUNE_DOC_CAP
-
-    phrase_docs = phrase_match_docs(index, full_query, anchor_docs=anchor,
-                                    anchor_small=anchor_small)
-    flags = (phrase_docs.groupBy("doc_id")
-             .agg(F.collect_set("phrase_id").alias("ok_phrases")))
-
-    phrase_ids = {ph.items: pid for pid, ph in enumerate(phrases)}
-    if "not" in _tree_ops(query.root):
-        # NOT semantics need the full doc universe, not just phrase
-        # hitters — unless an anchor exists, in which case the anchor's
-        # docs ARE the universe of possible matches
-        universe = (anchor if anchor is not None
-                    else index.tokens.select("doc_id"))
-        flags = universe.join(flags, on="doc_id", how="left").withColumn(
-            "ok_phrases", F.coalesce(F.col("ok_phrases"), F.array().cast("array<int>")))
-    return flags.where(_tree_expr(query.root, phrase_ids)).select("doc_id")
+    if query.root is None:
+        return index.postings.sparkSession.createDataFrame([], "doc_id long")
+    docs = _doc_hits(index, _tree_lexemes(query))
+    none_held = {ph.items: 0 for ph in _distinct_phrases(query.root)}
+    if _eval_spec(_tree_spec(query.root, none_held), set()):
+        docs = (index.tokens.select("doc_id")
+                .join(docs, on="doc_id", how="left")
+                .withColumn("_hits", F.coalesce(
+                    F.col("_hits"), F.array().cast(_HITS_TYPE))))
+    return docs.where(_tree_expr(query.root, _holds)).select("doc_id")
 
 
 def search(
@@ -524,13 +469,25 @@ def search(
     k: int = 10,
     enforce_boolean: bool = True,
 ) -> DataFrame:
-    """Full retrieval: boolean/phrase filter → BM25 top-k.
+    """Full retrieval: BM25 top-k over the docs the boolean/phrase tree
+    accepts, in one plan: `_doc_hits` scores each doc holding a query
+    lexeme (one bucket-pruned postings scan, broadcast idf, one
+    per-document aggregation), the tree filters it, and TakeOrdered cuts
+    the k best. A doc is ranked only if it holds a positive lexeme, as in
+    `bm25_topk`; `enforce_boolean=False` is plain `bm25_topk`.
 
-    Returns (doc_id, score) in deterministic rank order.
+    Returns (doc_id, score) in deterministic rank order (score desc,
+    doc_id asc).
     """
-    query = expand_query_prefixes(index, query)  # once, for both stages
-    cands = matching_docs(index, query) if enforce_boolean else None
-    return bm25_topk(index, query, k=k, candidate_docs=cands)
+    query = expand_query_prefixes(index, query)
+    if not enforce_boolean or not query.lexemes:
+        return bm25_topk(index, query, k=k)
+    return (_doc_hits(index, _tree_lexemes(query), list(query.lexemes))
+            .where(F.col("score").isNotNull()
+                   & _tree_expr(query.root, _holds))
+            .select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"))
+            .limit(k))
 
 
 def search_batch(
@@ -739,8 +696,8 @@ def facet_counts(
     the search-engine "aggregations" sidebar (count per language, per
     source, per repo) computed beside the top-k list.
 
-    One match plan + one shuffle: `matching_docs` anchors on the rarest
-    required term (bucket-pruned postings scan), the matched doc_ids
+    One match plan + one shuffle: `matching_docs` evaluates the query
+    per document on one bucket-pruned postings scan, the matched doc_ids
     left-semi-join the metadata table on doc_id, and a single stack()
     unpivot + hash aggregate produces every facet's counts — N facet
     columns never cost N scans or N joins. Facet cardinality is small,
@@ -836,7 +793,7 @@ def significant_terms(
     chi² re-rank the same four integers, so callers can recompute.
 
     Plan shape (the 100 TB audit): `matching_docs` resolves the query
-    with its usual anchored bucket-pruned scans; the match set semi-joins
+    on its bucket-pruned postings scan; the match set semi-joins
     the postings on doc_id — the one heavy edge, and AQE broadcasts it
     whenever the match set is small, which is the typical case for a
     selective query; the per-term counts come out of a map-side-combined

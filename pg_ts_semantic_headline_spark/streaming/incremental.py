@@ -38,9 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import lifecycle as lc
-from ..plans.index_build import (STATS_SCHEMA, IndexPaths, _analyze_docs,
-                                 _posting_rows, _read_stats, _write_manifest,
-                                 idf_expr)
+from ..plans.index_build import (POSTINGS_SCHEMA, STATS_SCHEMA,
+                                 TOKENS_SCHEMA, TOMBSTONES_SCHEMA,
+                                 IndexPaths, _analyze_docs, _posting_rows,
+                                 _read_stats, _write_manifest, idf_expr)
 
 
 def _reaggregate(spark: SparkSession, paths: IndexPaths, stats_row,
@@ -50,12 +51,13 @@ def _reaggregate(spark: SparkSession, paths: IndexPaths, stats_row,
     — metadata-scale relative to postings."""
     root = paths.root
     tombs = lc.with_staged(spark, root, "_tombstones",
-                           lc.read_tombstones(spark, paths.tombstones))
+                           lc.read_tombstones(spark, paths.tombstones,
+                                              TOMBSTONES_SCHEMA))
     tokens, postings = (
-        lc.live_rows(lc.with_staged(spark, root, name,
-                                    spark.read.parquet(f"{root}/{name}")),
-                     tombs, "doc_id")
-        for name in ("tokens", "postings"))
+        lc.live_rows(lc.with_staged(spark, root, name, spark.read.schema(
+            schema).parquet(f"{root}/{name}")), tombs, "doc_id")
+        for name, schema in (("tokens", TOKENS_SCHEMA),
+                             ("postings", POSTINGS_SCHEMA)))
     srow = tokens.select(F.count("*").alias("n"),
                          F.avg("dl").alias("a")).first()
     n_docs, avgdl = int(srow["n"]), float(srow["a"] or 0.0)

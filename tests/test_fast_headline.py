@@ -1,7 +1,8 @@
 """`ts_fast_headline` and `ts_fast_headline_cover_density` evaluate per
 input row, like the reference's scalar functions.
 
-- rows sharing a doc_id each get their own fragments and headline;
+- rows sharing a doc_id each get their own fragments and headline, and
+  their own `tsp_query_matches` alignment;
 - the plan shape: one Spark job, no Exchange, and over `with_analysis`
   input the analysis UDF runs once;
 - the `__spark_entry__` entries of the fast path against their DuckDB
@@ -22,6 +23,7 @@ from conftest import count_jobs
 from pg_ts_semantic_headline_spark.plans.analyze import with_analysis
 from pg_ts_semantic_headline_spark.plans.headline import (
     ts_fast_headline, ts_fast_headline_cover_density)
+from pg_ts_semantic_headline_spark.plans.matches import tsp_query_matches
 from pg_ts_semantic_headline_spark.plans.query_compiler import to_tspquery
 
 
@@ -42,6 +44,20 @@ def test_duplicate_doc_ids_get_their_own_headline(spark):
                   .collect()) \
         == [(1, "a slow <b>quick brown</b> cat sleeps", 1, 0),
             (1, "the <b>quick brown</b> fox jumps", 1, 0)]
+
+
+@pytest.mark.parametrize("check", [True, False])
+def test_tsp_query_matches_aligns_each_row(spark, check):
+    """Positions of two rows that share a doc_id never form one match,
+    and each match is sliced from its own row's recall array."""
+    docs = _analyzed(spark, [(1, "the quick brown fox jumps"),
+                             (1, "a slow quick brown cat sleeps"),
+                             (2, "quick red fox"), (2, "a brown dog")])
+    query = to_tspquery("english", "quick <-> brown")
+    got = tsp_query_matches(docs, query, disable_semantic_check=not check)
+    assert sorted((r.doc_id, r.words, r.start_pos, r.end_pos)
+                  for r in got.collect()) \
+        == [(1, "quick brown", 2, 3), (1, "quick brown", 3, 4)]
 
 
 @pytest.mark.parametrize("fn", [ts_fast_headline,

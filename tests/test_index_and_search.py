@@ -13,7 +13,8 @@ from pg_ts_semantic_headline_spark.plans.index_build import (
 from pg_ts_semantic_headline_spark.plans.query_compiler import (
     phraseto_tspquery, to_tspquery)
 from pg_ts_semantic_headline_spark.plans.search import (
-    bm25_topk, matching_docs, phrase_match_docs, search_with_headlines)
+    bm25_topk, matching_docs, phrase_match_docs, search,
+    search_with_headlines)
 
 CONFIG = "simple"
 VOCAB = ("spark index query batch stream merge sort join filter scan "
@@ -246,10 +247,26 @@ class TestBatchSearch:
                    for ln in plan.splitlines()) == 1
 
 
-class TestAnchoredBoolean:
-    """Anchored boolean evaluation (semi-join every scan by the rarest
-    REQUIRED lexeme's docs) must be a pure physical optimization: same
-    matching set as the unanchored plan on every query shape."""
+def naive_holds(node, post, doc):
+    """The boolean/phrase tree on one doc, straight from the oracle
+    postings (term -> {doc: positions})."""
+    if node is None:
+        return False
+    if node.op == "phrase":
+        (l0, o0), *rest = node.phrase.items
+        return any(all(p + o - o0 in post.get(lex, {}).get(doc, ())
+                       for lex, o in rest)
+                   for p in post.get(l0, {}).get(doc, ()))
+    if node.op == "not":
+        return not naive_holds(node.children[0], post, doc)
+    sub = (naive_holds(c, post, doc) for c in node.children)
+    return all(sub) if node.op == "and" else any(sub)
+
+
+class TestBooleanEvaluator:
+    """`matching_docs` and `search` evaluate the query tree per document
+    on one pruned postings scan: both must equal the naive evaluator, and
+    `search` must rank its matches exactly as BM25 over the match set."""
 
     QUERIES = [
         "spark & query",
@@ -257,43 +274,126 @@ class TestAnchoredBoolean:
         "batch & !unique",
         "unique | snowflake",
         "needle & phrase & target",
-        "unique & needle | unique & spark",   # OR-intersection anchor
-        "needle<->phrase & spark",            # multi-lexeme phrase anchor
-        "zzznotfound & spark",                # required term absent: empty
+        "unique & needle | unique & spark",
+        "needle<->phrase & spark",
+        "zzznotfound & spark",                # absent term: empty
+        "!unique",                            # universe branch
+        "spark | !needle",                    # universe branch
+        "needle <-> phrase <-> target & !(spark <-> spark)",
     ]
 
-    def test_required_lexemes_algebra(self):
-        from pg_ts_semantic_headline_spark.plans.search import (
-            _required_lexemes)
-        want = {
-            "needle & !unique": {"needle"},
-            "unique | snowflake": set(),
-            "unique & needle | unique & spark": {"unique"},
-            "needle<->phrase & spark": {"needle", "phrase", "spark"},
-            "!unique": set(),
-        }
-        for raw, req in want.items():
+    def test_equal_naive_evaluator(self, index, corpus):
+        post, _ = python_postings(corpus)
+        ids = [d for d, _ in corpus]
+        nonempty = 0
+        for raw in self.QUERIES:
             q = to_tspquery(CONFIG, raw)
-            assert _required_lexemes(q.root) == req, raw
+            want = {d for d in ids if naive_holds(q.root, post, d)}
+            got = [r["doc_id"] for r in matching_docs(index, q).collect()]
+            assert sorted(got) == sorted(want), raw
+            # ranked: the matches holding a positive lexeme, scored as
+            # BM25 over the query's positive lexemes
+            ranked = {d for d in want
+                      if any(d in post.get(t, {}) for t in q.lexemes)}
+            full = python_bm25(corpus, list(q.lexemes), len(corpus))
+            wanted = [(d, sc) for d, sc in full if d in ranked]
+            hits = [(r["doc_id"], r["score"]) for r in
+                    search(index, q, k=len(corpus)).collect()]
+            assert [d for d, _ in hits] == [d for d, _ in wanted], raw
+            for (_, gs), (_, ws) in zip(hits, wanted):
+                assert gs == pytest.approx(ws, rel=1e-12), raw
+            nonempty += bool(hits)
+        assert nonempty >= 6
+        assert matching_docs(
+            index, to_tspquery(CONFIG, "zzznotfound & spark")).count() == 0
 
-    def test_anchor_equivalence(self, index, monkeypatch):
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        anchored = {}
-        for raw in self.QUERIES:
-            q = to_tspquery(CONFIG, raw)
-            anchored[raw] = {r["doc_id"] for r in
-                             matching_docs(index, q).collect()}
-        # at least one query must actually exercise a non-empty anchored
-        # result (guard against vacuous equivalence)
-        assert any(anchored.values())
-        assert anchored["zzznotfound & spark"] == set()
-        monkeypatch.setattr(searchmod, "_required_lexemes",
-                            lambda node: set())
-        for raw in self.QUERIES:
-            q = to_tspquery(CONFIG, raw)
-            plain = {r["doc_id"] for r in
-                     matching_docs(index, q).collect()}
-            assert plain == anchored[raw], raw
+
+class TestBooleanShapes:
+    """Query shapes with their own rules in the per-document evaluator,
+    on a small english corpus (stopwords burn positions)."""
+
+    DOCS = [(0, "deep deep learning models"),
+            (1, "deep learning in the cloud"),
+            (2, "learning of the deep networks"),
+            (3, "cloud storage of the data"),
+            (4, "networks only"),
+            (5, "data in the cloud"),
+            (6, "cloud data storage")]
+
+    CASES = [
+        # (query, matching_docs, ranked by search in order)
+        ("deep <-> deep", {0}, [0]),
+        # 'of' and 'the' are stopwords: storage <3> data
+        (phraseto_tspquery("english", "storage of the data"), {3}, [3]),
+        ("storage <2> data", set(), []),
+        ("!network", {0, 1, 3, 5, 6}, []),
+        ("learn | !network", {0, 1, 2, 3, 5, 6}, None),
+        # doc 5 holds only the negated phrase's lexemes: it matches, but
+        # search ranks nothing it holds
+        ("learn | !(cloud <-> data)", {0, 1, 2, 3, 4, 5}, None),
+        ("stor:*", {3, 6}, None),
+        ("netw:* & !deep", {4}, [4]),
+    ]
+
+    @pytest.fixture(scope="class")
+    def english_index(self, spark, tmp_path_factory):
+        out = str(tmp_path_factory.mktemp("idx_shapes"))
+        build_index(spark, spark.createDataFrame(
+            self.DOCS, ["doc_id", "content"]), out, config="english",
+            n_buckets=4)
+        return load_index(spark, out)
+
+    @pytest.mark.parametrize("case", range(len(CASES)))
+    def test_shape(self, english_index, case):
+        raw, want, ranked = self.CASES[case]
+        q = raw if not isinstance(raw, str) else to_tspquery("english", raw)
+        got = [r["doc_id"] for r in matching_docs(english_index, q).collect()]
+        assert sorted(got) == sorted(want)
+        hits = search(english_index, q, k=10).collect()
+        # every ranked doc matches and holds a positive lexeme; the
+        # scores are bm25_topk's over the matches
+        pool = {r["doc_id"]: r["score"] for r in
+                bm25_topk(english_index, q, k=10).collect()}
+        wanted = [d for d, _ in sorted(pool.items(),
+                                       key=lambda it: (-it[1], it[0]))
+                  if d in want]
+        assert [r["doc_id"] for r in hits] == wanted
+        if ranked is not None:
+            assert wanted == ranked
+        for r in hits:
+            assert r["score"] == pytest.approx(pool[r["doc_id"]], rel=1e-12)
+
+    def test_duplicate_live_generations(self, spark, tmp_path):
+        """`merge_batch(replace=False)` leaves two live rows of a doc_id.
+        The doc matches a phrase when the positions of its live rows,
+        merged, align, and each row scores. So doc 1 (resent unchanged)
+        and doc 2 (one row holds the phrase) match `alpha <-> beta`,
+        and so does doc 3, whose rows hold `alpha` at 1 and `beta` at 2
+        between them."""
+        from pg_ts_semantic_headline_spark.streaming import merge_batch
+
+        out = str(tmp_path / "dup")
+        base = [(1, "alpha beta gamma"), (2, "alpha beta"), (3, "alpha x"),
+                (4, "zeta eta"), (5, "alpha beta theta")]
+        build_index(spark, spark.createDataFrame(base, ["doc_id", "content"]),
+                    out, config="simple", n_buckets=4)
+        merge_batch(spark, out, spark.createDataFrame(
+            [(1, "alpha beta gamma"), (2, "alpha delta"), (3, "y beta")],
+            ["doc_id", "content"]))
+        idx = load_index(spark, out)
+        q = to_tspquery("simple", "alpha <-> beta")
+        assert sorted(r["doc_id"] for r in
+                      matching_docs(idx, q).collect()) == [1, 2, 3, 5]
+        pool = {r["doc_id"]: r["score"] for r in
+                bm25_topk(idx, q, k=10).collect()}
+        hits = search(idx, q, k=10).collect()
+        assert [r["doc_id"] for r in hits] == [1, 2, 3, 5]
+        for r in hits:
+            assert r["score"] == pytest.approx(pool[r["doc_id"]], rel=1e-12)
+        # and the boolean answer lists each doc once
+        got = [r["doc_id"] for r in matching_docs(
+            idx, to_tspquery("simple", "beta & !gamma")).collect()]
+        assert sorted(got) == [2, 3, 5]
 
 
 class TestXxHash64Parity:

@@ -212,6 +212,10 @@ def _fails(spark, d, deep=True):
             if r["status"] == "fail"}
 
 
+def _publish_tmps(alias):
+    return [d for d in os.listdir(alias) if d.startswith(".publish_tmp_")]
+
+
 @pytest.mark.parametrize("kill", sorted(KILLS))
 def test_child_died_at_its_kill_point(drill, kill):
     code, err = drill["outcome"][kill]
@@ -268,5 +272,8 @@ def test_e_publish_killed_before_claim(spark, drill):
     assert resolve_index_alias(spark, alias) == drill["paths"]["base"]
     assert _ranks(spark, alias) == drill["old"]["base"]
     assert _fails(spark, target) == set()
+    # the killed publisher's pointer is left behind until a publish sweeps it
+    assert _publish_tmps(alias)
     assert publish_index(spark, target, alias) == 2
     assert _ranks(spark, alias) == drill["new"]["gone"]
+    assert _publish_tmps(alias) == []
